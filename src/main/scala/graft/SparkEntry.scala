@@ -20,52 +20,48 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.Abundance.tpm(spark, "/root/testdata/sf0.001")
 
-  /** The single source of truth for which modules contribute gates.
-    * `queries` folds over THIS sequence, and SparkEntrySpec's
-    * no-key-collision guard derives its declared sum from it too — a
-    * new module added here is covered by the guard automatically; a
-    * module added anywhere else cannot reach the driver at all. */
-  val queryModules: Seq[Map[String, (SparkSession, String) => DataFrame]] =
+  /** Every gate, module by module: the single source of truth that
+    * `queries` and `oracleSql` below, the diagnostic main and
+    * SparkEntrySpec's distinct-name guard read. A module's gates are
+    * served only if it is listed here. */
+  val gates: Seq[Gate] =
     Seq(
-      ops.Relational.queries, ops.ScaleOps.queries,
-      ops.TemporalJoins.queries, ops.Windows.queries,
-      ops.Pivots.queries, ops.Abundance.queries,
-      ops.Amplicon.queries, ops.Bins.queries,
-      ops.Checks.queries, ops.Cdc.queries,
-      ops.Expectations.queries, ops.WebGraph.queries,
-      ops.Ecology.queries, ops.Skew.queries,
-      ops.Glamr.queries, ops.Primers.queries,
-      tax.Lineage.queries, tax.SetCover.queries,
-      tax.TaxAbund.queries, text.TextOps.queries, text.Html.queries,
-      dedup.Dedup.queries, sim.Similarity.queries,
-      ingest.Overrides.queries, io.SourceQueries.queries,
-      io.WarehouseIngest.queries, io.CatalogIngest.queries,
-      streaming.Streams.queries, multimodal.Multimodal.queries)
-
-  /** Same discipline for the oracles (paired with queryModules). */
-  val oracleModules: Seq[Map[String, String]] =
-    Seq(
-      ops.Relational.oracle, ops.ScaleOps.oracle,
-      ops.TemporalJoins.oracle, ops.Windows.oracle,
-      ops.Pivots.oracle, ops.Abundance.oracle,
-      ops.Amplicon.oracle, ops.Bins.oracle,
-      ops.Checks.oracle, ops.Cdc.oracle,
-      ops.Expectations.oracle, ops.WebGraph.oracle,
-      ops.Ecology.oracle, ops.Skew.oracle,
-      ops.Glamr.oracle, ops.Primers.oracle,
-      tax.Lineage.oracle, tax.SetCover.oracle,
-      tax.TaxAbund.oracle, text.TextOps.oracle, text.Html.oracle,
-      dedup.Dedup.oracle, sim.Similarity.oracle,
-      ingest.Overrides.oracle, io.SourceQueries.oracle,
-      io.WarehouseIngest.oracle, io.CatalogIngest.oracle,
-      streaming.Streams.oracle, multimodal.Multimodal.oracle)
+      ops.Relational.gates, ops.ScaleOps.gates,
+      ops.TemporalJoins.gates, ops.Windows.gates,
+      ops.Pivots.gates, ops.Abundance.gates,
+      ops.Amplicon.gates, ops.Bins.gates,
+      ops.Checks.gates, ops.Cdc.gates,
+      ops.Expectations.gates, ops.WebGraph.gates,
+      ops.Ecology.gates, ops.Skew.gates,
+      ops.Glamr.gates, ops.Primers.gates,
+      tax.Lineage.gates, tax.SetCover.gates,
+      tax.TaxAbund.gates, text.TextOps.gates, text.Html.gates,
+      dedup.Dedup.gates, sim.Similarity.gates,
+      ingest.Overrides.gates, io.SourceQueries.gates,
+      io.WarehouseIngest.gates, io.CatalogIngest.gates,
+      streaming.Streams.gates, multimodal.Multimodal.gates).flatten
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    queryModules.reduce(_ ++ _)
+    gates.map(g => g.name -> g.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    oracleModules.reduce(_ ++ _)
+    gates.flatMap(g => g.oracle.map(g.name -> _)).toMap
+}
+
+/** One gate: its key, the query it runs on an sf dir, and the
+  * DuckDB SQL that re-derives its result (None when the operator is not
+  * SQL-expressible and a golden spec checks it instead). Declared in the
+  * module that implements it, so a job's call site names that module. */
+final case class Gate(name: String,
+    run: (SparkSession, String) => DataFrame,
+    oracle: Option[String] = None)
+
+object Gate {
+  /** The oracle of gate `name` among `gates`: for a gate whose result
+    * must equal another gate's bit for bit. */
+  def oracleOf(gates: Seq[Gate], name: String): Option[String] =
+    gates.find(_.name == name).flatMap(_.oracle)
 }

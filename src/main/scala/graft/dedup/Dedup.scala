@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 import graft.text.TextOps
 
@@ -1533,9 +1534,7 @@ object Dedup {
 
   private def islandsStaged(s: SparkSession, d: String): DataFrame = {
     val path = stagedIslands.computeIfAbsent(d, _ => {
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_substr_islands_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-        .getPath
+      val dir = graft.io.Scratch.path("substr_islands").toString
       graft.io.Writers.overwriteStaged(
         dupIslands(spanSrc(t(s, d, "documents"), "doc_id", "text"),
           spanLen = 25, hashWindows = false), dir)
@@ -1692,34 +1691,8 @@ object Dedup {
       islandsStaged(s, d).filter(col("doc_id") >= 400))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d_incr_substring" -> dIncrSubstring _,
-    "d_snm_pairs" -> dSnmPairs _,
-    "d_blocking_quality" -> dBlockingQuality _,
-    "d_blocking_methods" -> dBlockingMethods _,
-    "d_winnow_pairs" -> dWinnowPairs _,
-    "d_containment" -> dContainment _,
-    "d_wjaccard_pairs" -> dWjaccardPairs _,
-    "d_wjaccard_capped" -> dWjaccardCapped _,
-    "d_substring_spans" -> dSubstringSpans _,
-    "d_substring_cut" -> dSubstringCut _,
-    "d_edit_pairs" -> dEditPairs _,
-    "d_incr_neardup" -> dIncrNearDup _,
-    "d_cluster_keep_best" -> dClusterKeepBest _,
-    "d_exact_dedup" -> dExact _,
-    "d_fingerprint_dedup" -> dFingerprint _,
-    "d_minhash_signature" -> dMinhashSig _,
-    "d_minhash_lsh_pairs" -> dMinhashLshPairs _,
-    "d_simhash" -> dSimhash _,
-    "d_simhash_pairs" -> dSimhashPairs _,
-    "d_band_cap_report" -> dBandCapReport _,
-    "d_ngram_jaccard_top" -> dNgramJaccard _,
-    "d_ngram_jaccard_prefix" -> dNgramJaccardPrefix _,
-    "d_dup_clusters" -> dDupClusters _,
-    "d_embed_neardup" -> dEmbedNearDup _)
-
-  val oracle: Map[String, String] = Map(
-    "d_incr_substring" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("d_incr_substring", dIncrSubstring _, Some(
       """WITH d AS (
            SELECT doc_id, text, length(text) AS len FROM documents),
          w AS (
@@ -1751,35 +1724,8 @@ object Dedup {
            coalesce(per.dup_chars, 0) AS dup_chars,
            CAST(d.len AS INT) AS n_chars
          FROM (SELECT * FROM d WHERE doc_id >= 400) d
-         LEFT JOIN per USING (doc_id)""",
-    "d_winnow_pairs" ->
-      """WITH d AS (
-           SELECT doc_id, lang, source,
-             string_split_regex(trim(lower(text)), '\s+') AS tk
-           FROM documents),
-         g AS (
-           SELECT doc_id, lang, source, CAST(r.p AS INT) AS p,
-             md5(array_to_string(tk[r.p : r.p + 2], ' ')) AS h
-           FROM d, unnest(range(1, len(tk) - 1)) AS r(p)
-           WHERE len(tk) >= 3),
-         sel AS (
-           SELECT doc_id, lang, source, p,
-             min(h || '|' ||
-               lpad(CAST(10000000 - p AS VARCHAR), 8, '0')) OVER (
-               PARTITION BY doc_id ORDER BY p
-               ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS s
-           FROM g),
-         fp AS (
-           SELECT DISTINCT doc_id, lang, source, substr(s, 1, 32) AS h
-           FROM sel WHERE p >= 4)
-         SELECT a.lang, a.source, a.doc_id AS doc_a,
-           b.doc_id AS doc_b, CAST(count(*) AS INT) AS n_shared
-         FROM fp a JOIN fp b
-           ON a.lang = b.lang AND a.source = b.source
-          AND a.h = b.h AND a.doc_id < b.doc_id
-         GROUP BY 1, 2, 3, 4
-         HAVING count(*) >= 1""",
-    "d_snm_pairs" ->
+         LEFT JOIN per USING (doc_id)""")),
+    Gate("d_snm_pairs", dSnmPairs _, Some(
       """WITH d AS (
            SELECT lang, source, doc_id,
              substr(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'),
@@ -1818,8 +1764,8 @@ object Dedup {
          JOIN grams ga ON ga.lang = c.lang AND ga.source = c.source
            AND ga.doc_id = c.doc_a
          JOIN grams gb ON gb.lang = c.lang AND gb.source = c.source
-           AND gb.doc_id = c.doc_b""",
-    "d_blocking_quality" ->
+           AND gb.doc_id = c.doc_b""")),
+    Gate("d_blocking_quality", dBlockingQuality _, Some(
       """WITH grams AS (
            SELECT lang, source, doc_id,
              list_distinct(list_transform(
@@ -1870,8 +1816,8 @@ object Dedup {
                (SELECT count(*) FROM truth), 6) ELSE 0.0 END AS recall,
            CASE WHEN (SELECT count(*) FROM cand) > 0
              THEN round((SELECT count(*) FROM hit) * 1.0 /
-               (SELECT count(*) FROM cand), 6) ELSE 0.0 END AS precision""",
-    "d_blocking_methods" ->
+               (SELECT count(*) FROM cand), 6) ELSE 0.0 END AS precision""")),
+    Gate("d_blocking_methods", dBlockingMethods _, Some(
       """WITH grams AS (
            SELECT lang, source, doc_id,
              list_distinct(list_transform(
@@ -1983,8 +1929,55 @@ object Dedup {
            CASE WHEN n_cand > 0
              THEN round(n_hit * 1.0 / n_cand, 6) ELSE 0.0 END
              AS precision
-         FROM ev""",
-    "d_wjaccard_pairs" ->
+         FROM ev""")),
+    Gate("d_winnow_pairs", dWinnowPairs _, Some(
+      """WITH d AS (
+           SELECT doc_id, lang, source,
+             string_split_regex(trim(lower(text)), '\s+') AS tk
+           FROM documents),
+         g AS (
+           SELECT doc_id, lang, source, CAST(r.p AS INT) AS p,
+             md5(array_to_string(tk[r.p : r.p + 2], ' ')) AS h
+           FROM d, unnest(range(1, len(tk) - 1)) AS r(p)
+           WHERE len(tk) >= 3),
+         sel AS (
+           SELECT doc_id, lang, source, p,
+             min(h || '|' ||
+               lpad(CAST(10000000 - p AS VARCHAR), 8, '0')) OVER (
+               PARTITION BY doc_id ORDER BY p
+               ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS s
+           FROM g),
+         fp AS (
+           SELECT DISTINCT doc_id, lang, source, substr(s, 1, 32) AS h
+           FROM sel WHERE p >= 4)
+         SELECT a.lang, a.source, a.doc_id AS doc_a,
+           b.doc_id AS doc_b, CAST(count(*) AS INT) AS n_shared
+         FROM fp a JOIN fp b
+           ON a.lang = b.lang AND a.source = b.source
+          AND a.h = b.h AND a.doc_id < b.doc_id
+         GROUP BY 1, 2, 3, 4
+         HAVING count(*) >= 1""")),
+    Gate("d_containment", dContainment _, Some(
+      """WITH grams AS (
+           SELECT lang, source, doc_id,
+             list_distinct(list_transform(
+               range(1, greatest(1, len(string_split_regex(trim(lower(text)),
+                 '\s+')) - 1)),
+               i -> string_split_regex(trim(lower(text)), '\s+')[i] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+1] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+2]))
+               AS g
+           FROM documents)
+         SELECT a.lang, a.source, a.doc_id AS doc_sub,
+           b.doc_id AS doc_sup,
+           round(len(list_intersect(a.g, b.g)) * 1.0 / len(a.g), 6)
+             AS containment
+         FROM grams a JOIN grams b
+           ON a.lang = b.lang AND a.source = b.source
+          AND a.doc_id <> b.doc_id
+          AND len(a.g) > 0 AND len(b.g) > 0
+         WHERE len(list_intersect(a.g, b.g)) * 1.0 / len(a.g) >= 0.05""")),
+    Gate("d_wjaccard_pairs", dWjaccardPairs _, Some(
       """WITH toks AS (
            SELECT lang, source, doc_id,
              unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
@@ -2011,11 +2004,11 @@ object Dedup {
            AND ta.doc_id = s.doc_a
          JOIN tot tb ON tb.lang = s.lang AND tb.source = s.source
            AND tb.doc_id = s.doc_b
-         WHERE s.smin * 1.0 / (ta.w + tb.w - s.smin) >= 0.3""",
+         WHERE s.smin * 1.0 / (ta.w + tb.w - s.smin) >= 0.3""")),
     // oracle CONDITIONED on maxTokenDf=10: the tf bag drops tokens in
     // > 10 docs of their (lang, source) block, per-doc totals are
     // recomputed over the survivors, then the same brute Σmin/Σmax
-    "d_wjaccard_capped" ->
+    Gate("d_wjaccard_capped", dWjaccardCapped _, Some(
       """WITH toks AS (
            SELECT lang, source, doc_id,
              unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
@@ -2048,28 +2041,8 @@ object Dedup {
            AND ta.doc_id = s.doc_a
          JOIN tot tb ON tb.lang = s.lang AND tb.source = s.source
            AND tb.doc_id = s.doc_b
-         WHERE s.smin * 1.0 / (ta.w + tb.w - s.smin) >= 0.3""",
-    "d_containment" ->
-      """WITH grams AS (
-           SELECT lang, source, doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(1, len(string_split_regex(trim(lower(text)),
-                 '\s+')) - 1)),
-               i -> string_split_regex(trim(lower(text)), '\s+')[i] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+1] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+2]))
-               AS g
-           FROM documents)
-         SELECT a.lang, a.source, a.doc_id AS doc_sub,
-           b.doc_id AS doc_sup,
-           round(len(list_intersect(a.g, b.g)) * 1.0 / len(a.g), 6)
-             AS containment
-         FROM grams a JOIN grams b
-           ON a.lang = b.lang AND a.source = b.source
-          AND a.doc_id <> b.doc_id
-          AND len(a.g) > 0 AND len(b.g) > 0
-         WHERE len(list_intersect(a.g, b.g)) * 1.0 / len(a.g) >= 0.05""",
-    "d_substring_spans" ->
+         WHERE s.smin * 1.0 / (ta.w + tb.w - s.smin) >= 0.3""")),
+    Gate("d_substring_spans", dSubstringSpans _, Some(
       """WITH d AS (
            SELECT doc_id, text, length(text) AS len FROM documents),
          w AS (
@@ -2100,8 +2073,8 @@ object Dedup {
          SELECT d.doc_id, coalesce(per.n_spans, 0) AS n_spans,
            coalesce(per.dup_chars, 0) AS dup_chars,
            CAST(d.len AS INT) AS n_chars
-         FROM d LEFT JOIN per USING (doc_id)""",
-    "d_substring_cut" ->
+         FROM d LEFT JOIN per USING (doc_id)""")),
+    Gate("d_substring_cut", dSubstringCut _, Some(
       """WITH d AS (
            SELECT doc_id, text, length(text) AS len FROM documents),
          w AS (
@@ -2143,8 +2116,8 @@ object Dedup {
            CAST(d.len - length(coalesce(k.clean_text, '')) AS INT)
              AS n_cut,
            CAST(d.len AS INT) AS n_chars
-         FROM d LEFT JOIN kept k USING (doc_id)""",
-    "d_edit_pairs" ->
+         FROM d LEFT JOIN kept k USING (doc_id)""")),
+    Gate("d_edit_pairs", dEditPairs _, Some(
       """WITH p AS (
            SELECT doc_id, lang, source,
              substr(text, 1, 64) AS text
@@ -2156,54 +2129,8 @@ object Dedup {
            ON a.lang = b.lang AND a.source = b.source
           AND a.doc_id < b.doc_id
          WHERE abs(len(a.text) - len(b.text)) <= 12
-           AND levenshtein(a.text, b.text) <= 12""",
-    "d_minhash_lsh_pairs" ->
-      """WITH sig AS (
-           SELECT doc_id,
-             list_transform(string_split(signature, ','),
-               x -> CAST(x AS BIGINT)) AS sg
-           FROM parquet_scan('__OUTDIR__/d_minhash_signature/*.parquet')),
-         banded AS (
-           SELECT doc_id, r.b AS band,
-             array_to_string(list_slice(sg, r.b*4+1, r.b*4+4), '_')
-               AS bkey
-           FROM sig, range(0, 4) r(b)),
-         pairs AS (
-           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM banded a JOIN banded b
-             ON a.band = b.band AND a.bkey = b.bkey
-            AND a.doc_id < b.doc_id)
-         SELECT p.doc_a, p.doc_b,
-           round(len(list_filter(range(1, 17),
-             i -> sa.sg[i] = sb.sg[i])) / 16.0, 6) AS est_jaccard
-         FROM pairs p
-           JOIN sig sa ON sa.doc_id = p.doc_a
-           JOIN sig sb ON sb.doc_id = p.doc_b""",
-    "d_simhash_pairs" ->
-      """WITH sh AS (
-           SELECT doc_id, simhash
-           FROM parquet_scan('__OUTDIR__/d_simhash/*.parquet'))
-         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-         FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""",
-    "d_band_cap_report" ->
-      """WITH sh AS (
-           SELECT doc_id, simhash
-           FROM parquet_scan('__OUTDIR__/d_simhash/*.parquet')),
-         ch AS (
-           SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-             (simhash >> (16 * CAST(i AS INT))) & 65535 AS chunk
-           FROM sh, unnest([0, 1, 2, 3]) AS u(i)),
-         b AS (
-           SELECT chunk_idx, chunk, count(*) AS bucket_n
-           FROM ch GROUP BY chunk_idx, chunk)
-         SELECT chunk_idx, CAST(chunk AS BIGINT) AS chunk,
-           CAST(bucket_n AS BIGINT) AS bucket_n,
-           CAST(bucket_n * (bucket_n - 1) // 2 AS BIGINT)
-             AS pairs_suppressed
-         FROM b WHERE bucket_n > 10""",
-    "d_incr_neardup" ->
+           AND levenshtein(a.text, b.text) <= 12""")),
+    Gate("d_incr_neardup", dIncrNearDup _, Some(
       """WITH grams AS (
            SELECT lang, source, doc_id,
              list_distinct(list_transform(
@@ -2228,98 +2155,8 @@ object Dedup {
          SELECT lang, source, new_id, old_id, jac
          FROM (SELECT *, row_number() OVER (PARTITION BY new_id
            ORDER BY jac DESC, old_id ASC) AS rn FROM pairs) x
-         WHERE rn = 1""",
-    "d_embed_neardup" ->
-      """WITH e AS (SELECT vec_id,
-           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-         FROM embeddings WHERE vec_id < 1000)
-         SELECT a.vec_id AS keep_id, b.vec_id AS dup_id,
-           round(list_cosine_similarity(a.emb, b.emb), 6) AS cos_sim
-         FROM e a JOIN e b ON a.vec_id < b.vec_id
-         WHERE list_cosine_similarity(a.emb, b.emb) >= 0.3""",
-    "d_exact_dedup" ->
-      """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id,
-         count(*) AS n_copies
-         FROM documents GROUP BY md5(text)""",
-    "d_fingerprint_dedup" ->
-      """SELECT md5(trim(regexp_replace(
-           regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g'),
-           '\s+', ' ', 'g'))) AS fp,
-         min(doc_id) AS keep_id, count(*) AS n_copies
-         FROM documents GROUP BY 1""",
-    "d_ngram_jaccard_top" ->
-      """WITH grams AS (
-           SELECT lang, source, doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(1, len(string_split_regex(trim(lower(text)),
-                 '\s+')) - 1)),
-               i -> string_split_regex(trim(lower(text)), '\s+')[i] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+1] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+2]))
-               AS g
-           FROM documents),
-         pairs AS (
-           SELECT a.lang, a.source, a.doc_id AS doc_a, b.doc_id AS doc_b,
-             round(len(list_intersect(a.g, b.g)) * 1.0 /
-               len(list_distinct(list_concat(a.g, b.g))), 6) AS jac
-           FROM grams a JOIN grams b
-             ON a.lang = b.lang AND a.source = b.source
-            AND a.doc_id < b.doc_id
-           WHERE len(list_intersect(a.g, b.g)) > 0)
-         SELECT lang, source, doc_a, doc_b, jac
-         FROM (SELECT *, row_number() OVER (PARTITION BY lang, source
-           ORDER BY jac DESC, doc_a ASC, doc_b ASC) AS rn FROM pairs) x
-         WHERE rn = 1""",
-    "d_ngram_jaccard_prefix" ->
-      """WITH grams AS (
-           SELECT lang, source, doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(1, len(string_split_regex(trim(lower(text)),
-                 '\s+')) - 1)),
-               i -> string_split_regex(trim(lower(text)), '\s+')[i] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+1] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+2]))
-               AS g
-           FROM documents),
-         pairs AS (
-           SELECT a.lang, a.source, a.doc_id AS doc_a, b.doc_id AS doc_b,
-             len(list_intersect(a.g, b.g)) AS inter,
-             len(a.g) AS na, len(b.g) AS nb
-           FROM grams a JOIN grams b
-             ON a.lang = b.lang AND a.source = b.source
-            AND a.doc_id < b.doc_id
-           WHERE len(list_intersect(a.g, b.g)) > 0)
-         SELECT lang, source, doc_a, doc_b,
-           round(inter * 1.0 / (na + nb - inter), 6) AS jac
-         FROM pairs
-         WHERE inter * 1.0 / (na + nb - inter) >= 0.3""",
-    "d_dup_clusters" ->
-      """WITH RECURSIVE grams AS (
-           SELECT lang, source, doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(1, len(string_split_regex(trim(lower(text)),
-                 '\s+')) - 1)),
-               i -> string_split_regex(trim(lower(text)), '\s+')[i] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+1] || ' ' ||
-                    string_split_regex(trim(lower(text)), '\s+')[i+2]))
-               AS g
-           FROM documents),
-         edges AS (
-           SELECT a.doc_id AS a, b.doc_id AS b
-           FROM grams a JOIN grams b
-             ON a.lang = b.lang AND a.source = b.source
-            AND a.doc_id < b.doc_id
-           WHERE len(list_intersect(a.g, b.g)) > 0),
-         sym AS (SELECT a, b FROM edges UNION SELECT b, a FROM edges),
-         reach(node, lbl) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT s.b, reach.lbl FROM reach JOIN sym s
-             ON s.a = reach.node)
-         SELECT node AS doc_id, min(lbl) AS cluster_id,
-           (node = min(lbl)) AS is_canonical
-         FROM reach GROUP BY node""",
-    "d_cluster_keep_best" ->
+         WHERE rn = 1""")),
+    Gate("d_cluster_keep_best", dClusterKeepBest _, Some(
       """WITH RECURSIVE grams AS (
            SELECT lang, source, doc_id,
              list_distinct(list_transform(
@@ -2357,5 +2194,143 @@ object Dedup {
          SELECT cl.doc_id, cl.cluster_id, q.quality,
            row_number() OVER (PARTITION BY cl.cluster_id
              ORDER BY q.quality DESC, cl.doc_id ASC) = 1 AS keep
-         FROM cl JOIN q USING (doc_id)""")
+         FROM cl JOIN q USING (doc_id)""")),
+    Gate("d_exact_dedup", dExact _, Some(
+      """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id,
+         count(*) AS n_copies
+         FROM documents GROUP BY md5(text)""")),
+    Gate("d_fingerprint_dedup", dFingerprint _, Some(
+      """SELECT md5(trim(regexp_replace(
+           regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g'),
+           '\s+', ' ', 'g'))) AS fp,
+         min(doc_id) AS keep_id, count(*) AS n_copies
+         FROM documents GROUP BY 1""")),
+    Gate("d_minhash_signature", dMinhashSig _),
+    Gate("d_minhash_lsh_pairs", dMinhashLshPairs _, Some(
+      """WITH sig AS (
+           SELECT doc_id,
+             list_transform(string_split(signature, ','),
+               x -> CAST(x AS BIGINT)) AS sg
+           FROM parquet_scan('__OUTDIR__/d_minhash_signature/*.parquet')),
+         banded AS (
+           SELECT doc_id, r.b AS band,
+             array_to_string(list_slice(sg, r.b*4+1, r.b*4+4), '_')
+               AS bkey
+           FROM sig, range(0, 4) r(b)),
+         pairs AS (
+           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+           FROM banded a JOIN banded b
+             ON a.band = b.band AND a.bkey = b.bkey
+            AND a.doc_id < b.doc_id)
+         SELECT p.doc_a, p.doc_b,
+           round(len(list_filter(range(1, 17),
+             i -> sa.sg[i] = sb.sg[i])) / 16.0, 6) AS est_jaccard
+         FROM pairs p
+           JOIN sig sa ON sa.doc_id = p.doc_a
+           JOIN sig sb ON sb.doc_id = p.doc_b""")),
+    Gate("d_simhash", dSimhash _),
+    Gate("d_simhash_pairs", dSimhashPairs _, Some(
+      """WITH sh AS (
+           SELECT doc_id, simhash
+           FROM parquet_scan('__OUTDIR__/d_simhash/*.parquet'))
+         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+           CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+         FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+         WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""")),
+    Gate("d_band_cap_report", dBandCapReport _, Some(
+      """WITH sh AS (
+           SELECT doc_id, simhash
+           FROM parquet_scan('__OUTDIR__/d_simhash/*.parquet')),
+         ch AS (
+           SELECT doc_id, CAST(i AS INT) AS chunk_idx,
+             (simhash >> (16 * CAST(i AS INT))) & 65535 AS chunk
+           FROM sh, unnest([0, 1, 2, 3]) AS u(i)),
+         b AS (
+           SELECT chunk_idx, chunk, count(*) AS bucket_n
+           FROM ch GROUP BY chunk_idx, chunk)
+         SELECT chunk_idx, CAST(chunk AS BIGINT) AS chunk,
+           CAST(bucket_n AS BIGINT) AS bucket_n,
+           CAST(bucket_n * (bucket_n - 1) // 2 AS BIGINT)
+             AS pairs_suppressed
+         FROM b WHERE bucket_n > 10""")),
+    Gate("d_ngram_jaccard_top", dNgramJaccard _, Some(
+      """WITH grams AS (
+           SELECT lang, source, doc_id,
+             list_distinct(list_transform(
+               range(1, greatest(1, len(string_split_regex(trim(lower(text)),
+                 '\s+')) - 1)),
+               i -> string_split_regex(trim(lower(text)), '\s+')[i] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+1] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+2]))
+               AS g
+           FROM documents),
+         pairs AS (
+           SELECT a.lang, a.source, a.doc_id AS doc_a, b.doc_id AS doc_b,
+             round(len(list_intersect(a.g, b.g)) * 1.0 /
+               len(list_distinct(list_concat(a.g, b.g))), 6) AS jac
+           FROM grams a JOIN grams b
+             ON a.lang = b.lang AND a.source = b.source
+            AND a.doc_id < b.doc_id
+           WHERE len(list_intersect(a.g, b.g)) > 0)
+         SELECT lang, source, doc_a, doc_b, jac
+         FROM (SELECT *, row_number() OVER (PARTITION BY lang, source
+           ORDER BY jac DESC, doc_a ASC, doc_b ASC) AS rn FROM pairs) x
+         WHERE rn = 1""")),
+    Gate("d_ngram_jaccard_prefix", dNgramJaccardPrefix _, Some(
+      """WITH grams AS (
+           SELECT lang, source, doc_id,
+             list_distinct(list_transform(
+               range(1, greatest(1, len(string_split_regex(trim(lower(text)),
+                 '\s+')) - 1)),
+               i -> string_split_regex(trim(lower(text)), '\s+')[i] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+1] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+2]))
+               AS g
+           FROM documents),
+         pairs AS (
+           SELECT a.lang, a.source, a.doc_id AS doc_a, b.doc_id AS doc_b,
+             len(list_intersect(a.g, b.g)) AS inter,
+             len(a.g) AS na, len(b.g) AS nb
+           FROM grams a JOIN grams b
+             ON a.lang = b.lang AND a.source = b.source
+            AND a.doc_id < b.doc_id
+           WHERE len(list_intersect(a.g, b.g)) > 0)
+         SELECT lang, source, doc_a, doc_b,
+           round(inter * 1.0 / (na + nb - inter), 6) AS jac
+         FROM pairs
+         WHERE inter * 1.0 / (na + nb - inter) >= 0.3""")),
+    Gate("d_dup_clusters", dDupClusters _, Some(
+      """WITH RECURSIVE grams AS (
+           SELECT lang, source, doc_id,
+             list_distinct(list_transform(
+               range(1, greatest(1, len(string_split_regex(trim(lower(text)),
+                 '\s+')) - 1)),
+               i -> string_split_regex(trim(lower(text)), '\s+')[i] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+1] || ' ' ||
+                    string_split_regex(trim(lower(text)), '\s+')[i+2]))
+               AS g
+           FROM documents),
+         edges AS (
+           SELECT a.doc_id AS a, b.doc_id AS b
+           FROM grams a JOIN grams b
+             ON a.lang = b.lang AND a.source = b.source
+            AND a.doc_id < b.doc_id
+           WHERE len(list_intersect(a.g, b.g)) > 0),
+         sym AS (SELECT a, b FROM edges UNION SELECT b, a FROM edges),
+         reach(node, lbl) AS (
+           SELECT doc_id, doc_id FROM documents
+           UNION
+           SELECT s.b, reach.lbl FROM reach JOIN sym s
+             ON s.a = reach.node)
+         SELECT node AS doc_id, min(lbl) AS cluster_id,
+           (node = min(lbl)) AS is_canonical
+         FROM reach GROUP BY node""")),
+    Gate("d_embed_neardup", dEmbedNearDup _, Some(
+      """WITH e AS (SELECT vec_id,
+           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
+         FROM embeddings WHERE vec_id < 1000)
+         SELECT a.vec_id AS keep_id, b.vec_id AS dup_id,
+           round(list_cosine_similarity(a.emb, b.emb), 6) AS cos_sim
+         FROM e a JOIN e b ON a.vec_id < b.vec_id
+         WHERE list_cosine_similarity(a.emb, b.emb) >= 0.3""")))
 }

@@ -2,6 +2,7 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Merge-with-manual-overrides semantics (SURVEY §7.4 risk 6;
   * reference `pypelib/amplicon/dispatch.py:26-28,118-127,361-377`):
@@ -124,14 +125,6 @@ object Overrides {
       ("s09", Unknown, ""),
       ("s10", Unknown, Skip))
 
-  val queries
-      : Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g_dispatch_override" -> ((s, _) => {
-      import s.implicits._
-      effectiveTarget(singleModeOverride(
-        dispatchRows.toDF("sample", "target", "override")))
-    }))
-
   private def dispatchOracle: String = {
     val vals = dispatchRows
       .map { case (s, t, o) => s"('$s', '$t', '$o')" }.mkString(", ")
@@ -161,6 +154,10 @@ object Overrides {
      FROM o"""
   }
 
-  val oracle: Map[String, String] = Map(
-    "g_dispatch_override" -> dispatchOracle)
+  val gates: Seq[Gate] = Seq(
+    Gate("g_dispatch_override", (s, _) => {
+      import s.implicits._
+      effectiveTarget(singleModeOverride(
+        dispatchRows.toDF("sample", "target", "override")))
+    }, Some(dispatchOracle)))
 }

@@ -3,6 +3,7 @@ package graft.io
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Front-door catalog tables of the reference warehouse — the
   * sample-metadata family every GLAMR query joins through
@@ -301,15 +302,6 @@ object CatalogIngest {
       "samp_447", "lgt__516")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s_glamr_samples" -> sGlamrSamples _,
-    "s_glamr_datasets" -> sGlamrDatasets _,
-    "s_tax_info" -> sTaxInfo _,
-    "s_read_count" -> sReadCount _,
-    "s_contig_bins" -> sContigBins _,
-    "s_mc_marker_abunds" -> sMcMarkerAbunds _,
-    "s_mc_clade_abunds" -> sMcCladeAbunds _)
-
   // ---- DuckDB oracles ----
 
   private def lit1(s: String): String =
@@ -429,12 +421,12 @@ object CatalogIngest {
      FROM w"""
   }
 
-  val oracle: Map[String, String] = Map(
-    "s_glamr_samples" -> glamrSamplesOracle,
-    "s_glamr_datasets" -> glamrDatasetsOracle,
-    "s_tax_info" -> taxInfoOracle,
-    "s_read_count" -> readCountOracle,
-    "s_contig_bins" -> contigBinsOracle,
-    "s_mc_marker_abunds" -> mcMarkerOracle,
-    "s_mc_clade_abunds" -> mcCladeOracle)
+  val gates: Seq[Gate] = Seq(
+    Gate("s_glamr_samples", sGlamrSamples _, Some(glamrSamplesOracle)),
+    Gate("s_glamr_datasets", sGlamrDatasets _, Some(glamrDatasetsOracle)),
+    Gate("s_tax_info", sTaxInfo _, Some(taxInfoOracle)),
+    Gate("s_read_count", sReadCount _, Some(readCountOracle)),
+    Gate("s_contig_bins", sContigBins _, Some(contigBinsOracle)),
+    Gate("s_mc_marker_abunds", sMcMarkerAbunds _, Some(mcMarkerOracle)),
+    Gate("s_mc_clade_abunds", sMcCladeAbunds _, Some(mcCladeOracle)))
 }

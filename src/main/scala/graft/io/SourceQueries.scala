@@ -3,6 +3,7 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Gate queries for the source readers (SURVEY §2.1). The driver's
   * sfDir holds only parquet, so the text-format readers run over the
@@ -313,28 +314,6 @@ object SourceQueries {
         col("n_chars"), col("fp"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s_warc_parse" -> sWarcParse _,
-    "s_warc_gz_parse" -> sWarcGzParse _,
-    "s_warc_wet_curate" -> sWarcWetCurate _,
-    "s_warc_bin_parse" -> sWarcBinParse _,
-    "s_warc_charset_text" -> sWarcCharsetText _,
-    "s_warc_bin_curate" -> sWarcBinCurate _,
-    "s15b_input_file_name" -> s15bInputFile _,
-    "s15c_catalog_mtime" -> s15cCatalogMtime _,
-    "s15d_catalog_dump" -> s15dCatalogDump _,
-    "s4_rpkm_skip" -> s4RpkmSkip _,
-    "s7_seqkit_stats" -> s7Seqkit _,
-    "s13_idxstats_rpkm" -> s13Idxstats _,
-    "s6_tblout_parse" -> s6Tblout _,
-    "s11_fasta_parse" -> s11Fasta _,
-    "s12_fastq_parse" -> s12Fastq _,
-    "s1_m8_tophit" -> s1M8Tophit _,
-    "s15_file_catalog" -> s15Catalog _,
-    "k10_compaction_plan" -> k10Compaction _,
-    "s8_json_parse" -> s8Json _,
-    "j9_file_exists_join" -> j9FileJoin _)
-
   // ---- DuckDB oracles ----
 
   private def m8Oracle: String = {
@@ -636,30 +615,31 @@ object SourceQueries {
      FROM expected e LEFT JOIN cat c ON e.table_name = c.table_name"""
   }
 
-  val oracle: Map[String, String] = Map(
-    "s_warc_parse" -> warcParseOracle,
+  val gates: Seq[Gate] = Seq(
+    Gate("s_warc_parse", sWarcParse _, Some(warcParseOracle)),
     // gz gate reads the SAME member through gzip: one framing truth
-    "s_warc_gz_parse" -> warcParseOracle,
-    "s_warc_wet_curate" -> warcCurateOracle,
-    "s_warc_bin_parse" -> warcBinParseOracle,
-    "s_warc_charset_text" -> warcCharsetTextOracle,
-    "s_warc_bin_curate" -> warcBinCurateOracle,
-    "s4_rpkm_skip" -> rpkmOracle,
-    "s7_seqkit_stats" -> seqkitOracle,
-    "s13_idxstats_rpkm" -> idxstatsOracle,
-    "s1_m8_tophit" -> m8Oracle,
-    "s6_tblout_parse" -> tbloutOracle,
-    "s8_json_parse" -> jsonOracle,
-    "s11_fasta_parse" -> fastaOracle,
-    "s12_fastq_parse" -> fastqOracle,
-    "s15_file_catalog" -> catalogOracle,
-    "s15c_catalog_mtime" ->
+    Gate("s_warc_gz_parse", sWarcGzParse _, Some(warcParseOracle)),
+    Gate("s_warc_wet_curate", sWarcWetCurate _, Some(warcCurateOracle)),
+    Gate("s_warc_bin_parse", sWarcBinParse _, Some(warcBinParseOracle)),
+    Gate("s_warc_charset_text", sWarcCharsetText _,
+      Some(warcCharsetTextOracle)),
+    Gate("s_warc_bin_curate", sWarcBinCurate _, Some(warcBinCurateOracle)),
+    Gate("s15b_input_file_name", s15bInputFile _, Some(
+      "SELECT 'lineitem' AS table_from_path, count(*) AS n_rows FROM lineitem")),
+    Gate("s15c_catalog_mtime", s15cCatalogMtime _, Some(
       """SELECT table_name, size_bytes, mtime
        FROM '__OUTDIR__/s15d_catalog_dump/*.parquet'
-       WHERE is_parquet""",
-    "s15b_input_file_name" ->
-      "SELECT 'lineitem' AS table_from_path, count(*) AS n_rows FROM lineitem",
-    "k10_compaction_plan" ->
+       WHERE is_parquet""")),
+    Gate("s15d_catalog_dump", s15dCatalogDump _),
+    Gate("s4_rpkm_skip", s4RpkmSkip _, Some(rpkmOracle)),
+    Gate("s7_seqkit_stats", s7Seqkit _, Some(seqkitOracle)),
+    Gate("s13_idxstats_rpkm", s13Idxstats _, Some(idxstatsOracle)),
+    Gate("s6_tblout_parse", s6Tblout _, Some(tbloutOracle)),
+    Gate("s11_fasta_parse", s11Fasta _, Some(fastaOracle)),
+    Gate("s12_fastq_parse", s12Fastq _, Some(fastqOracle)),
+    Gate("s1_m8_tophit", s1M8Tophit _, Some(m8Oracle)),
+    Gate("s15_file_catalog", s15Catalog _, Some(catalogOracle)),
+    Gate("k10_compaction_plan", k10Compaction _, Some(
       """WITH f AS (
          SELECT file_name, size_bytes
          FROM '__OUTDIR__/s15d_catalog_dump/*.parquet'
@@ -675,6 +655,7 @@ object SourceQueries {
          count(*) AS n_files,
          CAST(sum(size_bytes) AS BIGINT) AS total_bytes,
          min(file_name) AS first_file
-       FROM r GROUP BY 1""",
-    "j9_file_exists_join" -> fileJoinOracle)
+       FROM r GROUP BY 1""")),
+    Gate("s8_json_parse", s8Json _, Some(jsonOracle)),
+    Gate("j9_file_exists_join", j9FileJoin _, Some(fileJoinOracle)))
 }

@@ -3,6 +3,7 @@ package graft.io
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Gate
 
 /** Dedicated ingest schemas for the remaining §1.2 warehouse tables —
   * kofam_scan, checkm2, eukcc, antismash counts/regions (reference
@@ -908,28 +909,6 @@ object WarehouseIngest {
       "samp_9")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s_tophit" -> sTophit _,
-    "s_gene_abund" -> sGeneAbund _,
-    "s_uniref_index" -> sUnirefIndex _,
-    "s_uniref_lookup" -> sUnirefLookup _,
-    "s_uniref_taxid" -> sUnirefTaxid _,
-    "s_bin_abund" -> sBinAbund _,
-    "s_contig_abund" -> sContigAbund _,
-    "s_contig_blast" -> sContigBlast _,
-    "s_kraken_report" -> sKrakenReport _,
-    "s_lca_summary" -> sLcaSummary _,
-    "s_gtdb" -> sGtdb _,
-    "s_checkm" -> sCheckm _,
-    "s_drep" -> sDrep _,
-    "s_benchmarks" -> sBenchmarks _,
-    "s_gtdb_to_ncbi" -> sGtdbToNcbi _,
-    "s_kofam" -> sKofam _,
-    "s_checkm2" -> sCheckm2 _,
-    "s_eukcc" -> sEukcc _,
-    "s_antismash_counts" -> sAntismashCounts _,
-    "s_antismash_regions" -> sAntismashRegions _)
-
   // ---- DuckDB oracles (same constants, parse re-derived in SQL) ----
 
   private def lit1(s: String): String =
@@ -1319,25 +1298,26 @@ object WarehouseIngest {
      FROM p"""
   }
 
-  val oracle: Map[String, String] = Map(
-    "s_tophit" -> tophitOracle,
-    "s_gene_abund" -> geneAbundOracle,
-    "s_uniref_index" -> unirefIndexOracle,
-    "s_uniref_lookup" -> unirefLookupOracle,
-    "s_uniref_taxid" -> unirefTaxidOracle,
-    "s_bin_abund" -> binAbundOracle,
-    "s_contig_abund" -> contigAbundOracle,
-    "s_contig_blast" -> contigBlastOracle,
-    "s_kraken_report" -> krakenReportOracle,
-    "s_lca_summary" -> lcaSummaryOracle,
-    "s_gtdb" -> gtdbOracle,
-    "s_checkm" -> checkmOracle,
-    "s_drep" -> drepOracle,
-    "s_benchmarks" -> benchmarksOracle,
-    "s_gtdb_to_ncbi" -> gtdbToNcbiOracle,
-    "s_kofam" -> kofamOracle,
-    "s_checkm2" -> checkm2Oracle,
-    "s_eukcc" -> eukccOracle,
-    "s_antismash_counts" -> antismashCountsOracle,
-    "s_antismash_regions" -> antismashRegionsOracle)
+  val gates: Seq[Gate] = Seq(
+    Gate("s_tophit", sTophit _, Some(tophitOracle)),
+    Gate("s_gene_abund", sGeneAbund _, Some(geneAbundOracle)),
+    Gate("s_uniref_index", sUnirefIndex _, Some(unirefIndexOracle)),
+    Gate("s_uniref_lookup", sUnirefLookup _, Some(unirefLookupOracle)),
+    Gate("s_uniref_taxid", sUnirefTaxid _, Some(unirefTaxidOracle)),
+    Gate("s_bin_abund", sBinAbund _, Some(binAbundOracle)),
+    Gate("s_contig_abund", sContigAbund _, Some(contigAbundOracle)),
+    Gate("s_contig_blast", sContigBlast _, Some(contigBlastOracle)),
+    Gate("s_kraken_report", sKrakenReport _, Some(krakenReportOracle)),
+    Gate("s_lca_summary", sLcaSummary _, Some(lcaSummaryOracle)),
+    Gate("s_gtdb", sGtdb _, Some(gtdbOracle)),
+    Gate("s_checkm", sCheckm _, Some(checkmOracle)),
+    Gate("s_drep", sDrep _, Some(drepOracle)),
+    Gate("s_benchmarks", sBenchmarks _, Some(benchmarksOracle)),
+    Gate("s_gtdb_to_ncbi", sGtdbToNcbi _, Some(gtdbToNcbiOracle)),
+    Gate("s_kofam", sKofam _, Some(kofamOracle)),
+    Gate("s_checkm2", sCheckm2 _, Some(checkm2Oracle)),
+    Gate("s_eukcc", sEukcc _, Some(eukccOracle)),
+    Gate("s_antismash_counts", sAntismashCounts _, Some(antismashCountsOracle)),
+    Gate("s_antismash_regions", sAntismashRegions _,
+      Some(antismashRegionsOracle)))
 }

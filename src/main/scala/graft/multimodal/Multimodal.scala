@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** Multimodal-column plumbing: opaque `binary` payloads + typed
@@ -1171,21 +1172,6 @@ object Multimodal {
       .filter(col("hamming") <= 3)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m_phash" -> mPhash _,
-    "m_phash_pairs" -> mPhashPairs _,
-    "m_vhash" -> mVhash _,
-    "m_vhash_pairs" -> mVhashPairs _,
-    "m_audio_fp" -> mAudioFp _,
-    "m_audio_fp_pairs" -> mAudioFpPairs _,
-    "m_png_decode" -> mPngDecode _,
-    "m_multimodal_stub" -> mStub _,
-    "m_frame_sample" -> mFrameSample _,
-    "m_audio_segments" -> mAudioSegments _,
-    "m_audio_decode" -> mAudioDecode _,
-    "m_image_decode" -> mImageDecode _,
-    "m_image_resize" -> mImageResize _)
-
   private val imageDecodeOracle: String =
     """WITH p AS (
          SELECT doc_id, (n_chars % 13) + 2 AS w, (n_chars % 7) + 2 AS h
@@ -1205,61 +1191,8 @@ object Multimodal {
            AS sum_b
        FROM v GROUP BY doc_id, w, h"""
 
-  val oracle: Map[String, String] = Map(
-    "m_audio_fp" ->
-      """WITH p AS (
-           SELECT doc_id, (n_chars % 30 + 1) * 80 AS n FROM documents),
-         s AS (
-           SELECT doc_id, n,
-             abs((doc_id * 31 + r.i * 7919) % 20001 - 10000) AS a,
-             (r.i * 65) // n AS w
-           FROM p, unnest(range(0, n)) AS r(i)),
-         e AS (SELECT doc_id, n, w, sum(a) AS e
-               FROM s GROUP BY doc_id, n, w),
-         bits AS (
-           SELECT a.doc_id, a.n, a.w AS i,
-             CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-           FROM e a JOIN e b ON a.doc_id = b.doc_id AND b.w = a.w + 1
-           WHERE a.w < 64)
-         SELECT doc_id, CAST(n AS BIGINT) AS n_samples,
-           CAST(sum(CASE WHEN i < 32
-             THEN bit * (1::BIGINT << i) ELSE 0 END) AS BIGINT) AS fp_hi,
-           CAST(sum(CASE WHEN i >= 32
-             THEN bit * (1::BIGINT << (i - 32)) ELSE 0 END) AS BIGINT)
-             AS fp_lo
-         FROM bits GROUP BY doc_id, n""",
-    "m_audio_fp_pairs" ->
-      """WITH d AS (
-           SELECT doc_id, doc_id // 4 AS base, (doc_id % 4) * 500 AS pert
-           FROM documents WHERE doc_id < 20000),
-         p AS (SELECT doc_id, base, pert, (base % 30 + 1) * 80 AS n
-               FROM d),
-         s AS (
-           SELECT doc_id, n,
-             abs((base * 31 + r.i * 7919) % 20001 - 10000
-               + CASE WHEN r.i = 0 THEN pert ELSE 0 END) AS a,
-             (r.i * 65) // n AS w
-           FROM p, unnest(range(0, n)) AS r(i)),
-         e AS (SELECT doc_id, w, sum(a) AS e FROM s GROUP BY doc_id, w),
-         bits AS (
-           SELECT a.doc_id, a.w AS i,
-             CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-           FROM e a JOIN e b ON a.doc_id = b.doc_id AND b.w = a.w + 1
-           WHERE a.w < 64),
-         hashes AS (
-           SELECT doc_id,
-             sum(CASE WHEN i < 32
-               THEN bit * (1::BIGINT << i) ELSE 0 END) AS hi,
-             sum(CASE WHEN i >= 32
-               THEN bit * (1::BIGINT << (i - 32)) ELSE 0 END) AS lo
-           FROM bits GROUP BY doc_id)
-         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(bit_count(xor(a.hi, b.hi))
-             + bit_count(xor(a.lo, b.lo)) AS INT) AS hamming
-         FROM hashes a JOIN hashes b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.hi, b.hi))
-           + bit_count(xor(a.lo, b.lo)) <= 3""",
-    "m_phash" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("m_phash", mPhash _, Some(
       """WITH p AS (
            SELECT doc_id, (n_chars % 13) + 2 AS w, (n_chars % 7) + 2 AS h
            FROM documents),
@@ -1286,8 +1219,8 @@ object Multimodal {
            CAST(sum(CASE WHEN i >= 32
              THEN bit * (1::BIGINT << (i - 32)) ELSE 0 END) AS BIGINT)
              AS ph_lo
-         FROM bits GROUP BY doc_id, w, h""",
-    "m_phash_pairs" ->
+         FROM bits GROUP BY doc_id, w, h""")),
+    Gate("m_phash_pairs", mPhashPairs _, Some(
       """WITH d AS (
            SELECT doc_id, doc_id // 4 AS img, (doc_id % 4) * 60 AS pert
            FROM documents WHERE doc_id < 20000),
@@ -1326,8 +1259,8 @@ object Multimodal {
              + bit_count(xor(a.lo, b.lo)) AS INT) AS hamming
          FROM hashes a JOIN hashes b ON a.doc_id < b.doc_id
          WHERE bit_count(xor(a.hi, b.hi))
-           + bit_count(xor(a.lo, b.lo)) <= 3""",
-    "m_vhash" ->
+           + bit_count(xor(a.lo, b.lo)) <= 3""")),
+    Gate("m_vhash", mVhash _, Some(
       """WITH d AS (
            SELECT doc_id, doc_id // 4 AS clip,
              CAST(doc_id % 4 AS INT) AS variant
@@ -1367,8 +1300,8 @@ object Multimodal {
            CAST(sum(CASE WHEN i >= 32
              THEN bit * (1::BIGINT << (i - 32)) ELSE 0 END) AS BIGINT)
              AS ph_lo
-         FROM bits GROUP BY doc_id, frame_idx""",
-    "m_vhash_pairs" ->
+         FROM bits GROUP BY doc_id, frame_idx""")),
+    Gate("m_vhash_pairs", mVhashPairs _, Some(
       """WITH h AS (
            SELECT doc_id, frame_idx, ph_hi AS hi, ph_lo AS lo
            FROM parquet_scan('__OUTDIR__/m_vhash/*.parquet')),
@@ -1381,12 +1314,113 @@ object Multimodal {
          SELECT doc_a, doc_b,
            CAST(count(DISTINCT frame_idx) AS BIGINT) AS n_frames_matched
          FROM fm GROUP BY doc_a, doc_b
-         HAVING count(DISTINCT frame_idx) >= 2""",
-    "m_image_decode" -> imageDecodeOracle,
+         HAVING count(DISTINCT frame_idx) >= 2""")),
+    Gate("m_audio_fp", mAudioFp _, Some(
+      """WITH p AS (
+           SELECT doc_id, (n_chars % 30 + 1) * 80 AS n FROM documents),
+         s AS (
+           SELECT doc_id, n,
+             abs((doc_id * 31 + r.i * 7919) % 20001 - 10000) AS a,
+             (r.i * 65) // n AS w
+           FROM p, unnest(range(0, n)) AS r(i)),
+         e AS (SELECT doc_id, n, w, sum(a) AS e
+               FROM s GROUP BY doc_id, n, w),
+         bits AS (
+           SELECT a.doc_id, a.n, a.w AS i,
+             CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
+           FROM e a JOIN e b ON a.doc_id = b.doc_id AND b.w = a.w + 1
+           WHERE a.w < 64)
+         SELECT doc_id, CAST(n AS BIGINT) AS n_samples,
+           CAST(sum(CASE WHEN i < 32
+             THEN bit * (1::BIGINT << i) ELSE 0 END) AS BIGINT) AS fp_hi,
+           CAST(sum(CASE WHEN i >= 32
+             THEN bit * (1::BIGINT << (i - 32)) ELSE 0 END) AS BIGINT)
+             AS fp_lo
+         FROM bits GROUP BY doc_id, n""")),
+    Gate("m_audio_fp_pairs", mAudioFpPairs _, Some(
+      """WITH d AS (
+           SELECT doc_id, doc_id // 4 AS base, (doc_id % 4) * 500 AS pert
+           FROM documents WHERE doc_id < 20000),
+         p AS (SELECT doc_id, base, pert, (base % 30 + 1) * 80 AS n
+               FROM d),
+         s AS (
+           SELECT doc_id, n,
+             abs((base * 31 + r.i * 7919) % 20001 - 10000
+               + CASE WHEN r.i = 0 THEN pert ELSE 0 END) AS a,
+             (r.i * 65) // n AS w
+           FROM p, unnest(range(0, n)) AS r(i)),
+         e AS (SELECT doc_id, w, sum(a) AS e FROM s GROUP BY doc_id, w),
+         bits AS (
+           SELECT a.doc_id, a.w AS i,
+             CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
+           FROM e a JOIN e b ON a.doc_id = b.doc_id AND b.w = a.w + 1
+           WHERE a.w < 64),
+         hashes AS (
+           SELECT doc_id,
+             sum(CASE WHEN i < 32
+               THEN bit * (1::BIGINT << i) ELSE 0 END) AS hi,
+             sum(CASE WHEN i >= 32
+               THEN bit * (1::BIGINT << (i - 32)) ELSE 0 END) AS lo
+           FROM bits GROUP BY doc_id)
+         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+           CAST(bit_count(xor(a.hi, b.hi))
+             + bit_count(xor(a.lo, b.lo)) AS INT) AS hamming
+         FROM hashes a JOIN hashes b ON a.doc_id < b.doc_id
+         WHERE bit_count(xor(a.hi, b.hi))
+           + bit_count(xor(a.lo, b.lo)) <= 3""")),
     // PNG decodes the SAME synthetic pixels to the SAME shape — one
     // truth verifies both codecs
-    "m_png_decode" -> imageDecodeOracle,
-    "m_image_resize" ->
+    Gate("m_png_decode", mPngDecode _, Some(imageDecodeOracle)),
+    Gate("m_multimodal_stub", mStub _, Some(
+      """SELECT doc_id,
+         CAST(n_chars % 640 + 1 AS INT) AS width,
+         CAST(n_chars % 480 + 1 AS INT) AS height,
+         CAST(octet_length(CAST(text AS BLOB)) AS INT) AS n_bytes,
+         md5(text) AS checksum,
+         CAST((ascii(substr(text,1,1)) + n_chars) % 256 AS INT)
+           AS brightness
+         FROM documents""")),
+    Gate("m_frame_sample", mFrameSample _, Some(
+      """WITH v AS (
+           SELECT doc_id, text, n_chars % 120 + 1 AS n_frames
+           FROM documents)
+         SELECT doc_id, n_frames,
+           unnest(generate_series(0, n_frames - 1, 10)) AS frame_idx,
+           md5(text || ':' ||
+             CAST(unnest(generate_series(0, n_frames - 1, 10))
+               AS VARCHAR)) AS frame_feat
+         FROM v""")),
+    Gate("m_audio_segments", mAudioSegments _, Some(
+      """WITH a AS (
+           SELECT doc_id, text,
+             CAST((n_chars % 30 + 1) * 1000 AS BIGINT) AS duration_ms
+           FROM documents)
+         SELECT doc_id, duration_ms,
+           unnest(generate_series(0, duration_ms - 1000, 500))
+             AS seg_start,
+           md5(text || ':' ||
+             CAST(unnest(generate_series(0, duration_ms - 1000, 500))
+               AS VARCHAR)) AS seg_feat
+         FROM a""")),
+    Gate("m_audio_decode", mAudioDecode _, Some(
+      """WITH p AS (
+           SELECT doc_id, (n_chars % 30 + 1) * 80 AS n_samples
+           FROM documents),
+         v AS (
+           SELECT doc_id, n_samples,
+             abs((doc_id * 31 + r.i * 7919) % 20001 - 10000) AS a
+           FROM p, unnest(range(0, n_samples)) AS r(i))
+         SELECT doc_id,
+           CAST(8000 AS INT) AS sample_rate,
+           CAST(1 AS INT) AS n_channels,
+           CAST(16 AS INT) AS bits,
+           CAST(n_samples AS BIGINT) AS n_samples,
+           CAST(n_samples * 1000 // 8000 AS BIGINT) AS duration_ms,
+           CAST(max(a) AS BIGINT) AS peak_abs,
+           CAST(sum(a) AS BIGINT) AS sum_abs
+         FROM v GROUP BY doc_id, n_samples""")),
+    Gate("m_image_decode", mImageDecode _, Some(imageDecodeOracle)),
+    Gate("m_image_resize", mImageResize _, Some(
       """WITH p AS (
            SELECT doc_id, (n_chars % 13) + 2 AS w, (n_chars % 7) + 2 AS h
            FROM documents),
@@ -1409,53 +1443,5 @@ object Multimodal {
            CAST(sum(b) AS BIGINT) AS rs_sum_b,
            CAST(sum((1 + x + 5*y) * (r + 2*gr + 3*b)) AS BIGINT)
              AS rs_check
-         FROM c GROUP BY doc_id, w, h""",
-    "m_audio_decode" ->
-      """WITH p AS (
-           SELECT doc_id, (n_chars % 30 + 1) * 80 AS n_samples
-           FROM documents),
-         v AS (
-           SELECT doc_id, n_samples,
-             abs((doc_id * 31 + r.i * 7919) % 20001 - 10000) AS a
-           FROM p, unnest(range(0, n_samples)) AS r(i))
-         SELECT doc_id,
-           CAST(8000 AS INT) AS sample_rate,
-           CAST(1 AS INT) AS n_channels,
-           CAST(16 AS INT) AS bits,
-           CAST(n_samples AS BIGINT) AS n_samples,
-           CAST(n_samples * 1000 // 8000 AS BIGINT) AS duration_ms,
-           CAST(max(a) AS BIGINT) AS peak_abs,
-           CAST(sum(a) AS BIGINT) AS sum_abs
-         FROM v GROUP BY doc_id, n_samples""",
-    "m_audio_segments" ->
-      """WITH a AS (
-           SELECT doc_id, text,
-             CAST((n_chars % 30 + 1) * 1000 AS BIGINT) AS duration_ms
-           FROM documents)
-         SELECT doc_id, duration_ms,
-           unnest(generate_series(0, duration_ms - 1000, 500))
-             AS seg_start,
-           md5(text || ':' ||
-             CAST(unnest(generate_series(0, duration_ms - 1000, 500))
-               AS VARCHAR)) AS seg_feat
-         FROM a""",
-    "m_frame_sample" ->
-      """WITH v AS (
-           SELECT doc_id, text, n_chars % 120 + 1 AS n_frames
-           FROM documents)
-         SELECT doc_id, n_frames,
-           unnest(generate_series(0, n_frames - 1, 10)) AS frame_idx,
-           md5(text || ':' ||
-             CAST(unnest(generate_series(0, n_frames - 1, 10))
-               AS VARCHAR)) AS frame_feat
-         FROM v""",
-    "m_multimodal_stub" ->
-      """SELECT doc_id,
-         CAST(n_chars % 640 + 1 AS INT) AS width,
-         CAST(n_chars % 480 + 1 AS INT) AS height,
-         CAST(octet_length(CAST(text AS BLOB)) AS INT) AS n_bytes,
-         md5(text) AS checksum,
-         CAST((ascii(substr(text,1,1)) + n_chars) % 256 AS INT)
-           AS brightness
-         FROM documents""")
+         FROM c GROUP BY doc_id, w, h""")))
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** Abundance math — the reference's single most load-bearing pattern
@@ -131,12 +132,6 @@ object Abundance {
          FROM joined""")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g_tpm" -> (tpm _),
-    "g_tpm_sql" -> gTpmSql _,
-    "g_tpm2_table" -> gTpm2Table _,
-    "a2_rel_abund" -> a2RelAbund _)
-
   // g_tpm2_table must round-trip to the SAME rows the query computes,
   // so the artifact gate wraps the query's oracle with the gate's
   // sample-subset predicate (applied after normalization on both sides)
@@ -159,17 +154,17 @@ object Abundance {
              sum(reads_per_base) OVER (PARTITION BY sample), 4) AS tpm
          FROM joined"""
 
-  val oracle: Map[String, String] = Map(
-    "g_tpm" -> tpmOracleSql,
-    "g_tpm_sql" -> tpmOracleSql,
-    "g_tpm2_table" ->
-      s"SELECT * FROM ($tpmOracleSql) WHERE sample % 20 = 0",
-    "a2_rel_abund" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("g_tpm", (tpm _), Some(tpmOracleSql)),
+    Gate("g_tpm_sql", gTpmSql _, Some(tpmOracleSql)),
+    Gate("g_tpm2_table", gTpm2Table _,
+      Some(s"SELECT * FROM ($tpmOracleSql) WHERE sample % 20 = 0")),
+    Gate("a2_rel_abund", a2RelAbund _, Some(
       """WITH counts AS (
            SELECT l_suppkey AS sample, l_partkey AS target,
                   sum(l_quantity) AS n
            FROM lineitem GROUP BY 1, 2)
          SELECT sample, target, round(n, 2) AS n,
            round(n / sum(n) OVER (PARTITION BY sample), 6) AS rel_abund
-         FROM counts""")
+         FROM counts""")))
 }

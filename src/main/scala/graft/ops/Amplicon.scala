@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** Amplicon table stages (SURVEY §2.10 / §3.3): the DADA2-adjacent
@@ -123,11 +124,6 @@ object Amplicon {
       "samp_100", "fwd")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g_trunc_search" -> gTruncSearch _,
-    "g_read_tracking" -> gReadTracking _,
-    "g_region_summary" -> gRegionSummary _)
-
   private def regionSummaryOracle: String = {
     val vals = graft.io.Fixtures.tblout.split("\n")
       .map(l => "('" + l.replace("'", "''") + "')").mkString(", ")
@@ -178,9 +174,8 @@ object Amplicon {
      FROM best GROUP BY target_name"""
   }
 
-  val oracle: Map[String, String] = Map(
-    "g_region_summary" -> regionSummaryOracle,
-    "g_trunc_search" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("g_trunc_search", gTruncSearch _, Some(
       """WITH per_cycle AS (
            SELECT event_type AS grp,
              CAST(minute(ts) AS INT) AS cycle,
@@ -196,8 +191,8 @@ object Amplicon {
          FROM (SELECT *, row_number() OVER (PARTITION BY grp
            ORDER BY round(slide_q, 6) DESC, cycle ASC) AS rn
            FROM smoothed) x
-         WHERE rn = 1""",
-    "g_read_tracking" ->
+         WHERE rn = 1""")),
+    Gate("g_read_tracking", gReadTracking _, Some(
       """WITH su AS (SELECT user_id, count(*) AS n_signup FROM events
            WHERE event_type = 'signup' GROUP BY user_id),
          vw AS (SELECT user_id, count(*) AS n_view FROM events
@@ -215,5 +210,6 @@ object Amplicon {
          FROM su
          LEFT JOIN vw USING(user_id)
          LEFT JOIN ck USING(user_id)
-         LEFT JOIN pu USING(user_id)""")
+         LEFT JOIN pu USING(user_id)""")),
+    Gate("g_region_summary", gRegionSummary _, Some(regionSummaryOracle)))
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** The bin_summary view family (SURVEY §2.4 J2 / FIXTURES F9): the
@@ -54,11 +55,8 @@ object Bins {
         "completeness", "contamination", "quality", "is_rep")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g_bin_summary" -> gBinSummary _)
-
-  val oracle: Map[String, String] = Map(
-    "g_bin_summary" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("g_bin_summary", gBinSummary _, Some(
       """WITH metrics AS (
            SELECT p_brand || '_' || p_type || '_' ||
                CAST(p_size AS VARCHAR) AS bin,
@@ -83,5 +81,5 @@ object Bins {
                 WHEN completeness >= 30 AND contamination < 50 THEN 'LOW'
                 ELSE 'FAIL' END AS quality,
            bin_num % 7 = 0 AS is_rep
-         FROM keyed""")
+         FROM keyed""")))
 }

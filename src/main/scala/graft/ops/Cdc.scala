@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** Snapshot differencing — the change-data-capture view a warehouse
@@ -258,59 +259,8 @@ object Cdc {
     if (!fs.exists(marker)) fs.create(marker).close()
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cdc_snapshot_diff" -> cdcSnapshotDiff _,
-    "cdc_apply" -> cdcApply _,
-    "cdc_scd2" -> cdcScd2 _)
-
-  val oracle: Map[String, String] = Map(
-    "cdc_scd2" ->
-      """WITH base AS (
-           SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-             o_orderdate, o_orderpriority
-           FROM orders WHERE o_orderkey % 97 <> 0),
-         curr AS (
-           SELECT o_orderkey, o_custkey, o_orderstatus,
-             CASE WHEN o_orderkey % 13 = 0 THEN o_totalprice + 1.0
-               ELSE o_totalprice END AS o_totalprice,
-             o_orderdate,
-             CASE WHEN o_orderkey % 31 = 0 THEN '9-RUSH'
-               ELSE o_orderpriority END AS o_orderpriority
-           FROM orders WHERE o_orderkey % 89 <> 0),
-         chg AS (
-           SELECT b.o_orderkey AS k
-           FROM base b JOIN curr c ON b.o_orderkey = c.o_orderkey
-           WHERE b.o_custkey IS DISTINCT FROM c.o_custkey
-              OR b.o_orderstatus IS DISTINCT FROM c.o_orderstatus
-              OR b.o_totalprice IS DISTINCT FROM c.o_totalprice
-              OR b.o_orderdate IS DISTINCT FROM c.o_orderdate
-              OR b.o_orderpriority IS DISTINCT FROM c.o_orderpriority),
-         rem AS (
-           SELECT o_orderkey AS k FROM base
-           WHERE o_orderkey NOT IN (SELECT o_orderkey FROM curr)),
-         addk AS (
-           SELECT o_orderkey AS k FROM curr
-           WHERE o_orderkey NOT IN (SELECT o_orderkey FROM base)),
-         closing AS (SELECT k FROM chg UNION ALL SELECT k FROM rem)
-         SELECT b.*, CAST(0 AS BIGINT) AS valid_from,
-           CASE WHEN b.o_orderkey IN (SELECT k FROM closing)
-             THEN CAST(1 AS BIGINT) END AS valid_to,
-           b.o_orderkey NOT IN (SELECT k FROM closing) AS is_current
-         FROM base b
-         UNION ALL
-         SELECT c.*, CAST(1 AS BIGINT), CAST(NULL AS BIGINT), true
-         FROM curr c
-         WHERE c.o_orderkey IN (SELECT k FROM chg)
-            OR c.o_orderkey IN (SELECT k FROM addk)""",
-    "cdc_apply" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus,
-           CASE WHEN o_orderkey % 13 = 0 THEN o_totalprice + 1.0
-             ELSE o_totalprice END AS o_totalprice,
-           o_orderdate,
-           CASE WHEN o_orderkey % 31 = 0 THEN '9-RUSH'
-             ELSE o_orderpriority END AS o_orderpriority
-         FROM orders WHERE o_orderkey % 89 <> 0""",
-    "cdc_snapshot_diff" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("cdc_snapshot_diff", cdcSnapshotDiff _, Some(
       """WITH base AS (
            SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
              o_orderdate, o_orderpriority
@@ -350,5 +300,51 @@ object Cdc {
            old_totalprice, new_totalprice
          FROM j
          WHERE is_add OR is_rem
-            OR d_cust OR d_stat OR d_price OR d_date OR d_prio""")
+            OR d_cust OR d_stat OR d_price OR d_date OR d_prio""")),
+    Gate("cdc_apply", cdcApply _, Some(
+      """SELECT o_orderkey, o_custkey, o_orderstatus,
+           CASE WHEN o_orderkey % 13 = 0 THEN o_totalprice + 1.0
+             ELSE o_totalprice END AS o_totalprice,
+           o_orderdate,
+           CASE WHEN o_orderkey % 31 = 0 THEN '9-RUSH'
+             ELSE o_orderpriority END AS o_orderpriority
+         FROM orders WHERE o_orderkey % 89 <> 0""")),
+    Gate("cdc_scd2", cdcScd2 _, Some(
+      """WITH base AS (
+           SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
+             o_orderdate, o_orderpriority
+           FROM orders WHERE o_orderkey % 97 <> 0),
+         curr AS (
+           SELECT o_orderkey, o_custkey, o_orderstatus,
+             CASE WHEN o_orderkey % 13 = 0 THEN o_totalprice + 1.0
+               ELSE o_totalprice END AS o_totalprice,
+             o_orderdate,
+             CASE WHEN o_orderkey % 31 = 0 THEN '9-RUSH'
+               ELSE o_orderpriority END AS o_orderpriority
+           FROM orders WHERE o_orderkey % 89 <> 0),
+         chg AS (
+           SELECT b.o_orderkey AS k
+           FROM base b JOIN curr c ON b.o_orderkey = c.o_orderkey
+           WHERE b.o_custkey IS DISTINCT FROM c.o_custkey
+              OR b.o_orderstatus IS DISTINCT FROM c.o_orderstatus
+              OR b.o_totalprice IS DISTINCT FROM c.o_totalprice
+              OR b.o_orderdate IS DISTINCT FROM c.o_orderdate
+              OR b.o_orderpriority IS DISTINCT FROM c.o_orderpriority),
+         rem AS (
+           SELECT o_orderkey AS k FROM base
+           WHERE o_orderkey NOT IN (SELECT o_orderkey FROM curr)),
+         addk AS (
+           SELECT o_orderkey AS k FROM curr
+           WHERE o_orderkey NOT IN (SELECT o_orderkey FROM base)),
+         closing AS (SELECT k FROM chg UNION ALL SELECT k FROM rem)
+         SELECT b.*, CAST(0 AS BIGINT) AS valid_from,
+           CASE WHEN b.o_orderkey IN (SELECT k FROM closing)
+             THEN CAST(1 AS BIGINT) END AS valid_to,
+           b.o_orderkey NOT IN (SELECT k FROM closing) AS is_current
+         FROM base b
+         UNION ALL
+         SELECT c.*, CAST(1 AS BIGINT), CAST(NULL AS BIGINT), true
+         FROM curr c
+         WHERE c.o_orderkey IN (SELECT k FROM chg)
+            OR c.o_orderkey IN (SELECT k FROM addk)""")))
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Gate
 
 /** Invariant ports (SURVEY §5.3) and the amplicon pairing error-code
   * taxonomy E1–E17 (reference `pypelib/amplicon/guess_target.py`).
@@ -409,13 +410,6 @@ object Checks {
       "lang", "side")
       .withColumnRenamed("category", "lang")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g_pairing_codes" -> ((s, _) =>
-      pairingCodes(fixtureSummaries(s), fixtureFiles(s))),
-    "f_table_checksum" -> fTableChecksum _,
-    "f_bucket_checksum" -> fBucketChecksum _,
-    "f_dist_drift" -> fDistDrift _)
-
   // ---- DuckDB oracle: same fixture rows as VALUES CTEs (generated
   // from the Scala constants above), logic re-derived in SQL with
   // explicit COALESCE everywhere Spark uses never-null booleans ----
@@ -582,9 +576,38 @@ object Checks {
      $emits"""
   }
 
-  val oracle: Map[String, String] = Map(
+  val gates: Seq[Gate] = Seq(
+    Gate("g_pairing_codes", (s, _) =>
+      pairingCodes(fixtureSummaries(s), fixtureFiles(s)), Some(pairingOracle)),
+    // hex→int via DuckDB's 0x-prefixed cast ≡ Spark's conv(_,16,10)
+    Gate("f_table_checksum", fTableChecksum _, Some(
+      """WITH h AS (
+           SELECT CAST(concat('0x', substr(md5(concat_ws(chr(1),
+             coalesce(CAST(o_orderkey AS VARCHAR), chr(0)),
+             coalesce(CAST(o_custkey AS VARCHAR), chr(0)),
+             coalesce(o_orderstatus, chr(0)),
+             coalesce(o_orderpriority, chr(0)))), 1, 15)) AS BIGINT)
+             AS rh
+           FROM orders)
+         SELECT count(*) AS n_rows,
+           CAST(coalesce(sum(CAST(rh AS HUGEINT)), 0) AS VARCHAR)
+             AS checksum
+         FROM h""")),
+    Gate("f_bucket_checksum", fBucketChecksum _, Some(
+      """WITH h AS (
+           SELECT CAST(o_orderkey % 64 AS INT) AS bucket,
+             CAST(concat('0x', substr(md5(concat_ws(chr(1),
+               coalesce(CAST(o_orderkey AS VARCHAR), chr(0)),
+               coalesce(CAST(o_custkey AS VARCHAR), chr(0)),
+               coalesce(o_orderstatus, chr(0)),
+               coalesce(o_orderpriority, chr(0)))), 1, 15)) AS BIGINT)
+               AS rh
+           FROM orders)
+         SELECT bucket, count(*) AS n_rows,
+           CAST(sum(CAST(rh AS HUGEINT)) AS VARCHAR) AS checksum
+         FROM h GROUP BY 1""")),
     // same one-scan conditional counts, HUGEINT cross-products
-    "f_dist_drift" ->
+    Gate("f_dist_drift", fDistDrift _, Some(
       """WITH counts AS (
            SELECT lang,
              sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS n_a,
@@ -604,33 +627,5 @@ object Checks {
                  - CAST(c.n_b AS HUGEINT) * t.t_a) AS DOUBLE)
                / CAST(2 * t.t_a * t.t_b AS DOUBLE), 6)
            END AS tv_contrib
-         FROM counts c, tot t""",
-    "g_pairing_codes" -> pairingOracle,
-    // hex→int via DuckDB's 0x-prefixed cast ≡ Spark's conv(_,16,10)
-    "f_table_checksum" ->
-      """WITH h AS (
-           SELECT CAST(concat('0x', substr(md5(concat_ws(chr(1),
-             coalesce(CAST(o_orderkey AS VARCHAR), chr(0)),
-             coalesce(CAST(o_custkey AS VARCHAR), chr(0)),
-             coalesce(o_orderstatus, chr(0)),
-             coalesce(o_orderpriority, chr(0)))), 1, 15)) AS BIGINT)
-             AS rh
-           FROM orders)
-         SELECT count(*) AS n_rows,
-           CAST(coalesce(sum(CAST(rh AS HUGEINT)), 0) AS VARCHAR)
-             AS checksum
-         FROM h""",
-    "f_bucket_checksum" ->
-      """WITH h AS (
-           SELECT CAST(o_orderkey % 64 AS INT) AS bucket,
-             CAST(concat('0x', substr(md5(concat_ws(chr(1),
-               coalesce(CAST(o_orderkey AS VARCHAR), chr(0)),
-               coalesce(CAST(o_custkey AS VARCHAR), chr(0)),
-               coalesce(o_orderstatus, chr(0)),
-               coalesce(o_orderpriority, chr(0)))), 1, 15)) AS BIGINT)
-               AS rh
-           FROM orders)
-         SELECT bucket, count(*) AS n_rows,
-           CAST(sum(CAST(rh AS HUGEINT)) AS VARCHAR) AS checksum
-         FROM h GROUP BY 1""")
+         FROM counts c, tot t""")))
 }

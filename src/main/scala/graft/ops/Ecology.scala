@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** Community-diversity metrics — the alpha/beta-diversity summaries the
@@ -391,13 +392,6 @@ object Ecology {
     unifrac(branchAbundance(boundedFacts(t(s, d, "lineitem")),
       t(s, d, "part")))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a14_alpha_diversity" -> a14Alpha _,
-    "a15_bray_curtis" -> a15Bray _,
-    "a16_beta_presence" -> a16Beta _,
-    "eco_cooccur" -> ecoCooccur _,
-    "eco_unifrac" -> ecoUnifrac _)
-
   private val abundanceSql =
     """ab0 AS (
          SELECT l_suppkey AS sample, l_partkey AS taxon,
@@ -410,8 +404,8 @@ object Ecology {
          SELECT DISTINCT sample FROM ab0 ORDER BY sample LIMIT $GateK),
        ab AS (SELECT ab0.* FROM ab0 JOIN keep USING (sample))"""
 
-  val oracle: Map[String, String] = Map(
-    "a14_alpha_diversity" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("a14_alpha_diversity", a14Alpha _, Some(
       s"""WITH $abundanceSql,
          ab AS (SELECT * FROM ab0),
          agg AS (
@@ -428,8 +422,8 @@ object Ecology {
            round(CAST(CAST(n_total AS HUGEINT) * n_total AS DOUBLE)
              / CAST(sum_sq AS DOUBLE), 6) AS inv_simpson,
            round(CAST(n_max AS DOUBLE) / n_total, 6) AS berger_parker
-         FROM agg""",
-    "a15_bray_curtis" ->
+         FROM agg""")),
+    Gate("a15_bray_curtis", a15Bray _, Some(
       s"""WITH $abundanceSql,
          $boundedSql,
          totals AS (SELECT sample, sum(n) AS n_tot FROM ab GROUP BY 1),
@@ -450,8 +444,8 @@ object Ecology {
                - 2 * coalesce(s.shared_min, 0) AS DOUBLE)
              / (g.n_tot_a + g.n_tot_b), 6) AS bray_curtis
          FROM grid g LEFT JOIN shared s
-           ON s.sample_a = g.sample_a AND s.sample_b = g.sample_b""",
-    "a16_beta_presence" ->
+           ON s.sample_a = g.sample_a AND s.sample_b = g.sample_b""")),
+    Gate("a16_beta_presence", a16Beta _, Some(
       s"""WITH $abundanceSql,
          $boundedSql,
          rich AS (SELECT sample, count(*) AS s_rich FROM ab GROUP BY 1),
@@ -473,8 +467,8 @@ object Ecology {
            round(1.0 - 2.0 * CAST(coalesce(s.n_shared, 0) AS DOUBLE)
              / (g.rich_a + g.rich_b), 6) AS sorensen_dissim
          FROM grid g LEFT JOIN shared s
-           ON s.sample_a = g.sample_a AND s.sample_b = g.sample_b""",
-    "eco_cooccur" ->
+           ON s.sample_a = g.sample_a AND s.sample_b = g.sample_b""")),
+    Gate("eco_cooccur", ecoCooccur _, Some(
       s"""WITH $abundanceSql,
          ns AS (SELECT count(DISTINCT sample) AS n FROM ab0),
          top AS (
@@ -500,10 +494,10 @@ object Ecology {
            round(CAST(coalesce(p.n_both, 0) * (SELECT n FROM ns)
                AS DOUBLE) / (g.n_a * g.n_b), 6) AS lift
          FROM grid g LEFT JOIN pairs p
-           ON p.taxon_a = g.taxon_a AND p.taxon_b = g.taxon_b""",
+           ON p.taxon_a = g.taxon_a AND p.taxon_b = g.taxon_b""")),
     // same branch derivation (the t3 ancestor-explode idiom), same
     // bounded comparison set, HUGEINT min-products, VARCHAR numerator
-    "eco_unifrac" ->
+    Gate("eco_unifrac", ecoUnifrac _, Some(
       s"""WITH bt0 AS (
            SELECT l_suppkey AS sample, branch, count(*) AS n FROM (
              SELECT l_suppkey, p_brand AS branch
@@ -557,5 +551,5 @@ object Ecology {
              / CAST(${2 * TreeDepth} * g.n_reads_a * g.n_reads_b
                AS DOUBLE), 6) AS unifrac_weighted
          FROM grid g LEFT JOIN shared s
-           ON s.sample_a = g.sample_a AND s.sample_b = g.sample_b""")
+           ON s.sample_a = g.sample_a AND s.sample_b = g.sample_b""")))
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** Declarative data-quality expectations — the contract a warehouse
@@ -194,50 +195,8 @@ object Expectations {
   private def qQuarantine(s: SparkSession, d: String): DataFrame =
     quarantine(t(s, d, "lineitem"), gateRules(s, d))._2
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_expectations" -> qExpectations _,
-    "q_quarantine" -> qQuarantine _)
-
-  val oracle: Map[String, String] = Map(
-    "q_quarantine" ->
-      """WITH f AS (
-           SELECT *,
-             (l_shipdate IS NULL) AS v1,
-             (l_quantity IS NOT NULL
-               AND (l_quantity < 1.0 OR l_quantity > 50.0)) AS v2,
-             (l_discount IS NOT NULL
-               AND (l_discount < 0.0 OR l_discount > 0.08)) AS v3,
-             (l_returnflag IS NOT NULL
-               AND l_returnflag NOT IN ('A', 'N')) AS v4,
-             (row_number() OVER (
-               PARTITION BY l_orderkey, l_linenumber
-               ORDER BY l_partkey ASC NULLS FIRST,
-                 l_suppkey ASC NULLS FIRST,
-                 l_quantity ASC NULLS FIRST,
-                 l_extendedprice ASC NULLS FIRST,
-                 l_discount ASC NULLS FIRST,
-                 l_tax ASC NULLS FIRST,
-                 l_returnflag ASC NULLS FIRST,
-                 l_linestatus ASC NULLS FIRST,
-                 l_shipdate ASC NULLS FIRST,
-                 l_orderkey, l_linenumber) > 1) AS v5,
-             (l_orderkey IS NOT NULL AND NOT EXISTS (
-               SELECT 1 FROM orders o
-               WHERE o.o_orderkey = l_orderkey)) AS v6
-           FROM lineitem)
-         SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber,
-           l_quantity, l_extendedprice, l_discount, l_tax,
-           l_returnflag, l_linestatus, l_shipdate,
-           concat_ws(',',
-             CASE WHEN v1 THEN 'r1_notnull_shipdate' END,
-             CASE WHEN v2 THEN 'r2_range_quantity' END,
-             CASE WHEN v3 THEN 'r3_range_discount' END,
-             CASE WHEN v4 THEN 'r4_returnflag_domain' END,
-             CASE WHEN v5 THEN 'r5_unique_line' END,
-             CASE WHEN v6 THEN 'r6_fk_orderkey' END) AS violated_rules
-         FROM f
-         WHERE v1 OR v2 OR v3 OR v4 OR v5 OR v6""",
-    "q_expectations" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("q_expectations", qExpectations _, Some(
       """WITH v AS (
            SELECT 'r1_notnull_shipdate' AS rule_id, 'not_null' AS rule_type,
              'l_shipdate' AS target,
@@ -276,5 +235,43 @@ object Expectations {
                   WHERE o.o_orderkey = l.l_orderkey)))
          SELECT rule_id, rule_type, target, n_violations,
            n_violations = 0 AS pass
-         FROM v""")
+         FROM v""")),
+    Gate("q_quarantine", qQuarantine _, Some(
+      """WITH f AS (
+           SELECT *,
+             (l_shipdate IS NULL) AS v1,
+             (l_quantity IS NOT NULL
+               AND (l_quantity < 1.0 OR l_quantity > 50.0)) AS v2,
+             (l_discount IS NOT NULL
+               AND (l_discount < 0.0 OR l_discount > 0.08)) AS v3,
+             (l_returnflag IS NOT NULL
+               AND l_returnflag NOT IN ('A', 'N')) AS v4,
+             (row_number() OVER (
+               PARTITION BY l_orderkey, l_linenumber
+               ORDER BY l_partkey ASC NULLS FIRST,
+                 l_suppkey ASC NULLS FIRST,
+                 l_quantity ASC NULLS FIRST,
+                 l_extendedprice ASC NULLS FIRST,
+                 l_discount ASC NULLS FIRST,
+                 l_tax ASC NULLS FIRST,
+                 l_returnflag ASC NULLS FIRST,
+                 l_linestatus ASC NULLS FIRST,
+                 l_shipdate ASC NULLS FIRST,
+                 l_orderkey, l_linenumber) > 1) AS v5,
+             (l_orderkey IS NOT NULL AND NOT EXISTS (
+               SELECT 1 FROM orders o
+               WHERE o.o_orderkey = l_orderkey)) AS v6
+           FROM lineitem)
+         SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber,
+           l_quantity, l_extendedprice, l_discount, l_tax,
+           l_returnflag, l_linestatus, l_shipdate,
+           concat_ws(',',
+             CASE WHEN v1 THEN 'r1_notnull_shipdate' END,
+             CASE WHEN v2 THEN 'r2_range_quantity' END,
+             CASE WHEN v3 THEN 'r3_range_discount' END,
+             CASE WHEN v4 THEN 'r4_returnflag_domain' END,
+             CASE WHEN v5 THEN 'r5_unique_line' END,
+             CASE WHEN v6 THEN 'r6_fk_orderkey' END) AS violated_rules
+         FROM f
+         WHERE v1 OR v2 OR v3 OR v4 OR v5 OR v6""")))
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Reference-shaped pipelines over the reference's own schemas
   * (FIXTURES F1/F4/F7) — the §5 domain goldens: read-count funnel,
@@ -96,12 +97,6 @@ object Glamr {
       "new_est_reads")
   }
 
-  val queries: Map[String,
-      (org.apache.spark.sql.SparkSession, String) => DataFrame] = Map(
-    "g_funnel_fastp" -> ((s, _) => readCountFunnel(fixtureReadCounts(s))),
-    "g_bracken_matrix" -> ((s, _) =>
-      brackenMerge(fixtureBracken(s), Seq("s1", "s2"))._2))
-
   // ---- DuckDB oracles: the fixture rows are embedded as a VALUES CTE
   // (generated from the SAME Scala constants the Spark side reads), so
   // the oracle re-derives the result from raw input independently ----
@@ -160,9 +155,11 @@ object Glamr {
      FROM r GROUP BY taxon, name"""
   }
 
-  val oracle: Map[String, String] = Map(
-    "g_funnel_fastp" -> funnelOracle,
-    "g_bracken_matrix" -> brackenOracle)
+  val gates: Seq[Gate] = Seq(
+    Gate("g_funnel_fastp", (s, _) => readCountFunnel(fixtureReadCounts(s)),
+      Some(funnelOracle)),
+    Gate("g_bracken_matrix", (s, _) =>
+      brackenMerge(fixtureBracken(s), Seq("s1", "s2"))._2, Some(brackenOracle)))
 
   /** F7: bracken merge (reference `merge_bracken.R:53-78`): per-sample
     * bracken tables tagged with (sample, db) → drop EVERY refseq row

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** Pivot / unpivot / set ops P1-P3 (SURVEY §2.7).
@@ -129,34 +130,24 @@ object Pivots {
       .select(col("l_returnflag"), col("l_linestatus"),
         col("gid"), col("n"), col("sum_qty"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p4_rollup" -> p4Rollup _,
-    "p5_cube" -> p5Cube _,
-    "p1_cohort_retention" -> p1CohortRetention _,
-    "p1_pivot_wide" -> p1PivotWide _,
-    "p1_conditional_agg" -> p1ConditionalAgg _,
-    "p2_unpivot" -> p2Unpivot _,
-    "p3_union" -> p3Union _,
-    "p3_union_drift" -> p3UnionDrift _)
-
-  val oracle: Map[String, String] = Map(
-    "p4_rollup" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("p4_rollup", p4Rollup _, Some(
       """SELECT l_returnflag, l_linestatus,
            CAST(GROUPING(l_returnflag, l_linestatus) AS INT) AS gid,
            count(*) AS n,
            CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
              AS sum_qty
          FROM lineitem
-         GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-    "p5_cube" ->
+         GROUP BY ROLLUP (l_returnflag, l_linestatus)""")),
+    Gate("p5_cube", p5Cube _, Some(
       """SELECT l_returnflag, l_linestatus,
            CAST(GROUPING(l_returnflag, l_linestatus) AS INT) AS gid,
            count(*) AS n,
            CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
              AS sum_qty
          FROM lineitem
-         GROUP BY CUBE (l_returnflag, l_linestatus)""",
-    "p1_cohort_retention" ->
+         GROUP BY CUBE (l_returnflag, l_linestatus)""")),
+    Gate("p1_cohort_retention", p1CohortRetention _, Some(
       """WITH ev AS (
            SELECT user_id, date_trunc('week', ts) AS week FROM events),
          first AS (
@@ -172,38 +163,38 @@ object Pivots {
            count(DISTINCT CASE WHEN off = 2 THEN user_id END) AS w2,
            count(DISTINCT CASE WHEN off = 3 THEN user_id END) AS w3,
            count(DISTINCT CASE WHEN off = 4 THEN user_id END) AS w4
-         FROM j GROUP BY cohort""",
-    "p1_pivot_wide" ->
+         FROM j GROUP BY cohort""")),
+    Gate("p1_pivot_wide", p1PivotWide _, Some(
       """SELECT l_returnflag,
          coalesce(round(sum(CASE WHEN l_linestatus='F' THEN l_quantity END),2),0)
            AS qty_f,
          coalesce(round(sum(CASE WHEN l_linestatus='O' THEN l_quantity END),2),0)
            AS qty_o
-         FROM lineitem GROUP BY l_returnflag""",
-    "p1_conditional_agg" ->
+         FROM lineitem GROUP BY l_returnflag""")),
+    Gate("p1_conditional_agg", p1ConditionalAgg _, Some(
       """SELECT o_orderpriority,
          count(CASE WHEN o_orderstatus='F' THEN 1 END) AS n_f,
          count(CASE WHEN o_orderstatus='O' THEN 1 END) AS n_o,
          count(CASE WHEN o_orderstatus='P' THEN 1 END) AS n_p
-         FROM orders GROUP BY o_orderpriority""",
-    "p2_unpivot" ->
+         FROM orders GROUP BY o_orderpriority""")),
+    Gate("p2_unpivot", p2Unpivot _, Some(
       """SELECT p_partkey, 'size' AS metric, CAST(p_size AS DOUBLE) AS value
          FROM part
          UNION ALL
          SELECT p_partkey, 'retailprice' AS metric, p_retailprice AS value
-         FROM part""",
-    "p3_union" ->
+         FROM part""")),
+    Gate("p3_union", p3Union _, Some(
       """SELECT c_name AS name, c_acctbal AS acctbal, 'customer' AS kind
          FROM customer
          UNION ALL
          SELECT s_name AS name, s_acctbal AS acctbal, 'supplier' AS kind
-         FROM supplier""",
-    "p3_union_drift" ->
+         FROM supplier""")),
+    Gate("p3_union_drift", p3UnionDrift _, Some(
       """SELECT segment, count(*) AS n, round(sum(acctbal),2) AS total_bal
          FROM (
            SELECT c_name AS name, c_acctbal AS acctbal,
                   c_mktsegment AS segment FROM customer
            UNION ALL
            SELECT s_name, s_acctbal, NULL FROM supplier) x
-         GROUP BY segment""")
+         GROUP BY segment""")))
 }

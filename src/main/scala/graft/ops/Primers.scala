@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Primer-match scoring (reference `pypelib/amplicon/alignment.py:
   * 122-172` PrimerMatch + `hmm_summarize.py:156-280` get_mode) — the
@@ -265,10 +266,6 @@ object Primers {
           when(col("model") === "16S", "samp_9")
             .otherwise("samp_null")))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g_primer_match" -> gMatch _,
-    "g_primer_mode" -> gMode _)
-
   // ---- DuckDB oracles: same fixture rows as VALUES, logic re-derived
   // step by step in SQL ----
 
@@ -405,7 +402,7 @@ object Primers {
      LEFT JOIN fstat f ON t.sample = f.sample
      LEFT JOIN rstat r ON t.sample = r.sample"""
 
-  val oracle: Map[String, String] = Map(
-    "g_primer_match" -> matchOracle,
-    "g_primer_mode" -> modeOracle)
+  val gates: Seq[Gate] = Seq(
+    Gate("g_primer_match", gMatch _, Some(matchOracle)),
+    Gate("g_primer_mode", gMode _, Some(modeOracle)))
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** Core relational operators: projection/filter/distinct (SURVEY §2.3),
@@ -360,7 +361,16 @@ object Relational {
     * percentile in pure integer arithmetic (p carried as num/den, rank
     * = (num·N + den − 1) div den — no FP multiply, so both engines
     * agree bit-for-bit). Same count-of-values discipline as
-    * `Skew.skewReport`. */
+    * `Skew.skewReport`.
+    *
+    * EAGER since r18: the call itself runs the data pass and writes
+    * the value histogram to `io.Scratch` before it returns; the
+    * returned frame reads the staged table. The `maxDistinct` guard
+    * rides the `total` aggregate over that staged histogram, so it
+    * fires only when the returned frame is executed — AFTER the
+    * data-sized stage write. Checking before the write would add a
+    * data pass to `a17_exact_percentiles`; that move belongs with the
+    * range-partitioned rank selection (ROADMAP item 4). */
   def exactPercentiles(values: DataFrame, valueCol: String,
       ps: Seq[(String, Int, Int)],
       maxDistinct: Long = 1L << 22): DataFrame = {
@@ -660,39 +670,6 @@ object Relational {
           .cast("long").as("v")),
       "v", 20)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "f_table_profile" -> fTableProfile _,
-    "f_histogram" -> fHistogram _,
-    "a17_exact_percentiles" -> a17ExactPercentiles _,
-    "a18_grouped_percentiles" -> a18GroupedPercentiles _,
-    "a20_profile_percentiles" -> a20ProfilePercentiles _,
-    "a19_mad_outliers" -> a19MadOutliers _,
-    "f_map_explode" -> mapExplode _,
-    "f_gc_content_expr" -> gcContentExpr _,
-    "f_date_parse_multi" -> dateParseMulti _,
-    "a1_grouped_sum" -> a1GroupedSum _,
-    "f_filter_pushdown" -> filterPushdown _,
-    "a3_count_per_group" -> a3Count _,
-    "a4_quartiles" -> a4Quartiles _,
-    "a5_weighted_mean" -> a5WeightedMean _,
-    "a6_completeness" -> a6Completeness _,
-    "a9_collect_list" -> a9CollectList _,
-    "a10_distinct_count" -> a10Distinct _,
-    "j1_left_join" -> j1LeftJoin _,
-    "j2_star_join" -> j2StarJoin _,
-    "j3_two_hop_join" -> j3TwoHop _,
-    "j4_semi_join" -> j4Semi _,
-    "j5_anti_join" -> j5Anti _,
-    "j6_derived_key_join" -> j6DerivedKey _,
-    "j8_cross_grid" -> j8CrossGrid _,
-    "f_case_when_tiers" -> caseWhenTiers _,
-    "f_regex_extract" -> regexExtract _,
-    "f_date_parts" -> dateParts _,
-    "f_json_extract" -> jsonExtract _,
-    "f_math_funcs" -> mathFuncs _,
-    "f_string_funcs" -> stringFuncs _,
-    "f_na_normalize" -> naNormalize _)
-
   private def profileOracle: String =
     Seq("doc_id", "text", "lang", "source", "n_chars").map { c =>
       s"""SELECT '$c' AS col_name, count(*) AS n_rows,
@@ -702,12 +679,95 @@ object Relational {
          CAST(max($c) AS VARCHAR) AS max_val FROM documents"""
     }.mkString(" UNION ALL ")
 
-  val oracle: Map[String, String] = Map(
-    "f_table_profile" -> profileOracle,
+  val gates: Seq[Gate] = Seq(
+    Gate("f_table_profile", fTableProfile _, Some(profileOracle)),
+    Gate("f_histogram", fHistogram _, Some(
+      """WITH v AS (
+           SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS v
+           FROM lineitem WHERE l_extendedprice IS NOT NULL),
+         mm AS (
+           SELECT min(v) AS mn, max(v) AS mx,
+             max(v) - min(v) + 1 AS span
+           FROM v)
+         SELECT CAST(((v - mn) * 20 - ((v - mn) * 20) % span) / span
+             AS BIGINT) AS bucket,
+           count(*) AS n, min(v) AS lo, max(v) AS hi
+         FROM v, mm GROUP BY 1""")),
+    Gate("a17_exact_percentiles", a17ExactPercentiles _, Some(
+      """WITH v AS (
+           SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS v
+           FROM lineitem WHERE l_extendedprice IS NOT NULL),
+         hist AS (SELECT v, count(*) AS c FROM v GROUP BY 1),
+         cum AS (
+           SELECT v, sum(c) OVER (ORDER BY v
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+           FROM hist),
+         total AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM hist),
+         pcts(p, num, den) AS (VALUES ('p25', 1, 4), ('p50', 1, 2),
+           ('p75', 3, 4), ('p95', 19, 20), ('p99', 99, 100)),
+         ranked AS (
+           SELECT c.v, c.cum, p.p,
+             CAST((p.num * t.n + p.den - 1)
+               - (p.num * t.n + p.den - 1) % p.den AS BIGINT) / p.den
+               AS rank
+           FROM cum c, total t, pcts p)
+         SELECT p, CAST(rank AS BIGINT) AS rank,
+           min(v) AS value
+         FROM ranked WHERE cum >= rank GROUP BY 1, 2""")),
+    Gate("a18_grouped_percentiles", a18GroupedPercentiles _, Some(
+      """WITH v AS (
+           SELECT l_returnflag AS g,
+             CAST(round(l_extendedprice * 100) AS BIGINT) AS v
+           FROM lineitem WHERE l_extendedprice IS NOT NULL),
+         hist AS (SELECT g, v, count(*) AS c FROM v GROUP BY 1, 2),
+         cum AS (
+           SELECT g, v,
+             sum(c) OVER (PARTITION BY g ORDER BY v
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS cum,
+             sum(c) OVER (PARTITION BY g) AS n
+           FROM hist),
+         pcts(p, num, den) AS (VALUES ('p50', 1, 2), ('p95', 19, 20)),
+         ranked AS (
+           SELECT c.g, c.v, c.cum, p.p,
+             CAST((p.num * c.n + p.den - 1)
+               - (p.num * c.n + p.den - 1) % p.den AS BIGINT) / p.den
+               AS rank
+           FROM cum c, pcts p)
+         SELECT g AS l_returnflag, p, CAST(rank AS BIGINT) AS rank,
+           min(v) AS value
+         FROM ranked WHERE cum >= rank GROUP BY 1, 2, 3""")),
+    Gate("a20_profile_percentiles", a20ProfilePercentiles _, Some(
+      """WITH v AS (
+           SELECT l_returnflag AS g,
+             CAST(round(l_extendedprice * 100) AS BIGINT) AS v
+           FROM lineitem WHERE l_extendedprice IS NOT NULL),
+         hist AS (SELECT g, v, count(*) AS c FROM v GROUP BY 1, 2),
+         bh AS (
+           SELECT g, v, c FROM hist
+           UNION ALL
+           SELECT '__ALL__' AS g, v, sum(c) AS c FROM hist GROUP BY 2),
+         cum AS (
+           SELECT g, v,
+             sum(c) OVER (PARTITION BY g ORDER BY v
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS cum,
+             sum(c) OVER (PARTITION BY g) AS n
+           FROM bh),
+         pcts(p, num, den) AS (VALUES ('p25', 1, 4), ('p50', 1, 2),
+           ('p75', 3, 4), ('p95', 19, 20), ('p99', 99, 100)),
+         ranked AS (
+           SELECT c.g, c.v, c.cum, p.p,
+             CAST((p.num * c.n + p.den - 1)
+               - (p.num * c.n + p.den - 1) % p.den AS BIGINT) / p.den
+               AS rank
+           FROM cum c, pcts p)
+         SELECT g AS scope, p, min(v) AS value
+         FROM ranked WHERE cum >= rank GROUP BY 1, 2""")),
     // median + MAD each replay the a18 histogram-cumsum rank form
     // (num=1, den=2); the outlier test is the same integer-rational
     // compare as the Spark side
-    "a19_mad_outliers" ->
+    Gate("a19_mad_outliers", a19MadOutliers _, Some(
       """WITH v AS (
            SELECT l_returnflag AS g,
              CAST(round(l_extendedprice * 100) AS BIGINT) AS v
@@ -749,105 +809,22 @@ object Relational {
                THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6)
              AS outlier_share
          FROM d JOIN med m ON m.g = d.g JOIN mad x ON x.g = d.g
-         GROUP BY 1""",
-    "a18_grouped_percentiles" ->
-      """WITH v AS (
-           SELECT l_returnflag AS g,
-             CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-           FROM lineitem WHERE l_extendedprice IS NOT NULL),
-         hist AS (SELECT g, v, count(*) AS c FROM v GROUP BY 1, 2),
-         cum AS (
-           SELECT g, v,
-             sum(c) OVER (PARTITION BY g ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS cum,
-             sum(c) OVER (PARTITION BY g) AS n
-           FROM hist),
-         pcts(p, num, den) AS (VALUES ('p50', 1, 2), ('p95', 19, 20)),
-         ranked AS (
-           SELECT c.g, c.v, c.cum, p.p,
-             CAST((p.num * c.n + p.den - 1)
-               - (p.num * c.n + p.den - 1) % p.den AS BIGINT) / p.den
-               AS rank
-           FROM cum c, pcts p)
-         SELECT g AS l_returnflag, p, CAST(rank AS BIGINT) AS rank,
-           min(v) AS value
-         FROM ranked WHERE cum >= rank GROUP BY 1, 2, 3""",
-    "a20_profile_percentiles" ->
-      """WITH v AS (
-           SELECT l_returnflag AS g,
-             CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-           FROM lineitem WHERE l_extendedprice IS NOT NULL),
-         hist AS (SELECT g, v, count(*) AS c FROM v GROUP BY 1, 2),
-         bh AS (
-           SELECT g, v, c FROM hist
-           UNION ALL
-           SELECT '__ALL__' AS g, v, sum(c) AS c FROM hist GROUP BY 2),
-         cum AS (
-           SELECT g, v,
-             sum(c) OVER (PARTITION BY g ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS cum,
-             sum(c) OVER (PARTITION BY g) AS n
-           FROM bh),
-         pcts(p, num, den) AS (VALUES ('p25', 1, 4), ('p50', 1, 2),
-           ('p75', 3, 4), ('p95', 19, 20), ('p99', 99, 100)),
-         ranked AS (
-           SELECT c.g, c.v, c.cum, p.p,
-             CAST((p.num * c.n + p.den - 1)
-               - (p.num * c.n + p.den - 1) % p.den AS BIGINT) / p.den
-               AS rank
-           FROM cum c, pcts p)
-         SELECT g AS scope, p, min(v) AS value
-         FROM ranked WHERE cum >= rank GROUP BY 1, 2""",
-    "a17_exact_percentiles" ->
-      """WITH v AS (
-           SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-           FROM lineitem WHERE l_extendedprice IS NOT NULL),
-         hist AS (SELECT v, count(*) AS c FROM v GROUP BY 1),
-         cum AS (
-           SELECT v, sum(c) OVER (ORDER BY v
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM hist),
-         total AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM hist),
-         pcts(p, num, den) AS (VALUES ('p25', 1, 4), ('p50', 1, 2),
-           ('p75', 3, 4), ('p95', 19, 20), ('p99', 99, 100)),
-         ranked AS (
-           SELECT c.v, c.cum, p.p,
-             CAST((p.num * t.n + p.den - 1)
-               - (p.num * t.n + p.den - 1) % p.den AS BIGINT) / p.den
-               AS rank
-           FROM cum c, total t, pcts p)
-         SELECT p, CAST(rank AS BIGINT) AS rank,
-           min(v) AS value
-         FROM ranked WHERE cum >= rank GROUP BY 1, 2""",
-    "f_histogram" ->
-      """WITH v AS (
-           SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-           FROM lineitem WHERE l_extendedprice IS NOT NULL),
-         mm AS (
-           SELECT min(v) AS mn, max(v) AS mx,
-             max(v) - min(v) + 1 AS span
-           FROM v)
-         SELECT CAST(((v - mn) * 20 - ((v - mn) * 20) % span) / span
-             AS BIGINT) AS bucket,
-           count(*) AS n, min(v) AS lo, max(v) AS hi
-         FROM v, mm GROUP BY 1""",
-    "f_map_explode" ->
+         GROUP BY 1""")),
+    Gate("f_map_explode", mapExplode _, Some(
       """WITH kv AS (
            SELECT event_type, unnest(json_keys(props)) AS key, props
            FROM events)
          SELECT event_type, key, count(*) AS n,
            CAST(sum(CAST(json_extract_string(props, '$.' || key) AS INT))
              AS BIGINT) AS total
-         FROM kv GROUP BY event_type, key""",
-    "f_gc_content_expr" ->
+         FROM kv GROUP BY event_type, key""")),
+    Gate("f_gc_content_expr", gcContentExpr _, Some(
       """SELECT p_brand,
          round(avg(length(regexp_replace(lower(p_name), '[^gc]', '', 'g'))
            * 100.0 / length(p_name)), 4) AS avg_gc,
          count(*) AS n
-         FROM part GROUP BY p_brand""",
-    "f_date_parse_multi" ->
+         FROM part GROUP BY p_brand""")),
+    Gate("f_date_parse_multi", dateParseMulti _, Some(
       """WITH f AS (
            SELECT CASE CAST(o_orderkey % 3 AS INT)
              WHEN 0 THEN strftime(o_orderdate, '%Y-%m-%d')
@@ -861,8 +838,8 @@ object Relational {
            FROM f)
          SELECT CAST(year(parsed) AS INT) AS yr, count(*) AS n,
            count(CASE WHEN parsed IS NULL THEN 1 END) AS n_unparsed
-         FROM p GROUP BY 1""",
-    "a1_grouped_sum" ->
+         FROM p GROUP BY 1""")),
+    Gate("a1_grouped_sum", a1GroupedSum _, Some(
       """SELECT l_returnflag, l_linestatus,
          round(sum(l_quantity),2) AS sum_qty,
          round(sum(l_extendedprice),2) AS sum_base_price,
@@ -870,43 +847,43 @@ object Relational {
          round(avg(l_quantity),4) AS avg_qty,
          count(*) AS count_order
          FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-         GROUP BY l_returnflag, l_linestatus""",
-    "f_filter_pushdown" ->
+         GROUP BY l_returnflag, l_linestatus""")),
+    Gate("f_filter_pushdown", filterPushdown _, Some(
       """SELECT round(sum(l_extendedprice*l_discount),2) AS revenue
          FROM lineitem
-         WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""",
-    "a3_count_per_group" ->
-      "SELECT event_type, count(*) AS n FROM events GROUP BY event_type",
-    "a4_quartiles" ->
+         WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""")),
+    Gate("a3_count_per_group", a3Count _,
+      Some("SELECT event_type, count(*) AS n FROM events GROUP BY event_type")),
+    Gate("a4_quartiles", a4Quartiles _, Some(
       """SELECT event_type,
          round(quantile_cont(value, 0.25),4) AS q1,
          round(quantile_cont(value, 0.5),4) AS median,
          round(quantile_cont(value, 0.75),4) AS q3
-         FROM events GROUP BY event_type""",
-    "a5_weighted_mean" ->
+         FROM events GROUP BY event_type""")),
+    Gate("a5_weighted_mean", a5WeightedMean _, Some(
       """SELECT l_returnflag,
          round(sum(l_extendedprice*l_quantity)/sum(l_quantity),4)
            AS weighted_avg_price
-         FROM lineitem GROUP BY l_returnflag""",
-    "a6_completeness" ->
+         FROM lineitem GROUP BY l_returnflag""")),
+    Gate("a6_completeness", a6Completeness _, Some(
       """SELECT o_orderpriority, count(DISTINCT o_custkey) AS found,
          round(count(DISTINCT o_custkey)*100.0 /
            (SELECT count(*) FROM customer),4) AS pct_complete
-         FROM orders GROUP BY o_orderpriority""",
-    "a9_collect_list" ->
+         FROM orders GROUP BY o_orderpriority""")),
+    Gate("a9_collect_list", a9CollectList _, Some(
       """SELECT o_orderpriority,
          array_to_string(list_sort(list(DISTINCT o_orderstatus)),';')
            AS statuses,
          count(*) AS n
-         FROM orders GROUP BY o_orderpriority""",
-    "a10_distinct_count" ->
+         FROM orders GROUP BY o_orderpriority""")),
+    Gate("a10_distinct_count", a10Distinct _, Some(
       """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
          count(DISTINCT l_suppkey) AS n_supps
-         FROM lineitem GROUP BY l_returnflag""",
-    "j1_left_join" ->
+         FROM lineitem GROUP BY l_returnflag""")),
+    Gate("j1_left_join", j1LeftJoin _, Some(
       """SELECT s_suppkey, s_name, n_name FROM supplier
-         LEFT JOIN nation ON s_nationkey = n_nationkey""",
-    "j2_star_join" ->
+         LEFT JOIN nation ON s_nationkey = n_nationkey""")),
+    Gate("j2_star_join", j2StarJoin _, Some(
       """SELECT r_name, n_name,
          round(sum(l_extendedprice*(1.0-l_discount)),2) AS revenue
          FROM lineitem
@@ -914,68 +891,68 @@ object Relational {
          JOIN customer ON o_custkey = c_custkey
          JOIN nation ON c_nationkey = n_nationkey
          JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name, n_name""",
-    "j3_two_hop_join" ->
+         GROUP BY r_name, n_name""")),
+    Gate("j3_two_hop_join", j3TwoHop _, Some(
       """SELECT c_mktsegment,
          round(sum(l_extendedprice*(1.0-l_discount)),2) AS revenue,
          count(*) AS n_lines
          FROM lineitem
          JOIN orders ON l_orderkey = o_orderkey
          JOIN customer ON o_custkey = c_custkey
-         GROUP BY c_mktsegment""",
-    "j4_semi_join" ->
+         GROUP BY c_mktsegment""")),
+    Gate("j4_semi_join", j4Semi _, Some(
       """SELECT o_orderpriority, count(*) AS n_orders FROM orders
          WHERE EXISTS (SELECT 1 FROM lineitem
            WHERE l_orderkey = o_orderkey AND l_discount > 0.08)
-         GROUP BY o_orderpriority""",
-    "j5_anti_join" ->
+         GROUP BY o_orderpriority""")),
+    Gate("j5_anti_join", j5Anti _, Some(
       """SELECT c_custkey, c_mktsegment FROM customer
          WHERE NOT EXISTS (SELECT 1 FROM orders
-           WHERE o_custkey = c_custkey AND o_orderstatus = 'P')""",
-    "j6_derived_key_join" ->
+           WHERE o_custkey = c_custkey AND o_orderstatus = 'P')""")),
+    Gate("j6_derived_key_join", j6DerivedKey _, Some(
       """SELECT c_mktsegment, count(*) AS n_orders,
          round(sum(o_totalprice),2) AS total
          FROM customer
          JOIN orders
            ON CAST(regexp_extract(c_name, 'Customer#(\d+)', 1) AS BIGINT)
               = o_custkey
-         GROUP BY c_mktsegment""",
-    "j8_cross_grid" ->
+         GROUP BY c_mktsegment""")),
+    Gate("j8_cross_grid", j8CrossGrid _, Some(
       """SELECT r_name, o_orderstatus FROM region
-         CROSS JOIN (SELECT DISTINCT o_orderstatus FROM orders) x""",
-    "f_case_when_tiers" ->
+         CROSS JOIN (SELECT DISTINCT o_orderstatus FROM orders) x""")),
+    Gate("f_case_when_tiers", caseWhenTiers _, Some(
       """SELECT CASE WHEN c_acctbal > 7500 THEN 'high'
                      WHEN c_acctbal > 0 THEN 'mid'
                      ELSE 'neg' END AS tier,
          count(*) AS n, round(avg(c_acctbal),4) AS avg_bal
-         FROM customer GROUP BY 1""",
-    "f_regex_extract" ->
+         FROM customer GROUP BY 1""")),
+    Gate("f_regex_extract", regexExtract _, Some(
       """SELECT regexp_extract(p_name, '^(\w+)', 1) AS first_word,
          count(*) AS n, round(avg(p_retailprice),4) AS avg_price
-         FROM part GROUP BY 1""",
-    "f_date_parts" ->
+         FROM part GROUP BY 1""")),
+    Gate("f_date_parts", dateParts _, Some(
       """SELECT CAST(year(o_orderdate) AS INT) AS yr,
          CAST(month(o_orderdate) AS INT) AS mo,
          count(*) AS n_orders, round(sum(o_totalprice),2) AS total
-         FROM orders GROUP BY 1, 2""",
-    "f_json_extract" ->
+         FROM orders GROUP BY 1, 2""")),
+    Gate("f_json_extract", jsonExtract _, Some(
       """SELECT event_type,
          round(avg(CAST(json_extract_string(props,'$.k') AS INT)),4) AS avg_k,
          max(CAST(json_extract_string(props,'$.k') AS INT)) AS max_k
-         FROM events GROUP BY event_type""",
-    "f_math_funcs" ->
+         FROM events GROUP BY event_type""")),
+    Gate("f_math_funcs", mathFuncs _, Some(
       """SELECT o_orderstatus,
          round(avg(ln(1+o_totalprice)),6) AS avg_log1p_price,
          round(sum(sqrt(abs(o_totalprice))),4) AS sum_sqrt_price
-         FROM orders GROUP BY o_orderstatus""",
-    "f_string_funcs" ->
+         FROM orders GROUP BY o_orderstatus""")),
+    Gate("f_string_funcs", stringFuncs _, Some(
       """SELECT n_nationkey, upper(n_name) AS nation_uc,
          r_name || '/' || n_name AS path,
          CAST(length(n_name) AS INT) AS name_len
-         FROM nation JOIN region ON n_regionkey = r_regionkey""",
-    "f_na_normalize" ->
+         FROM nation JOIN region ON n_regionkey = r_regionkey""")),
+    Gate("f_na_normalize", naNormalize _, Some(
       """SELECT CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
                      THEN o_orderpriority ELSE 'OTHER' END AS prio,
          count(*) AS n
-         FROM orders GROUP BY 1""")
+         FROM orders GROUP BY 1""")))
 }

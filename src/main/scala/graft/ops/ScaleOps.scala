@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** Scale-path forms of the engine's backbone idioms, each gated by a
@@ -333,20 +334,22 @@ object ScaleOps {
       expr("theta_estimate(theta_anotb(sk_a, sk_b))").as("n_a_not_b"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a13_hll_distinct" -> a13HllDistinct _,
-    "x_theta_set_ops" -> xThetaSetOps _,
-    "a12_group_trend" -> a12GroupTrend _,
-    "f_zorder" -> fZorder _,
-    "a11_quantile_sketch" -> aQuantileSketch _,
-    "g_incr_agg_merge" -> gIncrAggMerge _,
-    "j5b_bloom_incremental" -> j5bBloomIncremental _,
-    "j_salted_skew" -> jSaltedSkew _)
-
-  val oracle: Map[String, String] = Map(
+  val gates: Seq[Gate] = Seq(
+    Gate("a13_hll_distinct", a13HllDistinct _, Some(
+      """WITH dump AS (
+           SELECT l_returnflag, approx_distinct
+           FROM parquet_scan('__OUTDIR__/a13_hll_distinct/*.parquet')),
+         exact AS (
+           SELECT l_returnflag,
+             count(DISTINCT l_partkey) AS ex
+           FROM lineitem GROUP BY 1)
+         SELECT d.l_returnflag, d.approx_distinct
+         FROM dump d JOIN exact e USING (l_returnflag)
+         WHERE abs(d.approx_distinct - e.ex) <=
+           greatest(0.10 * e.ex, 5)""")),
     // bounded key universe keeps the sketches exact → plain exact
     // set algebra on the oracle side, full hash compare
-    "x_theta_set_ops" ->
+    Gate("x_theta_set_ops", xThetaSetOps _, Some(
       """WITH k AS (
            SELECT o_custkey % 3000 AS k, o_orderkey % 2 AS half
            FROM orders),
@@ -361,20 +364,8 @@ object ScaleOps {
              (SELECT k FROM a INTERSECT SELECT k FROM b))
              AS n_intersect,
            (SELECT count(*) FROM
-             (SELECT k FROM a EXCEPT SELECT k FROM b)) AS n_a_not_b""",
-    "a13_hll_distinct" ->
-      """WITH dump AS (
-           SELECT l_returnflag, approx_distinct
-           FROM parquet_scan('__OUTDIR__/a13_hll_distinct/*.parquet')),
-         exact AS (
-           SELECT l_returnflag,
-             count(DISTINCT l_partkey) AS ex
-           FROM lineitem GROUP BY 1)
-         SELECT d.l_returnflag, d.approx_distinct
-         FROM dump d JOIN exact e USING (l_returnflag)
-         WHERE abs(d.approx_distinct - e.ex) <=
-           greatest(0.10 * e.ex, 5)""",
-    "a12_group_trend" ->
+             (SELECT k FROM a EXCEPT SELECT k FROM b)) AS n_a_not_b""")),
+    Gate("a12_group_trend", a12GroupTrend _, Some(
       """WITH e AS (
            SELECT event_type,
              epoch_us(ts) // 86400000000 - 19700 AS x,
@@ -400,8 +391,8 @@ object ScaleOps {
                  AND n * syy - sy * sy > 0 THEN
              (n * sxy - sx * sy) / sqrt((n * sxx - sx * sx) *
                (n * syy - sy * sy)) END AS corr
-         FROM m""",
-    "f_zorder" ->
+         FROM m""")),
+    Gate("f_zorder", fZorder _, Some(
       """WITH e AS (
            SELECT event_id, user_id,
              epoch_us(ts) // 21600000000 AS tb
@@ -436,8 +427,8 @@ object ScaleOps {
              ue | (te << 1) AS z FROM s5)
          SELECT event_id, user_id, tb, z,
            CAST((z >> 56) & 255 AS INT) AS z_bucket
-         FROM z""",
-    "a11_quantile_sketch" ->
+         FROM z""")),
+    Gate("a11_quantile_sketch", aQuantileSketch _, Some(
       """WITH stats AS (
            SELECT event_type, min(value) AS mn, max(value) AS mx,
              count(value) AS n
@@ -468,8 +459,8 @@ object ScaleOps {
            round(CASE WHEN mx = mn THEN mn
              ELSE mn + (mx - mn) / 256 *
                (bin + (p * n - before) / c) END, 4) AS q
-         FROM hit""",
-    "g_incr_agg_merge" ->
+         FROM hit""")),
+    Gate("g_incr_agg_merge", gIncrAggMerge _, Some(
       """SELECT l_returnflag, l_linestatus,
          CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
            AS sum_qty,
@@ -478,8 +469,8 @@ object ScaleOps {
          count(*) AS n,
          round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
            / count(*), 4) AS avg_qty
-         FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-    "j5b_bloom_incremental" ->
+         FROM lineitem GROUP BY l_returnflag, l_linestatus""")),
+    Gate("j5b_bloom_incremental", j5bBloomIncremental _, Some(
       """SELECT l_returnflag, count(*) AS n_lines,
          CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
            AS total_price
@@ -487,11 +478,11 @@ object ScaleOps {
          WHERE NOT EXISTS (SELECT 1 FROM orders o
            WHERE o.o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
              AND o.o_orderkey = l.l_orderkey)
-         GROUP BY l_returnflag""",
-    "j_salted_skew" ->
+         GROUP BY l_returnflag""")),
+    Gate("j_salted_skew", jSaltedSkew _, Some(
       """SELECT p_brand, count(*) AS n_lines,
          CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
            AS sum_qty
          FROM lineitem JOIN part ON l_partkey = p_partkey
-         GROUP BY p_brand""")
+         GROUP BY p_brand""")))
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** Skew: diagnostics (`skewReport`) and mitigation (salted joins —
@@ -210,13 +211,9 @@ object Skew {
     joinCardinality(t(s, d, "lineitem"), "l_orderkey",
       t(s, d, "orders"), "o_orderkey")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "f_skew_report" -> fSkewReport _,
-    "f_join_cardinality" -> fJoinCardinality _)
-
   /** Same count-of-counts formulation; HUGEINT plays DECIMAL(38,0). */
-  val oracle: Map[String, String] = Map(
-    "f_skew_report" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("f_skew_report", fSkewReport _, Some(
       """WITH counts AS (
            SELECT l_partkey, count(*) AS cnt
            FROM lineitem GROUP BY 1),
@@ -256,8 +253,8 @@ object Skew {
                * n_rows AS DOUBLE)
              / CAST(CAST(n_keys AS HUGEINT) * n_rows AS DOUBLE), 6)
              AS gini
-         FROM a""",
-    "f_join_cardinality" ->
+         FROM a""")),
+    Gate("f_join_cardinality", fJoinCardinality _, Some(
       """WITH cl AS (
            SELECT l_orderkey AS k, count(*) AS c FROM lineitem
            GROUP BY 1),
@@ -279,5 +276,5 @@ object Skew {
              AS inner_rows,
            CAST(coalesce(max(CAST(cl AS HUGEINT) * cr), 0) AS BIGINT)
              AS max_pair_rows
-         FROM j""")
+         FROM j""")))
 }

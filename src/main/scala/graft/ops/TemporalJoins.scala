@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** Temporal join operators Spark lacks natively, in their scalable
@@ -382,17 +383,6 @@ object TemporalJoins {
         col("src_event"), col("value"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "j_interval_overlap" -> jIntervalOverlap _,
-    "j_resample_ffill" -> jResampleFfill _,
-    "j_asof_click" ->
-      ((s, d) => jAsofClick(s, d, Some(86400L))),
-    "j_asof_forward" ->
-      ((s, d) => jAsofForward(s, d, Some(86400L))),
-    "j_asof_click_plain" -> ((s, d) => jAsofClick(s, d, None)),
-    "j_asof_forward_plain" -> ((s, d) => jAsofForward(s, d, None)),
-    "j_range_bucket" -> jRangeBucket _)
-
   private val asofClickSql =
     """SELECT p.user_id, p.event_id AS purchase_id, c.click_id
        FROM (SELECT * FROM events WHERE event_type = 'purchase') p
@@ -409,8 +399,22 @@ object TemporalJoins {
           WHERE event_type = 'purchase' GROUP BY user_id, ts) p
          ON c.user_id = p.user_id AND c.ts <= p.ts"""
 
-  val oracle: Map[String, String] = Map(
-    "j_resample_ffill" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("j_interval_overlap", jIntervalOverlap _, Some(
+      """WITH s AS (
+           SELECT user_id, event_id AS signup_id, ts AS s_start,
+             ts + INTERVAL 2 HOUR AS s_end
+           FROM events WHERE event_type = 'signup'),
+         e AS (
+           SELECT user_id, event_id AS error_id, ts AS e_start,
+             ts + INTERVAL 30 MINUTE AS e_end
+           FROM events WHERE event_type = 'error')
+         SELECT s.user_id, signup_id, error_id,
+           epoch_us(least(s_end, e_end)) -
+             epoch_us(greatest(s_start, e_start)) AS overlap_us
+         FROM s JOIN e ON s.user_id = e.user_id
+           AND s_start <= e_end AND e_start <= s_end""")),
+    Gate("j_resample_ffill", jResampleFfill _, Some(
       """WITH obs AS (
            SELECT user_id, ts, max(event_id) AS src_event,
              CAST(max(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value
@@ -428,26 +432,16 @@ object TemporalJoins {
            strftime(g.gts, '%Y-%m-%d %H:%M:%S') AS grid_ts,
            o.src_event, o.value
          FROM grid g ASOF LEFT JOIN obs o
-           ON g.user_id = o.user_id AND g.gts >= o.ts""",
-    "j_interval_overlap" ->
-      """WITH s AS (
-           SELECT user_id, event_id AS signup_id, ts AS s_start,
-             ts + INTERVAL 2 HOUR AS s_end
-           FROM events WHERE event_type = 'signup'),
-         e AS (
-           SELECT user_id, event_id AS error_id, ts AS e_start,
-             ts + INTERVAL 30 MINUTE AS e_end
-           FROM events WHERE event_type = 'error')
-         SELECT s.user_id, signup_id, error_id,
-           epoch_us(least(s_end, e_end)) -
-             epoch_us(greatest(s_start, e_start)) AS overlap_us
-         FROM s JOIN e ON s.user_id = e.user_id
-           AND s_start <= e_end AND e_start <= s_end""",
-    "j_asof_click" -> asofClickSql,
-    "j_asof_forward" -> asofForwardSql,
-    "j_asof_click_plain" -> asofClickSql,
-    "j_asof_forward_plain" -> asofForwardSql,
-    "j_range_bucket" ->
+           ON g.user_id = o.user_id AND g.gts >= o.ts""")),
+    Gate("j_asof_click", (s, d) => jAsofClick(s, d, Some(86400L)),
+      Some(asofClickSql)),
+    Gate("j_asof_forward", (s, d) => jAsofForward(s, d, Some(86400L)),
+      Some(asofForwardSql)),
+    Gate("j_asof_click_plain", (s, d) => jAsofClick(s, d, None),
+      Some(asofClickSql)),
+    Gate("j_asof_forward_plain", (s, d) => jAsofForward(s, d, None),
+      Some(asofForwardSql)),
+    Gate("j_range_bucket", jRangeBucket _, Some(
       """SELECT s.event_id AS signup_id, s.user_id,
            count(*) AS n_clicks,
            CAST(sum(CAST(c.value AS DECIMAL(18,2))) AS DOUBLE)
@@ -457,5 +451,5 @@ object TemporalJoins {
            ON c.user_id = s.user_id
           AND c.ts >= s.ts
           AND c.ts <= s.ts + INTERVAL 2 HOUR
-         GROUP BY s.event_id, s.user_id""")
+         GROUP BY s.event_id, s.user_id""")))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Gate
 import graft.Tables.t
 
 /** Web-graph authority scoring for corpus curation — the domain-level
@@ -91,7 +92,14 @@ object WebGraph {
     * `connectedComponentsReleasable` discipline): the staged edge list
     * stays persisted while the returned lazy frame is consumed; the
     * caller releases it once done, so repeated invocations leave
-    * `getPersistentRDDs` flat. */
+    * `getPersistentRDDs` flat.
+    *
+    * Preconditions, both checked by one eager 1-row aggregate that
+    * fails loudly: every edge's `src` and `dst` is in `nodes` (the
+    * edge set is closed over the node set), and `m · out-degree == L`
+    * on every edge. An out-of-set `dst` would otherwise be emitted as
+    * a scored node that is not in `nodes`, and an out-of-set `src`
+    * would silently contribute nothing. */
   def pagerankExactReleasable(nodes: DataFrame, edges: DataFrame,
       iters: Int = Iters): (DataFrame, () => Unit) = {
     val spark = nodes.sparkSession
@@ -99,24 +107,37 @@ object WebGraph {
     // the fixed-K loop must not re-derive the graph per round
     val staged = edges.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // multipliers must be exact ON THE TRUE DEGREE: m · deg == L for
-    // every edge, with deg recomputed from the edge list itself — a
-    // reconstructed degree (L / m) can pass while the arithmetic
-    // silently de-exacts (e.g. deg = 7 gives m = 2, reconstructed
-    // d = 10, and 10 divides L). Bounded: 1-row aggregate; this
-    // action ALSO materializes the persisted edge list (the separate
-    // staging count() the r16 form paid is folded into it).
-    val trueDeg = staged.groupBy("src").agg(count(lit(1)).as("deg"))
-    val inexact = staged.join(trueDeg, "src")
-      .filter(col("m") * col("deg") =!= L)
-      .agg(count(lit(1))).head.getLong(0)
-    require(inexact == 0L,
-      s"$inexact edges have m * out-degree != L=$L — a multiplier is " +
-        "not exact; pagerank numerators would silently de-exact")
     // the node set is re-joined every round (teleport term for
     // contribution-less nodes): persist it once too
     val nodesP = nodes.select("node").persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // multipliers must be exact ON THE TRUE DEGREE: m · deg == L for
+    // every edge, with deg recomputed from the edge list itself — a
+    // reconstructed degree (L / m) can pass while the arithmetic
+    // silently de-exacts (e.g. deg = 7 gives m = 2, reconstructed
+    // d = 10, and 10 divides L). The closure check (endpoints outside
+    // the node set) rides in the same aggregate. Bounded: 1-row
+    // aggregate; this action ALSO materializes the persisted edge list
+    // and node set (the separate staging count() the r16 form paid is
+    // folded into it).
+    val trueDeg = staged.groupBy("src").agg(count(lit(1)).as("deg"))
+    val inexactEdges = staged.join(trueDeg, "src")
+      .filter(col("m") * col("deg") =!= L)
+      .select(lit(true).as("inexact"))
+    val openEnds = staged
+      .select(explode(array(col("src"), col("dst"))).as("node"))
+      .join(nodesP, Seq("node"), "left_anti")
+      .select(lit(false).as("inexact"))
+    val bad = inexactEdges.unionByName(openEnds)
+      .agg(count(when(col("inexact"), 1)),
+        count(when(!col("inexact"), 1))).head
+    require(bad.getLong(0) == 0L,
+      s"${bad.getLong(0)} edges have m * out-degree != L=$L — a " +
+        "multiplier is not exact; pagerank numerators would silently " +
+        "de-exact")
+    require(bad.getLong(1) == 0L,
+      s"${bad.getLong(1)} edge endpoints are not in the node set — " +
+        "pagerank needs edges.src/dst ⊆ nodes")
     // WHICH nodes receive no contribution is a STATIC property of the
     // graph, not of the round (r18): scores cover every node each
     // round, so a dst receives a contribution iff it has ≥1 in-edge.
@@ -545,13 +566,6 @@ object WebGraph {
     degreeCensus(nodes, domainEdges(nodes).select("src", "dst"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "wg_pagerank" -> wgPagerank _,
-    "wg_triangles" -> wgTriangles _,
-    "wg_degree_census" -> wgDegreeCensus _,
-    "wg_neighborhood" -> wgNeighborhood _,
-    "wg_kcore" -> wgKcore _)
-
   /** Unrolled K-iteration oracle (DuckDB recursive CTEs disallow the
     * per-round aggregate, so the rounds unroll mechanically; HUGEINT
     * keeps every numerator exact). */
@@ -785,10 +799,10 @@ object WebGraph {
     sb.toString
   }
 
-  val oracle: Map[String, String] = Map(
-    "wg_pagerank" -> pagerankOracle,
-    "wg_triangles" -> trianglesOracle,
-    "wg_degree_census" -> degreeCensusOracle,
-    "wg_neighborhood" -> neighborhoodOracle,
-    "wg_kcore" -> kcoreOracle)
+  val gates: Seq[Gate] = Seq(
+    Gate("wg_pagerank", wgPagerank _, Some(pagerankOracle)),
+    Gate("wg_triangles", wgTriangles _, Some(trianglesOracle)),
+    Gate("wg_degree_census", wgDegreeCensus _, Some(degreeCensusOracle)),
+    Gate("wg_neighborhood", wgNeighborhood _, Some(neighborhoodOracle)),
+    Gate("wg_kcore", wgKcore _, Some(kcoreOracle)))
 }

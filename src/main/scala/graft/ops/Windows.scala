@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** Window operators W1-W7 (SURVEY §2.6) plus N50 (A7).
@@ -319,41 +320,24 @@ object Windows {
     """)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "w13_topk_sql" -> w13TopkSql _,
-    "w12_topk_agg" -> w12TopkAgg _,
-    "w11_session_funnel" -> w11SessionFunnel _,
-    "w10_sessionize" -> w10Sessionize _,
-    "w9_rolling_zscore" -> w9RollingZscore _,
-    "w1_lag_delta" -> w1Lag _,
-    "w1_funnel" -> w1Funnel _,
-    "w2_top1_per_group" -> w2Top1 _,
-    "w3_anvio_cascade" -> w3AnvioCascade _,
-    "w4_tie_discard" -> w4TieDiscard _,
-    "w5_margin_keep" -> w5MarginKeep _,
-    "w6_row_number_id" -> w6RowNumberId _,
-    "w7_cumsum" -> w7Cumsum _,
-    "w8_range_frame" -> w8RangeFrame _,
-    "a7_n50" -> a7N50 _)
-
-  val oracle: Map[String, String] = Map(
-    "w13_topk_sql" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("w13_topk_sql", w13TopkSql _, Some(
       """SELECT o_custkey, CAST(rn AS INT) AS rank, o_orderkey,
            o_totalprice
          FROM (SELECT o_custkey, o_orderkey, o_totalprice,
              row_number() OVER (PARTITION BY o_custkey
                ORDER BY o_totalprice DESC, o_orderkey) AS rn
            FROM orders)
-         WHERE rn <= 3""",
-    "w12_topk_agg" ->
+         WHERE rn <= 3""")),
+    Gate("w12_topk_agg", w12TopkAgg _, Some(
       """SELECT o_custkey, CAST(rn AS INT) AS rank, o_orderkey,
            o_totalprice
          FROM (SELECT o_custkey, o_orderkey, o_totalprice,
              row_number() OVER (PARTITION BY o_custkey
                ORDER BY o_totalprice DESC, o_orderkey) AS rn
            FROM orders)
-         WHERE rn <= 3""",
-    "w11_session_funnel" ->
+         WHERE rn <= 3""")),
+    Gate("w11_session_funnel", w11SessionFunnel _, Some(
       """WITH e AS (
            SELECT user_id, event_id, ts, event_type,
              epoch_us(ts) AS tu,
@@ -384,8 +368,8 @@ object Windows {
            CAST(sum(has_view) AS BIGINT) AS n_view,
            CAST(sum(has_click) AS BIGINT) AS n_click,
            CAST(sum(has_purchase) AS BIGINT) AS n_purchase
-         FROM sess""",
-    "w10_sessionize" ->
+         FROM sess""")),
+    Gate("w10_sessionize", w10Sessionize _, Some(
       """WITH e AS (
            SELECT user_id, event_id, ts, value, epoch_us(ts) AS tu,
              lag(epoch_us(ts)) OVER (
@@ -406,8 +390,8 @@ object Windows {
            CAST(count(*) AS INT) AS n_events,
            CAST(sum(CAST(round(value, 6) AS DECIMAL(28,6))) AS DOUBLE)
              AS sum_value
-         FROM g GROUP BY user_id, session_seq""",
-    "w9_rolling_zscore" ->
+         FROM g GROUP BY user_id, session_seq""")),
+    Gate("w9_rolling_zscore", w9RollingZscore _, Some(
       """WITH m AS (
            SELECT user_id, event_id, value,
              count(value) OVER w AS n_win,
@@ -426,13 +410,13 @@ object Windows {
          SELECT user_id, event_id, n_win, sx, sx2,
            CASE WHEN stdv > 0
              THEN round((value - mean) / stdv, 4) + 0.0 END AS zscore
-         FROM v""",
-    "w1_lag_delta" ->
+         FROM v""")),
+    Gate("w1_lag_delta", w1Lag _, Some(
       """SELECT event_id, user_id,
          round(value - lag(value) OVER
            (PARTITION BY user_id ORDER BY ts, event_id), 4) AS delta
-         FROM events""",
-    "w1_funnel" ->
+         FROM events""")),
+    Gate("w1_funnel", w1Funnel _, Some(
       """WITH staged AS (
            SELECT CASE event_type WHEN 'signup' THEN 0 WHEN 'view' THEN 1
              WHEN 'click' THEN 2 WHEN 'purchase' THEN 3 END AS state_rank,
@@ -445,13 +429,13 @@ object Windows {
          SELECT state_rank, event_type, n,
            round(n * 100.0 / lag(n) OVER (ORDER BY state_rank), 4)
              AS pct_of_prev
-         FROM counts""",
-    "w2_top1_per_group" ->
+         FROM counts""")),
+    Gate("w2_top1_per_group", w2Top1 _, Some(
       """SELECT l_orderkey, l_linenumber, l_partkey, l_extendedprice
          FROM (SELECT *, row_number() OVER (PARTITION BY l_orderkey
            ORDER BY l_extendedprice DESC, l_linenumber ASC) AS rn
-           FROM lineitem) x WHERE rn = 1""",
-    "w3_anvio_cascade" ->
+           FROM lineitem) x WHERE rn = 1""")),
+    Gate("w3_anvio_cascade", w3AnvioCascade _, Some(
       """WITH s0 AS (SELECT * FROM lineitem WHERE l_tax < 0.07),
          s1 AS (SELECT * FROM (SELECT *, rank() OVER
              (PARTITION BY l_orderkey, l_partkey
@@ -467,8 +451,8 @@ object Windows {
              (PARTITION BY l_orderkey
               ORDER BY l_quantity DESC, l_linenumber ASC) AS rn
              FROM s4) c WHERE rn = 1)
-         SELECT l_orderkey, l_partkey, l_linenumber, l_quantity FROM s5""",
-    "w4_tie_discard" ->
+         SELECT l_orderkey, l_partkey, l_linenumber, l_quantity FROM s5""")),
+    Gate("w4_tie_discard", w4TieDiscard _, Some(
       """SELECT l_orderkey, max_qty AS winning_qty
          FROM (SELECT l_orderkey, max_qty, count(*) AS n_at_max
            FROM (SELECT l_orderkey, l_quantity,
@@ -476,31 +460,31 @@ object Windows {
              FROM lineitem) a
            WHERE l_quantity = max_qty
            GROUP BY l_orderkey, max_qty) b
-         WHERE n_at_max = 1""",
-    "w5_margin_keep" ->
+         WHERE n_at_max = 1""")),
+    Gate("w5_margin_keep", w5MarginKeep _, Some(
       """SELECT l_orderkey, l_linenumber, l_extendedprice
          FROM (SELECT *, max(l_extendedprice) OVER
            (PARTITION BY l_orderkey) AS max_price FROM lineitem) x
-         WHERE l_extendedprice >= max_price * 0.9""",
-    "w6_row_number_id" ->
+         WHERE l_extendedprice >= max_price * 0.9""")),
+    Gate("w6_row_number_id", w6RowNumberId _, Some(
       """SELECT CAST(row_number() OVER (ORDER BY n_name ASC) AS INT)
            AS nation_id, n_name
-         FROM nation""",
-    "w7_cumsum" ->
+         FROM nation""")),
+    Gate("w7_cumsum", w7Cumsum _, Some(
       """SELECT o_orderkey, o_custkey,
          round(sum(o_totalprice) OVER (PARTITION BY o_custkey
            ORDER BY o_orderdate ASC, o_orderkey ASC
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
            AS running_spend
-         FROM orders""",
-    "w8_range_frame" ->
+         FROM orders""")),
+    Gate("w8_range_frame", w8RangeFrame _, Some(
       """SELECT user_id, event_id, count(*) OVER w AS n_1h,
          CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE)
            AS sum_1h
          FROM events
          WINDOW w AS (PARTITION BY user_id ORDER BY ts
-           RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)""",
-    "a7_n50" ->
+           RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)""")),
+    Gate("a7_n50", a7N50 _, Some(
       """SELECT l_suppkey, round(max(l_quantity),2) AS n50
          FROM (SELECT l_suppkey, l_quantity,
            sum(l_quantity) OVER (PARTITION BY l_suppkey
@@ -509,5 +493,5 @@ object Windows {
            sum(l_quantity) OVER (PARTITION BY l_suppkey) AS total
            FROM lineitem) x
          WHERE cum >= total / 2
-         GROUP BY l_suppkey""")
+         GROUP BY l_suppkey""")))
 }

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -1357,8 +1358,8 @@ object Similarity {
   // The Lloyd fits (coarse quantizer + PQ codebooks) are index-BUILD
   // work; serving gates should consume the built index, not refit per
   // query — exactly the dupClustersStaged shape. Each fit is staged
-  // ONCE per (process, sf dir) via a crash-safe overwrite into tmpdir
-  // and every consumer reads the staged parquet back, so the ADC/probe
+  // ONCE per (process, sf dir) via a crash-safe overwrite under the
+  // process's io.Scratch root and every consumer reads the staged parquet back, so the ADC/probe
   // gates pay scan cost, not fit cost. x_pq_index (and the x_ann_*
   // family) still refit in their own executions — the dump each staged
   // consumer's oracle conditions on therefore comes from a SEPARATE
@@ -1375,14 +1376,10 @@ object Similarity {
   private[graft] val coarseFitRuns =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  private def stageDir(prefix: String, d: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      prefix + d.replaceAll("[^A-Za-z0-9]", "_")).getPath
-
   /** The x_pq_index rows, staged once per sf dir and read back. */
   private def pqIndexStaged(s: SparkSession, d: String): DataFrame = {
     val path = stagedPq.computeIfAbsent(d, _ => {
-      val dir = stageDir("graft_pq_index_", d)
+      val dir = graft.io.Scratch.path("pq_index").toString
       graft.io.Writers.overwriteStaged(xPqIndex(s, d), dir)
       dir
     })
@@ -1439,7 +1436,7 @@ object Similarity {
       .select(col("n_id"), col("cid"))
   }
 
-  /** Staged codebooks (fit-once tmpdir staging → loaded LocalRelation). */
+  /** Staged codebooks (fit-once scratch staging → loaded LocalRelation). */
   private def codebooksStaged(s: SparkSession, d: String): DataFrame =
     loadPqCodebooks(pqIndexStaged(s, d))
 
@@ -1479,7 +1476,7 @@ object Similarity {
       val cents = centroids.select(lit("cent").as("kind"),
         col("cid").as("id"), col("cid"), lit(0).as("rk"),
         serDec6(col("c_emb")).as("payload"))
-      val dir = stageDir("graft_ivf_assign_", d)
+      val dir = graft.io.Scratch.path("ivf_assign").toString
       graft.io.Writers.overwriteStaged(
         lists.unionByName(probes).unionByName(cents), dir)
       dir
@@ -1561,7 +1558,7 @@ object Similarity {
         .unionByName(pqEncode(res, cb)
           .select(lit("code").as("kind"), col("sub"),
             col("n_id").as("id"), col("code").cast("string").as("payload")))
-      val dir = stageDir("graft_rpq_index_", d)
+      val dir = graft.io.Scratch.path("rpq_index").toString
       graft.io.Writers.overwriteStaged(dump, dir)
       dir
     })
@@ -2110,34 +2107,6 @@ object Similarity {
     semanticDedup(t(s, d, "embeddings").filter(col("vec_id") < 1000),
       tau = 0.3)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d_semantic_dedup" -> dSemanticDedup _,
-    "x_embed_norm" -> xEmbedNorm _,
-    "x_embed_quantize" -> xEmbedQuantize _,
-    "x_covariance" -> xCovariance _,
-    "x_pca_power" -> xPcaPower _,
-    "x_pca_project" -> xPcaProject _,
-    "x_rrf_fusion" -> xRrfFusion _,
-    "x_embed_decontam" -> xEmbedDecontam _,
-    "x_ann_brute" -> xAnnBrute _,
-    "x_rank_metrics" -> xRankMetrics _,
-    "x_ann_lsh" -> xAnnLsh _,
-    "x_ann_ivf" -> xAnnIvf _,
-    "x_ann_ivf_assign" -> xAnnIvfAssign _,
-    "x_ann_ivf_full" -> xAnnIvfFull _,
-    "x_pq_index" -> xPqIndex _,
-    "x_pq_topk" -> xPqTopk _,
-    "x_pq_ivf" -> xPqIvf _,
-    "x_pq_ivf_full" -> xPqIvfFull _,
-    "x_pq_refine" -> xPqRefine _,
-    "x_pq_residual_index" -> xPqResidualIndex _,
-    "x_pq_residual" -> xPqResidual _,
-    "x_knn_label" -> xKnnLabel _,
-    "x_mips" -> xMips _,
-    "x_mmr" -> xMmr _,
-    "x_mmr_ivf" -> xMmrIvf _,
-    "x_centroid" -> xCentroid _)
-
   /** Brute-force top-3 in DuckDB — the oracle for every ANN gate that
     * achieves exact recall on the gate data (see xAnnLsh/xAnnIvfFull). */
   private val bruteTop3Sql =
@@ -2391,84 +2360,363 @@ object Similarity {
        SELECT 'code', sub, vec_id, CAST(code AS VARCHAR)
        FROM codes WHERE rk = 1"""
 
-  val oracle: Map[String, String] = Map(
-    "x_mips" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("d_semantic_dedup", dSemanticDedup _, Some(
+      """WITH asg AS (
+           SELECT vec_id, cid
+           FROM parquet_scan('__OUTDIR__/d_semantic_dedup/*.parquet')),
+         e AS (
+           SELECT vec_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
+           FROM embeddings WHERE vec_id < 1000),
+         j AS (
+           -- e LEFT JOIN asg, not asg JOIN e: the oracle must be TOTAL
+           -- over the slice, so an engine dump that silently dropped a
+           -- vector yields an extra oracle row and a row-count mismatch
+           -- instead of both sides shrinking in step
+           SELECT e.vec_id, a.cid, e.emb
+           FROM e LEFT JOIN asg a ON a.vec_id = e.vec_id),
+         dropped AS (
+           SELECT DISTINCT b.vec_id
+           FROM j a JOIN j b
+             ON a.cid = b.cid AND a.vec_id < b.vec_id
+           WHERE list_cosine_similarity(a.emb, b.emb) >= 0.3)
+         SELECT j.vec_id, j.cid, d.vec_id IS NULL AS kept
+         FROM j LEFT JOIN dropped d ON j.vec_id = d.vec_id""")),
+    Gate("x_embed_norm", xEmbedNorm _, Some(
+      """WITH s AS (
+           SELECT vec_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
+             sqrt(list_sum(list_transform(embedding,
+               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS l2
+           FROM embeddings)
+         SELECT vec_id, round(l2, 6) AS l2,
+           array_to_string(list_transform(
+             CASE WHEN l2 > 0
+               THEN list_transform(emb, x -> round(x / l2, 6))
+               ELSE emb END,
+             x -> CAST(CAST(x AS DECIMAL(18,6)) AS VARCHAR)), ',') AS unit
+         FROM s""")),
+    Gate("x_embed_quantize", xEmbedQuantize _, Some(
+      """WITH s AS (
+           SELECT vec_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
+             list_max(list_transform(embedding,
+               x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale
+           FROM embeddings)
+         SELECT vec_id, round(scale, 6) AS scale,
+           array_to_string(CASE WHEN scale > 0
+             THEN list_transform(emb,
+               x -> CAST(floor(x / scale + 0.5) AS INT))
+             ELSE list_transform(emb, x -> 0) END, ',') AS q_emb
+         FROM s""")),
+    Gate("x_covariance", xCovariance _, Some(
+      """WITH e AS (
+           SELECT list_transform(embedding,
+             v -> round(CAST(v AS DOUBLE), 6)) AS x
+           FROM embeddings),
+         p AS (
+           SELECT ii.i AS i, jj.j AS j,
+             CAST(x[ii.i + 1] * x[jj.j + 1] AS DECIMAL(38,12)) AS p
+           FROM e, unnest(range(0, len(x))) AS ii(i),
+             unnest(range(ii.i, len(x))) AS jj(j)),
+         m AS (
+           SELECT CAST(i AS INT) AS i, CAST(j AS INT) AS j,
+             count(*) AS n,
+             CAST(sum(p) AS DOUBLE) AS sxy
+           FROM p GROUP BY 1, 2),
+         s AS (
+           SELECT CAST(ii.i AS INT) AS i,
+             CAST(sum(CAST(x[ii.i + 1] AS DECIMAL(28,6))) AS DOUBLE)
+               AS sx
+           FROM e, unnest(range(0, len(x))) AS ii(i) GROUP BY 1)
+         SELECT m.i, m.j, m.n, sa.sx AS sx_i, sb.sx AS sx_j, m.sxy
+         FROM m JOIN s sa ON m.i = sa.i JOIN s sb ON m.j = sb.i""")),
+    // conditioned oracle (the x_ann_ivf pattern): re-derive the
+    // covariance EXACTLY from the embeddings table, then accept the
+    // dumped vector only if it satisfies BOTH
+    //  (1) the eigen property — near-unit norm and small relative
+    //      Rayleigh residual ||Cv − λv|| ≤ 5%·|λ| — and
+    //  (2) DOMINANCE — λ must reach the best lower bounds on λ_max
+    //      the oracle can compute independently: the max diagonal
+    //      entry, trace/d, and 98% of the Rayleigh quotient of a
+    //      3-step power iterate from a SECOND start vector (all-
+    //      ones). Any eigenvector passes (1); a non-dominant one
+    //      (wrong-column indexing, convergence to a minor component)
+    //      fails (2) unless the top eigenvalues are within 2% —
+    //      where "top component" is genuinely ill-posed.
+    // A rejected vector yields zero rows and the gate row-count-
+    // mismatches; thresholds live in the PREDICATE, never in a
+    // value compare.
+    Gate("x_pca_power", xPcaPower _, Some(
+      """WITH v AS (
+           SELECT i, v FROM '__OUTDIR__/x_pca_power/*.parquet'),
+         e AS (
+           SELECT list_transform(embedding,
+             x -> round(CAST(x AS DOUBLE), 6)) AS x
+           FROM embeddings),
+         p AS (
+           SELECT ii.i AS i, jj.j AS j,
+             CAST(x[ii.i + 1] * x[jj.j + 1] AS DECIMAL(38,12)) AS p
+           FROM e, unnest(range(0, len(x))) AS ii(i),
+             unnest(range(0, len(x))) AS jj(j)),
+         m AS (
+           SELECT i, j, count(*) AS n,
+             CAST(sum(p) AS DOUBLE) AS sxy
+           FROM p GROUP BY 1, 2),
+         s AS (
+           SELECT ii.i AS i,
+             CAST(sum(CAST(x[ii.i + 1] AS DECIMAL(28,6))) AS DOUBLE)
+               AS sx
+           FROM e, unnest(range(0, len(x))) AS ii(i) GROUP BY 1),
+         c AS (
+           SELECT m.i, m.j,
+             (m.sxy - sa.sx * sb.sx / m.n) / m.n AS cov
+           FROM m JOIN s sa ON m.i = sa.i JOIN s sb ON m.j = sb.i),
+         w AS (
+           SELECT c.i AS i, sum(c.cov * v2.v) AS wv
+           FROM c JOIN v v2 ON c.j = v2.i GROUP BY 1),
+         lam AS (SELECT sum(v.v * w.wv) AS l FROM v JOIN w USING (i)),
+         u1 AS (SELECT c.i, sum(c.cov) AS v FROM c GROUP BY 1),
+         u2 AS (SELECT c.i, sum(c.cov * u1.v) AS v
+           FROM c JOIN u1 ON c.j = u1.i GROUP BY 1),
+         u3 AS (SELECT c.i, sum(c.cov * u2.v) AS v
+           FROM c JOIN u2 ON c.j = u2.i GROUP BY 1),
+         u4 AS (SELECT c.i, sum(c.cov * u3.v) AS v
+           FROM c JOIN u3 ON c.j = u3.i GROUP BY 1),
+         ray AS (
+           SELECT sum(u3.v * u4.v) / nullif(sum(u3.v * u3.v), 0) AS r
+           FROM u3 JOIN u4 USING (i)),
+         diag AS (
+           SELECT max(cov) AS mx, sum(cov) / count(*) AS tr_avg
+           FROM c WHERE i = j),
+         chk AS (
+           SELECT sqrt(sum((w.wv - lam.l * v.v) * (w.wv - lam.l * v.v)))
+               <= 0.05 * greatest(abs(any_value(lam.l)), 1e-9)
+             AND abs(sum(v.v * v.v) - 1) < 1e-3
+             AND any_value(lam.l) >=
+               any_value(diag.mx) -
+                 0.02 * greatest(abs(any_value(lam.l)), 1e-9)
+             AND any_value(lam.l) >= any_value(diag.tr_avg)
+             AND any_value(lam.l) >=
+               0.98 * coalesce(any_value(ray.r), 0) - 1e-9 AS ok
+           FROM w JOIN v USING (i), lam, ray, diag)
+         SELECT v.i, v.v FROM v, chk WHERE chk.ok""")),
+    // conditioned on the x_pca_power dump (itself eigen-verified):
+    // the dot replays on the exact 12-dp decimal grid, so scores
+    // hash-compare bit-for-bit
+    Gate("x_pca_project", xPcaProject _, Some(
+      """WITH v AS (
+           SELECT i, v FROM '__OUTDIR__/x_pca_power/*.parquet'),
+         e AS (
+           SELECT vec_id, list_transform(embedding,
+             x -> round(CAST(x AS DOUBLE), 6)) AS x
+           FROM embeddings),
+         terms AS (
+           SELECT vec_id, ii.i AS i, x[ii.i + 1] AS xi
+           FROM e, unnest(range(0, len(x))) AS ii(i))
+         SELECT t.vec_id,
+           CAST(sum(CAST(t.xi * v.v AS DECIMAL(38,12))) AS DOUBLE)
+             AS score
+         FROM terms t JOIN v ON t.i = v.i GROUP BY 1""")),
+    Gate("x_rrf_fusion", xRrfFusion _, Some(
+      """WITH tk AS (
+           SELECT doc_id, string_split_regex(trim(text), '\s+') AS tok
+           FROM documents),
+         sized AS (
+           SELECT doc_id, tok, CAST(len(tok) AS DOUBLE) AS dl FROM tk),
+         stats AS (
+           SELECT CAST(count(*) AS DOUBLE) AS n_docs,
+             CAST(sum(CAST(dl AS BIGINT)) AS DOUBLE) AS tot_len,
+             CAST(sum(CASE WHEN list_contains(tok, 'vector')
+               THEN 1 ELSE 0 END) AS DOUBLE) AS df_0,
+             CAST(sum(CASE WHEN list_contains(tok, 'stream')
+               THEN 1 ELSE 0 END) AS DOUBLE) AS df_1,
+             CAST(sum(CASE WHEN list_contains(tok, 'merge')
+               THEN 1 ELSE 0 END) AS DOUBLE) AS df_2
+           FROM sized),
+         scored AS (
+           SELECT doc_id,
+             ((n_docs - df_0 + 0.5) / (df_0 + 0.5)) *
+               ((CAST(len(list_filter(tok, x -> x = 'vector')) AS DOUBLE)
+                  * (1.2 + 1.0)) /
+                (CAST(len(list_filter(tok, x -> x = 'vector')) AS DOUBLE)
+                  + 1.2 * (1.0 - 0.75 + 0.75 * (dl / (tot_len / n_docs)))))
+             + ((n_docs - df_1 + 0.5) / (df_1 + 0.5)) *
+               ((CAST(len(list_filter(tok, x -> x = 'stream')) AS DOUBLE)
+                  * (1.2 + 1.0)) /
+                (CAST(len(list_filter(tok, x -> x = 'stream')) AS DOUBLE)
+                  + 1.2 * (1.0 - 0.75 + 0.75 * (dl / (tot_len / n_docs)))))
+             + ((n_docs - df_2 + 0.5) / (df_2 + 0.5)) *
+               ((CAST(len(list_filter(tok, x -> x = 'merge')) AS DOUBLE)
+                  * (1.2 + 1.0)) /
+                (CAST(len(list_filter(tok, x -> x = 'merge')) AS DOUBLE)
+                  + 1.2 * (1.0 - 0.75 + 0.75 * (dl / (tot_len / n_docs)))))
+             AS score
+           FROM sized CROSS JOIN stats),
+         lex AS (
+           SELECT doc_id, row_number() OVER (
+               ORDER BY score DESC, doc_id ASC) AS rank
+           FROM scored WHERE score > 0
+           ORDER BY score DESC, doc_id LIMIT 20),
+         q AS (
+           SELECT vec_id AS q_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS q_emb
+           FROM embeddings WHERE vec_id = 0),
+         cos AS (
+           SELECT c.vec_id AS doc_id,
+             list_cosine_similarity(q.q_emb,
+               list_transform(c.embedding, x -> CAST(x AS DOUBLE)))
+               AS sim
+           FROM embeddings c CROSS JOIN q WHERE c.vec_id <> q.q_id),
+         sem AS (
+           SELECT doc_id, rn AS rank
+           FROM (SELECT *, row_number() OVER (
+               ORDER BY round(sim, 6) DESC, doc_id ASC) AS rn
+             FROM cos) x
+           WHERE rn <= 20),
+         u AS (
+           SELECT doc_id, 1000000000000 // (rank + 60) AS contrib
+           FROM lex
+           UNION ALL
+           SELECT doc_id, 1000000000000 // (rank + 60) FROM sem)
+         SELECT doc_id, CAST(sum(contrib) AS BIGINT) AS rrf_e12,
+           CAST(count(*) AS INT) AS n_lists
+         FROM u GROUP BY doc_id
+         ORDER BY rrf_e12 DESC, doc_id LIMIT 10""")),
+    Gate("x_embed_decontam", xEmbedDecontam _, Some(
+      """WITH ev AS (
+           SELECT vec_id AS e_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e_emb
+           FROM embeddings WHERE vec_id < 20),
+         c AS (
+           SELECT vec_id AS n_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS n_emb
+           FROM embeddings WHERE vec_id >= 20),
+         scored AS (
+           SELECT c.n_id, ev.e_id,
+             list_cosine_similarity(c.n_emb, ev.e_emb) AS sim
+           FROM c CROSS JOIN ev
+           WHERE round(list_cosine_similarity(c.n_emb, ev.e_emb), 6)
+             >= 0.3)
+         SELECT n_id, e_id, round(sim, 4) AS cos_sim
+         FROM (SELECT *, row_number() OVER (PARTITION BY n_id
+           ORDER BY round(sim, 6) DESC, e_id ASC) AS rn FROM scored) x
+         WHERE rn = 1""")),
+    Gate("x_ann_brute", xAnnBrute _, Some(
       """WITH q AS (SELECT vec_id AS q_id,
-           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS q_emb
-         FROM embeddings WHERE vec_id < 10),
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS q_emb
+           FROM embeddings WHERE vec_id < 10),
          scored AS (
            SELECT q.q_id, c.vec_id AS n_id,
-             list_inner_product(q.q_emb,
-               list_transform(c.embedding, x -> CAST(x AS DOUBLE)))
-               AS ip
+             list_cosine_similarity(q.q_emb,
+               list_transform(c.embedding, x -> CAST(x AS DOUBLE))) AS sim
            FROM embeddings c CROSS JOIN q WHERE c.vec_id <> q.q_id)
          SELECT q_id, CAST(rn AS INT) AS rank, n_id,
-           round(ip, 4) AS inner_prod
+           round(sim, 4) AS cos_sim
          FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-           ORDER BY round(ip, 6) DESC, n_id ASC) AS rn FROM scored) x
-         WHERE rn <= 3""",
-    "x_mmr" ->
-      """WITH q AS (SELECT vec_id AS q_id,
-           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-         FROM embeddings WHERE vec_id < 10),
+           ORDER BY round(sim, 6) DESC, n_id ASC) AS rn FROM scored) x
+         WHERE rn <= 3""")),
+    Gate("x_rank_metrics", xRankMetrics _, Some(
+      """WITH q AS (
+           SELECT vec_id AS q_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+           FROM embeddings WHERE vec_id < 10),
+         c AS (
+           SELECT vec_id AS n_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+           FROM embeddings),
+         truth AS (
+           SELECT q_id, n_id, rn FROM (
+             SELECT q.q_id, c.n_id,
+               row_number() OVER (PARTITION BY q.q_id
+                 ORDER BY round(list_cosine_similarity(q.e, c.e), 6)
+                   DESC, c.n_id ASC) AS rn
+             FROM c CROSS JOIN q WHERE c.n_id <> q.q_id) x
+           WHERE rn <= 10),
+         qq AS (
+           SELECT q_id, CASE
+             WHEN list_max(list_transform(e, y -> abs(y))) > 0
+             THEN list_transform(e, x -> floor(x /
+               (list_max(list_transform(e, y -> abs(y))) / 3.0) + 0.5))
+             ELSE list_transform(e, x -> 0.0) END AS qe
+           FROM q),
+         cq AS (
+           SELECT n_id, CASE
+             WHEN list_max(list_transform(e, y -> abs(y))) > 0
+             THEN list_transform(e, x -> floor(x /
+               (list_max(list_transform(e, y -> abs(y))) / 3.0) + 0.5))
+             ELSE list_transform(e, x -> 0.0) END AS qe
+           FROM c),
+         run AS (
+           SELECT q_id, n_id, rn FROM (
+             SELECT qq.q_id, cq.n_id,
+               row_number() OVER (PARTITION BY qq.q_id
+                 ORDER BY round(list_cosine_similarity(qq.qe, cq.qe), 6)
+                   DESC, cq.n_id ASC) AS rn
+             FROM cq CROSS JOIN qq WHERE cq.n_id <> qq.q_id) x
+           WHERE rn <= 10),
+         h AS (
+           SELECT r.q_id, count(*) AS n,
+             sum(CASE WHEN r.rn <= 5 THEN 1 ELSE 0 END) AS h5,
+             max(CASE WHEN t.rn = 1 THEN 1.0 / r.rn END) AS rr
+           FROM run r JOIN truth t USING (q_id, n_id)
+           GROUP BY 1)
+         SELECT q.q_id,
+           CAST(coalesce(h.n, 0) AS INT) AS n_hits,
+           round(coalesce(h.n, 0) / 10.0, 6) AS recall_at_k,
+           round(coalesce(h.h5, 0) / 5.0, 6) AS precision_at_5,
+           coalesce(h.rr, 0.0) AS rr
+         FROM (SELECT DISTINCT q_id FROM truth) q
+         LEFT JOIN h USING (q_id)""")),
+    Gate("x_ann_lsh", xAnnLsh _, Some(bruteTop3Sql)),
+    // conditioned on the engine's dumped IVF state: candidates =
+    // (probe ⋈ list on cid), then exact cosine + the engine's
+    // tie-break re-derive the top-3 independently. The first CTE
+    // doubles as a structural audit: a corpus vector assigned to 0 or
+    // 2+ lists would change candidate multiplicity and hash-mismatch.
+    Gate("x_ann_ivf", xAnnIvf _, Some(
+      """WITH asg AS (
+           SELECT id AS n_id, cid
+           FROM parquet_scan('__OUTDIR__/x_ann_ivf_assign/*.parquet')
+           WHERE kind = 'list'),
+         probes AS (
+           SELECT id AS q_id, cid
+           FROM parquet_scan('__OUTDIR__/x_ann_ivf_assign/*.parquet')
+           WHERE kind = 'probe'),
+         q AS (SELECT vec_id AS q_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS q_emb
+           FROM embeddings WHERE vec_id < 10),
          c AS (SELECT vec_id AS n_id,
-           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-         FROM embeddings),
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS n_emb
+           FROM embeddings),
          scored AS (
-           SELECT q.q_id, c.n_id,
-             list_cosine_similarity(q.e, c.e) AS sim
-           FROM c CROSS JOIN q WHERE c.n_id <> q.q_id),
-         sl AS (
-           SELECT q_id, n_id,
-             CAST(CAST(round(sim, 6) AS DECIMAL(18,6)) * 1000000
-               AS BIGINT) AS rel_micro
-           FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-             ORDER BY round(sim, 6) DESC, n_id ASC) AS rn FROM scored) x
-           WHERE rn <= 8),
-         p AS (
-           SELECT a.q_id, a.n_id AS a, b.n_id AS b,
-             CAST(CAST(round(list_cosine_similarity(ca.e, cb.e), 6)
-               AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS sim_micro
-           FROM sl a JOIN sl b ON a.q_id = b.q_id AND a.n_id <> b.n_id
-           JOIN c ca ON ca.n_id = a.n_id
-           JOIN c cb ON cb.n_id = b.n_id),
-         dump AS (
-           SELECT q_id, rank, n_id
-           FROM parquet_scan('__OUTDIR__/x_mmr/*.parquet')),
-         prior AS (
-           SELECT r.q_id, r.rank,
-             coalesce(list(d.n_id) FILTER (WHERE d.n_id IS NOT NULL),
-               []) AS sel
-           FROM (SELECT DISTINCT q_id, rank FROM dump) r
-           LEFT JOIN dump d ON d.q_id = r.q_id AND d.rank < r.rank
-           GROUP BY r.q_id, r.rank),
-         cand AS (
-           SELECT pr.q_id, pr.rank, s.n_id,
-             7 * s.rel_micro - 3 * coalesce((
-               SELECT max(p.sim_micro) FROM p
-               WHERE p.q_id = pr.q_id AND p.a = s.n_id
-                 AND list_contains(pr.sel, p.b)), 0) AS score
-           FROM prior pr JOIN sl s
-             ON s.q_id = pr.q_id AND NOT list_contains(pr.sel, s.n_id))
-         SELECT q_id, CAST(rank AS INT) AS rank, n_id,
-           CAST(score AS BIGINT) AS mmr_score_e7
-         FROM (SELECT *, row_number() OVER (PARTITION BY q_id, rank
-           ORDER BY score DESC, n_id ASC) AS rk FROM cand) x
-         WHERE rk = 1""",
-    "x_ann_ivf_assign" -> ivfAssignReplaySql,
-    "x_pq_index" -> pqIndexReplaySql,
-    "x_pq_topk" -> pqReplayTopK(restrictToProbed = false),
+           SELECT p.q_id, a.n_id,
+             list_cosine_similarity(q.q_emb, c.n_emb) AS sim
+           FROM probes p JOIN asg a USING (cid)
+             JOIN q ON q.q_id = p.q_id
+             JOIN c ON c.n_id = a.n_id
+           WHERE a.n_id <> p.q_id)
+         SELECT q_id, CAST(rn AS INT) AS rank, n_id,
+           round(sim, 4) AS cos_sim
+         FROM (SELECT *, row_number() OVER (PARTITION BY q_id
+           ORDER BY round(sim, 6) DESC, n_id ASC) AS rn FROM scored) x
+         WHERE rn <= 3""")),
+    Gate("x_ann_ivf_assign", xAnnIvfAssign _, Some(ivfAssignReplaySql)),
+    Gate("x_ann_ivf_full", xAnnIvfFull _, Some(bruteTop3Sql)),
+    Gate("x_pq_index", xPqIndex _, Some(pqIndexReplaySql)),
+    Gate("x_pq_topk", xPqTopk _, Some(pqReplayTopK(restrictToProbed = false))),
+    Gate("x_pq_ivf", xPqIvf _, Some(pqReplayTopK(restrictToProbed = true))),
     // lossless pruning at nprobe = nlist ⇒ must equal the pqTopK
     // replay exactly, wherever Lloyd put the coarse centroids
-    "x_pq_ivf_full" -> pqReplayTopK(restrictToProbed = false),
-    "x_pq_ivf" -> pqReplayTopK(restrictToProbed = true),
-    "x_pq_refine" -> pqRefineReplaySql,
-    "x_mmr_ivf" -> mmrIvfReplaySql,
+    Gate("x_pq_ivf_full", xPqIvfFull _,
+      Some(pqReplayTopK(restrictToProbed = false))),
+    Gate("x_pq_refine", xPqRefine _, Some(pqRefineReplaySql)),
     // conditioned-total: every residual re-derived from the
     // x_ann_ivf_assign dump's centroids+lists (separate execution —
     // fit determinism stays hash-checked), every code re-derived as
     // the argmin-L2 codeword over the echoed residual codebooks
-    "x_pq_residual_index" ->
+    Gate("x_pq_residual_index", xPqResidualIndex _, Some(
       """WITH dump AS (
            SELECT * FROM
              parquet_scan('__OUTDIR__/x_pq_residual_index/*.parquet')),
@@ -2513,10 +2761,10 @@ object Similarity {
          SELECT 'cb' AS kind, sub, id, payload FROM dump WHERE kind = 'cb'
          UNION ALL
          SELECT 'code', sub, vec_id, CAST(code AS VARCHAR)
-         FROM codes WHERE rk = 1""",
+         FROM codes WHERE rk = 1""")),
     // full replay of the reconstruction ADC — LUT, centroid cross
     // terms, decimal sums, ranking — from the two dumps
-    "x_pq_residual" ->
+    Gate("x_pq_residual", xPqResidual _, Some(
       """WITH asg AS (
            SELECT * FROM
              parquet_scan('__OUTDIR__/x_ann_ivf_assign/*.parquet')),
@@ -2588,350 +2836,8 @@ object Similarity {
            round(sim, 4) AS adc_sim
          FROM (SELECT *, row_number() OVER (PARTITION BY q_id
            ORDER BY round(sim, 6) DESC, n_id ASC) AS rn FROM scored) x
-         WHERE rn <= 3""",
-    "d_semantic_dedup" ->
-      """WITH asg AS (
-           SELECT vec_id, cid
-           FROM parquet_scan('__OUTDIR__/d_semantic_dedup/*.parquet')),
-         e AS (
-           SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-           FROM embeddings WHERE vec_id < 1000),
-         j AS (
-           -- e LEFT JOIN asg, not asg JOIN e: the oracle must be TOTAL
-           -- over the slice, so an engine dump that silently dropped a
-           -- vector yields an extra oracle row and a row-count mismatch
-           -- instead of both sides shrinking in step
-           SELECT e.vec_id, a.cid, e.emb
-           FROM e LEFT JOIN asg a ON a.vec_id = e.vec_id),
-         dropped AS (
-           SELECT DISTINCT b.vec_id
-           FROM j a JOIN j b
-             ON a.cid = b.cid AND a.vec_id < b.vec_id
-           WHERE list_cosine_similarity(a.emb, b.emb) >= 0.3)
-         SELECT j.vec_id, j.cid, d.vec_id IS NULL AS kept
-         FROM j LEFT JOIN dropped d ON j.vec_id = d.vec_id""",
-    "x_embed_norm" ->
-      """WITH s AS (
-           SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
-             sqrt(list_sum(list_transform(embedding,
-               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS l2
-           FROM embeddings)
-         SELECT vec_id, round(l2, 6) AS l2,
-           array_to_string(list_transform(
-             CASE WHEN l2 > 0
-               THEN list_transform(emb, x -> round(x / l2, 6))
-               ELSE emb END,
-             x -> CAST(CAST(x AS DECIMAL(18,6)) AS VARCHAR)), ',') AS unit
-         FROM s""",
-    "x_embed_decontam" ->
-      """WITH ev AS (
-           SELECT vec_id AS e_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e_emb
-           FROM embeddings WHERE vec_id < 20),
-         c AS (
-           SELECT vec_id AS n_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS n_emb
-           FROM embeddings WHERE vec_id >= 20),
-         scored AS (
-           SELECT c.n_id, ev.e_id,
-             list_cosine_similarity(c.n_emb, ev.e_emb) AS sim
-           FROM c CROSS JOIN ev
-           WHERE round(list_cosine_similarity(c.n_emb, ev.e_emb), 6)
-             >= 0.3)
-         SELECT n_id, e_id, round(sim, 4) AS cos_sim
-         FROM (SELECT *, row_number() OVER (PARTITION BY n_id
-           ORDER BY round(sim, 6) DESC, e_id ASC) AS rn FROM scored) x
-         WHERE rn = 1""",
-    "x_rrf_fusion" ->
-      """WITH tk AS (
-           SELECT doc_id, string_split_regex(trim(text), '\s+') AS tok
-           FROM documents),
-         sized AS (
-           SELECT doc_id, tok, CAST(len(tok) AS DOUBLE) AS dl FROM tk),
-         stats AS (
-           SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-             CAST(sum(CAST(dl AS BIGINT)) AS DOUBLE) AS tot_len,
-             CAST(sum(CASE WHEN list_contains(tok, 'vector')
-               THEN 1 ELSE 0 END) AS DOUBLE) AS df_0,
-             CAST(sum(CASE WHEN list_contains(tok, 'stream')
-               THEN 1 ELSE 0 END) AS DOUBLE) AS df_1,
-             CAST(sum(CASE WHEN list_contains(tok, 'merge')
-               THEN 1 ELSE 0 END) AS DOUBLE) AS df_2
-           FROM sized),
-         scored AS (
-           SELECT doc_id,
-             ((n_docs - df_0 + 0.5) / (df_0 + 0.5)) *
-               ((CAST(len(list_filter(tok, x -> x = 'vector')) AS DOUBLE)
-                  * (1.2 + 1.0)) /
-                (CAST(len(list_filter(tok, x -> x = 'vector')) AS DOUBLE)
-                  + 1.2 * (1.0 - 0.75 + 0.75 * (dl / (tot_len / n_docs)))))
-             + ((n_docs - df_1 + 0.5) / (df_1 + 0.5)) *
-               ((CAST(len(list_filter(tok, x -> x = 'stream')) AS DOUBLE)
-                  * (1.2 + 1.0)) /
-                (CAST(len(list_filter(tok, x -> x = 'stream')) AS DOUBLE)
-                  + 1.2 * (1.0 - 0.75 + 0.75 * (dl / (tot_len / n_docs)))))
-             + ((n_docs - df_2 + 0.5) / (df_2 + 0.5)) *
-               ((CAST(len(list_filter(tok, x -> x = 'merge')) AS DOUBLE)
-                  * (1.2 + 1.0)) /
-                (CAST(len(list_filter(tok, x -> x = 'merge')) AS DOUBLE)
-                  + 1.2 * (1.0 - 0.75 + 0.75 * (dl / (tot_len / n_docs)))))
-             AS score
-           FROM sized CROSS JOIN stats),
-         lex AS (
-           SELECT doc_id, row_number() OVER (
-               ORDER BY score DESC, doc_id ASC) AS rank
-           FROM scored WHERE score > 0
-           ORDER BY score DESC, doc_id LIMIT 20),
-         q AS (
-           SELECT vec_id AS q_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS q_emb
-           FROM embeddings WHERE vec_id = 0),
-         cos AS (
-           SELECT c.vec_id AS doc_id,
-             list_cosine_similarity(q.q_emb,
-               list_transform(c.embedding, x -> CAST(x AS DOUBLE)))
-               AS sim
-           FROM embeddings c CROSS JOIN q WHERE c.vec_id <> q.q_id),
-         sem AS (
-           SELECT doc_id, rn AS rank
-           FROM (SELECT *, row_number() OVER (
-               ORDER BY round(sim, 6) DESC, doc_id ASC) AS rn
-             FROM cos) x
-           WHERE rn <= 20),
-         u AS (
-           SELECT doc_id, 1000000000000 // (rank + 60) AS contrib
-           FROM lex
-           UNION ALL
-           SELECT doc_id, 1000000000000 // (rank + 60) FROM sem)
-         SELECT doc_id, CAST(sum(contrib) AS BIGINT) AS rrf_e12,
-           CAST(count(*) AS INT) AS n_lists
-         FROM u GROUP BY doc_id
-         ORDER BY rrf_e12 DESC, doc_id LIMIT 10""",
-    "x_pca_project" ->
-      // conditioned on the x_pca_power dump (itself eigen-verified):
-      // the dot replays on the exact 12-dp decimal grid, so scores
-      // hash-compare bit-for-bit
-      """WITH v AS (
-           SELECT i, v FROM '__OUTDIR__/x_pca_power/*.parquet'),
-         e AS (
-           SELECT vec_id, list_transform(embedding,
-             x -> round(CAST(x AS DOUBLE), 6)) AS x
-           FROM embeddings),
-         terms AS (
-           SELECT vec_id, ii.i AS i, x[ii.i + 1] AS xi
-           FROM e, unnest(range(0, len(x))) AS ii(i))
-         SELECT t.vec_id,
-           CAST(sum(CAST(t.xi * v.v AS DECIMAL(38,12))) AS DOUBLE)
-             AS score
-         FROM terms t JOIN v ON t.i = v.i GROUP BY 1""",
-    "x_pca_power" ->
-      // conditioned oracle (the x_ann_ivf pattern): re-derive the
-      // covariance EXACTLY from the embeddings table, then accept the
-      // dumped vector only if it satisfies BOTH
-      //  (1) the eigen property — near-unit norm and small relative
-      //      Rayleigh residual ||Cv − λv|| ≤ 5%·|λ| — and
-      //  (2) DOMINANCE — λ must reach the best lower bounds on λ_max
-      //      the oracle can compute independently: the max diagonal
-      //      entry, trace/d, and 98% of the Rayleigh quotient of a
-      //      3-step power iterate from a SECOND start vector (all-
-      //      ones). Any eigenvector passes (1); a non-dominant one
-      //      (wrong-column indexing, convergence to a minor component)
-      //      fails (2) unless the top eigenvalues are within 2% —
-      //      where "top component" is genuinely ill-posed.
-      // A rejected vector yields zero rows and the gate row-count-
-      // mismatches; thresholds live in the PREDICATE, never in a
-      // value compare.
-      """WITH v AS (
-           SELECT i, v FROM '__OUTDIR__/x_pca_power/*.parquet'),
-         e AS (
-           SELECT list_transform(embedding,
-             x -> round(CAST(x AS DOUBLE), 6)) AS x
-           FROM embeddings),
-         p AS (
-           SELECT ii.i AS i, jj.j AS j,
-             CAST(x[ii.i + 1] * x[jj.j + 1] AS DECIMAL(38,12)) AS p
-           FROM e, unnest(range(0, len(x))) AS ii(i),
-             unnest(range(0, len(x))) AS jj(j)),
-         m AS (
-           SELECT i, j, count(*) AS n,
-             CAST(sum(p) AS DOUBLE) AS sxy
-           FROM p GROUP BY 1, 2),
-         s AS (
-           SELECT ii.i AS i,
-             CAST(sum(CAST(x[ii.i + 1] AS DECIMAL(28,6))) AS DOUBLE)
-               AS sx
-           FROM e, unnest(range(0, len(x))) AS ii(i) GROUP BY 1),
-         c AS (
-           SELECT m.i, m.j,
-             (m.sxy - sa.sx * sb.sx / m.n) / m.n AS cov
-           FROM m JOIN s sa ON m.i = sa.i JOIN s sb ON m.j = sb.i),
-         w AS (
-           SELECT c.i AS i, sum(c.cov * v2.v) AS wv
-           FROM c JOIN v v2 ON c.j = v2.i GROUP BY 1),
-         lam AS (SELECT sum(v.v * w.wv) AS l FROM v JOIN w USING (i)),
-         u1 AS (SELECT c.i, sum(c.cov) AS v FROM c GROUP BY 1),
-         u2 AS (SELECT c.i, sum(c.cov * u1.v) AS v
-           FROM c JOIN u1 ON c.j = u1.i GROUP BY 1),
-         u3 AS (SELECT c.i, sum(c.cov * u2.v) AS v
-           FROM c JOIN u2 ON c.j = u2.i GROUP BY 1),
-         u4 AS (SELECT c.i, sum(c.cov * u3.v) AS v
-           FROM c JOIN u3 ON c.j = u3.i GROUP BY 1),
-         ray AS (
-           SELECT sum(u3.v * u4.v) / nullif(sum(u3.v * u3.v), 0) AS r
-           FROM u3 JOIN u4 USING (i)),
-         diag AS (
-           SELECT max(cov) AS mx, sum(cov) / count(*) AS tr_avg
-           FROM c WHERE i = j),
-         chk AS (
-           SELECT sqrt(sum((w.wv - lam.l * v.v) * (w.wv - lam.l * v.v)))
-               <= 0.05 * greatest(abs(any_value(lam.l)), 1e-9)
-             AND abs(sum(v.v * v.v) - 1) < 1e-3
-             AND any_value(lam.l) >=
-               any_value(diag.mx) -
-                 0.02 * greatest(abs(any_value(lam.l)), 1e-9)
-             AND any_value(lam.l) >= any_value(diag.tr_avg)
-             AND any_value(lam.l) >=
-               0.98 * coalesce(any_value(ray.r), 0) - 1e-9 AS ok
-           FROM w JOIN v USING (i), lam, ray, diag)
-         SELECT v.i, v.v FROM v, chk WHERE chk.ok""",
-    "x_covariance" ->
-      """WITH e AS (
-           SELECT list_transform(embedding,
-             v -> round(CAST(v AS DOUBLE), 6)) AS x
-           FROM embeddings),
-         p AS (
-           SELECT ii.i AS i, jj.j AS j,
-             CAST(x[ii.i + 1] * x[jj.j + 1] AS DECIMAL(38,12)) AS p
-           FROM e, unnest(range(0, len(x))) AS ii(i),
-             unnest(range(ii.i, len(x))) AS jj(j)),
-         m AS (
-           SELECT CAST(i AS INT) AS i, CAST(j AS INT) AS j,
-             count(*) AS n,
-             CAST(sum(p) AS DOUBLE) AS sxy
-           FROM p GROUP BY 1, 2),
-         s AS (
-           SELECT CAST(ii.i AS INT) AS i,
-             CAST(sum(CAST(x[ii.i + 1] AS DECIMAL(28,6))) AS DOUBLE)
-               AS sx
-           FROM e, unnest(range(0, len(x))) AS ii(i) GROUP BY 1)
-         SELECT m.i, m.j, m.n, sa.sx AS sx_i, sb.sx AS sx_j, m.sxy
-         FROM m JOIN s sa ON m.i = sa.i JOIN s sb ON m.j = sb.i""",
-    "x_embed_quantize" ->
-      """WITH s AS (
-           SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
-             list_max(list_transform(embedding,
-               x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale
-           FROM embeddings)
-         SELECT vec_id, round(scale, 6) AS scale,
-           array_to_string(CASE WHEN scale > 0
-             THEN list_transform(emb,
-               x -> CAST(floor(x / scale + 0.5) AS INT))
-             ELSE list_transform(emb, x -> 0) END, ',') AS q_emb
-         FROM s""",
-    "x_rank_metrics" ->
-      """WITH q AS (
-           SELECT vec_id AS q_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings WHERE vec_id < 10),
-         c AS (
-           SELECT vec_id AS n_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings),
-         truth AS (
-           SELECT q_id, n_id, rn FROM (
-             SELECT q.q_id, c.n_id,
-               row_number() OVER (PARTITION BY q.q_id
-                 ORDER BY round(list_cosine_similarity(q.e, c.e), 6)
-                   DESC, c.n_id ASC) AS rn
-             FROM c CROSS JOIN q WHERE c.n_id <> q.q_id) x
-           WHERE rn <= 10),
-         qq AS (
-           SELECT q_id, CASE
-             WHEN list_max(list_transform(e, y -> abs(y))) > 0
-             THEN list_transform(e, x -> floor(x /
-               (list_max(list_transform(e, y -> abs(y))) / 3.0) + 0.5))
-             ELSE list_transform(e, x -> 0.0) END AS qe
-           FROM q),
-         cq AS (
-           SELECT n_id, CASE
-             WHEN list_max(list_transform(e, y -> abs(y))) > 0
-             THEN list_transform(e, x -> floor(x /
-               (list_max(list_transform(e, y -> abs(y))) / 3.0) + 0.5))
-             ELSE list_transform(e, x -> 0.0) END AS qe
-           FROM c),
-         run AS (
-           SELECT q_id, n_id, rn FROM (
-             SELECT qq.q_id, cq.n_id,
-               row_number() OVER (PARTITION BY qq.q_id
-                 ORDER BY round(list_cosine_similarity(qq.qe, cq.qe), 6)
-                   DESC, cq.n_id ASC) AS rn
-             FROM cq CROSS JOIN qq WHERE cq.n_id <> qq.q_id) x
-           WHERE rn <= 10),
-         h AS (
-           SELECT r.q_id, count(*) AS n,
-             sum(CASE WHEN r.rn <= 5 THEN 1 ELSE 0 END) AS h5,
-             max(CASE WHEN t.rn = 1 THEN 1.0 / r.rn END) AS rr
-           FROM run r JOIN truth t USING (q_id, n_id)
-           GROUP BY 1)
-         SELECT q.q_id,
-           CAST(coalesce(h.n, 0) AS INT) AS n_hits,
-           round(coalesce(h.n, 0) / 10.0, 6) AS recall_at_k,
-           round(coalesce(h.h5, 0) / 5.0, 6) AS precision_at_5,
-           coalesce(h.rr, 0.0) AS rr
-         FROM (SELECT DISTINCT q_id FROM truth) q
-         LEFT JOIN h USING (q_id)""",
-    "x_ann_lsh" -> bruteTop3Sql,
-    "x_ann_ivf_full" -> bruteTop3Sql,
-    "x_ann_brute" ->
-      """WITH q AS (SELECT vec_id AS q_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS q_emb
-           FROM embeddings WHERE vec_id < 10),
-         scored AS (
-           SELECT q.q_id, c.vec_id AS n_id,
-             list_cosine_similarity(q.q_emb,
-               list_transform(c.embedding, x -> CAST(x AS DOUBLE))) AS sim
-           FROM embeddings c CROSS JOIN q WHERE c.vec_id <> q.q_id)
-         SELECT q_id, CAST(rn AS INT) AS rank, n_id,
-           round(sim, 4) AS cos_sim
-         FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-           ORDER BY round(sim, 6) DESC, n_id ASC) AS rn FROM scored) x
-         WHERE rn <= 3""",
-    // conditioned on the engine's dumped IVF state: candidates =
-    // (probe ⋈ list on cid), then exact cosine + the engine's
-    // tie-break re-derive the top-3 independently. The first CTE
-    // doubles as a structural audit: a corpus vector assigned to 0 or
-    // 2+ lists would change candidate multiplicity and hash-mismatch.
-    "x_ann_ivf" ->
-      """WITH asg AS (
-           SELECT id AS n_id, cid
-           FROM parquet_scan('__OUTDIR__/x_ann_ivf_assign/*.parquet')
-           WHERE kind = 'list'),
-         probes AS (
-           SELECT id AS q_id, cid
-           FROM parquet_scan('__OUTDIR__/x_ann_ivf_assign/*.parquet')
-           WHERE kind = 'probe'),
-         q AS (SELECT vec_id AS q_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS q_emb
-           FROM embeddings WHERE vec_id < 10),
-         c AS (SELECT vec_id AS n_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS n_emb
-           FROM embeddings),
-         scored AS (
-           SELECT p.q_id, a.n_id,
-             list_cosine_similarity(q.q_emb, c.n_emb) AS sim
-           FROM probes p JOIN asg a USING (cid)
-             JOIN q ON q.q_id = p.q_id
-             JOIN c ON c.n_id = a.n_id
-           WHERE a.n_id <> p.q_id)
-         SELECT q_id, CAST(rn AS INT) AS rank, n_id,
-           round(sim, 4) AS cos_sim
-         FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-           ORDER BY round(sim, 6) DESC, n_id ASC) AS rn FROM scored) x
-         WHERE rn <= 3""",
-    "x_knn_label" ->
+         WHERE rn <= 3""")),
+    Gate("x_knn_label", xKnnLabel _, Some(
       """WITH q AS (SELECT vec_id AS q_id,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS q_emb
            FROM embeddings WHERE vec_id < 10),
@@ -2950,8 +2856,72 @@ object Similarity {
          SELECT q_id, label AS pred_label, votes
          FROM (SELECT *, row_number() OVER (PARTITION BY q_id
            ORDER BY votes DESC, label ASC) AS rn FROM votes) y
-         WHERE rn = 1""",
-    "x_centroid" ->
+         WHERE rn = 1""")),
+    Gate("x_mips", xMips _, Some(
+      """WITH q AS (SELECT vec_id AS q_id,
+           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS q_emb
+         FROM embeddings WHERE vec_id < 10),
+         scored AS (
+           SELECT q.q_id, c.vec_id AS n_id,
+             list_inner_product(q.q_emb,
+               list_transform(c.embedding, x -> CAST(x AS DOUBLE)))
+               AS ip
+           FROM embeddings c CROSS JOIN q WHERE c.vec_id <> q.q_id)
+         SELECT q_id, CAST(rn AS INT) AS rank, n_id,
+           round(ip, 4) AS inner_prod
+         FROM (SELECT *, row_number() OVER (PARTITION BY q_id
+           ORDER BY round(ip, 6) DESC, n_id ASC) AS rn FROM scored) x
+         WHERE rn <= 3""")),
+    Gate("x_mmr", xMmr _, Some(
+      """WITH q AS (SELECT vec_id AS q_id,
+           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+         FROM embeddings WHERE vec_id < 10),
+         c AS (SELECT vec_id AS n_id,
+           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+         FROM embeddings),
+         scored AS (
+           SELECT q.q_id, c.n_id,
+             list_cosine_similarity(q.e, c.e) AS sim
+           FROM c CROSS JOIN q WHERE c.n_id <> q.q_id),
+         sl AS (
+           SELECT q_id, n_id,
+             CAST(CAST(round(sim, 6) AS DECIMAL(18,6)) * 1000000
+               AS BIGINT) AS rel_micro
+           FROM (SELECT *, row_number() OVER (PARTITION BY q_id
+             ORDER BY round(sim, 6) DESC, n_id ASC) AS rn FROM scored) x
+           WHERE rn <= 8),
+         p AS (
+           SELECT a.q_id, a.n_id AS a, b.n_id AS b,
+             CAST(CAST(round(list_cosine_similarity(ca.e, cb.e), 6)
+               AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS sim_micro
+           FROM sl a JOIN sl b ON a.q_id = b.q_id AND a.n_id <> b.n_id
+           JOIN c ca ON ca.n_id = a.n_id
+           JOIN c cb ON cb.n_id = b.n_id),
+         dump AS (
+           SELECT q_id, rank, n_id
+           FROM parquet_scan('__OUTDIR__/x_mmr/*.parquet')),
+         prior AS (
+           SELECT r.q_id, r.rank,
+             coalesce(list(d.n_id) FILTER (WHERE d.n_id IS NOT NULL),
+               []) AS sel
+           FROM (SELECT DISTINCT q_id, rank FROM dump) r
+           LEFT JOIN dump d ON d.q_id = r.q_id AND d.rank < r.rank
+           GROUP BY r.q_id, r.rank),
+         cand AS (
+           SELECT pr.q_id, pr.rank, s.n_id,
+             7 * s.rel_micro - 3 * coalesce((
+               SELECT max(p.sim_micro) FROM p
+               WHERE p.q_id = pr.q_id AND p.a = s.n_id
+                 AND list_contains(pr.sel, p.b)), 0) AS score
+           FROM prior pr JOIN sl s
+             ON s.q_id = pr.q_id AND NOT list_contains(pr.sel, s.n_id))
+         SELECT q_id, CAST(rank AS INT) AS rank, n_id,
+           CAST(score AS BIGINT) AS mmr_score_e7
+         FROM (SELECT *, row_number() OVER (PARTITION BY q_id, rank
+           ORDER BY score DESC, n_id ASC) AS rk FROM cand) x
+         WHERE rk = 1""")),
+    Gate("x_mmr_ivf", xMmrIvf _, Some(mmrIvfReplaySql)),
+    Gate("x_centroid", xCentroid _, Some(
       """WITH ex AS (
            SELECT label, i, CAST(embedding[i] AS DOUBLE) AS v
            FROM embeddings, range(1, 65) t(i)),
@@ -2967,5 +2937,5 @@ object Similarity {
                AS avg_norm
            FROM embeddings GROUP BY label)
          SELECT n.label, n.n_vecs, n.avg_norm, c.centroid_norm
-         FROM norms n JOIN centroid c USING(label)""")
+         FROM norms n JOIN centroid c USING(label)""")))
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Gate
 import graft.Tables.t
 
 /** Structured Streaming surface (SURVEY §1.4). The reference has no
@@ -430,23 +431,16 @@ object Streams {
       }.toDF()
   }
 
-  /** Per-process scratch root for streaming-gate staging, sink, and
-    * checkpoint directories — created ONCE (first use; a bench run's
-    * cold pass pays it, warm passes don't), so each gate run does a
-    * cheap mkdir under an existing root instead of a fresh /tmp
-    * tempdir allocation PLUS Spark's own implicit `temporary-*`
-    * checkpoint creation inside the timed region. The r11 driver
-    * record's two extreme dispersion outliers (rel_spread 9–36 on
-    * sub-second streaming gates) were exactly that directory I/O
-    * catching a slow filesystem moment. */
-  private lazy val scratchRoot: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_st_scratch")
-  private val scratchRuns = new java.util.concurrent.atomic.AtomicLong(0)
-  private def scratch(tag: String): java.nio.file.Path = {
-    val p = scratchRoot.resolve(tag + "_" + scratchRuns.incrementAndGet())
-    java.nio.file.Files.createDirectories(p)
-    p
-  }
+  /** A fresh dir for one streaming-gate run's staging, sink and
+    * checkpoint, under the process's one `io.Scratch` root — a cheap
+    * mkdir under an existing root instead of a fresh /tmp tempdir
+    * allocation PLUS Spark's own implicit `temporary-*` checkpoint
+    * creation inside the timed region. The r11 bench record's two
+    * extreme dispersion outliers (rel_spread 9–36 on sub-second
+    * streaming gates) were exactly that directory I/O catching a slow
+    * filesystem moment. */
+  private def scratch(tag: String): java.nio.file.Path =
+    java.nio.file.Files.createDirectories(graft.io.Scratch.path(tag))
 
   /** Runs a streaming gate's query with the setup (staging + planning
     * up to `start()`) and drain (micro-batch execution) costs split to
@@ -708,20 +702,6 @@ object Streams {
       .select(col("fp"), col("keep_id"), col("n_copies"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st_warc_curate" -> stWarcCurate _,
-    "st_cdc_apply" -> stCdcApply _,
-    "st_heavy_hitters" -> stHeavyHitters _,
-    "st_zscore" -> stZscore _,
-    "st_window_agg" -> stWindowAgg _,
-    "st_sessionize" -> stSessionize _,
-    "st_sliding_window" -> stSlidingWindow _,
-    "st_session_window" -> stSessionWindow _,
-    "st_stream_join" -> stStreamJoin _,
-    "st_enrich" -> stEnrich _,
-    "st_dedup_docs" -> stDedupDocs _,
-    "st_curate_docs" -> stCurateDocs _)
-
   private def curateOracle: String = {
     import graft.text.TextOps
     s"""WITH scored AS (
@@ -770,12 +750,12 @@ object Streams {
      FROM wet GROUP BY 1"""
   }
 
-  val oracle: Map[String, String] = Map(
-    "st_warc_curate" -> warcCurateStreamOracle,
+  val gates: Seq[Gate] = Seq(
+    Gate("st_warc_curate", stWarcCurate _, Some(warcCurateStreamOracle)),
     // sequential per-batch MERGE ≡ global last-event-per-key: the
     // surviving row for a key is its top event by (batch desc, seq
     // desc), present iff that event is an upsert
-    "st_cdc_apply" ->
+    Gate("st_cdc_apply", stCdcApply _, Some(
       """WITH ev AS (
            SELECT o_custkey AS key, o_totalprice AS payload,
              CASE WHEN o_orderkey % 10 = 0 THEN 'D' ELSE 'U' END AS op,
@@ -786,17 +766,10 @@ object Streams {
            SELECT *, row_number() OVER (PARTITION BY key
              ORDER BY batch DESC, seq DESC) AS rn
            FROM ev)
-         SELECT key, payload, seq FROM r WHERE rn = 1 AND op = 'U'""",
-    // exact-mode MG (m ≫ vocab → no evictions): the stream's final
-    // single delivery ⇒ stream == batch bit-for-bit, so the batch
-    // operator's oracle verifies the streaming gate unchanged
-    "st_zscore" -> graft.ops.Windows.oracle("w9_rolling_zscore"),
-    // single delivery ⇒ final ledger snapshot == batch fingerprint
-    // dedup bit-for-bit; the batch gate's oracle verifies the stream
-    "st_dedup_docs" -> graft.dedup.Dedup.oracle("d_fingerprint_dedup"),
+         SELECT key, payload, seq FROM r WHERE rn = 1 AND op = 'U'""")),
     // per-language snapshot must equal the exact top-15 token counts,
     // tie-broken (count desc, token asc) like the emission sort
-    "st_heavy_hitters" ->
+    Gate("st_heavy_hitters", stHeavyHitters _, Some(
       """WITH tk AS (
            SELECT lang,
              unnest(string_split_regex(trim(lower(text)), '\s+'))
@@ -807,30 +780,18 @@ object Streams {
          SELECT lang, CAST(rank AS INT) AS rank, token, n_lb
          FROM (SELECT *, row_number() OVER (PARTITION BY lang
            ORDER BY n_lb DESC, token ASC) AS rank FROM c) x
-         WHERE rank <= 15""",
-    "st_curate_docs" -> curateOracle,
-    "st_stream_join" ->
-      """SELECT c.user_id, c.event_id AS click_id,
-         p.event_id AS purchase_id,
-         (epoch_us(p.ts) - epoch_us(c.ts)) // 1000000 AS gap_s,
-         round(p.value, 2) AS value
-         FROM events c JOIN events p
-           ON c.event_type = 'click' AND p.event_type = 'purchase'
-           AND c.user_id = p.user_id
-           AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR""",
-    "st_enrich" ->
-      """SELECT coalesce(c.c_mktsegment, 'UNKNOWN') AS segment,
-         count(*) AS n_events,
-         CAST(round(sum(CAST(e.value AS DECIMAL(18,6))), 2) AS DOUBLE)
-           AS total_value
-         FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-         GROUP BY 1""",
-    "st_window_agg" ->
+         WHERE rank <= 15""")),
+    // exact-mode MG (m ≫ vocab → no evictions): the stream's final
+    // single delivery ⇒ stream == batch bit-for-bit, so the batch
+    // operator's oracle verifies the streaming gate unchanged
+    Gate("st_zscore", stZscore _,
+      Gate.oracleOf(graft.ops.Windows.gates, "w9_rolling_zscore")),
+    Gate("st_window_agg", stWindowAgg _, Some(
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
            AS window_start,
          event_type, count(*) AS n, round(sum(value),2) AS total_value
-         FROM events GROUP BY 1, 2""",
-    "st_sessionize" ->
+         FROM events GROUP BY 1, 2""")),
+    Gate("st_sessionize", stSessionize _, Some(
       """WITH g AS (
            SELECT user_id, ts, event_id,
              epoch_us(ts) - epoch_us(lag(ts) OVER
@@ -848,8 +809,8 @@ object Streams {
                AS BIGINT) AS session_id
            FROM b)
          SELECT user_id, session_id, count(*) AS n_events
-         FROM s GROUP BY user_id, session_id""",
-    "st_sliding_window" ->
+         FROM s GROUP BY user_id, session_id""")),
+    Gate("st_sliding_window", stSlidingWindow _, Some(
       """WITH assigned AS (
            SELECT to_timestamp((epoch_us(ts) // 1800000000) * 1800)
              AS ws, event_type, value FROM events
@@ -858,8 +819,8 @@ object Streams {
              - INTERVAL '30 minutes', event_type, value FROM events)
          SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start,
            event_type, count(*) AS n, round(sum(value), 2) AS total_value
-         FROM assigned GROUP BY ws, event_type""",
-    "st_session_window" ->
+         FROM assigned GROUP BY ws, event_type""")),
+    Gate("st_session_window", stSessionWindow _, Some(
       """WITH g AS (
            SELECT user_id, ts, event_id,
              epoch_us(ts) - epoch_us(lag(ts) OVER
@@ -877,5 +838,26 @@ object Streams {
            FROM b)
          SELECT strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
            user_id, count(*) AS n_events
-         FROM s GROUP BY user_id, sid""")
+         FROM s GROUP BY user_id, sid""")),
+    Gate("st_stream_join", stStreamJoin _, Some(
+      """SELECT c.user_id, c.event_id AS click_id,
+         p.event_id AS purchase_id,
+         (epoch_us(p.ts) - epoch_us(c.ts)) // 1000000 AS gap_s,
+         round(p.value, 2) AS value
+         FROM events c JOIN events p
+           ON c.event_type = 'click' AND p.event_type = 'purchase'
+           AND c.user_id = p.user_id
+           AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR""")),
+    Gate("st_enrich", stEnrich _, Some(
+      """SELECT coalesce(c.c_mktsegment, 'UNKNOWN') AS segment,
+         count(*) AS n_events,
+         CAST(round(sum(CAST(e.value AS DECIMAL(18,6))), 2) AS DOUBLE)
+           AS total_value
+         FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
+         GROUP BY 1""")),
+    // single delivery ⇒ final ledger snapshot == batch fingerprint
+    // dedup bit-for-bit; the batch gate's oracle verifies the stream
+    Gate("st_dedup_docs", stDedupDocs _,
+      Gate.oracleOf(graft.dedup.Dedup.gates, "d_fingerprint_dedup")),
+    Gate("st_curate_docs", stCurateDocs _, Some(curateOracle)))
 }

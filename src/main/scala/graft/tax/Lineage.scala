@@ -2,6 +2,7 @@ package graft.tax
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** Taxonomy / hierarchy operators T1-T5 (SURVEY §2.8) — the
@@ -118,24 +119,18 @@ object Lineage {
       .select("rank", "parent", "child", "abund", "n_facts")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t1_lineage_split" -> t1Split _,
-    "t2_lca" -> t2Lca _,
-    "t3_subtree_rollup" -> t3Rollup _,
-    "t5_tree_edges" -> t5Edges _)
-
-  val oracle: Map[String, String] = Map(
-    "t1_lineage_split" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("t1_lineage_split", t1Split _, Some(
       """SELECT p_partkey,
          p_brand || ';' || p_type || ';sz' || CAST(p_size AS VARCHAR)
            AS lineage,
          p_brand AS l_brand, p_type AS l_type,
          'sz' || CAST(p_size AS VARCHAR) AS l_size
-         FROM part""",
+         FROM part""")),
     // Closed-form LCA for the fixed 3-level lineage: extend the prefix
     // while the level is constant within the group. (The Spark side uses
     // the general Aggregator; depth-3 makes the oracle expressible.)
-    "t2_lca" ->
+    Gate("t2_lca", t2Lca _, Some(
       """SELECT p_brand,
          CASE WHEN count(DISTINCT p_type) = 1 THEN
            CASE WHEN count(DISTINCT p_size) = 1 THEN
@@ -143,8 +138,8 @@ object Lineage {
                CAST(min(p_size) AS VARCHAR)
            ELSE min(p_brand) || ';' || min(p_type) END
          ELSE min(p_brand) END AS lca
-         FROM part GROUP BY p_brand""",
-    "t3_subtree_rollup" ->
+         FROM part GROUP BY p_brand""")),
+    Gate("t3_subtree_rollup", t3Rollup _, Some(
       """WITH facts AS (
            SELECT l_quantity, p_brand, p_type,
              p_brand || ';' || p_type || ';sz' || CAST(p_size AS VARCHAR)
@@ -160,8 +155,8 @@ object Lineage {
            round(sum(l_quantity), 2) AS abund_w_subtax,
            round(sum(CASE WHEN is_leaf = 1 THEN l_quantity ELSE 0 END), 2)
              AS abund_direct
-         FROM lvl GROUP BY node""",
-    "t5_tree_edges" ->
+         FROM lvl GROUP BY node""")),
+    Gate("t5_tree_edges", t5Edges _, Some(
       """WITH facts AS (
            SELECT l_quantity, p_brand, p_type,
              'sz' || CAST(p_size AS VARCHAR) AS p_sz
@@ -172,5 +167,5 @@ object Lineage {
          UNION ALL
          SELECT 'size', p_type, p_sz,
            round(sum(l_quantity),2), count(*)
-         FROM facts GROUP BY p_type, p_sz""")
+         FROM facts GROUP BY p_type, p_sz""")))
 }

@@ -2,6 +2,7 @@ package graft.tax
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** T4: lineage-based greedy set cover (reference
   * `AnnotateContigs.pl:541-554`): sort candidate lineages by
@@ -98,11 +99,8 @@ object SetCover {
       .toDF("ord", "lineage")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t4_set_cover" -> t4SetCover _)
-
-  val oracle: Map[String, String] = Map(
-    "t4_set_cover" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("t4_set_cover", t4SetCover _, Some(
       """WITH RECURSIVE agg AS (
            SELECT lineage,
              sum(CASE WHEN uniq THEN 1 ELSE 0 END) AS uniq,
@@ -138,5 +136,5 @@ object SetCover {
                THEN 1 ELSE 0 END
            FROM step s JOIN ranked r ON r.rn = s.rn + 1)
          SELECT CAST(ord AS INT) AS ord, accepted AS lineage
-         FROM step WHERE accepted IS NOT NULL""")
+         FROM step WHERE accepted IS NOT NULL""")))
 }

@@ -2,6 +2,7 @@ package graft.tax
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** The `tax_abund_from_contigs` pipeline (reference
   * `code/tax_abund_from_contigs.R:54-94`, §3 lifecycle): per-contig LCA
@@ -101,9 +102,6 @@ object TaxAbund {
      FROM e GROUP BY node"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g_tax_abund_contigs" -> gTaxAbund _)
-
-  val oracle: Map[String, String] = Map(
-    "g_tax_abund_contigs" -> taxAbundOracle)
+  val gates: Seq[Gate] = Seq(
+    Gate("g_tax_abund_contigs", gTaxAbund _, Some(taxAbundOracle)))
 }

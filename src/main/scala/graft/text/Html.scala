@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** HTML → text extraction over WARC `response` records — the
   * boilerplate-strip operator between "reads Common Crawl" and
@@ -370,12 +371,6 @@ object Html {
         (lit(1.0) - stopHits / nTok), 4).as("quality"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s_warc_html_extract" -> sWarcHtmlExtract _,
-    "s_warc_html_doc" -> sWarcHtmlDoc _,
-    "s_warc_html_curate" -> sWarcHtmlCurate _,
-    "s_warc_html_quality" -> sWarcHtmlQuality _)
-
   // ---- DuckDB oracles: the same regex chain, replayed ----
 
   /** SQL single-quoted literal. */
@@ -498,20 +493,20 @@ object Html {
     s"$framing,\n     $httpDispatchCtes,\n     $extractionCtesFromBody"
   }
 
-  val oracle: Map[String, String] = Map(
-    "s_warc_html_extract" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("s_warc_html_extract", sWarcHtmlExtract _, Some(
       s"""WITH $blocksCte
        SELECT record_id, url, block_idx, text, n_chars, anchor_chars
-       FROM blocks""",
-    "s_warc_html_doc" ->
+       FROM blocks""")),
+    Gate("s_warc_html_doc", sWarcHtmlDoc _, Some(
       s"""WITH $blocksCte
        SELECT record_id, url,
          string_agg(text, chr(10) ORDER BY block_idx) AS text,
          CAST(count(*) AS BIGINT) AS n_blocks,
          CAST(length(string_agg(text, chr(10) ORDER BY block_idx))
            AS BIGINT) AS n_chars
-       FROM blocks GROUP BY record_id, url""",
-    "s_warc_html_curate" ->
+       FROM blocks GROUP BY record_id, url""")),
+    Gate("s_warc_html_curate", sWarcHtmlCurate _, Some(
       s"""WITH $blocksCte,
        docs AS (
          SELECT record_id, url,
@@ -527,8 +522,8 @@ object Html {
                AS keep_id FROM hh)
        SELECT record_id, host, n_blocks,
          CAST(length(text) AS BIGINT) AS n_chars, fp
-       FROM k WHERE record_id = keep_id""",
-    "s_warc_html_quality" ->
+       FROM k WHERE record_id = keep_id""")),
+    Gate("s_warc_html_quality", sWarcHtmlQuality _, Some(
       s"""WITH $blocksCte,
        docs AS (
          SELECT record_id,
@@ -547,5 +542,5 @@ object Html {
            (1.0 - len(list_filter(tok, x -> x IN
              ('the','a','of','and','in','to','is'))) * 1.0 / len(tok)),
            4) AS quality
-       FROM toks""")
+       FROM toks""")))
 }

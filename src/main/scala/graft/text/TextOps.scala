@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.Tables.t
 
 /** Text-analysis operators for a large-scale training-data pipeline:
@@ -1427,42 +1428,6 @@ object TextOps {
   private def txVocabTopp(s: SparkSession, d: String): DataFrame =
     vocabTopP(t(s, d, "documents"), "lang", "text", 9, 10)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tx_dedup_passages" -> txDedupPassages _,
-    "tx_bpe_tokens" -> txBpeTokens _,
-    "tx_bpe_merge" -> txBpeMerge _,
-    "tx_bpe_learn" -> txBpeLearn _,
-    "tx_token_stats" -> txTokenStats _,
-    "tx_gopher_rules" -> txGopherRules _,
-    "tx_winnow" -> txWinnow _,
-    "tx_corpus_report" -> txCorpusReport _,
-    "tx_lang_confusion" -> txLangConfusion _,
-    "tx_quality" -> txQuality _,
-    "tx_langid" -> txLangid _,
-    "tx_fingerprint" -> txFingerprint _,
-    "tx_pack_bins" -> txPackBins _,
-    "tx_split_assign" -> txSplitAssign _,
-    "tx_corpus_curate" -> txCorpusCurate _,
-    "tx_stratified_sample" -> txStratifiedSample _,
-    "tx_repetition" -> txRepetition _,
-    "tx_token_budget_mix" -> txTokenBudgetMix _,
-    "tx_pps_sample" -> txPpsSample _,
-    "tx_temperature_mix" -> txTemperatureMix _,
-    "tx_pii_scrub" -> txPiiScrub _,
-    "tx_dup_ngram_frac" -> txDupNgramFrac _,
-    "tx_decontam" -> txDecontam _,
-    "tx_shard_shuffle" -> txShardShuffle _,
-    "tx_vocab_topk" -> txVocabTopk _,
-    "tx_cms_freq" -> txCmsFreq _,
-    "tx_heavy_hitters" -> txHeavyHitters _,
-    "tx_lm_score" -> txLmScore _,
-    "tx_ppl_buckets" -> txPplBuckets _,
-    "tx_chunk_split" -> txChunkSplit _,
-    "tx_bm25" -> txBm25 _,
-    "tx_url_normalize" -> txUrlNormalize _,
-    "tx_domain_cap" -> txDomainCap _,
-    "tx_vocab_topp" -> txVocabTopp _)
-
   /** DuckDB fragment rebuilding the synthUrl mess + the parse stages
     * of normalizeUrl (shared by the two URL oracles). Yields columns:
     * doc_id, n_chars, url, scheme, port, defport, host, params,
@@ -1640,53 +1605,8 @@ object TextOps {
        ORDER BY score DESC, doc_id LIMIT 15"""
   }
 
-  val oracle: Map[String, String] = Map(
-    "tx_url_normalize" ->
-      s"""WITH $urlOracleCte
-         SELECT doc_id, url,
-           scheme || '://' || host ||
-           CASE WHEN port <> '' AND port <> defport
-                THEN ':' || port ELSE '' END ||
-           path_norm ||
-           CASE WHEN len(params) > 0
-                THEN '?' || array_to_string(params, '&')
-                ELSE '' END AS url_norm,
-           host,
-           regexp_extract(host, '([^.]+\\.[^.]+)$$', 1) AS domain
-         FROM rr""",
-    "tx_domain_cap" ->
-      s"""WITH $urlOracleCte,
-         dom AS (
-           SELECT doc_id, n_chars,
-             regexp_extract(host, '([^.]+\\.[^.]+)$$', 1) AS domain
-           FROM rr),
-         rk AS (
-           SELECT doc_id, n_chars, domain,
-             CAST(row_number() OVER (PARTITION BY domain
-               ORDER BY n_chars DESC, doc_id ASC) AS INT) AS rnk
-           FROM dom)
-         SELECT * FROM rk WHERE rnk <= 25""",
-    "tx_vocab_topp" ->
-      """WITH toks AS (
-           SELECT lang,
-             unnest(string_split_regex(trim(text), '\s+')) AS token
-           FROM documents),
-         c AS (
-           SELECT lang, token, count(*) AS cnt
-           FROM toks WHERE token <> '' GROUP BY 1, 2),
-         w AS (
-           SELECT lang, token, cnt,
-             CAST(row_number() OVER (PARTITION BY lang
-               ORDER BY cnt DESC, token ASC) AS INT) AS rnk,
-             coalesce(sum(cnt) OVER (PARTITION BY lang
-               ORDER BY cnt DESC, token ASC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS cum_before,
-             sum(cnt) OVER (PARTITION BY lang) AS total
-           FROM c)
-         SELECT lang, token, cnt, rnk FROM w
-         WHERE cum_before * 10 < total * 9""",
-    "tx_dedup_passages" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("tx_dedup_passages", txDedupPassages _, Some(
       """WITH tk AS (
            SELECT doc_id,
              string_split_regex(trim(coalesce(text, '')), '\s+') AS tok
@@ -1720,157 +1640,21 @@ object TextOps {
            coalesce(r.clean_text, '') AS text,
            CAST(t.n_tiles AS INT) AS n_tiles,
            CAST(t.n_tiles - coalesce(r.n_kept, 0) AS INT) AS n_cut
-         FROM tot t LEFT JOIN reb r USING (doc_id)""",
-    "tx_bm25" -> bm25Oracle,
-    "tx_langid" -> langidOracle,
-    "tx_pii_scrub" -> piiOracle,
-    "tx_dup_ngram_frac" -> dupNgramOracle,
-    "tx_decontam" -> decontamOracle,
-    "tx_shard_shuffle" ->
-      """WITH h AS (
-           SELECT doc_id,
-             md5('shuffle:' || CAST(doc_id AS VARCHAR)) AS h
-           FROM documents),
-         s AS (
-           SELECT doc_id, h,
-             CAST(CAST(('0x' || substr(h, 1, 4)) AS INT) % 8 AS INT)
-               AS shard
-           FROM h)
-         SELECT doc_id, shard,
-           CAST(row_number() OVER (PARTITION BY shard
-             ORDER BY h ASC, doc_id ASC) AS INT) AS pos
-         FROM s""",
-    "tx_chunk_split" ->
-      """WITH tk AS (
-           SELECT doc_id,
-             string_split_regex(trim(text), '\s+') AS tok
-           FROM documents),
-         sized AS (
-           SELECT doc_id, tok, len(tok) AS n_tokens,
-             greatest(1, CAST(ceil((len(tok) - 64) * 1.0 / 48) AS INT)
-               + 1) AS n_chunks
-           FROM tk),
-         ex AS (
-           SELECT doc_id, tok, n_tokens,
-             CAST(unnest(range(0, n_chunks)) AS INT) AS chunk_id
-           FROM sized)
-         SELECT doc_id, chunk_id,
-           CAST(least(64, n_tokens - chunk_id * 48) AS INT)
-             AS chunk_tokens,
-           array_to_string(tok[chunk_id * 48 + 1 : chunk_id * 48 + 64],
-             ' ') AS chunk_text
-         FROM ex""",
-    "tx_lm_score" ->
-      """WITH tk AS (
-           SELECT doc_id,
-             string_split_regex(trim(lower(text)), '\s+') AS tok
-           FROM documents),
-         bg AS (
-           SELECT doc_id, tok[r.i] AS w1, tok[r.i + 1] AS w2
-           FROM tk, unnest(range(1, len(tok))) AS r(i)),
-         uni AS (
-           SELECT w1, count(*) AS c1
-           FROM (SELECT unnest(tok) AS w1 FROM tk) GROUP BY 1),
-         v AS (SELECT count(*) AS v FROM uni),
-         bcnt AS (
-           SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY 1, 2),
-         scored AS (
-           SELECT bg.doc_id,
-             CAST(round((bcnt.c2 + 1) * 1.0 / (uni.c1 + v.v), 6)
-               AS DECIMAL(18,6)) AS p
-           FROM bg JOIN bcnt USING (w1, w2) JOIN uni USING (w1)
-             CROSS JOIN v),
-         agg AS (
-           SELECT doc_id, sum(p) AS p_sum, count(*) AS n_bigrams
-           FROM scored GROUP BY 1)
-         SELECT d.doc_id, coalesce(a.n_bigrams, 0) AS n_bigrams,
-           round(CAST(a.p_sum AS DOUBLE) / a.n_bigrams, 6) AS lm_score
-         FROM documents d LEFT JOIN agg a USING (doc_id)""",
-    "tx_ppl_buckets" ->
-      """WITH tk AS (
-           SELECT doc_id,
-             string_split_regex(trim(lower(text)), '\s+') AS tok
-           FROM documents),
-         bg AS (
-           SELECT doc_id, tok[r.i] AS w1, tok[r.i + 1] AS w2
-           FROM tk, unnest(range(1, len(tok))) AS r(i)),
-         uni AS (
-           SELECT w1, count(*) AS c1
-           FROM (SELECT unnest(tok) AS w1 FROM tk) GROUP BY 1),
-         v AS (SELECT count(*) AS v FROM uni),
-         bcnt AS (
-           SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY 1, 2),
-         scored AS (
-           SELECT bg.doc_id,
-             CAST(round((bcnt.c2 + 1) * 1.0 / (uni.c1 + v.v), 6)
-               AS DECIMAL(18,6)) AS p
-           FROM bg JOIN bcnt USING (w1, w2) JOIN uni USING (w1)
-             CROSS JOIN v),
-         agg AS (
-           SELECT doc_id, sum(p) AS p_sum, count(*) AS n_bigrams
-           FROM scored GROUP BY 1),
-         sc AS (
-           SELECT d.doc_id, d.lang,
-             round(CAST(a.p_sum AS DOUBLE) / a.n_bigrams, 6) AS lm_score
-           FROM documents d LEFT JOIN agg a USING (doc_id)),
-         bk AS (
-           SELECT doc_id, lang, lm_score,
-             CAST(ntile(3) OVER (PARTITION BY lang
-               ORDER BY lm_score DESC NULLS LAST, doc_id ASC) AS INT)
-               AS bucket_id
-           FROM sc)
-         SELECT doc_id, lang, lm_score, bucket_id,
-           CASE WHEN bucket_id = 1 THEN 'head'
-                WHEN bucket_id = 3 THEN 'tail'
-                ELSE 'middle' END AS ppl_bucket
-         FROM bk""",
-    "tx_heavy_hitters" ->
-      """WITH tk AS (
-           SELECT lang,
-             unnest(string_split_regex(trim(lower(text)), '\s+'))
-               AS token
-           FROM documents),
-         c AS (SELECT lang, token, count(*) AS n
-           FROM tk GROUP BY lang, token)
-         SELECT lang, CAST(rank AS INT) AS rank, token, n
-         FROM (SELECT *, row_number() OVER (PARTITION BY lang
-           ORDER BY n DESC, token ASC) AS rank FROM c) x
-         WHERE rank <= 15""",
-    "tx_cms_freq" ->
-      """WITH tk AS (
-           SELECT unnest(string_split_regex(trim(lower(text)), '\s+'))
-             AS tok
-           FROM documents),
-         exact AS (
-           SELECT tok, count(*) AS ex FROM tk GROUP BY 1),
-         probes AS (
-           SELECT tok, ex FROM exact
-           ORDER BY ex DESC, tok ASC LIMIT 30),
-         n AS (SELECT count(*) AS total FROM tk),
-         dump AS (
-           SELECT token, est_freq
-           FROM parquet_scan('__OUTDIR__/tx_cms_freq/*.parquet'))
-         SELECT d.token, d.est_freq
-         FROM dump d JOIN probes p ON p.tok = d.token, n
-         WHERE d.est_freq >= p.ex
-           AND d.est_freq <= p.ex + greatest(50, 8.0 * n.total / 2048)""",
-    "tx_vocab_topk" ->
-      """WITH tk AS (
-           SELECT lang,
-             unnest(string_split_regex(trim(lower(text)), '\s+'))
-               AS token
-           FROM documents),
-         c AS (SELECT lang, token, count(*) AS n
-           FROM tk GROUP BY lang, token)
-         SELECT lang, CAST(rank AS INT) AS rank, token, n
-         FROM (SELECT *, row_number() OVER (PARTITION BY lang
-           ORDER BY n DESC, token ASC) AS rank FROM c) x
-         WHERE rank <= 20""",
+         FROM tot t LEFT JOIN reb r USING (doc_id)""")),
+    Gate("tx_bpe_tokens", txBpeTokens _, Some(
+      """SELECT doc_id,
+         CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS INT)
+           AS n_bpe_tokens,
+         CAST(len(string_split_regex(trim(text), '\s+')) AS INT)
+           AS n_ws_tokens,
+         CAST(len(regexp_extract_all(text, '[^\w\s]')) AS INT)
+           AS n_punct
+         FROM documents""")),
     // replays BpeEncode's exact recursion: per step, the candidate
     // pairs are ranked via the merges MAP, the (rank, leftmost) min
     // merges ONE occurrence, and a word is final when no adjacent pair
     // has a rank. Bounded: ≤ len(word)-1 steps per word.
-    "tx_bpe_merge" ->
+    Gate("tx_bpe_merge", txBpeMerge _, Some(
       s"""WITH RECURSIVE
          m(a, b, r) AS (FROM (VALUES $bpeMergesValues) t(a, b, r)),
          mm AS (SELECT map(list(a || ' ' || b), list(r)) AS mp FROM m),
@@ -1903,7 +1687,7 @@ object TextOps {
          WHERE len(list_filter(
              list_transform(range(1, len(toks)), i ->
                mp[toks[i] || ' ' || toks[i+1]][1]),
-             x -> x IS NOT NULL)) = 0""",
+             x -> x IS NOT NULL)) = 0""")),
     // CONDITIONED on the engine's own merges dump (the x_ann_ivf
     // pattern): for every learned step k, re-segment the distinct-word
     // vocabulary under merges ranked < k (the SAME BpeEncode recursion
@@ -1913,7 +1697,7 @@ object TextOps {
     // must BE that argmax — a trainer that miscounted, broke ties
     // differently, or whose learn path drifted from the apply path
     // hash-mismatches at the first wrong step.
-    "tx_bpe_learn" ->
+    Gate("tx_bpe_learn", txBpeLearn _, Some(
       """WITH RECURSIVE
          m AS (SELECT a, b, r
                FROM parquet_scan('__OUTDIR__/tx_bpe_learn/*.parquet')),
@@ -1969,33 +1753,66 @@ object TextOps {
                  row_number() OVER (PARTITION BY k
                    ORDER BY cnt DESC, a ASC, b ASC) AS rk
                FROM pairs) x
-         WHERE rk = 1""",
-    "tx_bpe_tokens" ->
-      """SELECT doc_id,
-         CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS INT)
-           AS n_bpe_tokens,
-         CAST(len(string_split_regex(trim(text), '\s+')) AS INT)
-           AS n_ws_tokens,
-         CAST(len(regexp_extract_all(text, '[^\w\s]')) AS INT)
-           AS n_punct
-         FROM documents""",
-    "tx_token_stats" ->
+         WHERE rk = 1""")),
+    Gate("tx_token_stats", txTokenStats _, Some(
       """SELECT doc_id,
          CAST(len(string_split_regex(trim(text), '\s+')) AS INT)
            AS n_tokens,
          CAST(len(list_distinct(string_split_regex(trim(text), '\s+')))
            AS INT) AS n_distinct_tokens,
          CAST(length(text) AS INT) AS n_chars
-         FROM documents""",
-    "tx_lang_confusion" -> s"""
-         WITH pred AS ($langidOracle)
-         SELECT d.lang AS lang_label, p.lang_pred,
-           count(*) AS n,
-           CAST(sum(CASE WHEN d.lang = p.lang_pred THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_correct
-         FROM documents d JOIN pred p USING (doc_id)
-         GROUP BY d.lang, p.lang_pred""",
-    "tx_corpus_report" ->
+         FROM documents""")),
+    Gate("tx_gopher_rules", txGopherRules _, Some(
+      """WITH d AS (
+           SELECT doc_id,
+             string_split_regex(trim(text), '\s+') AS tok,
+             length(regexp_replace(trim(text), '\s+', '', 'g')) AS chars
+           FROM documents),
+         m AS (
+           SELECT doc_id, len(tok) AS n, chars,
+             len(list_filter(tok,
+               t -> regexp_matches(t, '[A-Za-z]'))) AS alpha_w,
+             len(list_filter(tok, t -> t IN
+               ('the','a','of','and','in','to','is'))) AS stop_hits,
+             len(tok) - len(list_distinct(tok)) AS n_dup
+           FROM d)
+         SELECT doc_id, CAST(n AS INT) AS n_words,
+           CAST(n BETWEEN 50 AND 100000 AS INT) AS r_nwords,
+           CAST(chars BETWEEN 3 * n AND 10 * n AS INT) AS r_wordlen,
+           CAST(alpha_w * 5 >= n * 4 AS INT) AS r_alpha,
+           CAST(stop_hits >= 2 AS INT) AS r_stop,
+           CAST(n_dup * 2 <= n AS INT) AS r_dup,
+           CAST(n BETWEEN 50 AND 100000
+             AND chars BETWEEN 3 * n AND 10 * n
+             AND alpha_w * 5 >= n * 4
+             AND stop_hits >= 2
+             AND n_dup * 2 <= n AS INT) AS keep
+         FROM m""")),
+    Gate("tx_winnow", txWinnow _, Some(
+      """WITH d AS (
+           SELECT doc_id,
+             string_split_regex(trim(lower(text)), '\s+') AS tk
+           FROM documents),
+         g AS (
+           SELECT doc_id, CAST(r.p AS INT) AS p,
+             md5(array_to_string(tk[r.p : r.p + 2], ' ')) AS h
+           FROM d, unnest(range(1, len(tk) - 1)) AS r(p)
+           WHERE len(tk) >= 3),
+         sel AS (
+           SELECT doc_id, p,
+             min(h || '|' ||
+               lpad(CAST(10000000 - p AS VARCHAR), 8, '0')) OVER (
+               PARTITION BY doc_id ORDER BY p
+               ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS s
+           FROM g),
+         fp AS (
+           SELECT DISTINCT doc_id, s FROM sel WHERE p >= 4)
+         SELECT doc_id,
+           CAST(10000000 - CAST(substr(s, 34, 8) AS INT) AS INT)
+             AS fp_pos,
+           substr(s, 1, 32) AS fp_hash
+         FROM fp""")),
+    Gate("tx_corpus_report", txCorpusReport _, Some(
       """WITH d AS (
            SELECT lang, source, text,
              string_split_regex(trim(text), '\s+') AS tok,
@@ -2036,58 +1853,17 @@ object TextOps {
            CAST(sum(keep) AS BIGINT) AS n_keep,
            CAST(sum(is_dup) AS BIGINT) AS n_exact_dup,
            CAST(sum(q) AS DOUBLE) AS sum_quality
-         FROM r GROUP BY lang, source""",
-    "tx_winnow" ->
-      """WITH d AS (
-           SELECT doc_id,
-             string_split_regex(trim(lower(text)), '\s+') AS tk
-           FROM documents),
-         g AS (
-           SELECT doc_id, CAST(r.p AS INT) AS p,
-             md5(array_to_string(tk[r.p : r.p + 2], ' ')) AS h
-           FROM d, unnest(range(1, len(tk) - 1)) AS r(p)
-           WHERE len(tk) >= 3),
-         sel AS (
-           SELECT doc_id, p,
-             min(h || '|' ||
-               lpad(CAST(10000000 - p AS VARCHAR), 8, '0')) OVER (
-               PARTITION BY doc_id ORDER BY p
-               ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS s
-           FROM g),
-         fp AS (
-           SELECT DISTINCT doc_id, s FROM sel WHERE p >= 4)
-         SELECT doc_id,
-           CAST(10000000 - CAST(substr(s, 34, 8) AS INT) AS INT)
-             AS fp_pos,
-           substr(s, 1, 32) AS fp_hash
-         FROM fp""",
-    "tx_gopher_rules" ->
-      """WITH d AS (
-           SELECT doc_id,
-             string_split_regex(trim(text), '\s+') AS tok,
-             length(regexp_replace(trim(text), '\s+', '', 'g')) AS chars
-           FROM documents),
-         m AS (
-           SELECT doc_id, len(tok) AS n, chars,
-             len(list_filter(tok,
-               t -> regexp_matches(t, '[A-Za-z]'))) AS alpha_w,
-             len(list_filter(tok, t -> t IN
-               ('the','a','of','and','in','to','is'))) AS stop_hits,
-             len(tok) - len(list_distinct(tok)) AS n_dup
-           FROM d)
-         SELECT doc_id, CAST(n AS INT) AS n_words,
-           CAST(n BETWEEN 50 AND 100000 AS INT) AS r_nwords,
-           CAST(chars BETWEEN 3 * n AND 10 * n AS INT) AS r_wordlen,
-           CAST(alpha_w * 5 >= n * 4 AS INT) AS r_alpha,
-           CAST(stop_hits >= 2 AS INT) AS r_stop,
-           CAST(n_dup * 2 <= n AS INT) AS r_dup,
-           CAST(n BETWEEN 50 AND 100000
-             AND chars BETWEEN 3 * n AND 10 * n
-             AND alpha_w * 5 >= n * 4
-             AND stop_hits >= 2
-             AND n_dup * 2 <= n AS INT) AS keep
-         FROM m""",
-    "tx_quality" ->
+         FROM r GROUP BY lang, source""")),
+    Gate("tx_lang_confusion", txLangConfusion _, Some(
+      s"""
+         WITH pred AS ($langidOracle)
+         SELECT d.lang AS lang_label, p.lang_pred,
+           count(*) AS n,
+           CAST(sum(CASE WHEN d.lang = p.lang_pred THEN 1 ELSE 0 END)
+             AS BIGINT) AS n_correct
+         FROM documents d JOIN pred p USING (doc_id)
+         GROUP BY d.lang, p.lang_pred""")),
+    Gate("tx_quality", txQuality _, Some(
       """WITH toks AS (
            SELECT doc_id, text,
              string_split_regex(trim(text), '\s+') AS tok
@@ -2103,14 +1879,15 @@ object TextOps {
              (1.0 - len(list_filter(tok, x -> x IN
                ('the','a','of','and','in','to','is'))) * 1.0 / len(tok)),
              4) AS quality
-         FROM toks""",
-    "tx_fingerprint" ->
+         FROM toks""")),
+    Gate("tx_langid", txLangid _, Some(langidOracle)),
+    Gate("tx_fingerprint", txFingerprint _, Some(
       """SELECT doc_id,
          md5(trim(regexp_replace(
            regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g'),
            '\s+', ' ', 'g'))) AS fp
-         FROM documents""",
-    "tx_pack_bins" ->
+         FROM documents""")),
+    Gate("tx_pack_bins", txPackBins _, Some(
       """WITH tk AS (
            SELECT lang, doc_id,
              CAST(len(string_split_regex(trim(text), '\s+')) AS INT)
@@ -2125,16 +1902,16 @@ object TextOps {
            count(*) AS n_docs,
            CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
            min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         FROM off GROUP BY lang, bin""",
-    "tx_split_assign" ->
+         FROM off GROUP BY lang, bin""")),
+    Gate("tx_split_assign", txSplitAssign _, Some(
       """SELECT doc_id, lang,
          CASE WHEN substr(md5('graft-split:' ||
              CAST(doc_id AS VARCHAR)), 1, 2) < '0d' THEN 'test'
            WHEN substr(md5('graft-split:' ||
              CAST(doc_id AS VARCHAR)), 1, 2) < '1a' THEN 'val'
            ELSE 'train' END AS split
-         FROM documents""",
-    "tx_corpus_curate" ->
+         FROM documents""")),
+    Gate("tx_corpus_curate", txCorpusCurate _, Some(
       s"""WITH lid AS ($langidOracle),
        canon AS (
          SELECT doc_id, text,
@@ -2158,16 +1935,16 @@ object TextOps {
              CAST(s.doc_id AS VARCHAR)), 1, 2) < '1a' THEN 'val'
            ELSE 'train' END AS split
        FROM scored s JOIN lid ON s.doc_id = lid.doc_id
-       WHERE s.quality >= 0.5""",
-    "tx_stratified_sample" ->
+       WHERE s.quality >= 0.5""")),
+    Gate("tx_stratified_sample", txStratifiedSample _, Some(
       """SELECT lang, doc_id, CAST(rn AS INT) AS rn
          FROM (SELECT lang, doc_id, row_number() OVER (
              PARTITION BY lang
              ORDER BY md5('strat:' || CAST(doc_id AS VARCHAR)) ASC,
                doc_id ASC) AS rn
            FROM documents) x
-         WHERE rn <= 20""",
-    "tx_repetition" ->
+         WHERE rn <= 20""")),
+    Gate("tx_repetition", txRepetition _, Some(
       """WITH tk AS (
            SELECT doc_id, string_split_regex(trim(text), '\s+') AS tok
            FROM documents),
@@ -2183,8 +1960,27 @@ object TextOps {
            round(1.0 - len(list_distinct(tok)) * 1.0 / len(tok), 4)
              AS dup_word_frac,
            round(top.top_c * 1.0 / top.n_bi, 4) AS top_bigram_frac
-         FROM tk LEFT JOIN top ON tk.doc_id = top.doc_id""",
-    "tx_pps_sample" ->
+         FROM tk LEFT JOIN top ON tk.doc_id = top.doc_id""")),
+    Gate("tx_token_budget_mix", txTokenBudgetMix _, Some(
+      """WITH tk AS (
+           SELECT source, doc_id,
+             CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
+               AS n_tokens
+           FROM documents),
+         off AS (
+           SELECT *, CAST(coalesce(sum(n_tokens) OVER (
+             PARTITION BY source
+             ORDER BY md5('mix:' || CAST(doc_id AS VARCHAR)) ASC,
+               doc_id ASC
+             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+             AS BIGINT) AS cum_before
+           FROM tk)
+         SELECT source, doc_id, n_tokens, cum_before
+         FROM off
+         WHERE cum_before <
+           (CAST(regexp_extract(source, '(\d+)$', 1) AS INT) % 3 + 1)
+             * 400""")),
+    Gate("tx_pps_sample", txPpsSample _, Some(
       """WITH tk AS (
            SELECT lang, doc_id,
              CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
@@ -2206,27 +2002,8 @@ object TextOps {
              - ((cum - n_tokens) * 25) // total AS INT) AS n_hits
          FROM c
          WHERE (cum * 25) // total
-             - ((cum - n_tokens) * 25) // total >= 1""",
-    "tx_token_budget_mix" ->
-      """WITH tk AS (
-           SELECT source, doc_id,
-             CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
-               AS n_tokens
-           FROM documents),
-         off AS (
-           SELECT *, CAST(coalesce(sum(n_tokens) OVER (
-             PARTITION BY source
-             ORDER BY md5('mix:' || CAST(doc_id AS VARCHAR)) ASC,
-               doc_id ASC
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             AS BIGINT) AS cum_before
-           FROM tk)
-         SELECT source, doc_id, n_tokens, cum_before
-         FROM off
-         WHERE cum_before <
-           (CAST(regexp_extract(source, '(\d+)$', 1) AS INT) % 3 + 1)
-             * 400""",
-    "tx_temperature_mix" ->
+             - ((cum - n_tokens) * 25) // total >= 1""")),
+    Gate("tx_temperature_mix", txTemperatureMix _, Some(
       """WITH tk AS (
            SELECT lang, doc_id,
              CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
@@ -2252,5 +2029,194 @@ object TextOps {
            FROM tk)
          SELECT o.lang, o.doc_id, o.n_tokens, o.cum_before, b.budget
          FROM off o JOIN bud b USING (lang)
-         WHERE o.cum_before < b.budget""")
+         WHERE o.cum_before < b.budget""")),
+    Gate("tx_pii_scrub", txPiiScrub _, Some(piiOracle)),
+    Gate("tx_dup_ngram_frac", txDupNgramFrac _, Some(dupNgramOracle)),
+    Gate("tx_decontam", txDecontam _, Some(decontamOracle)),
+    Gate("tx_shard_shuffle", txShardShuffle _, Some(
+      """WITH h AS (
+           SELECT doc_id,
+             md5('shuffle:' || CAST(doc_id AS VARCHAR)) AS h
+           FROM documents),
+         s AS (
+           SELECT doc_id, h,
+             CAST(CAST(('0x' || substr(h, 1, 4)) AS INT) % 8 AS INT)
+               AS shard
+           FROM h)
+         SELECT doc_id, shard,
+           CAST(row_number() OVER (PARTITION BY shard
+             ORDER BY h ASC, doc_id ASC) AS INT) AS pos
+         FROM s""")),
+    Gate("tx_vocab_topk", txVocabTopk _, Some(
+      """WITH tk AS (
+           SELECT lang,
+             unnest(string_split_regex(trim(lower(text)), '\s+'))
+               AS token
+           FROM documents),
+         c AS (SELECT lang, token, count(*) AS n
+           FROM tk GROUP BY lang, token)
+         SELECT lang, CAST(rank AS INT) AS rank, token, n
+         FROM (SELECT *, row_number() OVER (PARTITION BY lang
+           ORDER BY n DESC, token ASC) AS rank FROM c) x
+         WHERE rank <= 20""")),
+    Gate("tx_cms_freq", txCmsFreq _, Some(
+      """WITH tk AS (
+           SELECT unnest(string_split_regex(trim(lower(text)), '\s+'))
+             AS tok
+           FROM documents),
+         exact AS (
+           SELECT tok, count(*) AS ex FROM tk GROUP BY 1),
+         probes AS (
+           SELECT tok, ex FROM exact
+           ORDER BY ex DESC, tok ASC LIMIT 30),
+         n AS (SELECT count(*) AS total FROM tk),
+         dump AS (
+           SELECT token, est_freq
+           FROM parquet_scan('__OUTDIR__/tx_cms_freq/*.parquet'))
+         SELECT d.token, d.est_freq
+         FROM dump d JOIN probes p ON p.tok = d.token, n
+         WHERE d.est_freq >= p.ex
+           AND d.est_freq <= p.ex + greatest(50, 8.0 * n.total / 2048)""")),
+    Gate("tx_heavy_hitters", txHeavyHitters _, Some(
+      """WITH tk AS (
+           SELECT lang,
+             unnest(string_split_regex(trim(lower(text)), '\s+'))
+               AS token
+           FROM documents),
+         c AS (SELECT lang, token, count(*) AS n
+           FROM tk GROUP BY lang, token)
+         SELECT lang, CAST(rank AS INT) AS rank, token, n
+         FROM (SELECT *, row_number() OVER (PARTITION BY lang
+           ORDER BY n DESC, token ASC) AS rank FROM c) x
+         WHERE rank <= 15""")),
+    Gate("tx_lm_score", txLmScore _, Some(
+      """WITH tk AS (
+           SELECT doc_id,
+             string_split_regex(trim(lower(text)), '\s+') AS tok
+           FROM documents),
+         bg AS (
+           SELECT doc_id, tok[r.i] AS w1, tok[r.i + 1] AS w2
+           FROM tk, unnest(range(1, len(tok))) AS r(i)),
+         uni AS (
+           SELECT w1, count(*) AS c1
+           FROM (SELECT unnest(tok) AS w1 FROM tk) GROUP BY 1),
+         v AS (SELECT count(*) AS v FROM uni),
+         bcnt AS (
+           SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY 1, 2),
+         scored AS (
+           SELECT bg.doc_id,
+             CAST(round((bcnt.c2 + 1) * 1.0 / (uni.c1 + v.v), 6)
+               AS DECIMAL(18,6)) AS p
+           FROM bg JOIN bcnt USING (w1, w2) JOIN uni USING (w1)
+             CROSS JOIN v),
+         agg AS (
+           SELECT doc_id, sum(p) AS p_sum, count(*) AS n_bigrams
+           FROM scored GROUP BY 1)
+         SELECT d.doc_id, coalesce(a.n_bigrams, 0) AS n_bigrams,
+           round(CAST(a.p_sum AS DOUBLE) / a.n_bigrams, 6) AS lm_score
+         FROM documents d LEFT JOIN agg a USING (doc_id)""")),
+    Gate("tx_ppl_buckets", txPplBuckets _, Some(
+      """WITH tk AS (
+           SELECT doc_id,
+             string_split_regex(trim(lower(text)), '\s+') AS tok
+           FROM documents),
+         bg AS (
+           SELECT doc_id, tok[r.i] AS w1, tok[r.i + 1] AS w2
+           FROM tk, unnest(range(1, len(tok))) AS r(i)),
+         uni AS (
+           SELECT w1, count(*) AS c1
+           FROM (SELECT unnest(tok) AS w1 FROM tk) GROUP BY 1),
+         v AS (SELECT count(*) AS v FROM uni),
+         bcnt AS (
+           SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY 1, 2),
+         scored AS (
+           SELECT bg.doc_id,
+             CAST(round((bcnt.c2 + 1) * 1.0 / (uni.c1 + v.v), 6)
+               AS DECIMAL(18,6)) AS p
+           FROM bg JOIN bcnt USING (w1, w2) JOIN uni USING (w1)
+             CROSS JOIN v),
+         agg AS (
+           SELECT doc_id, sum(p) AS p_sum, count(*) AS n_bigrams
+           FROM scored GROUP BY 1),
+         sc AS (
+           SELECT d.doc_id, d.lang,
+             round(CAST(a.p_sum AS DOUBLE) / a.n_bigrams, 6) AS lm_score
+           FROM documents d LEFT JOIN agg a USING (doc_id)),
+         bk AS (
+           SELECT doc_id, lang, lm_score,
+             CAST(ntile(3) OVER (PARTITION BY lang
+               ORDER BY lm_score DESC NULLS LAST, doc_id ASC) AS INT)
+               AS bucket_id
+           FROM sc)
+         SELECT doc_id, lang, lm_score, bucket_id,
+           CASE WHEN bucket_id = 1 THEN 'head'
+                WHEN bucket_id = 3 THEN 'tail'
+                ELSE 'middle' END AS ppl_bucket
+         FROM bk""")),
+    Gate("tx_chunk_split", txChunkSplit _, Some(
+      """WITH tk AS (
+           SELECT doc_id,
+             string_split_regex(trim(text), '\s+') AS tok
+           FROM documents),
+         sized AS (
+           SELECT doc_id, tok, len(tok) AS n_tokens,
+             greatest(1, CAST(ceil((len(tok) - 64) * 1.0 / 48) AS INT)
+               + 1) AS n_chunks
+           FROM tk),
+         ex AS (
+           SELECT doc_id, tok, n_tokens,
+             CAST(unnest(range(0, n_chunks)) AS INT) AS chunk_id
+           FROM sized)
+         SELECT doc_id, chunk_id,
+           CAST(least(64, n_tokens - chunk_id * 48) AS INT)
+             AS chunk_tokens,
+           array_to_string(tok[chunk_id * 48 + 1 : chunk_id * 48 + 64],
+             ' ') AS chunk_text
+         FROM ex""")),
+    Gate("tx_bm25", txBm25 _, Some(bm25Oracle)),
+    Gate("tx_url_normalize", txUrlNormalize _, Some(
+      s"""WITH $urlOracleCte
+         SELECT doc_id, url,
+           scheme || '://' || host ||
+           CASE WHEN port <> '' AND port <> defport
+                THEN ':' || port ELSE '' END ||
+           path_norm ||
+           CASE WHEN len(params) > 0
+                THEN '?' || array_to_string(params, '&')
+                ELSE '' END AS url_norm,
+           host,
+           regexp_extract(host, '([^.]+\\.[^.]+)$$', 1) AS domain
+         FROM rr""")),
+    Gate("tx_domain_cap", txDomainCap _, Some(
+      s"""WITH $urlOracleCte,
+         dom AS (
+           SELECT doc_id, n_chars,
+             regexp_extract(host, '([^.]+\\.[^.]+)$$', 1) AS domain
+           FROM rr),
+         rk AS (
+           SELECT doc_id, n_chars, domain,
+             CAST(row_number() OVER (PARTITION BY domain
+               ORDER BY n_chars DESC, doc_id ASC) AS INT) AS rnk
+           FROM dom)
+         SELECT * FROM rk WHERE rnk <= 25""")),
+    Gate("tx_vocab_topp", txVocabTopp _, Some(
+      """WITH toks AS (
+           SELECT lang,
+             unnest(string_split_regex(trim(text), '\s+')) AS token
+           FROM documents),
+         c AS (
+           SELECT lang, token, count(*) AS cnt
+           FROM toks WHERE token <> '' GROUP BY 1, 2),
+         w AS (
+           SELECT lang, token, cnt,
+             CAST(row_number() OVER (PARTITION BY lang
+               ORDER BY cnt DESC, token ASC) AS INT) AS rnk,
+             coalesce(sum(cnt) OVER (PARTITION BY lang
+               ORDER BY cnt DESC, token ASC
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+               AS cum_before,
+             sum(cnt) OVER (PARTITION BY lang) AS total
+           FROM c)
+         SELECT lang, token, cnt, rnk FROM w
+         WHERE cum_before * 10 < total * 9""")))
 }

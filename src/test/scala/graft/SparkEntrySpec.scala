@@ -2,34 +2,41 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Driver-contract guards: the gate registry is assembled by merging
-  * per-module maps, where a duplicate key would SILENTLY shadow a
-  * query and shrink coverage — asserted against the sum of module
-  * sizes. Also pins the oracle-key and naming invariants the driver
-  * relies on, and the entry() smoke check itself. */
+/** Contract guards: `queries` and `oracleSql` are views of one gate
+  * registry, where a duplicate name would SILENTLY shadow a gate and
+  * shrink coverage. Pins the key set and every oracle SQL string to
+  * frozen hashes, the naming invariants the callers rely on, and the
+  * entry() smoke check itself. */
 class SparkEntrySpec extends AnyFunSuite {
 
-  // Derived from the SAME sequence SparkEntry.queries folds over, so a
-  // new module can't reach the driver without being covered here (the
-  // r12 failure mode: a hand-maintained list went stale).
-  private val declaredSum = SparkEntry.queryModules.map(_.size).sum
+  private def sha256(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  test("no query-key collisions across modules") {
-    assert(SparkEntry.queries.size == declaredSum,
-      s"merged map has ${SparkEntry.queries.size} keys but modules " +
-        s"declare $declaredSum — a duplicate name is shadowing " +
-        "a query")
+  test("gate names are distinct across the registry") {
+    val dups = SparkEntry.gates.groupBy(_.name).collect {
+      case (name, gs) if gs.size > 1 => name
+    }
+    assert(dups.isEmpty, s"duplicate gate names shadow a gate: $dups")
   }
 
-  test("no oracle-key collisions across modules") {
-    assert(SparkEntry.oracleSql.size ==
-      SparkEntry.oracleModules.map(_.size).sum,
-      "a duplicate oracle key is shadowing an oracle")
+  test("gate key set and oracle SQL are byte-identical to the " +
+    "frozen contract") {
+    // frozen when the per-module query/oracle maps became the gate
+    // registry: any edit to a key or to one byte of oracle SQL moves
+    // a hash — update them only with a deliberate contract change
+    val keys = SparkEntry.queries.keys.toSeq.sorted
+    assert(keys.size == 269)
+    assert(sha256(keys.mkString("\n")) ==
+      "f67d2fc09cca5a26f5d228e375e78de84e1ffb534e13b5923fd9f81ebd1ce616")
+    val oracles = SparkEntry.oracleSql.toSeq.sortBy(_._1)
+    assert(oracles.size == 266)
+    assert(sha256(oracles.map { case (k, sql) => k + "\u0000" + sql }
+        .mkString("\u0001")) ==
+      "b4937689dde56b79a81c0d43f5d1f45868d003c45bad460ab9a36f6258b09edd")
   }
 
-  test("every oracle key has a query; names are path/JSON-safe") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle without query: $orphans")
+  test("gate names are path/JSON-safe") {
     val badNames = SparkEntry.queries.keys
       .filterNot(_.matches("^[a-z0-9_]+$"))
     assert(badNames.isEmpty, s"unsafe query names: $badNames")

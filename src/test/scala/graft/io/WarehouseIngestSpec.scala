@@ -2,7 +2,7 @@ package graft.io
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.TestSpark
+import graft.{SparkEntry, TestSpark}
 
 /** Warehouse ingest loaders for the remaining §1.2 tables (reference
   * `postgres.Rmd:889-977,1264-1360,2279-2468`) — goldens hand-checked
@@ -83,7 +83,7 @@ class WarehouseIngestSpec extends AnyFunSuite {
   }
 
   test("gtdb classify: 7-rank split keeps classification, strips d__") {
-    val out = WarehouseIngest.queries("s_gtdb")(spark, "")
+    val out = SparkEntry.queries("s_gtdb")(spark, "")
       .collect().map(r => r.getAs[String]("bin") -> r).toMap
     val b1 = out("bin_1")
     assert(b1.getAs[String]("domain") == "Bacteria")
@@ -96,7 +96,7 @@ class WarehouseIngestSpec extends AnyFunSuite {
   }
 
   test("checkm: spaced/#-prefixed headers renamed, counts typed") {
-    val out = WarehouseIngest.queries("s_checkm")(spark, "")
+    val out = SparkEntry.queries("s_checkm")(spark, "")
       .collect().map(r => r.getAs[String]("bin") -> r).toMap
     assert(out("bin_1").getAs[Int]("n_genomes") == 5449)
     assert(out("bin_1").getAs[Int]("n5_plus") == 0)
@@ -106,7 +106,7 @@ class WarehouseIngestSpec extends AnyFunSuite {
   }
 
   test("drep: score join, file-existence rep flag, extension strip") {
-    val out = WarehouseIngest.queries("s_drep")(spark, "")
+    val out = SparkEntry.queries("s_drep")(spark, "")
       .collect().map(r => r.getAs[String]("bin") -> r).toMap
     assert(out("bin_1").getAs[Boolean]("is_cluster_rep"))
     assert(!out("bin_2").getAs[Boolean]("is_cluster_rep"))
@@ -115,7 +115,7 @@ class WarehouseIngestSpec extends AnyFunSuite {
   }
 
   test("benchmarks: sample/rule from path, dash fixed, miss is null") {
-    val rows = WarehouseIngest.queries("s_benchmarks")(spark, "")
+    val rows = SparkEntry.queries("s_benchmarks")(spark, "")
       .collect()
     val bySample = rows.map(r =>
       Option(r.getAs[String]("sample")).getOrElse("NONE") -> r).toMap

@@ -3,7 +3,7 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.TestSpark
+import graft.{SparkEntry, TestSpark}
 
 /** Bounded top-k aggregator: equivalence with the window form
   * (the scale-path ≡ naive discipline), tie determinism, buffer
@@ -84,9 +84,9 @@ class TopKSpec extends AnyFunSuite {
   test("SQL-surface udaf hash-matches the typed aggregator: " +
     "top_k3 over orders == topKPerGroup over orders") {
     val d = graft.TestSpark.sf0001
-    val typed = graft.ops.Windows.queries("w12_topk_agg")(spark, d)
+    val typed = SparkEntry.queries("w12_topk_agg")(spark, d)
       .collect().map(_.toSeq).toSet
-    val viaSql = graft.ops.Windows.queries("w13_topk_sql")(spark, d)
+    val viaSql = SparkEntry.queries("w13_topk_sql")(spark, d)
       .collect().map(_.toSeq).toSet
     assert(viaSql == typed)
   }

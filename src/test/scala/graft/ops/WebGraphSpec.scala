@@ -54,6 +54,16 @@ class WebGraphSpec extends AnyFunSuite {
     assert(r1.toSeq == Seq(60L, 60L + 17 * 10, 60L + 17 * (10 + 20)))
   }
 
+  test("an edge endpoint outside the node set fails loudly") {
+    // 1->9: node 9 is not in the node set, so the edges are not closed
+    val nodes = Seq(0, 1, 2).toDF("node")
+    val edges = Seq((0, 1, 10L), (0, 2, 10L), (1, 9, 20L))
+      .toDF("src", "dst", "m")
+    val e = intercept[IllegalArgumentException](
+      WebGraph.pagerankExact(nodes, edges, iters = 1))
+    assert(e.getMessage.contains("not in the node set"))
+  }
+
   test("degraded corpus (missing residues) still runs; teleport floor") {
     val docs = Seq(0L, 1L, 2L, 5L).map(i => (i, "t")).toDF("doc_id", "text")
     val nodes = WebGraph.domainNodes(docs)

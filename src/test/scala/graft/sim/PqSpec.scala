@@ -2,7 +2,7 @@ package graft.sim
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.TestSpark
+import graft.{SparkEntry, TestSpark}
 import graft.Tables.t
 
 /** Product quantization: encode optimality, reconstruction-error
@@ -178,7 +178,7 @@ class PqSpec extends AnyFunSuite {
     val d = TestSpark.sf0001
     val corpus = t(spark, d, "embeddings")
     val delta = corpus.filter(col("vec_id") >= 400)
-    val index = Similarity.queries("x_pq_index")(spark, d)
+    val index = SparkEntry.queries("x_pq_index")(spark, d)
     val deltaCodes = Similarity.pqEncodeWithIndex(delta, index)
       .select(col("n_id"), col("sub"), col("code"))
       .collect().map(_.toSeq).toSet
@@ -188,7 +188,7 @@ class PqSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     assert(deltaCodes.nonEmpty && deltaCodes == fullCodes,
       "incremental PQ encode drifted from the fit-time codes")
-    val assign = Similarity.queries("x_ann_ivf_assign")(spark, d)
+    val assign = SparkEntry.queries("x_ann_ivf_assign")(spark, d)
     val deltaLists = Similarity.ivfAssignWithIndex(delta, assign)
       .collect().map(_.toSeq).toSet
     val fullLists = assign
@@ -205,19 +205,19 @@ class PqSpec extends AnyFunSuite {
     val queries = corpus.filter(col("vec_id") < 10)
     // warm the staged index (fits once), snapshot, then drive every
     // staged gate twice — no further fits may happen
-    val staged1 = Similarity.queries("x_pq_topk")(spark, d)
+    val staged1 = SparkEntry.queries("x_pq_topk")(spark, d)
       .collect().map(_.toSeq).toSet
     val pqBefore = Similarity.pqFitRuns.get()
     val coarseBefore = {
       // x_pq_ivf triggers the coarse staging on first touch
-      Similarity.queries("x_pq_ivf")(spark, d).collect()
+      SparkEntry.queries("x_pq_ivf")(spark, d).collect()
       Similarity.coarseFitRuns.get()
     }
-    val staged2 = Similarity.queries("x_pq_topk")(spark, d)
+    val staged2 = SparkEntry.queries("x_pq_topk")(spark, d)
       .collect().map(_.toSeq).toSet
-    val stagedFull = Similarity.queries("x_pq_ivf_full")(spark, d)
+    val stagedFull = SparkEntry.queries("x_pq_ivf_full")(spark, d)
       .collect().map(_.toSeq).toSet
-    Similarity.queries("x_pq_ivf")(spark, d).collect()
+    SparkEntry.queries("x_pq_ivf")(spark, d).collect()
     assert(Similarity.pqFitRuns.get() == pqBefore,
       "a staged PQ gate refit the codebooks")
     assert(Similarity.coarseFitRuns.get() == coarseBefore,
@@ -267,13 +267,13 @@ class PqSpec extends AnyFunSuite {
     "path; structural sanity (3 ranks per query, no self-hits)") {
     val d = TestSpark.sf0001
     val queries = corpus.filter(col("vec_id") < 10)
-    val staged = Similarity.queries("x_pq_residual")(spark, d)
+    val staged = SparkEntry.queries("x_pq_residual")(spark, d)
       .collect().map(_.toSeq).toSet
     val live = Similarity.ivfPqResidualTopK(queries, corpus, 3)
       .collect().map(_.toSeq).toSet
     assert(staged == live,
       "staged residual serving differs from the live refit path")
-    val rows = Similarity.queries("x_pq_residual")(spark, d).collect()
+    val rows = SparkEntry.queries("x_pq_residual")(spark, d).collect()
     assert(rows.length == 30)
     assert(!rows.exists(r =>
       r.getAs[Long]("q_id") == r.getAs[Long]("n_id")))

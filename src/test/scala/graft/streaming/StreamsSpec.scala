@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.streaming.Trigger
-import graft.TestSpark
+import graft.{SparkEntry, TestSpark}
 
 /** The streaming hourly aggregation must equal its batch twin — they
   * share one implementation (`Streams.hourlyAgg`), driven here through
@@ -56,7 +56,7 @@ class StreamsSpec extends AnyFunSuite {
   test("document curation stream == batch curation; a stream-side " +
     "fp-dedup collapses a re-delivered file") {
     val d = TestSpark.sf0001
-    val batch = Streams.queries("st_curate_docs")(spark, d)
+    val batch = SparkEntry.queries("st_curate_docs")(spark, d)
       .collect().map(_.toSeq).toSet
 
     val dir = java.nio.file.Files.createTempDirectory("graft_curate")
@@ -140,7 +140,7 @@ class StreamsSpec extends AnyFunSuite {
 
   test("streaming AvailableNow result == batch result") {
     val d = TestSpark.sf0001
-    val batch = Streams.queries("st_window_agg")(spark, d)
+    val batch = SparkEntry.queries("st_window_agg")(spark, d)
       .collect().map(_.toSeq).toSet
 
     val stream = Streams.hourlyAgg(
@@ -276,7 +276,7 @@ class StreamsSpec extends AnyFunSuite {
 
   test("stream-stream interval join == batch join") {
     val d = TestSpark.sf0001
-    val batch = Streams.queries("st_stream_join")(spark, d)
+    val batch = SparkEntry.queries("st_stream_join")(spark, d)
       .collect().map(_.toSeq).toSet
     assert(batch.nonEmpty) // fixture must actually exercise the join
 
@@ -293,7 +293,7 @@ class StreamsSpec extends AnyFunSuite {
   test("stream-static enrichment == batch enrichment") {
     val d = TestSpark.sf0001
     val customers = graft.Tables.t(spark, d, "customer")
-    val batch = Streams.queries("st_enrich")(spark, d)
+    val batch = SparkEntry.queries("st_enrich")(spark, d)
       .collect().map(_.toSeq).toSet
 
     val q = Streams.enrichedStream(spark, stagedEventsDir(), customers)
@@ -344,7 +344,7 @@ class StreamsSpec extends AnyFunSuite {
     val streamed = spark.read.parquet(outDir)
       .select("user_id", "event_id", "n_win", "sx", "sx2", "zscore")
       .collect().map(_.toSeq).toSet
-    val batch = graft.ops.Windows.queries("w9_rolling_zscore")(spark, d)
+    val batch = SparkEntry.queries("w9_rolling_zscore")(spark, d)
       .collect().map(_.toSeq).toSet
     assert(streamed == batch) // state carry: frames straddle the cut
   }
@@ -421,7 +421,7 @@ class StreamsSpec extends AnyFunSuite {
     val streamed = spark.read.parquet(outDir)
       .select("user_id", "event_id", "n_win", "sx", "sx2", "zscore")
       .collect().map(_.toSeq)
-    val batch = graft.ops.Windows.queries("w9_rolling_zscore")(spark, d)
+    val batch = SparkEntry.queries("w9_rolling_zscore")(spark, d)
       .collect().map(_.toSeq)
     // count equality catches duplicate re-emission; set equality
     // catches loss/corruption — together: exactly-once

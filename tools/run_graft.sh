@@ -1,6 +1,8 @@
 #!/bin/bash
 # Run a graft main with the Spark-on-JDK17 module opens, bypassing sbt.
 # Usage: MEM=48g tools/run_graft.sh graft.Bench [args...]
+#        tools/run_graft.sh graft.Profile <sfDir> <outDir> [gates,csv]
+#          (per-gate warm-run job count, AQE plan and non-adaptive plan)
 MEM="${MEM:-8g}"
 CP="${GRAFT_CP:-/root/repo/target/scala-2.13/classes}:/opt/spark/jars/*"
 OPENS=""
