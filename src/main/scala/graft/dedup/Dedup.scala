@@ -135,7 +135,7 @@ object Dedup {
     val sigs0 = minhashSignaturesNative(docs, idCol, textCol, numHashes)
     val sigs =
       if (stageSigs)
-        graft.io.Scratch.stageAndRelease(sigs0, () => (), "minhash_sigs")
+        graft.io.Scratch.stage(sigs0, "minhash_sigs")
       else sigs0
     val banded = minhashBandedFromSigs(sigs, numHashes, bands)
     // the banded explode itself is NOT staged (the ngramJaccardPairs
@@ -241,7 +241,7 @@ object Dedup {
       simhash(TextOps.tokens(lower(col(textCol)))).as("sh"))
     val src =
       if (stageSigs)
-        graft.io.Scratch.stageAndRelease(sk, () => (), "simhash_sigs")
+        graft.io.Scratch.stage(sk, "simhash_sigs")
       else sk
     hammingBandCandidates(src, "id", "sh", maxBucketSize)
   }
@@ -300,8 +300,7 @@ object Dedup {
       .filter(col("bucket_n") <= maxBucketSize)
     val pruned =
       if (stageSketch)
-        graft.io.Scratch.stageAndRelease(pruned0, () => (),
-          "hamming_banded")
+        graft.io.Scratch.stage(pruned0, "hamming_banded")
       else pruned0
     val a = pruned.select(col("chunk_idx"), col("chunk"),
       col("id").as("doc_a"), col("sh").as("sh_a"))
@@ -344,8 +343,7 @@ object Dedup {
       .filter(col("bucket_n") <= maxBucketSize)
     val pruned =
       if (stageSketch)
-        graft.io.Scratch.stageAndRelease(pruned0, () => (),
-          "hamming_banded_by")
+        graft.io.Scratch.stage(pruned0, "hamming_banded_by")
       else pruned0
     val a = pruned.select(col("by"), col("chunk_idx"), col("chunk"),
       col("id").as("doc_a"), col("sh").as("sh_a"))
@@ -1125,11 +1123,11 @@ object Dedup {
     *  - CACHING: labels persist(MEMORY_AND_DISK) per round; the
     *    convergence count materializes the new round, then the
     *    previous round is unpersisted. The edge list persists once for
-    *    the loop's lifetime and is released before return.
-    * The returned frame is nodes left-joined to the loop's final
-    * (persisted) state — isolated nodes re-attach as their own
-    * cluster without ever entering the loop; callers that stage the
-    * result to the warehouse may `unpersist()` the final state after.
+    *    the loop's lifetime.
+    * The result is nodes left-joined to the loop's final state —
+    * isolated nodes re-attach as their own cluster without ever
+    * entering the loop — staged through `io.Scratch.stage`; every
+    * cache is released before return, also when a guard fails.
     * On a multi-executor cluster, recovery of an evicted round walks
     * the truncated-RDD chain — pass `checkpointEvery = Some(n)` to cut
     * that chain with a reliable `checkpoint()` every n rounds (the
@@ -1142,29 +1140,7 @@ object Dedup {
   def connectedComponents(nodes: DataFrame, idCol: String,
       edges: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20,
-      checkpointEvery: Option[Int] = None): DataFrame =
-    connectedComponentsReleasable(nodes, idCol, edges, aCol, bCol,
-      maxIter, checkpointEvery)._1
-
-  /** Counts CC loop executions — the label-propagation rounds run
-    * EAGERLY inside the call (each round's convergence sum is an
-    * action), so one call = one CC execution. CorpusBuildSpec asserts
-    * the curation DAG pays exactly one per batch. */
-  private[graft] val ccRuns =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** `connectedComponents` plus a release handle: the result's lineage
-    * ends in the persisted final label state, which otherwise outlives
-    * the caller (a cache leak sized by the duplicate surface, held for
-    * the rest of the session). Call `release()` once the result is
-    * durably materialized (staged to the warehouse); after it the
-    * result frame must not be re-executed — recomputing would replay
-    * the whole propagation from the un-truncated RDD chain. */
-  def connectedComponentsReleasable(nodes: DataFrame, idCol: String,
-      edges: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20,
-      checkpointEvery: Option[Int] = None)
-      : (DataFrame, () => Unit) = {
+      checkpointEvery: Option[Int] = None): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val spark = nodes.sparkSession
     checkpointEvery.foreach { n =>
@@ -1173,9 +1149,7 @@ object Dedup {
         "checkpointEvery requires sparkContext.setCheckpointDir " +
           "(reliable checkpoints need a cluster-visible directory)")
     }
-    def truncated(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-    val sym = truncated(
+    val sym = graft.io.Scratch.truncate(
         edges.select(col(aCol).as("src"), col(bCol).as("dst"))
           .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
           .distinct())
@@ -1188,74 +1162,84 @@ object Dedup {
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // convergence metric: exact decimal sum of labels. Labels only
-    // ever DECREASE (min-propagation with label(x) ≤ x), so the sum
-    // strictly decreases iff any row changed — one cheap aggregation
-    // per round instead of a next⋈prev comparison join, and it still
-    // materializes `next` so the previous round can be released.
-    // CONVERGENCE CHECK EVERY 2nd ROUND — TRIED AND REVERTED (r18):
-    // checking sum(k) vs sum(k−2) every other round (idempotent extra
-    // rounds, exact maxIter boundary re-check) MEASURED SLOWER, not
-    // faster: per-gate job count went UP (d_dup_clusters 55 → 61
-    // jobs) and the isolated median-of-5 A/B regressed ~25%
-    // (d_dup_clusters 2.96 → 3.71 s, d_cluster_keep_best 3.73 →
-    // 4.65 s). Cause: `truncated` (.rdd) eagerly materializes each
-    // round's AQE stages regardless, so the per-round labelSum on the
-    // already-cached frame is nearly free — while an UNMATERIALIZED
-    // intermediate round is referenced three times by the next
-    // round's plan (prop, union, jump lookup) and its final stage
-    // re-executes per reference. The per-round action is not the
-    // barrier; it is what prevents triple re-execution.
-    var prevSum = Dedup.labelSum(labels)
-    var changed = true
-    var it = 0
-    while (changed && it < maxIter) {
-      val prev = labels
-      // propagation: candidate(v) = min over {v} ∪ N(v) of label(·)
-      val prop = sym.join(prev, col("src") === col("id"))
-        .select(col("dst").as("id"), col("label"))
-      val cand = prev.select(col("id"), col("label")).union(prop)
-        .groupBy("id").agg(min("label").as("label"))
-      // pointer jump: label(v) ← label(label(v)). Labels are node ids
-      // with the invariant label(x) ≤ x, so the lookup only improves;
-      // least+coalesce keeps the candidate when the label node has no
-      // entry (never happens when labels ⊆ nodes, but stays total).
-      val jumped = truncated(cand.as("c")
-          .join(prev.select(col("id").as("lid"),
-            col("label").as("llabel")),
-            col("c.label") === col("lid"), "left")
-          .select(col("c.id").as("id"),
-            least(col("c.label"),
-              coalesce(col("llabel"), col("c.label"))).as("label")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // reliable checkpoint every n rounds: cuts the truncated-RDD
-      // recovery chain so an executor loss replays ≤ n-1 rounds
-      val next = checkpointEvery match {
-        case Some(n) if (it + 1) % n == 0 =>
-          val cp = jumped.checkpoint()
-          jumped.unpersist()
-          cp
-        case _ => jumped
+    var prev = labels
+    try {
+      // convergence metric: exact decimal sum of labels. Labels only
+      // ever DECREASE (min-propagation with label(x) ≤ x), so the sum
+      // strictly decreases iff any row changed — one cheap aggregation
+      // per round instead of a next⋈prev comparison join, and it still
+      // materializes `next` so the previous round can be released.
+      // CONVERGENCE CHECK EVERY 2nd ROUND — TRIED AND REVERTED (r18):
+      // checking sum(k) vs sum(k−2) every other round (idempotent
+      // extra rounds, exact maxIter boundary re-check) MEASURED
+      // SLOWER, not faster: per-gate job count went UP (d_dup_clusters
+      // 55 → 61 jobs) and the isolated median-of-5 A/B regressed ~25%
+      // (d_dup_clusters 2.96 → 3.71 s, d_cluster_keep_best 3.73 →
+      // 4.65 s). Cause: `truncate` (.rdd) eagerly materializes each
+      // round's AQE stages regardless, so the per-round labelSum on
+      // the already-cached frame is nearly free — while an
+      // UNMATERIALIZED intermediate round is referenced three times by
+      // the next round's plan (prop, union, jump lookup) and its final
+      // stage re-executes per reference. The per-round action is not
+      // the barrier; it is what prevents triple re-execution.
+      var prevSum = Dedup.labelSum(labels)
+      var changed = true
+      var it = 0
+      while (changed && it < maxIter) {
+        prev = labels
+        // propagation: candidate(v) = min over {v} ∪ N(v) of label(·)
+        val prop = sym.join(prev, col("src") === col("id"))
+          .select(col("dst").as("id"), col("label"))
+        val cand = prev.select(col("id"), col("label")).union(prop)
+          .groupBy("id").agg(min("label").as("label"))
+        // pointer jump: label(v) ← label(label(v)). Labels are node
+        // ids with the invariant label(x) ≤ x, so the lookup only
+        // improves; least+coalesce keeps the candidate when the label
+        // node has no entry (never happens when labels ⊆ nodes, but
+        // stays total).
+        val jumped = graft.io.Scratch.truncate(cand.as("c")
+            .join(prev.select(col("id").as("lid"),
+              col("label").as("llabel")),
+              col("c.label") === col("lid"), "left")
+            .select(col("c.id").as("id"),
+              least(col("c.label"),
+                coalesce(col("llabel"), col("c.label"))).as("label")))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        // reliable checkpoint every n rounds: cuts the truncated-RDD
+        // recovery chain so an executor loss replays ≤ n-1 rounds
+        labels = checkpointEvery match {
+          case Some(n) if (it + 1) % n == 0 =>
+            val cp = jumped.checkpoint()
+            jumped.unpersist()
+            cp
+          case _ => jumped
+        }
+        val nextSum = Dedup.labelSum(labels)
+        changed = nextSum.compareTo(prevSum) != 0
+        prevSum = nextSum
+        prev.unpersist()
+        it += 1
       }
-      val nextSum = Dedup.labelSum(next)
-      changed = nextSum.compareTo(prevSum) != 0
-      prevSum = nextSum
-      prev.unpersist()
-      labels = next
-      it += 1
+      require(!changed,
+        s"connectedComponents: not converged after $maxIter rounds " +
+          "(raise maxIter; with pointer jumping this bounds component " +
+          "sizes near 2^maxIter)")
+      ccRuns.incrementAndGet()
+      graft.io.Scratch.stage(nodes.select(col(idCol).as("id"))
+          .join(labels, Seq("id"), "left")
+          .select(col("id"), coalesce(col("label"), col("id")).as("label")),
+        "connected_components")
+    } finally {
+      sym.unpersist(); prev.unpersist(); labels.unpersist()
     }
-    sym.unpersist()
-    require(!changed,
-      s"connectedComponents: not converged after $maxIter rounds " +
-        "(raise maxIter; with pointer jumping this bounds component " +
-        "sizes near 2^maxIter)")
-    ccRuns.incrementAndGet()
-    val finalLabels = labels
-    val out = nodes.select(col(idCol).as("id"))
-      .join(finalLabels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-    (out, () => { finalLabels.unpersist(); () })
   }
+
+  /** Counts CC loop executions — the label-propagation rounds run
+    * EAGERLY inside the call (each round's convergence sum is an
+    * action), so one call = one CC execution. CorpusBuildSpec asserts
+    * the curation DAG pays exactly one per batch. */
+  private[graft] val ccRuns =
+    new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Exact decimal sum of the `label` column — the CC convergence
     * metric. Empty input sums to 0; a NULL sum on non-empty input is
@@ -1295,9 +1279,9 @@ object Dedup {
       .select(col("id").as(idCol), col("label").as("cluster_id"),
         (col("id") === col("label")).as("is_canonical"))
 
-  /** `dupClusters`, staged: run CC once, write the cluster table to
-    * `path` (crash-safe staged overwrite), release the CC label cache,
-    * and hand back the READ-BACK frame. Every downstream consumer
+  /** `dupClusters`, staged to the warehouse: run CC once, write the
+    * cluster table to `path` (crash-safe staged overwrite), and hand
+    * back the READ-BACK frame. Every downstream consumer
     * (keep-best, survivor joins, audits) then scans one small parquet
     * table instead of dragging the propagation subtree through its
     * plan — the shape a production curation DAG wants: however many
@@ -1308,13 +1292,8 @@ object Dedup {
       pairs: DataFrame, aCol: String, bCol: String, path: String,
       maxIter: Int = 20,
       checkpointEvery: Option[Int] = None): DataFrame = {
-    val (cc, release) = connectedComponentsReleasable(docs, idCol,
-      pairs, aCol, bCol, maxIter, checkpointEvery)
-    graft.io.Writers.overwriteStaged(
-      cc.select(col("id").as(idCol), col("label").as("cluster_id"),
-        (col("id") === col("label")).as("is_canonical")),
-      path)
-    release()
+    graft.io.Writers.overwriteStaged(dupClusters(docs, idCol, pairs,
+      aCol, bCol, maxIter, checkpointEvery), path)
     docs.sparkSession.read.parquet(path)
   }
 
@@ -1447,12 +1426,7 @@ object Dedup {
     val docs = t(s, d, "documents")
     val pairs = ngramJaccardPairs(docs, "doc_id", "text",
       blockCols = Seq("lang", "source"), n = 3)
-    val (cc, release) = connectedComponentsReleasable(
-      docs, "doc_id", pairs, "doc_a", "doc_b")
-    graft.io.Scratch.stageAndRelease(
-      cc.select(col("id").as("doc_id"), col("label").as("cluster_id"),
-        (col("id") === col("label")).as("is_canonical")),
-      release, "d_dup_clusters")
+    dupClusters(docs, "doc_id", pairs, "doc_a", "doc_b")
   }
 
   /** Embedding-cosine near-dup pairs over the embeddings table,
@@ -1502,14 +1476,8 @@ object Dedup {
     val docs = t(s, d, "documents")
     val pairs = ngramJaccardPairs(docs, "doc_id", "text",
       blockCols = Seq("lang", "source"), n = 3)
-    // scratch-staged release of the CC label cache (ResidueSpec:
-    // repeated gate runs must leave the persisted-RDD census flat)
-    val (cc, release) = connectedComponentsReleasable(
-      docs, "doc_id", pairs, "doc_a", "doc_b")
-    val clusters = graft.io.Scratch.stageAndRelease(
-      cc.select(col("id").as("doc_id"), col("label").as("cluster_id")),
-      release, "d_cluster_keep_best")
-    keepBest(docs, "doc_id", clusters,
+    keepBest(docs, "doc_id",
+      dupClusters(docs, "doc_id", pairs, "doc_a", "doc_b"),
       TextOps.qualityScore(col("text")))
   }
 
@@ -1636,14 +1604,14 @@ object Dedup {
     // re-derived the gram explode per consumer (3× the scan +
     // tokenize + explode). The sketch blockers (minhash, simhash)
     // hash raw text and cannot share it.
-    val grams = graft.io.Scratch.stageAndRelease(
+    val grams = graft.io.Scratch.stage(
       sizedGrams(docs, "doc_id", "text", blocks.map(col), 3,
         "doc_id", "n_grams"),
-      () => (), "d_blocking_grams")
-    val truth = graft.io.Scratch.stageAndRelease(
+      "d_blocking_grams")
+    val truth = graft.io.Scratch.stage(
       jaccardPairsFromSized(grams, blocks)
         .filter(col("jac") >= 0.2).select("doc_a", "doc_b"),
-      () => (), "d_blocking_truth")
+      "d_blocking_truth")
     val methods = Seq(
       // the two sketch blockers stage their per-doc signature tables
       // (r18, stageSigs): inside this gate each blocker's bucket

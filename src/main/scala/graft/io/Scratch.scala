@@ -2,14 +2,21 @@ package graft.io
 
 import org.apache.spark.GraftSparkBridge
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** The process's one scratch root, for every intermediate the engine
-  * stages: `stageAndRelease` parquet, the streaming gates' staging,
-  * sink and checkpoint dirs, and the once-per-sf-dir PQ/IVF/island
-  * tables. Made once (first use) by Spark's `Utils.createTempDir`, so
-  * each use is a cheap path under an existing root, two processes never
-  * share a staged table, and the whole root is deleted at JVM shutdown.
-  * Nothing is deleted while the process lives. */
+  * stages: `stage` parquet, the streaming gates' staging, sink and
+  * checkpoint dirs, and the once-per-sf-dir PQ/IVF/island tables. Made
+  * once (first use) by Spark's `Utils.createTempDir`, so each use is a
+  * cheap path under an existing root, two processes never share a
+  * staged table, and the whole root is deleted at JVM shutdown.
+  * Nothing is deleted while the process lives.
+  *
+  * The staging rule: an operator that persists anything stages its own
+  * result through `stage` and unpersists its caches (in a `finally`)
+  * before it returns a plain DataFrame, so no cache outlives the call
+  * and the result can be re-read any number of times. Iterative loops
+  * cut their per-round lineage with `truncate` / `cut`. */
 object Scratch {
 
   private lazy val root: java.nio.file.Path =
@@ -20,17 +27,32 @@ object Scratch {
   def path(tag: String): java.nio.file.Path =
     root.resolve(tag + "_" + runs.incrementAndGet())
 
-  /** Write `df` to a fresh scratch parquet dir, run `release` (the
-    * operator's cache-release handle), return the read-back frame — so
-    * repeated gate invocations leave `sparkContext.getPersistentRDDs`
-    * FLAT instead of accumulating ContextCleaner-reclaimed-only residue
-    * (the r12 bench residue signature: +2 persistent RDDs per
+  /** Write `df` to a fresh scratch parquet dir and return the
+    * read-back frame. Eager: the caller may unpersist every cache
+    * `df` reads as soon as this returns, which keeps
+    * `sparkContext.getPersistentRDDs` FLAT across repeated calls
+    * (the r12 bench residue signature was +2 persistent RDDs per
     * full-suite pass). */
-  def stageAndRelease(df: DataFrame, release: () => Unit,
-      tag: String): DataFrame = {
+  def stage(df: DataFrame, tag: String): DataFrame = {
     val p = path(tag).toString
     df.write.mode("overwrite").parquet(p)
-    release()
     df.sparkSession.read.parquet(p)
+  }
+
+  /** `df` rebuilt from its RDD: the logical plan becomes one scan of
+    * that RDD, so an iterative loop's round-N plan does not nest
+    * rounds 1..N-1 (without it plan size and analysis time grow per
+    * round — exponentially where a round is referenced twice). */
+  def truncate(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.rdd, df.schema)
+
+  /** `truncate`, persisted (MEMORY_AND_DISK) and materialized by one
+    * `count`, so the caller can release the previous round's cache
+    * without the new one ever recomputing it. The caller unpersists
+    * the returned frame. */
+  def cut(df: DataFrame): DataFrame = {
+    val t = truncate(df).persist(StorageLevel.MEMORY_AND_DISK)
+    try t.count() catch { case e: Throwable => t.unpersist(); throw e }
+    t
   }
 }

@@ -110,7 +110,7 @@ object Ecology {
   def brayCurtis(ab0: DataFrame): DataFrame = {
     // ab feeds the totals and both self-join sides — staged once per
     // execution (the unifrac/cooccurrence discipline)
-    val ab = graft.io.Scratch.stageAndRelease(ab0, () => (), "bray_ab")
+    val ab = graft.io.Scratch.stage(ab0, "bray_ab")
     val totals = ab.groupBy("sample").agg(sum("n").as("n_tot"))
     val shared = ab.select(col("sample").as("sample_a"),
         col("taxon"), col("n").as("na"))
@@ -146,8 +146,8 @@ object Ecology {
     * grid; all counts exact longs, one 6-dp division per metric. */
   def betaPresence(ab0: DataFrame): DataFrame = {
     // same staging rationale as brayCurtis
-    val ab = graft.io.Scratch.stageAndRelease(
-      ab0.select("sample", "taxon"), () => (), "beta_ab")
+    val ab = graft.io.Scratch.stage(
+      ab0.select("sample", "taxon"), "beta_ab")
     val rich = ab.groupBy("sample").agg(count(lit(1)).as("s_rich"))
     val shared = ab.select(col("sample").as("sample_a"), col("taxon"))
       .join(ab.select(col("sample").as("sample_b"), col("taxon")),
@@ -189,8 +189,8 @@ object Ecology {
     // sample count rides as a broadcast singleton instead of the
     // r16 form's eager driver count() (one fewer full derivation AND
     // no separate job at plan-construction time)
-    val ab = graft.io.Scratch.stageAndRelease(
-      ab0.select("sample", "taxon"), () => (), "cooccur_ab")
+    val ab = graft.io.Scratch.stage(
+      ab0.select("sample", "taxon"), "cooccur_ab")
     val nSamples = broadcast(
       ab.agg(count_distinct(col("sample")).as("n_samples")))
     val top = ab.groupBy("taxon").agg(count(lit(1)).as("prev"))
@@ -285,8 +285,7 @@ object Ecology {
     // tb / both grid sides) — staged once (Scratch, within this
     // execution) so the join+explode+aggregate derivation runs one
     // time instead of once per reference
-    val bt = graft.io.Scratch.stageAndRelease(bt0, () => (),
-      "unifrac_bt")
+    val bt = graft.io.Scratch.stage(bt0, "unifrac_bt")
     // in-plan depth guard (no extra pass): Σ_branches n = depth · N
     // holds for any table `branchAbundance` built — a caller passing
     // a mismatched depth (or a non-branch table) would otherwise

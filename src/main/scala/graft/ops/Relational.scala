@@ -388,11 +388,11 @@ object Relational {
     // total as full-partition window aggregates over the cumsum —
     // measured SLOWER: the unbounded-frame window buffers the single
     // partition a second time.)
-    val hist = graft.io.Scratch.stageAndRelease(
+    val hist = graft.io.Scratch.stage(
       values.filter(col(valueCol).isNotNull)
         .groupBy(col(valueCol).as("v"))
         .agg(count(lit(1)).as("c")),
-      () => (), "pct_hist")
+      "pct_hist")
     // the single global cumsum window below is bounded by O(distinct
     // values) BY CONTRACT (integer-valued / low-cardinality column) —
     // ENFORCED by the in-plan guard riding `total`; the
@@ -502,11 +502,11 @@ object Relational {
     // the one data-sized pass: stage the value histogram (Scratch
     // discipline) — every consumer below reads the materialized
     // O(distinct values per group) table
-    val hist = graft.io.Scratch.stageAndRelease(
+    val hist = graft.io.Scratch.stage(
       df.filter(col(valueCol).isNotNull)
         .groupBy(col(groupCol).as("g"), col(valueCol).as("v"))
         .agg(count(lit(1)).as("c")),
-      () => (), "mad_hist")
+      "mad_hist")
     val med = percentilesFromHist(hist, Seq(("p50", 1, 2)))
       .select(col("g"), col("value").as("med"))
     // deviation histogram FROM the value histogram: |v−med| folds
@@ -594,12 +594,12 @@ object Relational {
   def profilePercentiles(df: DataFrame, groupCol: String,
       valueCol: String, ps: Seq[(String, Int, Int)],
       maxDistinct: Long = 1L << 22): DataFrame = {
-    val hist = graft.io.Scratch.stageAndRelease(
+    val hist = graft.io.Scratch.stage(
       df.filter(col(valueCol).isNotNull)
         .groupBy(col(groupCol).cast("string").as("g"),
           col(valueCol).as("v"))
         .agg(count(lit(1)).as("c")),
-      () => (), "prof_hist")
+      "prof_hist")
     val grouped = percentilesFromHist(hist, ps)
       .select(col("g").as("scope"), col("p"), col("value"))
     // histogram-to-histogram: global counts = sum over groups; the

@@ -35,9 +35,9 @@ import graft.Tables.t
   *
   * Scale shape: per round one edges⋈scores equi-join shuffled on dst
   * + one sum — the standard distributed PageRank step. The edge list
-  * (with its per-source multiplier) is eagerly localCheckpoint-ed
-  * once (the `mmrRerank` staging discipline): ten rounds must not
-  * re-derive it ten times, and the K-round plan stays K joins over a
+  * (with its per-source multiplier) is persisted once and released
+  * when the result is staged: ten rounds must not re-derive it ten
+  * times, and the K-round plan stays K joins over a
   * materialized table instead of a tree that re-expands the
   * derivation each round. On a real cluster the same loop co-locates
   * by pre-partitioning edges and scores on the join key; K is fixed
@@ -88,11 +88,10 @@ object WebGraph {
       .select(col("src"), col("dst"), expr(s"$L DIV deg").as("m"))
   }
 
-  /** `pagerankExact` with the cache-release handle (the
-    * `connectedComponentsReleasable` discipline): the staged edge list
-    * stays persisted while the returned lazy frame is consumed; the
-    * caller releases it once done, so repeated invocations leave
-    * `getPersistentRDDs` flat.
+  /** K rounds of the exact-integer damped update. Returns
+    * (node, n DECIMAL(38,0)) — n / Σn is the PageRank mass — staged
+    * through `io.Scratch.stage`; the edge list and node sets it
+    * persists are released before return, also when a guard fails.
     *
     * Preconditions, both checked by one eager 1-row aggregate that
     * fails loudly: every edge's `src` and `dst` is in `nodes` (the
@@ -100,9 +99,8 @@ object WebGraph {
     * on every edge. An out-of-set `dst` would otherwise be emitted as
     * a scored node that is not in `nodes`, and an out-of-set `src`
     * would silently contribute nothing. */
-  def pagerankExactReleasable(nodes: DataFrame, edges: DataFrame,
-      iters: Int = Iters): (DataFrame, () => Unit) = {
-    val spark = nodes.sparkSession
+  def pagerankExact(nodes: DataFrame, edges: DataFrame,
+      iters: Int = Iters): DataFrame = {
     // stage the (src, dst, m) list once: ten rounds re-join it, and
     // the fixed-K loop must not re-derive the graph per round
     val staged = edges.persist(
@@ -111,33 +109,6 @@ object WebGraph {
     // contribution-less nodes): persist it once too
     val nodesP = nodes.select("node").persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // multipliers must be exact ON THE TRUE DEGREE: m · deg == L for
-    // every edge, with deg recomputed from the edge list itself — a
-    // reconstructed degree (L / m) can pass while the arithmetic
-    // silently de-exacts (e.g. deg = 7 gives m = 2, reconstructed
-    // d = 10, and 10 divides L). The closure check (endpoints outside
-    // the node set) rides in the same aggregate. Bounded: 1-row
-    // aggregate; this action ALSO materializes the persisted edge list
-    // and node set (the separate staging count() the r16 form paid is
-    // folded into it).
-    val trueDeg = staged.groupBy("src").agg(count(lit(1)).as("deg"))
-    val inexactEdges = staged.join(trueDeg, "src")
-      .filter(col("m") * col("deg") =!= L)
-      .select(lit(true).as("inexact"))
-    val openEnds = staged
-      .select(explode(array(col("src"), col("dst"))).as("node"))
-      .join(nodesP, Seq("node"), "left_anti")
-      .select(lit(false).as("inexact"))
-    val bad = inexactEdges.unionByName(openEnds)
-      .agg(count(when(col("inexact"), 1)),
-        count(when(!col("inexact"), 1))).head
-    require(bad.getLong(0) == 0L,
-      s"${bad.getLong(0)} edges have m * out-degree != L=$L — a " +
-        "multiplier is not exact; pagerank numerators would silently " +
-        "de-exact")
-    require(bad.getLong(1) == 0L,
-      s"${bad.getLong(1)} edge endpoints are not in the node set — " +
-        "pagerank needs edges.src/dst ⊆ nodes")
     // WHICH nodes receive no contribution is a STATIC property of the
     // graph, not of the round (r18): scores cover every node each
     // round, so a dst receives a contribution iff it has ≥1 in-edge.
@@ -148,59 +119,73 @@ object WebGraph {
     val noInP = nodesP.join(staged.select(col("dst").as("node"))
         .distinct(), Seq("node"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-round LINEAGE TRUNCATION (the mmrGreedy `truncated` shape):
-    // without it round k's logical plan nests all k−1 predecessors and
-    // Catalyst re-plans the whole tree every round — the r16 form's
-    // wall-clock was dominated by planning+scheduling a 10-round
-    // nested plan (event-log: most of the gate was inter-job gaps).
-    // Each round is referenced exactly once by the next, so shuffle
-    // files make the chain execute linearly — no per-round persist or
-    // materializing count is needed.
-    def truncated(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-    var scores = nodesP.select(col("node"),
-      lit(new java.math.BigDecimal(1)).cast(dec38).as("n"))
-    var bk = BigInt(1) // B^k
-    for (_ <- 0 until iters) {
-      val teleport = new java.math.BigDecimal((3 * L * bk).bigInteger)
-      // joins stay SHUFFLED (no broadcast hints): scores/contrib are
-      // node-scale on a real web graph — the standard distributed
-      // PageRank step — and at bench scale AQE picks the cheap
-      // strategy from runtime sizes anyway
-      val contrib = staged
-        .join(scores.withColumnRenamed("node", "src"), "src")
-        .groupBy("dst")
-        .agg(sum(col("m") * col("n")).as("s"))
-      // every dst with an in-edge receives a contribution every round
-      // (scores cover all nodes), so contrib's key set == distinct
-      // dst; the teleport-only complement is the precomputed noInP —
-      // a union instead of the old per-round nodes ⟕ contrib join.
-      // Arithmetic identical: teleport + 17·s on the contrib branch,
-      // teleport (± 17·0) on the no-in-edge branch.
-      scores = truncated(
-        contrib.select(col("dst").as("node"),
-            (lit(teleport) + lit(17) * col("s")).cast(dec38).as("n"))
-          .unionByName(noInP.select(col("node"),
-            lit(teleport).cast(dec38).as("n"))))
-      bk *= B
+    try {
+      // multipliers must be exact ON THE TRUE DEGREE: m · deg == L for
+      // every edge, with deg recomputed from the edge list itself — a
+      // reconstructed degree (L / m) can pass while the arithmetic
+      // silently de-exacts (e.g. deg = 7 gives m = 2, reconstructed
+      // d = 10, and 10 divides L). The closure check (endpoints
+      // outside the node set) rides in the same aggregate. Bounded:
+      // 1-row aggregate; this action ALSO materializes the persisted
+      // edge list and node set (the separate staging count() the r16
+      // form paid is folded into it).
+      val trueDeg = staged.groupBy("src").agg(count(lit(1)).as("deg"))
+      val inexactEdges = staged.join(trueDeg, "src")
+        .filter(col("m") * col("deg") =!= L)
+        .select(lit(true).as("inexact"))
+      val openEnds = staged
+        .select(explode(array(col("src"), col("dst"))).as("node"))
+        .join(nodesP, Seq("node"), "left_anti")
+        .select(lit(false).as("inexact"))
+      val bad = inexactEdges.unionByName(openEnds)
+        .agg(count(when(col("inexact"), 1)),
+          count(when(!col("inexact"), 1))).head
+      require(bad.getLong(0) == 0L,
+        s"${bad.getLong(0)} edges have m * out-degree != L=$L — a " +
+          "multiplier is not exact; pagerank numerators would " +
+          "silently de-exact")
+      require(bad.getLong(1) == 0L,
+        s"${bad.getLong(1)} edge endpoints are not in the node set — " +
+          "pagerank needs edges.src/dst ⊆ nodes")
+      // per-round LINEAGE TRUNCATION (`Scratch.truncate`): without it
+      // round k's logical plan nests all k−1 predecessors and Catalyst
+      // re-plans the whole tree every round — the r16 form's
+      // wall-clock was dominated by planning+scheduling a 10-round
+      // nested plan (event-log: most of the gate was inter-job gaps).
+      // Each round is referenced exactly once by the next, so shuffle
+      // files make the chain execute linearly — no per-round persist
+      // or materializing count is needed.
+      var scores = nodesP.select(col("node"),
+        lit(new java.math.BigDecimal(1)).cast(dec38).as("n"))
+      var bk = BigInt(1) // B^k
+      for (_ <- 0 until iters) {
+        val teleport = new java.math.BigDecimal((3 * L * bk).bigInteger)
+        // joins stay SHUFFLED (no broadcast hints): scores/contrib are
+        // node-scale on a real web graph — the standard distributed
+        // PageRank step — and at bench scale AQE picks the cheap
+        // strategy from runtime sizes anyway
+        val contrib = staged
+          .join(scores.withColumnRenamed("node", "src"), "src")
+          .groupBy("dst")
+          .agg(sum(col("m") * col("n")).as("s"))
+        // every dst with an in-edge receives a contribution every
+        // round (scores cover all nodes), so contrib's key set ==
+        // distinct dst; the teleport-only complement is the
+        // precomputed noInP — a union instead of the old per-round
+        // nodes ⟕ contrib join. Arithmetic identical: teleport + 17·s
+        // on the contrib branch, teleport (± 17·0) on the no-in-edge
+        // branch.
+        scores = graft.io.Scratch.truncate(
+          contrib.select(col("dst").as("node"),
+              (lit(teleport) + lit(17) * col("s")).cast(dec38).as("n"))
+            .unionByName(noInP.select(col("node"),
+              lit(teleport).cast(dec38).as("n"))))
+        bk *= B
+      }
+      graft.io.Scratch.stage(scores, "pagerank")
+    } finally {
+      staged.unpersist(); nodesP.unpersist(); noInP.unpersist()
     }
-    (scores,
-      () => { staged.unpersist(); nodesP.unpersist(); noInP.unpersist()
-        () })
-  }
-
-  /** K rounds of the exact-integer damped update. Returns
-    * (node, n DECIMAL(38,0)) — n / Σn is the PageRank mass. The
-    * result is eagerly materialized (localCheckpoint) and the staged
-    * edge cache released before return; callers that want zero
-    * post-return block residue use the releasable form with
-    * `io.Scratch.stageAndRelease` (the gate's shape). */
-  def pagerankExact(nodes: DataFrame, edges: DataFrame,
-      iters: Int = Iters): DataFrame = {
-    val (scores, release) = pagerankExactReleasable(nodes, edges, iters)
-    val out = scores.localCheckpoint()
-    release()
-    out
   }
 
   /** Undirected simple edge set (u < v, self-loops dropped) of a
@@ -285,14 +270,10 @@ object WebGraph {
   }
 
   /** Gate: domain authority table — exact numerator (string), 6-dp
-    * mass share, dense authority rank. Scratch-staged so repeated
-    * invocations leave the persisted-RDD census flat. */
+    * mass share, dense authority rank. */
   private def wgPagerank(s: SparkSession, d: String): DataFrame = {
     val nodes = domainNodes(t(s, d, "documents"))
-    val (scores, release) =
-      pagerankExactReleasable(nodes, domainEdges(nodes))
-    val pr = graft.io.Scratch.stageAndRelease(scores, release,
-      "wg_pagerank")
+    val pr = pagerankExact(nodes, domainEdges(nodes))
     // domain-count-bounded single partition BY DESIGN (the staged pr
     // table is one row per domain). Key must be attribute-derived
     // (w1Funnel idiom): partitionBy(lit(1)) is foldable, the
@@ -345,52 +326,50 @@ object WebGraph {
     * over a directed edge list — the neighborhood function per node
     * (Palmer/Faloutsos ANF's exact ground truth). Each hop is one
     * frontier⋈edges equi-join + a distinct; every hop's reach set is
-    * staged (persist) so the K-hop plan is K joins over materialized
-    * sets, not a tree that re-expands per hop, and the caller releases
-    * the stages via the returned handle (the `pagerankExactReleasable`
-    * discipline). Exact distinct reach is O(Σ|N_≤h|) rows — the
+    * persisted (`io.Scratch.cut`) so the K-hop plan is K joins over
+    * materialized sets, not a tree that re-expands per hop. The result
+    * is staged through `io.Scratch.stage` and every cache released
+    * before return. Exact distinct reach is O(Σ|N_≤h|) rows — the
     * ORACLE-able small-graph truth; at web scale the reach sets are
     * node-count-sized per node and the sketch form below
-    * (`neighborhoodHllReleasable`) is the 100 TB path. */
-  def neighborhoodExactReleasable(nodes: DataFrame, edges: DataFrame,
-      maxHops: Int): (DataFrame, () => Unit) = {
-    // lineage discipline (see kCoreReleasable): each hop references
-    // the previous reach set twice (union + expansion join), so the
-    // reach set is lineage-truncated + persisted per hop — a
-    // constant-size plan at any hop count, without the per-hop
-    // scratch parquet round-trip the r16 form paid. Every hop's reach
-    // set stays persisted until release (the returned frame's per-hop
-    // count columns aggregate each of them), then the handle drops
-    // them all with the edge list.
-    val spark = edges.sparkSession
+    * (`neighborhoodHll`) is the 100 TB path. */
+  def neighborhoodExact(nodes: DataFrame, edges: DataFrame,
+      maxHops: Int): DataFrame = {
+    // lineage discipline (see kCore): each hop references the
+    // previous reach set twice (union + expansion join), so the reach
+    // set is lineage-truncated + persisted per hop — a constant-size
+    // plan at any hop count, without the per-hop scratch parquet
+    // round-trip the r16 form paid. Every hop's reach set stays
+    // persisted until the result is staged (its per-hop count columns
+    // aggregate each of them), then all are dropped with the edges.
     val e = edges.select(col("src"), col("dst")).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count()
     var staged = List.empty[DataFrame]
-    def cut(df: DataFrame): DataFrame = {
-      val t = spark.createDataFrame(df.rdd, df.schema).persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      t.count()
-      staged ::= t
-      t
+    try {
+      e.count()
+      // h = 1: self ∪ out-neighbors (the graph may carry no
+      // self-loops; the closed neighborhood always counts the node)
+      var reach = graft.io.Scratch.cut(
+        nodes.select(col("node"), col("node").as("r"))
+          .union(e.select(col("src").as("node"), col("dst").as("r")))
+          .distinct())
+      staged ::= reach
+      var out = nodes.select("node")
+      for (h <- 1 to maxHops) {
+        if (h > 1) {
+          reach = graft.io.Scratch.cut(reach.union(
+            reach.withColumnRenamed("r", "src").join(e, "src")
+              .select(col("node"), col("dst").as("r"))).distinct())
+          staged ::= reach
+        }
+        // self is always reachable → every node appears: inner join
+        out = out.join(
+          reach.groupBy("node").agg(count(lit(1)).as(s"n$h")), "node")
+      }
+      graft.io.Scratch.stage(out, "neighborhood")
+    } finally {
+      staged.foreach(_.unpersist()); e.unpersist()
     }
-    // h = 1: self ∪ out-neighbors (the graph may carry no self-loops;
-    // the closed neighborhood always counts the node itself)
-    var reach = cut(nodes.select(col("node"), col("node").as("r"))
-      .union(e.select(col("src").as("node"), col("dst").as("r")))
-      .distinct())
-    var out = nodes.select("node")
-    for (h <- 1 to maxHops) {
-      if (h > 1)
-        reach = cut(reach.union(
-          reach.withColumnRenamed("r", "src").join(e, "src")
-            .select(col("node"), col("dst").as("r"))).distinct())
-      // self is always reachable → every node appears: inner join
-      out = out.join(
-        reach.groupBy("node").agg(count(lit(1)).as(s"n$h")), "node")
-    }
-    val toRelease = staged
-    (out, () => { toRelease.foreach(_.unpersist()); e.unpersist(); () })
   }
 
   /** HyperBall (Boldi–Vigna) neighborhood function — the 100 TB scale
@@ -404,34 +383,36 @@ object WebGraph {
     * HLL aggregates (`hll_sketch_agg`/`hll_union_agg`/`hll_union`);
     * estimates are EXACT while a sketch is still in its sparse
     * list/set mode (hundreds of items at lgk=12), which the spec pins
-    * against `neighborhoodExactReleasable` on the domain fixture.
-    * Same staging/release discipline as the exact form. */
-  def neighborhoodHllReleasable(nodes: DataFrame, edges: DataFrame,
-      maxHops: Int, lgk: Int = 12): (DataFrame, () => Unit) = {
+    * against `neighborhoodExact` on the domain fixture. Each round's
+    * sketch table is staged through `io.Scratch.stage`, so the result
+    * reads only those tables and the edge cache is released before
+    * return. */
+  def neighborhoodHll(nodes: DataFrame, edges: DataFrame,
+      maxHops: Int, lgk: Int = 12): DataFrame = {
     // same per-round lineage cut as the exact form: the sketch table
     // is referenced twice per round (neighbor merge + self union)
     val e = edges.select(col("src"), col("dst")).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    def cut(df: DataFrame, tag: String): DataFrame =
-      graft.io.Scratch.stageAndRelease(df, () => (), tag)
-    var sk = cut(nodes.groupBy("node")
-      .agg(hll_sketch_agg(col("node"), lit(lgk)).as("sk")), "hb_sk_h0")
-    var out = nodes.select("node")
-    for (h <- 1 to maxHops) {
-      val nbr = e.join(
-          sk.select(col("node").as("dst"), col("sk").as("nsk")), "dst")
-        .groupBy(col("src").as("node"))
-        .agg(hll_union_agg(col("nsk"), lit(false)).as("merged"))
-      sk = cut(sk.join(nbr, Seq("node"), "left")
-        .select(col("node"),
-          when(col("merged").isNull, col("sk"))
-            .otherwise(hll_union(col("sk"), col("merged"))).as("sk")),
-        s"hb_sk_h$h")
-      out = out.join(sk.select(col("node"),
-        hll_sketch_estimate(col("sk")).as(s"n$h")), "node")
-    }
-    (out, () => { e.unpersist(); () })
+    try {
+      e.count()
+      var sk = graft.io.Scratch.stage(nodes.groupBy("node")
+        .agg(hll_sketch_agg(col("node"), lit(lgk)).as("sk")), "hb_sk_h0")
+      var out = nodes.select("node")
+      for (h <- 1 to maxHops) {
+        val nbr = e.join(
+            sk.select(col("node").as("dst"), col("sk").as("nsk")), "dst")
+          .groupBy(col("src").as("node"))
+          .agg(hll_union_agg(col("nsk"), lit(false)).as("merged"))
+        sk = graft.io.Scratch.stage(sk.join(nbr, Seq("node"), "left")
+          .select(col("node"),
+            when(col("merged").isNull, col("sk"))
+              .otherwise(hll_union(col("sk"), col("merged"))).as("sk")),
+          s"hb_sk_h$h")
+        out = out.join(sk.select(col("node"),
+          hll_sketch_estimate(col("sk")).as(s"n$h")), "node")
+      }
+      out
+    } finally e.unpersist()
   }
 
   /** k-core membership by R rounds of degree peeling on an undirected
@@ -446,28 +427,26 @@ object WebGraph {
     * landed; the spec asserts R actually reaches the fixpoint on the
     * gate graph). Per round: two alive-set equi-joins + one degree
     * aggregate — every stage keyed, nothing single-partition; alive
-    * sets are persisted per round and RELEASED via the returned
-    * handle. Returns every ORIGINAL node with an in_core flag and its
+    * sets are persisted per round, the result is staged through
+    * `io.Scratch.stage`, and every cache is released before return.
+    * Returns every ORIGINAL node with an in_core flag and its
     * within-core degree. */
-  def kCoreReleasable(nodes: DataFrame, und: DataFrame, k: Int,
-      rounds: Int): (DataFrame, () => Unit) = {
+  def kCore(nodes: DataFrame, und: DataFrame, k: Int,
+      rounds: Int): DataFrame = {
     // LINEAGE DISCIPLINE: each round references the previous alive
     // set TWICE (u-join, v-join) and the restricted edges twice (the
     // degree union), so carrying lineage multiplies the logical plan
     // ×4 per round — 4^R copies by round R (an OOM just STRINGIFYING
     // the plan for the cache name, before any data moves). Every
-    // round's alive set is therefore lineage-TRUNCATED (the mmrGreedy
-    // `truncated` shape) and persisted+materialized, with the
-    // previous round released as soon as the next lands — a
-    // constant-size plan at any round count, without the scratch
-    // parquet write+read round-trip the r16 form paid per round
-    // (event-log: the 8-round gate ran ~48 jobs, half its wall-clock
-    // in write commits and footer reads of ≤ node-count-sized
-    // tables). The release handle drops the final round + edges.
-    val spark = und.sparkSession
+    // round's alive set is therefore `io.Scratch.cut` (lineage-
+    // truncated, persisted and materialized), with the previous round
+    // released as soon as the next lands — a constant-size plan at
+    // any round count, without the scratch parquet write+read
+    // round-trip the r16 form paid per round (event-log: the 8-round
+    // gate ran ~48 jobs, half its wall-clock in write commits and
+    // footer reads of ≤ node-count-sized tables).
     val edges = und.select(col("u"), col("v")).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    edges.count()
     def aliveEdges(alive: DataFrame): DataFrame = edges
       .join(alive.select(col("node").as("u")), "u")
       .join(alive.select(col("node").as("v")), "v")
@@ -483,28 +462,28 @@ object WebGraph {
     // intermediate round is referenced twice (u-join, v-join) by the
     // next round's plan — the per-round count is what prevents the
     // double re-execution, not the barrier.)
-    def cut(df: DataFrame): DataFrame = {
-      val t = spark.createDataFrame(df.rdd, df.schema).persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      t.count() // materialize before the previous round is released
-      t
+    var alive: DataFrame = null
+    try {
+      edges.count()
+      alive = graft.io.Scratch.cut(nodes.select("node"))
+      for (r <- 1 to rounds) {
+        val next = graft.io.Scratch.cut(degrees(aliveEdges(alive))
+          .filter(col("deg") >= k).select("node"))
+        alive.unpersist()
+        alive = next
+      }
+      val coreDeg = degrees(aliveEdges(alive))
+      graft.io.Scratch.stage(nodes.select("node")
+          .join(alive.withColumn("in_core", lit(1)), Seq("node"), "left")
+          .join(coreDeg, Seq("node"), "left")
+          .select(col("node"),
+            coalesce(col("in_core"), lit(0)).as("in_core"),
+            coalesce(col("deg"), lit(0L)).as("core_deg")),
+        "kcore")
+    } finally {
+      if (alive != null) alive.unpersist()
+      edges.unpersist()
     }
-    var alive = cut(nodes.select("node"))
-    for (r <- 1 to rounds) {
-      val next = cut(degrees(aliveEdges(alive))
-        .filter(col("deg") >= k).select("node"))
-      alive.unpersist()
-      alive = next
-    }
-    val coreDeg = degrees(aliveEdges(alive))
-    val out = nodes.select("node")
-      .join(alive.withColumn("in_core", lit(1)), Seq("node"), "left")
-      .join(coreDeg, Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("in_core"), lit(0)).as("in_core"),
-        coalesce(col("deg"), lit(0L)).as("core_deg"))
-    val lastAlive = alive
-    (out, () => { lastAlive.unpersist(); edges.unpersist(); () })
   }
 
   /** k-core gate fixture — the pagerank/triangle residue-class
@@ -538,19 +517,15 @@ object WebGraph {
   /** Gate: 5-core membership of the dense/sparse domain graph. */
   private def wgKcore(s: SparkSession, d: String): DataFrame = {
     val nodes = domainNodes(t(s, d, "documents"))
-    val (core, release) = kCoreReleasable(nodes,
-      undirectedEdges(kcoreEdges(nodes)), KCoreK, KCoreRounds)
-    graft.io.Scratch.stageAndRelease(core, release, "wg_kcore")
+    kCore(nodes, undirectedEdges(kcoreEdges(nodes)), KCoreK, KCoreRounds)
   }
 
   /** Gate: exact 1/2/3-hop closed neighborhood sizes per domain node
     * on the pagerank domain graph (degrees {2,4,5} → counts genuinely
-    * vary by residue class). Scratch-staged, caches released. */
+    * vary by residue class). */
   private def wgNeighborhood(s: SparkSession, d: String): DataFrame = {
     val nodes = domainNodes(t(s, d, "documents"))
-    val (nf, release) = neighborhoodExactReleasable(nodes,
-      domainEdges(nodes).select("src", "dst"), 3)
-    graft.io.Scratch.stageAndRelease(nf, release, "wg_neighborhood")
+    neighborhoodExact(nodes, domainEdges(nodes).select("src", "dst"), 3)
   }
 
   /** Gate: per-domain triangle census + local clustering coefficient

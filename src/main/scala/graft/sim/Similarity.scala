@@ -560,8 +560,8 @@ object Similarity {
   private def simMicro(sim: Column): Column =
     (round(sim, 6).cast("decimal(18,6)") * lit(1000000)).cast("long")
 
-  /** Maximal-marginal-relevance re-rank (Carbonell & Goldstein 1998)
-    * with a release handle — the serving-side diversification step: an
+  /** Maximal-marginal-relevance re-rank (Carbonell & Goldstein 1998),
+    * the serving-side diversification step: an
     * ANN shortlist is often dominated by near-duplicates of one
     * result, so the final top-k greedily picks
     *   argmax_d λ·rel(d) − (1−λ)·max_{s∈selected} sim(d, s)
@@ -575,16 +575,12 @@ object Similarity {
     * corpus × queries scan — swap in the IVF-PQ path at scale) and the
     * shortlist×shortlist pairwise sims (queries × R² rows, corpus
     * joined by id — no second scan-wide product). The greedy itself
-    * runs k rounds of shortlist-sized joins with the
-    * connectedComponents iteration discipline: per-round lineage
-    * truncation + persist, previous round released, the pair table
-    * released before return; only the accumulated picks stay cached
-    * for the caller (`release()` once staged). No collect anywhere —
+    * is one per-query grouped pass (`mmrGreedy`). The picks are staged
+    * through `io.Scratch.stage` (eager). No collect anywhere —
     * per-query state rides as columns, so a million queries diversify
     * as one job. */
-  def mmrRerankReleasable(queries: DataFrame, corpus: DataFrame,
-      k: Int, shortlist: Int = 8, lambda10: Int = 7)
-      : (DataFrame, () => Unit) = {
+  def mmrRerank(queries: DataFrame, corpus: DataFrame,
+      k: Int, shortlist: Int = 8, lambda10: Int = 7): DataFrame = {
     require(k >= 1 && k <= shortlist,
       s"k=$k must be in [1, shortlist=$shortlist]")
     val q = broadcast(queries
@@ -606,7 +602,7 @@ object Similarity {
       .select(col("q_id"), col("n_id"),
         simMicro(col("sim")).as("rel_micro"),
         col("n_emb"), col("n_norm"))
-    mmrGreedy(sl0, k, lambda10)
+    graft.io.Scratch.stage(mmrGreedy(sl0, k, lambda10), "mmr_rerank")
   }
 
   /** MMR over a PRECOMPUTED ANN shortlist — the production
@@ -618,12 +614,12 @@ object Similarity {
     * unlisted vectors) to compute exact relevance and pair sims, then
     * runs the same integer greedy. Equivalence: whenever the ANN
     * shortlist contains the brute top-R ids for a query, picks are
-    * IDENTICAL to `mmrRerankReleasable` (pinned in SimilaritySpec);
-    * queries with fewer than k candidates yield picks only up to
-    * their candidate count. */
-  def mmrRerankShortlistReleasable(shortlist: DataFrame,
+    * IDENTICAL to `mmrRerank` (pinned in SimilaritySpec); queries
+    * with fewer than k candidates yield picks only up to their
+    * candidate count. Staged like `mmrRerank`. */
+  def mmrRerankShortlist(shortlist: DataFrame,
       queries: DataFrame, corpus: DataFrame, k: Int,
-      lambda10: Int = 7): (DataFrame, () => Unit) = {
+      lambda10: Int = 7): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
     val q = broadcast(queries
       .select(col("vec_id").as("q_id"),
@@ -640,7 +636,8 @@ object Similarity {
         simMicro(dotD(col("q_emb"), col("n_emb")) /
           (col("q_norm") * col("n_norm"))).as("rel_micro"),
         col("n_emb"), col("n_norm"))
-    mmrGreedy(sl0, k, lambda10)
+    graft.io.Scratch.stage(mmrGreedy(sl0, k, lambda10),
+      "mmr_rerank_shortlist")
   }
 
   /** The shared greedy over a prepared shortlist
@@ -653,9 +650,8 @@ object Similarity {
     * round — the r16 k-round join formulation is kept below as
     * `mmrGreedyJoins` (the equivalence pin in SimilaritySpec and the
     * shape a shortlist too wide to collect per group would fall back
-    * to). Release handle is a no-op: nothing is cached. */
-  private def mmrGreedy(sl0: DataFrame, k: Int, lambda10: Int)
-      : (DataFrame, () => Unit) = {
+    * to). Lazy: nothing is cached. */
+  private def mmrGreedy(sl0: DataFrame, k: Int, lambda10: Int): DataFrame = {
     require(lambda10 >= 0 && lambda10 <= 10,
       s"lambda10=$lambda10 must be in [0, 10]")
     import org.apache.spark.sql.GraftColumnBridge
@@ -664,32 +660,31 @@ object Similarity {
         col("n_emb"), col("n_norm"))).as("cand"))
     val picks = GraftColumnBridge.column(graft.functions.MmrGreedyPick(
       GraftColumnBridge.expression(col("cand")), k, lambda10))
-    val out = collected
+    collected
       .select(col("q_id"), explode(picks).as("pick"))
       .select(col("q_id"), col("pick.rank").as("rank"),
         col("pick.n_id").as("n_id"),
         col("pick.mmr_score_e7").as("mmr_score_e7"))
-    (out, () => ())
   }
 
   /** The r16 k-round join/window formulation of the greedy — retained
     * for the SimilaritySpec equivalence pin against `MmrGreedyPick`
     * and as the documented fallback when the per-query candidate set
-    * is too wide to collect per group. */
-  private[sim] def mmrGreedyJoins(sl0: DataFrame, k: Int, lambda10: Int)
-      : (DataFrame, () => Unit) = {
+    * is too wide to collect per group. Staged like `mmrRerank`; every
+    * cache is released before return. */
+  private[sim] def mmrGreedyJoins(sl0: DataFrame, k: Int,
+      lambda10: Int): DataFrame = {
     require(lambda10 >= 0 && lambda10 <= 10,
       s"lambda10=$lambda10 must be in [0, 10]")
     import org.apache.spark.storage.StorageLevel
-    val spark = sl0.sparkSession
-    def truncated(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
     // shortlist with kept embeddings (for the pair sims), persisted:
     // the shortlist derivation runs ONCE, not once per greedy round
-    val sl = truncated(sl0).persist(StorageLevel.MEMORY_AND_DISK)
+    val sl = graft.io.Scratch.truncate(sl0)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // pairwise sims among each query's shortlist members (q × R²)
-    val pairs = truncated(sl.select(col("q_id"), col("n_id").as("a"),
-        col("n_emb").as("a_emb"), col("n_norm").as("a_norm"))
+    val pairs = graft.io.Scratch.truncate(sl.select(col("q_id"),
+        col("n_id").as("a"), col("n_emb").as("a_emb"),
+        col("n_norm").as("a_norm"))
       .join(sl.select(col("q_id"), col("n_id").as("b"),
         col("n_emb").as("b_emb"), col("n_norm").as("b_norm")),
         Seq("q_id"))
@@ -704,76 +699,51 @@ object Similarity {
     // selected set (null until the first pick lands a real sim — so
     // score uses the TRUE max, which may be negative, never a 0 floor).
     // Lineage note (the kCore/neighborhood per-round-cut rule): rem is
-    // deliberately NOT scratch-cut per round — unlike those loops it
-    // is referenced ONCE per round (linear, not multiplicative, plan
+    // deliberately NOT cut per round — unlike those loops it is
+    // referenced ONCE per round (linear, not multiplicative, plan
     // growth), is bounded by k ≤ 5 rounds over a ≤ 8-wide shortlist,
-    // and each round's accumulator IS materialized (persist + count).
-    // If k ever grows past ~10, cut rem through Scratch like kCore.
+    // and each round's accumulator IS materialized (`Scratch.cut`).
+    // If k ever grows past ~10, cut rem like kCore.
     var rem = sl.select(col("q_id"), col("n_id"), col("rel_micro"))
       .withColumn("ms", lit(null).cast("long"))
     var acc: DataFrame = null
     var prevAcc: DataFrame = null
-    (1 to k).foreach { r =>
-      val scored = rem.withColumn("score",
-        lit(lambda10) * col("rel_micro") -
-          lit(10 - lambda10) * coalesce(col("ms"), lit(0L)))
-      val pick = scored.withColumn("rk", row_number().over(wPick))
-        .filter(col("rk") === 1)
-        .select(col("q_id"), lit(r).as("rank"), col("n_id"),
-          col("score").as("mmr_score_e7"))
-      val newAcc = truncated(if (acc == null) pick else acc.union(pick))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      newAcc.count() // materialize before releasing the previous round
-      if (prevAcc != null) prevAcc.unpersist()
-      prevAcc = acc
-      acc = newAcc
-      if (r < k) {
-        val picked = acc.filter(col("rank") === r)
-          .select(col("q_id"), col("n_id").as("pick_id"))
-        rem = rem.join(picked, Seq("q_id"))
-          .filter(col("n_id") =!= col("pick_id"))
-          .join(pairs.select(col("q_id"), col("a").as("n_id"),
-            col("b").as("pick_id"), col("sim_micro")),
-            Seq("q_id", "n_id", "pick_id"))
-          .select(col("q_id"), col("n_id"), col("rel_micro"),
-            greatest(coalesce(col("ms"), col("sim_micro")),
-              col("sim_micro")).as("ms"))
+    try {
+      (1 to k).foreach { r =>
+        val scored = rem.withColumn("score",
+          lit(lambda10) * col("rel_micro") -
+            lit(10 - lambda10) * coalesce(col("ms"), lit(0L)))
+        val pick = scored.withColumn("rk", row_number().over(wPick))
+          .filter(col("rk") === 1)
+          .select(col("q_id"), lit(r).as("rank"), col("n_id"),
+            col("score").as("mmr_score_e7"))
+        // materialized before the previous round is released
+        val newAcc =
+          graft.io.Scratch.cut(if (acc == null) pick else acc.union(pick))
+        if (prevAcc != null) prevAcc.unpersist()
+        prevAcc = acc
+        acc = newAcc
+        if (r < k) {
+          val picked = acc.filter(col("rank") === r)
+            .select(col("q_id"), col("n_id").as("pick_id"))
+          rem = rem.join(picked, Seq("q_id"))
+            .filter(col("n_id") =!= col("pick_id"))
+            .join(pairs.select(col("q_id"), col("a").as("n_id"),
+              col("b").as("pick_id"), col("sim_micro")),
+              Seq("q_id", "n_id", "pick_id"))
+            .select(col("q_id"), col("n_id"), col("rel_micro"),
+              greatest(coalesce(col("ms"), col("sim_micro")),
+                col("sim_micro")).as("ms"))
+        }
       }
+      graft.io.Scratch.stage(acc.select(col("q_id"),
+          col("rank").cast("int").as("rank"), col("n_id"),
+          col("mmr_score_e7")),
+        "mmr_greedy_joins")
+    } finally {
+      Seq(prevAcc, acc).filter(_ != null).foreach(_.unpersist())
+      sl.unpersist(); pairs.unpersist()
     }
-    if (prevAcc != null) prevAcc.unpersist()
-    sl.unpersist()
-    pairs.unpersist()
-    val out = acc.select(col("q_id"), col("rank").cast("int").as("rank"),
-      col("n_id"), col("mmr_score_e7"))
-    val finalAcc = acc
-    (out, () => { finalAcc.unpersist(); () })
-  }
-
-  /** `mmrRerankReleasable` without the handle: the picks are
-    * defensively materialized into a localCheckpoint (block storage
-    * the ContextCleaner reclaims on GC — NOT the CacheManager) and
-    * the greedy's accumulated cache is released before return, so
-    * repeated library calls in one process cannot leak cached
-    * partitions. Callers that want to manage the cache themselves use
-    * the releasable form. */
-  def mmrRerank(queries: DataFrame, corpus: DataFrame, k: Int,
-      shortlist: Int = 8, lambda10: Int = 7): DataFrame = {
-    val (out, release) =
-      mmrRerankReleasable(queries, corpus, k, shortlist, lambda10)
-    val staged = out.localCheckpoint() // eager: materialize, then free
-    release()
-    staged
-  }
-
-  /** `mmrRerankShortlistReleasable` without the handle (same
-    * localCheckpoint-then-release discipline as `mmrRerank`). */
-  def mmrRerankShortlist(shortlist: DataFrame, queries: DataFrame,
-      corpus: DataFrame, k: Int, lambda10: Int = 7): DataFrame = {
-    val (out, release) = mmrRerankShortlistReleasable(
-      shortlist, queries, corpus, k, lambda10)
-    val staged = out.localCheckpoint()
-    release()
-    staged
   }
 
   /** All-pairs candidate scoring via LSH bucket SELF-join: every pair
@@ -1602,14 +1572,9 @@ object Similarity {
     * Conditioned-total oracle: DuckDB re-derives EVERY rank's argmax
     * from the shortlist + pair sims given only the dump's PRIOR picks
     * — a wrong pick at any rank mismatches at that rank. */
-  private def xMmr(s: SparkSession, d: String): DataFrame = {
-    // scratch-staged (not localCheckpoint) so repeated gate runs
-    // leave the persisted-RDD census flat
-    val (out, release) = mmrRerankReleasable(
-      queriesSide(s, d), t(s, d, "embeddings"),
+  private def xMmr(s: SparkSession, d: String): DataFrame =
+    mmrRerank(queriesSide(s, d), t(s, d, "embeddings"),
       k = 5, shortlist = 8, lambda10 = 7)
-    graft.io.Scratch.stageAndRelease(out, release, "x_mmr")
-  }
 
   /** MMR composed with the STAGED ANN serving stack (the production
     * shape — the shortlist comes from IVF-PQ-R, not a corpus scan):
@@ -1623,10 +1588,8 @@ object Similarity {
   private def xMmrIvf(s: SparkSession, d: String): DataFrame = {
     val sl = refineRerank(ivfPqTopKStaged(s, d, 10, nprobe = 6),
       queriesSide(s, d), t(s, d, "embeddings"), 8)
-    val (out, release) = mmrRerankShortlistReleasable(
-      sl, queriesSide(s, d), t(s, d, "embeddings"),
+    mmrRerankShortlist(sl, queriesSide(s, d), t(s, d, "embeddings"),
       k = 5, lambda10 = 7)
-    graft.io.Scratch.stageAndRelease(out, release, "x_mmr_ivf")
   }
 
   /** kNN label vote: majority label of the 5 nearest neighbors,

@@ -284,10 +284,10 @@ object TextOps {
     // over the bigram stream's own (w1, w2) partitioning — identical
     // c2 per row (one row per bigram occurrence either way) without
     // re-deriving the stream into a separate aggregate + join back.
-    val uni = graft.io.Scratch.stageAndRelease(
+    val uni = graft.io.Scratch.stage(
       toks.select(explode(col("tok")).as("w1"))
         .groupBy("w1").agg(count(lit(1)).as("c1")),
-      () => (), "lm_uni")
+      "lm_uni")
     val vocab = broadcast(uni.agg(count(lit(1)).as("v")))
     val scored = bigrams
       .withColumn("c2", count(lit(1)).over(
@@ -730,14 +730,11 @@ object TextOps {
       minPairCount: Long = 2L,
       carryForwardThreshold: Int = 16): Seq[(String, String, Long)] = {
     import org.apache.spark.storage.StorageLevel
-    val spark = words.sparkSession
-    def truncated(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
     val out = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
     // char-seeded fixpoint under zero merges = the code-point split
-    val base = truncated(words.groupBy(col(wordCol).as("w"))
-        .agg(count(lit(1)).as("n"))
-        .select(bpeMerge(col("w"), Nil).as("t"), col("n")))
+    val base = graft.io.Scratch.truncate(
+        words.groupBy(col(wordCol).as("w")).agg(count(lit(1)).as("n"))
+          .select(bpeMerge(col("w"), Nil).as("t"), col("n")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // Carry the tokenized vocab forward only when the merge count
     // amortizes the fixed per-round persist+truncate+materialize cost:
@@ -766,13 +763,11 @@ object TextOps {
             best(0).getLong(2)))
           if (carry) {
             val prev = toks
-            toks = truncated(prev.select(
-                graft.functions.BpeEncode.ofTokens(col("t"),
-                  out.toSeq.map(m => (m._1, m._2))).as("t"), col("n")))
-              .persist(StorageLevel.MEMORY_AND_DISK)
-            // materialize the new state before releasing the old one
-            // so the carried chain never recomputes
-            toks.count()
+            // materialized before the old state is released, so the
+            // carried chain never recomputes
+            toks = graft.io.Scratch.cut(prev.select(
+              graft.functions.BpeEncode.ofTokens(col("t"),
+                out.toSeq.map(m => (m._1, m._2))).as("t"), col("n")))
             if (!(prev eq base)) prev.unpersist()
           } else
             toks = base.select(

@@ -50,4 +50,27 @@ class ResidueSpec extends AnyFunSuite {
   test("wg_neighborhood leaves the persisted-RDD census flat") {
     flatAcrossTwoRuns("wg_neighborhood")
   }
+
+  test("wg_kcore leaves the persisted-RDD census flat") {
+    flatAcrossTwoRuns("wg_kcore")
+  }
+
+  test("Dedup.dupClusters called as a library leaves the persisted-RDD " +
+    "census flat") {
+    val s = spark
+    import s.implicits._
+    val docs = (0L to 9L).toDF("doc_id")
+    val pairs = Seq((0L, 1L), (1L, 2L), (5L, 6L)).toDF("doc_a", "doc_b")
+    def run(): Unit = {
+      graft.dedup.Dedup.dupClusters(docs, "doc_id", pairs,
+        "doc_a", "doc_b").count()
+      ()
+    }
+    run()
+    val afterFirst = census
+    run()
+    assert(census == afterFirst,
+      "dupClusters grew the persisted-RDD census on a repeat call: " +
+        s"+${(census -- afterFirst).size}")
+  }
 }

@@ -272,10 +272,13 @@ class DedupSpec extends AnyFunSuite {
   test("connected components: maxIter too small fails loudly") {
     val nodes = (0L to 9L).toDF("doc_id")
     val chain = (0L to 8L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     intercept[IllegalArgumentException] {
       Dedup.connectedComponents(nodes, "doc_id", chain,
         "doc_a", "doc_b", maxIter = 2)
     }
+    // the failed guard releases the label state and edge list
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before)
   }
 
   test("connected components: every-2nd-round convergence check " +

@@ -59,9 +59,12 @@ class WebGraphSpec extends AnyFunSuite {
     val nodes = Seq(0, 1, 2).toDF("node")
     val edges = Seq((0, 1, 10L), (0, 2, 10L), (1, 9, 20L))
       .toDF("src", "dst", "m")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val e = intercept[IllegalArgumentException](
       WebGraph.pagerankExact(nodes, edges, iters = 1))
     assert(e.getMessage.contains("not in the node set"))
+    // the failed guard releases the edge list and node set it cached
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before)
   }
 
   test("degraded corpus (missing residues) still runs; teleport floor") {
@@ -143,12 +146,10 @@ class WebGraphSpec extends AnyFunSuite {
     // 0→1→2→3: closed reach grows one node per hop until the end
     val nodes = Seq(0, 1, 2, 3).toDF("node")
     val e = Seq((0, 1), (1, 2), (2, 3)).toDF("src", "dst")
-    val (nf, release) =
-      WebGraph.neighborhoodExactReleasable(nodes, e, 3)
+    val nf = WebGraph.neighborhoodExact(nodes, e, 3)
     val m = nf.select("node", "n1", "n2", "n3")
       .as[(Int, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    release()
     assert(m == Map(
       0 -> ((2L, 3L, 4L)), 1 -> ((2L, 3L, 3L)),
       2 -> ((2L, 2L, 2L)), 3 -> ((1L, 1L, 1L))))
@@ -158,11 +159,9 @@ class WebGraphSpec extends AnyFunSuite {
     "n1 = 1 + out-degree on the simple domain graph") {
     val nodes = WebGraph.domainNodes(fullDocs)
     val edges = WebGraph.domainEdges(nodes).select("src", "dst")
-    val (nf, release) =
-      WebGraph.neighborhoodExactReleasable(nodes, edges, 3)
+    val nf = WebGraph.neighborhoodExact(nodes, edges, 3)
     val rows = nf.select("node", "n1", "n2", "n3")
       .as[(Int, Long, Long, Long)].collect()
-    release()
     assert(rows.length == 50)
     rows.foreach { case (node, n1, n2, n3) =>
       assert(n1 <= n2 && n2 <= n3 && n3 <= 50,
@@ -178,15 +177,11 @@ class WebGraphSpec extends AnyFunSuite {
   }
 
   private def kcore(nodes: Seq[Int], und: Seq[(Int, Int)], k: Int,
-      rounds: Int): Map[Int, (Int, Long)] = {
-    val (core, release) = WebGraph.kCoreReleasable(
-      nodes.toDF("node"), und.toDF("u", "v"), k, rounds)
-    val m = core.select("node", "in_core", "core_deg")
+      rounds: Int): Map[Int, (Int, Long)] =
+    WebGraph.kCore(nodes.toDF("node"), und.toDF("u", "v"), k, rounds)
+      .select("node", "in_core", "core_deg")
       .as[(Int, Int, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
-    release()
-    m
-  }
 
   test("k-core: K4 with a pendant tail — 3-core keeps exactly the K4") {
     val und = Seq((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
@@ -211,15 +206,11 @@ class WebGraphSpec extends AnyFunSuite {
     "non-trivial core (dense half survives, sparse interior peels)") {
     val nodes = WebGraph.domainNodes(fullDocs)
     val und = WebGraph.undirectedEdges(WebGraph.kcoreEdges(nodes))
-    def run(r: Int): Map[Int, (Int, Long)] = {
-      val (core, release) = WebGraph.kCoreReleasable(nodes, und,
-        WebGraph.KCoreK, r)
-      val m = core.select("node", "in_core", "core_deg")
+    def run(r: Int): Map[Int, (Int, Long)] =
+      WebGraph.kCore(nodes, und, WebGraph.KCoreK, r)
+        .select("node", "in_core", "core_deg")
         .as[(Int, Int, Long)].collect()
         .map(x => x._1 -> ((x._2, x._3))).toMap
-      release()
-      m
-    }
     val atR = run(WebGraph.KCoreRounds)
     assert(atR == run(WebGraph.KCoreRounds + 1),
       "peeling had not reached its fixpoint at KCoreRounds")
@@ -238,16 +229,12 @@ class WebGraphSpec extends AnyFunSuite {
     "sparse-mode sketches are exact at domain-graph cardinalities") {
     val nodes = WebGraph.domainNodes(fullDocs)
     val edges = WebGraph.domainEdges(nodes).select("src", "dst")
-    val (ex, relEx) =
-      WebGraph.neighborhoodExactReleasable(nodes, edges, 3)
-    val exact = ex.select("node", "n1", "n2", "n3")
+    val exact = WebGraph.neighborhoodExact(nodes, edges, 3)
+      .select("node", "n1", "n2", "n3")
       .as[(Int, Long, Long, Long)].collect().toSet
-    relEx()
-    val (hll, relHll) =
-      WebGraph.neighborhoodHllReleasable(nodes, edges, 3)
-    val approx = hll.select("node", "n1", "n2", "n3")
+    val approx = WebGraph.neighborhoodHll(nodes, edges, 3)
+      .select("node", "n1", "n2", "n3")
       .as[(Int, Long, Long, Long)].collect().toSet
-    relHll()
     assert(approx == exact)
   }
 }
