@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.GraftSparkBridge
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution,
@@ -13,7 +14,9 @@ import org.apache.spark.sql.execution.{FormattedMode, QueryExecution,
   *  1. the Spark job count of a WARM run (one untimed warmup run first,
   *     so plans and codegen compile outside the counted run); every
   *     convergence or materialization action is at least one job, so
-  *     this is the loop-barrier evidence;
+  *     this is the loop-barrier evidence. Next to it, the classes the
+  *     warm run compiled (Spark's `CodegenMetrics`): the ones the
+  *     generated-class cache did not hold;
   *  2. the AQE plan after that run, whose formatted explain shows both
   *     the Final Plan (runtime join rewrites, coalesced shuffles) and
   *     the Initial Plan;
@@ -22,7 +25,9 @@ import org.apache.spark.sql.execution.{FormattedMode, QueryExecution,
   *     WholeStageCodegen-span evidence needs a plan planned with AQE
   *     off (codegen collapse is orthogonal to AQE).
   * Usage: graft.Profile <sfDir> <outDir> [gates,csv] — every registry
-  * gate when no list is given. */
+  * gate when no list is given. The last line printed is the classes
+  * compiled over the whole run: the working set of the generated-class
+  * cache while it evicts nothing. */
 object Profile {
   def main(args: Array[String]): Unit = {
     require(args.length == 2 || args.length == 3,
@@ -39,6 +44,7 @@ object Profile {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger(0)
@@ -58,13 +64,18 @@ object Profile {
       GraftSparkBridge.drainListenerBus(spark.sparkContext)
       jobs.get()
     }
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compiles0 = compiles()
 
     Files.createDirectories(outDir)
     names.foreach { g =>
       run(g)
       val before = jobsSoFar()
-      val aqe = run(g).explainString(FormattedMode)
+      val compiledBefore = compiles()
+      val qe = run(g)
       val n = jobsSoFar() - before
+      val compiled = compiles() - compiledBefore
+      val aqe = qe.explainString(FormattedMode)
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       val noAqe =
         try queries(g)(spark, sfDir).queryExecution
@@ -72,10 +83,12 @@ object Profile {
         finally spark.conf.set("spark.sql.adaptive.enabled", "true")
       Files.writeString(outDir.resolve(s"$g.txt"),
         s"# $g on $sfDir\n\n== Jobs (warm run) ==\n$n\n\n" +
+          s"== Codegen compiles (warm run) ==\n$compiled\n\n" +
           s"== AQE plan after the warm run ==\n$aqe\n" +
           s"== Non-adaptive plan ==\n$noAqe")
-      println(s"jobs $g $n")
+      println(s"jobs $g $n compiles $compiled")
     }
+    println(s"compiles total ${compiles() - compiles0}")
     spark.stop()
   }
 }

@@ -56,6 +56,7 @@ object CorpusBuild {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (warcMode) {

@@ -27,6 +27,7 @@ object Pipeline {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", s"$whDir/catalog")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, sfDir, whDir)
@@ -72,13 +73,16 @@ object Pipeline {
       .drop("violated_rules")
     // samples that are genuinely new THIS cycle — captured before the
     // append makes them "loaded" (drives the partition-scoped tpm2
-    // refresh below); sample counts are bounded (SURVEY §1.1), so the
-    // persisted set is control-plane sized
+    // refresh and the compaction below); sample counts are bounded
+    // (SURVEY §1.1), so the staged set is control-plane sized. Staged,
+    // not persisted: the append below writes to the path this set
+    // reads, which makes Spark rebuild a cached frame over it as
+    // "rows not yet loaded", i.e. empty
     val newFacts = graft.ingest.Incremental.newRows(facts,
       graft.ingest.Incremental.loadedKeys(
         spark, s"$whDir/lineitem_inc", "sample"), "sample")
-    val freshSamples = newFacts
-      .select("sample").distinct().persist()
+    val freshSamples = graft.io.Scratch.stage(
+      newFacts.select("sample").distinct(), "fresh_samples")
     val nFreshSamples = freshSamples.count()
 
     // 1x. mix-drift monitor (publish-gate companion, BEFORE anything
@@ -207,7 +211,6 @@ object Pipeline {
       println(s"[pipeline] tpm2: refreshed $nFreshSamples sample " +
         "partitions")
     } else println("[pipeline] tpm2: no new samples, artifact untouched")
-    freshSamples.unpersist()
 
     // 4a. shuffle pre-flight (the f_skew_report / f_join_cardinality
     //     diagnostics as a pipeline stage, quarantine-precedent shape):

@@ -47,6 +47,25 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("gc_content"))
   }
 
+  test("a repeated query finds its generated classes in the cache") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // 150 distinct plans (the literal is inlined into the generated
+    // source), each compiling in both driver and executor class
+    // loaders: more than Spark's default of 100 cache entries
+    def round(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      (1 to 150).foreach { i =>
+        spark.range(3).selectExpr(s"id * $i + $i AS v").collect()
+      }
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val first = round()
+    val second = round()
+    assert(first >= 150, s"first round compiled only $first classes")
+    assert(second <= first / 20,
+      s"second round compiled $second classes (first: $first)")
+  }
+
   test("DESCRIBE FUNCTION shows the injected usage text") {
     val desc = spark.sql("DESCRIBE FUNCTION gc_content")
       .collect().map(_.getString(0)).mkString("\n")

@@ -36,6 +36,40 @@ class PipelineSpec extends AnyFunSuite {
     assert(after("999") == "SKIP")        // skip survived
   }
 
+  test("tpm2 built over two batches of disjoint samples equals the " +
+    "one-shot TPM over both") {
+    import org.apache.spark.sql.functions._
+    // two batch dirs: lineitem split by l_suppkey (the sample key) into
+    // disjoint halves, every other table linked from sf0.001
+    def batch(keep: org.apache.spark.sql.Column): String = {
+      val dir = Files.createTempDirectory("graft_batch_sf").toString
+      graft.Tables.names.filterNot(_ == "lineitem").foreach { n =>
+        Files.createSymbolicLink(
+          java.nio.file.Paths.get(s"$dir/$n.parquet"),
+          java.nio.file.Paths.get(s"${TestSpark.sf0001}/$n.parquet"))
+      }
+      graft.Tables.t(spark, TestSpark.sf0001, "lineitem").filter(keep)
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$dir/lineitem.parquet")
+      dir
+    }
+    val b0 = batch(col("l_suppkey") % 2 === 0)
+    val b1 = batch(col("l_suppkey") % 2 === 1)
+    val wh = Files.createTempDirectory("graft_pipe_batches").toString
+    Pipeline.run(spark, b0, wh)
+    Pipeline.run(spark, b1, wh)
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("sample").cast("long"), col("target").cast("long"),
+        col("n_aligned"), col("rpkm"), col("tpm"))
+    val built = rows(spark.read.parquet(s"$wh/tpm2"))
+    val oneShot = rows(graft.ops.Abundance.tpm(spark, TestSpark.sf0001))
+    assert(built.select("sample").distinct().count() ==
+      oneShot.select("sample").distinct().count())
+    assert(built.exceptAll(oneShot).isEmpty)
+    assert(oneShot.exceptAll(built).isEmpty)
+  }
+
   test("join pre-flight vetoes a planted hot key before the star " +
     "join shuffles") {
     import org.apache.spark.sql.functions._
