@@ -1594,7 +1594,25 @@ object Dedup {
     * SNM + prefix replay fully in SQL; LSH candidates replay from the
     * d_minhash_signature dump via band-slice equality, SimHash
     * candidates from the d_simhash dump via chunk equality (the
-    * d_minhash_lsh_pairs conditioning). */
+    * d_minhash_lsh_pairs conditioning).
+    *
+    * Each method is graded as its OWN one-row query, the four run
+    * concurrently (`concurrently`), and the gate returns the four
+    * collected rows in method order. The former 4-way union was one
+    * ~360-node plan that ran ~25 mostly 1-task jobs one after the
+    * other (core busy share 0.15–0.23 at scale 0.01), and AQE
+    * re-planned all of it at every stage completion. AQE also numbers
+    * the whole-stage-codegen stages of a plan from one counter, in
+    * the order its query stages are created, and every generated
+    * class carries its `codegenStageId` in the source; the union's
+    * stages finished in a different order each run, so the ids, the
+    * codegen cache keys and the classes changed each run (14–64
+    * compiles per warm pass, 1.2–1.8 s of compile time, while the
+    * other curation gates compile nothing from their second warm pass
+    * on). Small plans leave few stages to renumber, and the four run
+    * side by side: on 4 vCPUs at scale 0.01 the curation benchmark's warm pass
+    * fell 6.82 → 5.52 s (medians of 10 pairs) and its traced compiles
+    * 49.5 → 18 per warm pass. */
   private def dBlockingMethods(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
     val blocks = Seq("lang", "source")
@@ -1612,27 +1630,67 @@ object Dedup {
       jaccardPairsFromSized(grams, blocks)
         .filter(col("jac") >= 0.2).select("doc_a", "doc_b"),
       "d_blocking_truth")
-    val methods = Seq(
+    val methods: Seq[(String, () => DataFrame)] = Seq(
       // the two sketch blockers stage their per-doc signature tables
       // (r18, stageSigs): inside this gate each blocker's bucket
       // self-join would otherwise hash the corpus once per side
-      "minhash_lsh" -> minhashCandidatePairs(docs, "doc_id", "text",
-          numHashes = 16, bands = 4, maxBucketSize = Int.MaxValue,
-          stageSigs = true)
-        .select("doc_a", "doc_b"),
-      "prefix_filter" -> candFromRanked(
-          prefixRankedFromExploded(grams, 0.2, blocks), blocks)
-        .select("doc_a", "doc_b"),
-      "simhash_bands" -> simhashBandCandidates(docs, "doc_id", "text",
-          maxBucketSize = Int.MaxValue, stageSigs = true)
-        .select("doc_a", "doc_b"),
-      "snm_w5" -> snmPairsImpl(docs, "doc_id", "text", 5, blocks, 3,
-          Some(grams)).select("doc_a", "doc_b"))
-    methods.map { case (name, cand) =>
-      blockingQuality(truth, cand, Seq("doc_a", "doc_b"))
-        .select(lit(name).as("method"), col("n_truth"), col("n_cand"),
-          col("n_hit"), col("recall"), col("precision"))
-    }.reduce(_.unionByName(_))
+      "minhash_lsh" -> (() => minhashCandidatePairs(docs, "doc_id",
+          "text", numHashes = 16, bands = 4,
+          maxBucketSize = Int.MaxValue, stageSigs = true)),
+      "prefix_filter" -> (() => candFromRanked(
+          prefixRankedFromExploded(grams, 0.2, blocks), blocks)),
+      "simhash_bands" -> (() => simhashBandCandidates(docs, "doc_id",
+          "text", maxBucketSize = Int.MaxValue, stageSigs = true)),
+      "snm_w5" -> (() => snmPairsImpl(docs, "doc_id", "text", 5,
+          blocks, 3, Some(grams))))
+    // each branch builds its candidates (and their staging) and
+    // collects its grade: a global aggregate, so exactly one row
+    val graded = concurrently(s, methods.map { case (name, cand) =>
+      () => {
+        val q = blockingQuality(truth, cand().select("doc_a", "doc_b"),
+          Seq("doc_a", "doc_b"))
+          .select(lit(name).as("method"), col("n_truth"),
+            col("n_cand"), col("n_hit"), col("recall"), col("precision"))
+        (q.schema, q.collect())
+      }
+    })
+    s.createDataFrame(java.util.Arrays.asList(graded.flatMap(_._2): _*),
+      graded.head._1)
+  }
+
+  /** Runs each thunk on its own thread of a pool sized to the branch
+    * count and returns the results in branch order. Each branch runs
+    * through `SQLExecution.withThreadLocalCaptured`, so it sees the
+    * caller's active session (and its SQL conf) and the caller's
+    * SparkContext local properties: job group, scheduler pool and any
+    * tag a harness files jobs under. If a branch fails, rethrows the
+    * first failed branch's own exception (in branch order; not the
+    * `CompletionException` wrapper). Either way the pool is shut down
+    * and all of its threads have ended before this returns. */
+  private[dedup] def concurrently[T](s: SparkSession,
+      branches: Seq[() => T]): Seq[T] = {
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      branches.size, { (r: Runnable) =>
+        val th = new Thread(r, "graft-concurrently")
+        th.setDaemon(true)
+        threads.add(th)
+        th
+      })
+    try {
+      val session = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val futures = branches.map(b => org.apache.spark.sql.execution
+        .SQLExecution.withThreadLocalCaptured(session, pool)(b()))
+      futures.map { f =>
+        try f.join() catch {
+          case e: java.util.concurrent.CompletionException
+              if e.getCause != null => throw e.getCause
+        }
+      }
+    } finally {
+      pool.shutdown()
+      threads.forEach(_.join())
+    }
   }
 
   /** Winnow matches at minShared=1 within (lang, source) blocks (any

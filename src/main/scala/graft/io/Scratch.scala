@@ -32,11 +32,14 @@ object Scratch {
     * `df` reads as soon as this returns, which keeps
     * `sparkContext.getPersistentRDDs` FLAT across repeated calls
     * (the r12 bench residue signature was +2 persistent RDDs per
-    * full-suite pass). */
+    * full-suite pass). The read-back reuses the written schema, so it
+    * launches no parquet footer schema-inference job; a file read
+    * makes every column nullable either way, so the frame's schema is
+    * the one inference would give. */
   def stage(df: DataFrame, tag: String): DataFrame = {
     val p = path(tag).toString
     df.write.mode("overwrite").parquet(p)
-    df.sparkSession.read.parquet(p)
+    df.sparkSession.read.schema(df.schema).parquet(p)
   }
 
   /** `df` rebuilt from its RDD: the logical plan becomes one scan of

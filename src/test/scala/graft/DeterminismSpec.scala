@@ -14,11 +14,16 @@ class DeterminismSpec extends AnyFunSuite {
 
   test("every gate query is shuffle-partitioning-invariant at sf0.001") {
     val d = TestSpark.sf0001
+    val confBefore = spark.conf.getAll
+    // restores the session's own value: unsetting would fall back to
+    // Spark's default of 200, not the shared test session's 4, for
+    // every suite that runs after this one
     def runAt(name: String, parts: String): Seq[String] = {
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       try SparkEntry.queries(name)(spark, d).collect()
         .map(_.toString).sorted.toSeq
-      finally spark.conf.unset("spark.sql.shuffle.partitions")
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
     val failures = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
       val a = runAt(name, "3")
@@ -28,5 +33,6 @@ class DeterminismSpec extends AnyFunSuite {
     }
     assert(failures.isEmpty,
       s"partitioning-dependent results:\n${failures.mkString("\n")}")
+    assert(spark.conf.getAll == confBefore)
   }
 }
