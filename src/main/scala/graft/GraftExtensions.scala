@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.internal.SQLConf
@@ -15,9 +16,11 @@ import org.apache.spark.sql.internal.SQLConf
   * or `SparkSession.builder().withExtensions(new GraftExtensions)`.
   *
   * Injected functions: gc_content, dot_product, simhash64,
-  * minhash_sig, token_ngrams, ngram_stats. (The LCA Aggregator registers per
-  * session via `tax.Lca.register` — UDAFs go through the UDF registry,
-  * not the extension function injector.)
+  * minhash_sig, token_ngrams, ngram_stats and the theta family. (The
+  * LCA Aggregator registers per session via `tax.Lca.register` — UDAFs
+  * go through the UDF registry, not the extension function injector.)
+  * A gate whose SQL names them calls `GraftExtensions.install`, so it
+  * also runs in a session built without the extension.
   *
   * No planner rules or strategies are injected by design: SURVEY §4's
   * finding is that Catalyst's built-in optimizations cover the
@@ -30,85 +33,77 @@ import org.apache.spark.sql.internal.SQLConf
   * a long-lived session find their generated classes already compiled.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "",
-      "", "built-in")
-
-  /** Arity guard: a wrong argument count must fail analysis with a
-    * clear message — not IndexOutOfBounds (too few) or silently ignored
-    * arguments producing plausible wrong results (too many). */
-  private def arity(name: String, n: Int)(
-      build: Seq[Expression] => Expression)
-      : Seq[Expression] => Expression = { exprs =>
-    if (exprs.length != n)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> name,
-          "expectedNum" -> n.toString,
-          "actualNum" -> exprs.length.toString,
-          "docroot" -> ""))
-    build(exprs)
-  }
-
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.sizeCodegenCache()
-    e.injectFunction((FunctionIdentifier("gc_content"),
-      info("gc_content", "gc_content(seq) - GC% of a sequence"),
-      arity("gc_content", 1)(exprs => functions.GcContent(exprs.head))))
-    e.injectFunction((FunctionIdentifier("dot_product"),
-      info("dot_product", "dot_product(a, b) - numeric-array dot product"),
-      arity("dot_product", 2)(exprs =>
-        functions.DotProduct(exprs(0), exprs(1)))))
-    e.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(tokens) - 64-bit SimHash sketch"),
-      arity("simhash64", 1)(exprs => functions.SimHash64(exprs.head))))
-    e.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig",
-        "minhash_sig(norm_text) - 16-permutation MinHash signature"),
-      arity("minhash_sig", 1)(exprs =>
-        functions.MinHashSig(exprs.head, 16, 5))))
-    e.injectFunction((FunctionIdentifier("token_ngrams"),
-      info("token_ngrams",
-        "token_ngrams(tokens) - distinct token trigrams"),
-      arity("token_ngrams", 1)(exprs =>
-        functions.TokenNgrams(exprs.head, 3))))
-    e.injectFunction((FunctionIdentifier("ngram_stats"),
-      info("ngram_stats",
-        "ngram_stats(tokens) - (n_grams, top_count) bigram histogram " +
-          "stats"),
-      arity("ngram_stats", 1)(exprs =>
-        functions.NgramStats(exprs.head, 2))))
-    e.injectFunction((FunctionIdentifier("theta_sketch"),
-      info("theta_sketch",
-        "theta_sketch(key) - distinct-set theta sketch aggregate"),
-      arity("theta_sketch", 1)(exprs =>
-        functions.ThetaSketchAgg(exprs.head,
-          functions.ThetaSketch.DefaultLgK))))
-    e.injectFunction((FunctionIdentifier("theta_estimate"),
-      info("theta_estimate",
-        "theta_estimate(sketch) - rounded distinct estimate"),
-      arity("theta_estimate", 1)(exprs =>
-        functions.ThetaEstimate(exprs.head))))
-    e.injectFunction((FunctionIdentifier("theta_union"),
-      info("theta_union", "theta_union(a, b) - sketch set union"),
-      arity("theta_union", 2)(exprs => functions.ThetaSetOp(
-        exprs(0), exprs(1), functions.ThetaSetOp.UnionOp))))
-    e.injectFunction((FunctionIdentifier("theta_intersect"),
-      info("theta_intersect",
-        "theta_intersect(a, b) - sketch set intersection"),
-      arity("theta_intersect", 2)(exprs => functions.ThetaSetOp(
-        exprs(0), exprs(1), functions.ThetaSetOp.IntersectOp))))
-    e.injectFunction((FunctionIdentifier("theta_anotb"),
-      info("theta_anotb",
-        "theta_anotb(a, b) - sketch set difference (A and not B)"),
-      arity("theta_anotb", 2)(exprs => functions.ThetaSetOp(
-        exprs(0), exprs(1), functions.ThetaSetOp.AnotbOp))))
+    GraftExtensions.natives.foreach(e.injectFunction)
   }
 }
 
 object GraftExtensions {
+
+  private def native(name: String, usage: String, n: Int)(
+      build: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo("graft", null, name, usage, "", "", "", "", "",
+        "", "built-in"),
+      // a wrong argument count must fail analysis with a clear message,
+      // not IndexOutOfBounds or silently ignored arguments
+      exprs => { functions.Arity.check(name, n, exprs); build(exprs) })
+
+  /** The native functions the installer injects. */
+  private val natives = Seq(
+    native("gc_content", "gc_content(seq) - GC% of a sequence", 1)(
+      exprs => functions.GcContent(exprs.head)),
+    native("dot_product", "dot_product(a, b) - numeric-array dot product",
+      2)(exprs => functions.DotProduct(exprs(0), exprs(1))),
+    native("simhash64", "simhash64(tokens) - 64-bit SimHash sketch", 1)(
+      exprs => functions.SimHash64(exprs.head)),
+    native("minhash_sig",
+      "minhash_sig(norm_text) - 16-permutation MinHash signature", 1)(
+      exprs => functions.MinHashSig(exprs.head, 16, 5)),
+    native("token_ngrams",
+      "token_ngrams(tokens) - distinct token trigrams", 1)(
+      exprs => functions.TokenNgrams(exprs.head, 3)),
+    native("ngram_stats",
+      "ngram_stats(tokens) - (n_grams, top_count) bigram histogram stats",
+      1)(exprs => functions.NgramStats(exprs.head, 2)),
+    native("theta_sketch",
+      "theta_sketch(key) - distinct-set theta sketch aggregate", 1)(
+      exprs => functions.ThetaSketchAgg(exprs.head,
+        functions.ThetaSketch.DefaultLgK)),
+    native("theta_estimate",
+      "theta_estimate(sketch) - rounded distinct estimate", 1)(
+      exprs => functions.ThetaEstimate(exprs.head)),
+    native("theta_union", "theta_union(a, b) - sketch set union", 2)(
+      exprs => functions.ThetaSetOp(exprs(0), exprs(1),
+        functions.ThetaSetOp.UnionOp)),
+    native("theta_intersect",
+      "theta_intersect(a, b) - sketch set intersection", 2)(
+      exprs => functions.ThetaSetOp(exprs(0), exprs(1),
+        functions.ThetaSetOp.IntersectOp)),
+    native("theta_anotb",
+      "theta_anotb(a, b) - sketch set difference (A and not B)", 2)(
+      exprs => functions.ThetaSetOp(exprs(0), exprs(1),
+        functions.ThetaSetOp.AnotbOp)))
+
+  /** Give `spark` every native function plus the `top_k3` UDAF
+    * (`ops.TopK.udafTopK`), skipping each name whose registry entry is
+    * already the engine's: a no-op in a session built through the
+    * extension (bar the UDAF's first call), and what a session built
+    * without it needs before a gate's SQL names these functions.
+    * Re-registering on every call would replace the function each
+    * time. The check is on the entry, not the name: Spark ships a
+    * `theta_union` of its own, which the engine's replaces. */
+  def install(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    natives.foreach { case (id, info, build) =>
+      if (!reg.lookupFunction(id).contains(info))
+        reg.registerFunction(id, info, build)
+    }
+    if (!reg.functionExists(FunctionIdentifier("top_k3")))
+      spark.udf.register("top_k3", ops.TopK.udafTopK(3))
+  }
 
   /** Entries of Spark's generated-class cache (`CodeGenerator`'s LRU of
     * compiled classes, keyed by class loader and source text; Spark's

@@ -67,7 +67,7 @@ object CorpusBuild {
   }
 
   def run(spark: SparkSession, sfDir: String, whDir: String): Unit =
-    runBatch(spark, graft.Tables.t(spark, sfDir, "documents"), whDir)
+    runBatch(spark, graft.io.Inputs.t(spark, sfDir, "documents"), whDir)
 
   /** The raw-crawl source boundary: a directory of WARC/WET members →
     * the documents-shaped batch frame `runBatch` curates. Two record

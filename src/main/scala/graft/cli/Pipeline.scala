@@ -59,7 +59,7 @@ object Pipeline {
     //    on. The reference's embedded checks abort the whole load; the
     //    quarantine form keeps the good rows moving, which is what a
     //    nightly at scale actually wants.
-    val rawFacts = graft.Tables.t(spark, sfDir, "lineitem")
+    val rawFacts = graft.io.Inputs.t(spark, sfDir, "lineitem")
       .withColumn("sample", col("l_suppkey"))
     val marked = graft.ops.Expectations.mark(rawFacts, publishRules)
     graft.io.Writers.overwriteStaged(
@@ -190,7 +190,7 @@ object Pipeline {
     Seq("part", "supplier", "customer", "nation", "region")
       .foreach { n =>
         graft.io.Writers.createView(
-          graft.Tables.t(spark, sfDir, n), s"dim_$n")
+          graft.io.Inputs.t(spark, sfDir, n), s"dim_$n")
       }
 
     // 3. derived table: TPM → partitioned parquet (the tpm2 analog).

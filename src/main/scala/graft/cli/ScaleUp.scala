@@ -161,7 +161,7 @@ object ScaleUp {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.Tables.names.foreach { name =>
-      val src = graft.Tables.t(spark, srcDir, name)
+      val src = graft.io.Inputs.t(spark, srcDir, name)
       // emit ONE file per table, exactly the driver-testdata layout —
       // consumers treat `$dir/$name.parquet` as a plain file (the
       // streaming gates Files.copy it; the fs-catalog gates stat it),

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Gate
-import graft.Tables.t
+import graft.io.Inputs.t
 import graft.text.TextOps
 
 /** Deduplication operators for a training-data pipeline: exact,
@@ -1292,9 +1292,10 @@ object Dedup {
       pairs: DataFrame, aCol: String, bCol: String, path: String,
       maxIter: Int = 20,
       checkpointEvery: Option[Int] = None): DataFrame = {
-    graft.io.Writers.overwriteStaged(dupClusters(docs, idCol, pairs,
-      aCol, bCol, maxIter, checkpointEvery), path)
-    docs.sparkSession.read.parquet(path)
+    val clusters = dupClusters(docs, idCol, pairs, aCol, bCol, maxIter,
+      checkpointEvery)
+    graft.io.Writers.overwriteStaged(clusters, path)
+    docs.sparkSession.read.schema(clusters.schema).parquet(path)
   }
 
   // ---- gate queries ----
@@ -1508,7 +1509,7 @@ object Dedup {
           spanLen = 25, hashWindows = false), dir)
       dir
     })
-    s.read.parquet(path)
+    graft.io.Inputs.parquet(s, path)
   }
 
   /** Repeated-substring span accounting over the documents corpus —

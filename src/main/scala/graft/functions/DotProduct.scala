@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -100,13 +99,4 @@ case class DotProduct(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression,
       r: Expression): DotProduct = copy(left = l, right = r)
-}
-
-object DotProduct {
-  /** SQL registration: `SELECT dot_product(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      exprs => { Arity.check("dot_product", 2, exprs)
-        DotProduct(exprs(0), exprs(1)) }, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
@@ -73,15 +72,4 @@ case class GcContent(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(c: Expression): GcContent =
     copy(child = c)
-}
-
-object GcContent {
-  /** SQL registration: `SELECT gc_content(seq) ...`. The function
-    * registry route works across Spark 4's Column/Expression split
-    * without touching classic internals. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gc_content",
-      exprs => { Arity.check("gc_content", 1, exprs)
-        GcContent(exprs.head) }, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Murmur3HashFunction, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -91,13 +90,4 @@ case class MinHashSig(child: Expression, numHashes: Int, k: Int)
 
   override protected def withNewChildInternal(c: Expression): MinHashSig =
     copy(child = c)
-}
-
-object MinHashSig {
-  def register(spark: SparkSession, numHashes: Int = 16,
-      k: Int = 5): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      exprs => { Arity.check("minhash_sig", 1, exprs)
-        MinHashSig(exprs.head, numHashes, k) }, "built-in")
 }

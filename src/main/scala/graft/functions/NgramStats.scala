@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -70,12 +69,4 @@ case class NgramStats(child: Expression, n: Int)
 
   override protected def withNewChildInternal(c: Expression): NgramStats =
     copy(child = c)
-}
-
-object NgramStats {
-  def register(spark: SparkSession, n: Int = 2): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_stats",
-      exprs => { Arity.check("ngram_stats", 1, exprs)
-        NgramStats(exprs.head, n) }, "built-in")
 }

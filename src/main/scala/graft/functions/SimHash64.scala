@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -56,12 +55,4 @@ case class SimHash64(child: Expression) extends UnaryExpression
 
   override protected def withNewChildInternal(c: Expression): SimHash64 =
     copy(child = c)
-}
-
-object SimHash64 {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64",
-      exprs => { Arity.check("simhash64", 1, exprs)
-        SimHash64(exprs.head) }, "built-in")
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.theta.{SetOperation, Sketch, Sketches, Union}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -44,28 +43,6 @@ object ThetaSketch {
 
   private[functions] def heapify(bytes: Array[Byte]): Sketch =
     Sketches.heapifySketch(Memory.wrap(bytes))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("theta_sketch",
-      exprs => { Arity.check("theta_sketch", 1, exprs)
-        ThetaSketchAgg(exprs.head, DefaultLgK) }, "built-in")
-    reg.createOrReplaceTempFunction("theta_estimate",
-      exprs => { Arity.check("theta_estimate", 1, exprs)
-        ThetaEstimate(exprs.head) }, "built-in")
-    reg.createOrReplaceTempFunction("theta_union",
-      exprs => { Arity.check("theta_union", 2, exprs)
-        ThetaSetOp(exprs(0), exprs(1), ThetaSetOp.UnionOp) },
-      "built-in")
-    reg.createOrReplaceTempFunction("theta_intersect",
-      exprs => { Arity.check("theta_intersect", 2, exprs)
-        ThetaSetOp(exprs(0), exprs(1), ThetaSetOp.IntersectOp) },
-      "built-in")
-    reg.createOrReplaceTempFunction("theta_anotb",
-      exprs => { Arity.check("theta_anotb", 2, exprs)
-        ThetaSetOp(exprs(0), exprs(1), ThetaSetOp.AnotbOp) },
-      "built-in")
-  }
 }
 
 /** Aggregate: theta sketch of a LONG key column. Buffer = the heap

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -61,10 +60,4 @@ object TokenNgrams {
     GraftColumnBridge.column(
       TokenNgrams(GraftColumnBridge.expression(tok), n))
   }
-
-  def register(spark: SparkSession, n: Int = 3): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_ngrams",
-      exprs => { Arity.check("token_ngrams", 1, exprs)
-        TokenNgrams(exprs.head, n) }, "built-in")
 }

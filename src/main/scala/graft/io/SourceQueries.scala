@@ -168,7 +168,7 @@ object SourceQueries {
     * `postgres.Rmd:242`): recover the table name from the file path of
     * each scanned row. */
   private def s15bInputFile(s: SparkSession, d: String): DataFrame =
-    graft.Tables.t(s, d, "lineitem")
+    graft.io.Inputs.t(s, d, "lineitem")
       .select(regexp_extract(input_file_name(), "([a-z]+)\\.parquet", 1)
         .as("table_from_path"))
       .groupBy("table_from_path")

@@ -99,7 +99,7 @@ object Writers {
   def materializeUnique(df: DataFrame, path: String,
       keyCols: Seq[String]): Long = {
     overwriteTable(df, path)
-    val back = df.sparkSession.read.parquet(path)
+    val back = df.sparkSession.read.schema(df.schema).parquet(path)
     val dupes = back.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("n")).filter(col("n") > 1).count()
     require(dupes == 0,

@@ -33,21 +33,21 @@ object Model {
 
   def lineitems(spark: SparkSession, dir: String): Dataset[Lineitem] = {
     import spark.implicits._
-    graft.Tables.t(spark, dir, "lineitem").as[Lineitem]
+    graft.io.Inputs.t(spark, dir, "lineitem").as[Lineitem]
   }
 
   def orders(spark: SparkSession, dir: String): Dataset[Order] = {
     import spark.implicits._
-    graft.Tables.t(spark, dir, "orders").as[Order]
+    graft.io.Inputs.t(spark, dir, "orders").as[Order]
   }
 
   def docs(spark: SparkSession, dir: String): Dataset[Doc] = {
     import spark.implicits._
-    graft.Tables.t(spark, dir, "documents").as[Doc]
+    graft.io.Inputs.t(spark, dir, "documents").as[Doc]
   }
 
   def embeddings(spark: SparkSession, dir: String): Dataset[Embedding] = {
     import spark.implicits._
-    graft.Tables.t(spark, dir, "embeddings").as[Embedding]
+    graft.io.Inputs.t(spark, dir, "embeddings").as[Embedding]
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Gate
-import graft.Tables.t
+import graft.io.Inputs.t
 
 /** Abundance math — the reference's single most load-bearing pattern
   * (SURVEY §2.5 A2): per-sample grouped-mutate normalizations.

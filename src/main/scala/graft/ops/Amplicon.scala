@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Gate
-import graft.Tables.t
+import graft.io.Inputs.t
 
 /** Amplicon table stages (SURVEY §2.10 / §3.3): the DADA2-adjacent
   * dataflow the reference computes around the external denoiser —

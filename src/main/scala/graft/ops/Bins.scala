@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Gate
-import graft.Tables.t
+import graft.io.Inputs.t
 
 /** The bin_summary view family (SURVEY §2.4 J2 / FIXTURES F9): the
   * reference's flagship multiway star view (`postgres.Rmd:116-163`) —

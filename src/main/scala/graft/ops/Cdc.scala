@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Gate
-import graft.Tables.t
+import graft.io.Inputs.t
 
 /** Snapshot differencing — the change-data-capture view a warehouse
   * derives when a source re-delivers a full table and only the delta

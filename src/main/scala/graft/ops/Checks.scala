@@ -329,7 +329,7 @@ object Checks {
   }
 
   private def fTableChecksum(s: SparkSession, d: String): DataFrame =
-    tableChecksum(graft.Tables.t(s, d, "orders"),
+    tableChecksum(graft.io.Inputs.t(s, d, "orders"),
       Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"))
 
   /** Merkle-style refinement of `tableChecksum`: the same row digests
@@ -353,7 +353,7 @@ object Checks {
   }
 
   private def fBucketChecksum(s: SparkSession, d: String): DataFrame =
-    bucketChecksums(graft.Tables.t(s, d, "orders"),
+    bucketChecksums(graft.io.Inputs.t(s, d, "orders"),
       Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"),
       "o_orderkey", 64)
 
@@ -405,7 +405,7 @@ object Checks {
     * the documents corpus (a stand-in for two ingest snapshots). */
   private def fDistDrift(s: SparkSession, d: String): DataFrame =
     distributionDrift(
-      graft.Tables.t(s, d, "documents")
+      graft.io.Inputs.t(s, d, "documents")
         .select(col("lang"), (col("doc_id") % 2).cast("int").as("side")),
       "lang", "side")
       .withColumnRenamed("category", "lang")

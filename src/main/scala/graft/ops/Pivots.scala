@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Gate
-import graft.Tables.t
+import graft.io.Inputs.t
 
 /** Pivot / unpivot / set ops P1-P3 (SURVEY §2.7).
   *

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Gate
-import graft.Tables.t
+import graft.io.Inputs.t
 
 /** Core relational operators: projection/filter/distinct (SURVEY §2.3),
   * joins J1-J8 (§2.4), aggregations A1/A3/A5/A6/A9/A10 (§2.5), and the
@@ -271,7 +271,7 @@ object Relational {
     * function (the Expression > UDF preference; see
     * `graft.functions.GcContent`). */
   private def gcContentExpr(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GcContent.register(s)
+    graft.GraftExtensions.install(s)
     t(s, d, "part")
       .groupBy("p_brand")
       .agg(round(avg(expr("gc_content(p_name)")), 4).as("avg_gc"),

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Gate
-import graft.Tables.t
+import graft.io.Inputs.t
 
 /** Scale-path forms of the engine's backbone idioms, each gated by a
   * query whose result is EXACTLY the naive form's (so the DuckDB
@@ -317,7 +317,7 @@ object ScaleOps {
     * degrades to ±1.6% estimates past k at 100 TB (see
     * `functions.ThetaSketch`). */
   private def xThetaSetOps(s: SparkSession, d: String): DataFrame = {
-    graft.functions.ThetaSketch.register(s)
+    graft.GraftExtensions.install(s)
     val o = t(s, d, "orders").select(
       pmod(col("o_custkey"), lit(3000)).cast("long").as("k"),
       (col("o_orderkey") % 2).as("half"))

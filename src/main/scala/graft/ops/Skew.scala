@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Gate
-import graft.Tables.t
+import graft.io.Inputs.t
 
 /** Skew: diagnostics (`skewReport`) and mitigation (salted joins —
   * SURVEY §4 / the builder's scale checklist). AQE's skew-join handles

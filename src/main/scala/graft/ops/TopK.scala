@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
 
 /** One retained entry: value + a unique tiebreak id (deterministic
   * total order: value desc, tie asc). */
@@ -115,9 +115,4 @@ object TopK {
   def udafTopK(k: Int): UserDefinedFunction =
     org.apache.spark.sql.functions.udaf(new TopKAggregator(k),
       Encoders.product[(Double, Long)])
-
-  /** Idempotent session registration of the top-k UDAF under
-    * `top_k<k>`. */
-  def registerSql(spark: SparkSession, k: Int): Unit =
-    spark.udf.register(s"top_k$k", udafTopK(k))
 }

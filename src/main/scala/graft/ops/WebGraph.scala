@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Gate
-import graft.Tables.t
+import graft.io.Inputs.t
 
 /** Web-graph authority scoring for corpus curation — the domain-level
   * PageRank a web-scale training-data pipeline uses to weight or gate

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Gate
-import graft.Tables.t
+import graft.io.Inputs.t
 
 /** Window operators W1-W7 (SURVEY §2.6) plus N50 (A7).
   *
@@ -308,7 +308,7 @@ object Windows {
     * back to relational rows. Shares `w12_topk_agg`'s oracle: the SQL
     * spelling must hash-match the typed window-form semantics. */
   private def w13TopkSql(s: SparkSession, d: String): DataFrame = {
-    TopK.registerSql(s, 3)
+    graft.GraftExtensions.install(s)
     t(s, d, "orders").createOrReplaceTempView("w13_orders")
     s.sql("""
       SELECT o_custkey, CAST(pos + 1 AS INT) AS rank,

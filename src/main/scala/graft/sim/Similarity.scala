@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Gate
-import graft.Tables.t
+import graft.io.Inputs.t
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`): brute-force cosine top-k as the correctness
@@ -1353,7 +1353,7 @@ object Similarity {
       graft.io.Writers.overwriteStaged(xPqIndex(s, d), dir)
       dir
     })
-    s.read.parquet(path)
+    graft.io.Inputs.parquet(s, path)
   }
 
   /** Parse the codebooks out of a PQ index table (the x_pq_index
@@ -1451,7 +1451,7 @@ object Similarity {
         lists.unionByName(probes).unionByName(cents), dir)
       dir
     })
-    s.read.parquet(path)
+    graft.io.Inputs.parquet(s, path)
   }
 
   /** IVF-PQ over the STAGED index: candidates from the staged coarse
@@ -1532,7 +1532,7 @@ object Similarity {
       graft.io.Writers.overwriteStaged(dump, dir)
       dir
     })
-    s.read.parquet(path)
+    graft.io.Inputs.parquet(s, path)
   }
 
   /** Residual-PQ index dump — the refit execution whose conditioned

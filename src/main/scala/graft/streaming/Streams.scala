@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Gate
-import graft.Tables.t
+import graft.io.Inputs.t
 
 /** Structured Streaming surface (SURVEY §1.4). The reference has no
   * stream engine — its incremental idiom is batch discovery + anti-join
@@ -20,7 +20,7 @@ import graft.Tables.t
 object Streams {
 
   /** Fallback schema of events as read with nanos-as-long (see
-    * Tables.t); used only when the watched directory has no file yet
+    * io.Inputs.t); used only when the watched directory has no file yet
     * to infer the actual physical shape from. */
   val eventsRawSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),

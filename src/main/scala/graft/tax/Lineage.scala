@@ -3,7 +3,7 @@ package graft.tax
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Gate
-import graft.Tables.t
+import graft.io.Inputs.t
 
 /** Taxonomy / hierarchy operators T1-T5 (SURVEY §2.8) — the
   * domain-specific core of the reference.

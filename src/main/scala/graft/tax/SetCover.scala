@@ -78,7 +78,7 @@ object SetCover {
     * universe) keep the oracle's sequential replay cheap while the
     * greedy loop still makes real skip/accept decisions. */
   private def t4Facts(s: SparkSession, d: String): DataFrame =
-    graft.Tables.t(s, d, "part").select(
+    graft.io.Inputs.t(s, d, "part").select(
       concat(lit("g"), col("p_size")).as("gene"),
       concat_ws(";", col("p_brand"), col("p_type")).as("lineage"),
       col("p_retailprice").as("score"),

@@ -32,9 +32,9 @@ object Warehouse {
   /** Load the two big facts as co-bucketed tables. */
   def buildFactTables(spark: SparkSession, sfDir: String,
       numBuckets: Int = 8): Unit = {
-    writeBucketed(graft.Tables.t(spark, sfDir, "lineitem"),
+    writeBucketed(graft.io.Inputs.t(spark, sfDir, "lineitem"),
       "w_lineitem", "l_orderkey", numBuckets)
-    writeBucketed(graft.Tables.t(spark, sfDir, "orders"),
+    writeBucketed(graft.io.Inputs.t(spark, sfDir, "orders"),
       "w_orders", "o_orderkey", numBuckets)
   }
 

@@ -71,4 +71,40 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).mkString("\n")
     assert(desc.contains("gc_content"))
   }
+
+  test("install replaces nothing and gives a bare session every function") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val names = Seq("gc_content", "dot_product", "simhash64",
+      "minhash_sig", "token_ngrams", "ngram_stats", "theta_sketch",
+      "theta_estimate", "theta_union", "theta_intersect", "theta_anotb",
+      "top_k3").map(FunctionIdentifier(_))
+    val reg = spark.sessionState.functionRegistry
+    GraftExtensions.install(spark)
+    val before = names.map(reg.lookupFunctionBuilder(_).get)
+    GraftExtensions.install(spark)
+    assert(names.map(reg.lookupFunctionBuilder(_).get).zip(before)
+      .forall { case (a, b) => a eq b }, "a second install replaced one")
+    // a session built without the extension: Spark's own functions
+    // only, among them a theta_union of Spark's
+    val builtin =
+      org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+    val bare = spark.newSession()
+    val breg = bare.sessionState.functionRegistry
+    names.foreach { n =>
+      breg.dropFunction(n)
+      builtin.lookupFunction(n).foreach(info => breg.registerFunction(n,
+        info, builtin.lookupFunctionBuilder(n).get))
+    }
+    val sparkUnion = breg.lookupFunction(names(8))
+    assert(sparkUnion.exists(_.getClassName != "graft"))
+    GraftExtensions.install(bare)
+    assert(names.forall(breg.functionExists))
+    assert(names.init.forall(n =>
+      breg.lookupFunction(n).exists(_.getClassName == "graft")),
+      "install kept a function that is not the engine's")
+    assert(bare.sql("SELECT gc_content('GGCC')").head.getDouble(0) == 100.0)
+    assert(bare.sql("""SELECT size(top_k3(v, t).entries)
+      FROM VALUES (1.0d, 1L), (2.0d, 2L) AS x(v, t)""").head.getInt(0) == 2)
+    assert(reg.functionExists(names.head), "the shared session lost one")
+  }
 }

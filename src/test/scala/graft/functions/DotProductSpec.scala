@@ -9,7 +9,7 @@ class DotProductSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("dot_product matches hand values over float and double arrays") {
-    DotProduct.register(spark)
+    graft.GraftExtensions.install(spark)
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(4.0, 5.0, 6.0), 32.0),
       (Array(0.0f, 0.0f, 0.0f), Array(1.0, 1.0, 1.0), 0.0),
@@ -21,7 +21,7 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("dot_product equals the HOF formulation on real embeddings") {
-    DotProduct.register(spark)
+    graft.GraftExtensions.install(spark)
     val e = graft.Tables.t(spark, TestSpark.sf0001, "embeddings")
       .limit(50)
       .select(col("embedding").as("a"), col("embedding").as("b"))
@@ -38,7 +38,7 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("dimension mismatch raises, nulls propagate") {
-    DotProduct.register(spark)
+    graft.GraftExtensions.install(spark)
     val mixed = Seq(
       (Some(Array(1.0, 2.0)), Some(Array(1.0, 2.0, 3.0))))
       .toDF("a", "b")
@@ -57,7 +57,7 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("stays inside whole-stage codegen") {
-    DotProduct.register(spark)
+    graft.GraftExtensions.install(spark)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val cg = graft.Tables.t(spark, TestSpark.sf0001, "embeddings")

@@ -9,7 +9,7 @@ class GcContentSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("gc_content matches hand values, handles case/empty/null") {
-    GcContent.register(spark)
+    graft.GraftExtensions.install(spark)
     val df = Seq(
       ("ACGT", Some(50.0)),
       ("acgt", Some(50.0)),
@@ -35,7 +35,7 @@ class GcContentSpec extends AnyFunSuite {
   }
 
   test("gc_content equals the regexp formulation on real sequences") {
-    GcContent.register(spark)
+    graft.GraftExtensions.install(spark)
     val fasta = graft.io.Readers.parseFastaText(
       spark.createDataset(Seq(graft.io.Fixtures.fasta)))
     // gc_pct is rounded to 4dp by the reader; round the expression too
@@ -46,7 +46,7 @@ class GcContentSpec extends AnyFunSuite {
   }
 
   test("gc_content stays inside whole-stage codegen (no fallback)") {
-    GcContent.register(spark)
+    graft.GraftExtensions.install(spark)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val cg = spark.range(10)

@@ -22,7 +22,7 @@ class MinHashSigSpec extends AnyFunSuite {
   }
 
   test("identical texts share signatures; different texts differ") {
-    MinHashSig.register(spark)
+    graft.GraftExtensions.install(spark)
     val df = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "the quick brown fox jumps over the lazy dog"),

@@ -9,7 +9,7 @@ class SimHash64Spec extends AnyFunSuite {
   import spark.implicits._
 
   test("native simhash64 equals the HOF formulation bit-for-bit") {
-    SimHash64.register(spark)
+    graft.GraftExtensions.install(spark)
     val docs = graft.Tables.t(spark, TestSpark.sf0001, "documents")
       .limit(100)
       .withColumn("toks", graft.text.TextOps.tokens(lower(col("text"))))
@@ -31,7 +31,7 @@ class SimHash64Spec extends AnyFunSuite {
   }
 
   test("empty array and null behavior") {
-    SimHash64.register(spark)
+    graft.GraftExtensions.install(spark)
     val df = Seq(
       (1L, Some(Seq.empty[String])),
       (2L, Option.empty[Seq[String]]),

@@ -14,7 +14,7 @@ class ThetaSketchSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def est(df: org.apache.spark.sql.DataFrame): Long = {
-    ThetaSketch.register(spark)
+    graft.GraftExtensions.install(spark)
     df.agg(expr("theta_estimate(theta_sketch(v))")).as[Long].head()
   }
 
@@ -27,7 +27,7 @@ class ThetaSketchSpec extends AnyFunSuite {
   }
 
   test("set ops: hand values on overlapping sets") {
-    ThetaSketch.register(spark)
+    graft.GraftExtensions.install(spark)
     val a = (1L to 30L).toDF("v")
       .agg(expr("theta_sketch(v)").as("sk")).as[Array[Byte]].head()
     val b = (21L to 50L).toDF("v")
@@ -41,7 +41,7 @@ class ThetaSketchSpec extends AnyFunSuite {
   }
 
   test("nulls are skipped, empty input yields an empty sketch") {
-    ThetaSketch.register(spark)
+    graft.GraftExtensions.install(spark)
     val withNulls = Seq[java.lang.Long](1L, null, 2L, null, 1L)
       .toDF("v")
     assert(est(withNulls) == 2L)
@@ -62,7 +62,7 @@ class ThetaSketchSpec extends AnyFunSuite {
   }
 
   test("wrong input type fails analysis, not at runtime") {
-    ThetaSketch.register(spark)
+    graft.GraftExtensions.install(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       Seq("a").toDF("v").agg(expr("theta_sketch(v)")).collect()
     }

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.TestSpark.jobsDuring
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,24 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * job. */
 class ScratchSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
-
-  /** `body`'s result and the jobs started while it ran (listener bus
-    * drained after). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-      (r, n.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   test("stage keeps the inferred schema and runs only the write's jobs") {
     // non-null long, array, struct and map columns
