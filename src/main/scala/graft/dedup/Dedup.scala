@@ -35,25 +35,6 @@ object Dedup {
       sequence(lit(1), greatest(lit(1), length(norm) - (k - 1))),
       i => norm.substr(i, lit(k))))
 
-  /** MinHash signature: for each of `n` hash functions
-    * h_i(x) = (a_i * murmur3(x) + b_i) mod p, take the min over the
-    * shingle set. Fixed odd/prime coefficients → deterministic across
-    * runs and partitionings. ONE pass: murmur3 each shingle once, then
-    * a single aggregate whose accumulator is the n-wide minimum vector
-    * (n separate aggregates would re-hash every shingle n times). */
-  def minhashSignature(shingleSet: Column, n: Int = 16): Column = {
-    val p = 2147483647L // 2^31-1, Mersenne prime
-    val hashes = transform(shingleSet, x => hash(x).cast("long"))
-    aggregate(
-      hashes,
-      array((0 until n).map(_ => lit(Long.MaxValue)): _*),
-      (acc, h) => zip_with(acc,
-        array((0 until n).map { i =>
-          pmod(h * (2L * i + 1L) + (7919L * i + 13L), lit(p))
-        }: _*),
-        (a, v) => least(a, v)))
-  }
-
   /** SimHash: 64-bit sign-sketch of the token multiset. Bit b is 1 iff
     * Σ_tokens (±1 by bit b of xxhash64(token)) > 0. Delegates to the
     * native `graft.functions.SimHash64` expression — one JVM loop per
@@ -246,24 +227,21 @@ object Dedup {
     hammingBandCandidates(src, "id", "sh", maxBucketSize)
   }
 
-  /** The Hamming band join itself, over ANY 64-bit sketch column —
-    * the banding geometry is hash-agnostic, so the same machinery
-    * serves text SimHash (above) and perceptual image hashes
-    * (`Multimodal.dhashBmp`): band the sketch into four 16-bit
-    * chunks, bucket-join per chunk, verify candidates with the true
-    * distance via codegen'd bit_count(xor). Recall bound and the
-    * maxBucketSize degenerate-bucket guard as documented on
-    * `simhashCandidatePairs`. */
-  /** The 4×16-bit chunk explode shared by the band join and the
+  /** The 4×16-bit chunk explode shared by the band joins and the
     * cap-drop report (one definition — the report observes EXACTLY
-    * the buckets the join prunes). */
+    * the buckets the join prunes). `keys` are extra blocking columns
+    * carried as `by_0`, `by_1`, … (empty for the text and image
+    * callers). */
   private def hammingChunked(hashed: DataFrame, idCol: String,
-      hashCol: String): DataFrame =
-    hashed.select(col(idCol).as("id"), col(hashCol).as("sh"))
-      .select(col("id"), col("sh"),
+      hashCol: String, keys: Seq[String] = Nil): DataFrame = {
+    val by = keys.indices.map(i => s"by_$i")
+    hashed.select(keys.zip(by).map { case (k, b) => col(k).as(b) } ++
+        Seq(col(idCol).as("id"), col(hashCol).as("sh")): _*)
+      .select(by.map(col) ++ Seq(col("id"), col("sh"),
         posexplode(array((0 until 4).map { i =>
           shiftrightunsigned(col("sh"), 16 * i).bitwiseAND(0xFFFFL)
-        }: _*)).as(Seq("chunk_idx", "chunk")))
+        }: _*)).as(Seq("chunk_idx", "chunk"))): _*)
+  }
 
   /** CAP-DROP OBSERVABILITY for the Hamming banding family: the
     * buckets `hammingBandCandidates` SILENTLY drops at the same
@@ -283,35 +261,18 @@ object Dedup {
       .select(col("chunk_idx"), col("chunk"), col("bucket_n"),
         expr("bucket_n * (bucket_n - 1) DIV 2").as("pairs_suppressed"))
 
+  /** The Hamming band join itself, over ANY 64-bit sketch column —
+    * the banding geometry is hash-agnostic, so the same machinery
+    * serves text SimHash (above) and perceptual image hashes
+    * (`Multimodal.dhashBmp`): band the sketch into four 16-bit
+    * chunks, bucket-join per chunk, verify candidates with the true
+    * distance via codegen'd bit_count(xor). Recall bound and the
+    * maxBucketSize degenerate-bucket guard as documented on
+    * `simhashCandidatePairs`. */
   def hammingBandCandidates(hashed: DataFrame, idCol: String,
       hashCol: String, maxBucketSize: Int = 1000,
-      stageSketch: Boolean = false): DataFrame = {
-    val chunked = hammingChunked(hashed, idCol, hashCol)
-    // `stageSketch` (r17): when the upstream sketch is EXPENSIVE per
-    // row (a real image/audio decode), stage the pruned chunk table
-    // once so the self-join's a/b sides don't decode twice — measured
-    // a win exactly there and a LOSS for cheap sketches (SimHash:
-    // the write costs more than re-tokenizing; the perceptual pair
-    // gates pass true, the text gates keep the default)
-    val pruned0 = chunked
-      .withColumn("bucket_n",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy("chunk_idx", "chunk")))
-      .filter(col("bucket_n") <= maxBucketSize)
-    val pruned =
-      if (stageSketch)
-        graft.io.Scratch.stage(pruned0, "hamming_banded")
-      else pruned0
-    val a = pruned.select(col("chunk_idx"), col("chunk"),
-      col("id").as("doc_a"), col("sh").as("sh_a"))
-    val b = pruned.select(col("chunk_idx"), col("chunk"),
-      col("id").as("doc_b"), col("sh").as("sh_b"))
-    a.join(b, Seq("chunk_idx", "chunk"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
-      .distinct()
-  }
+      stageSketch: Boolean = false): DataFrame =
+    hammingBand(hashed, idCol, hashCol, Nil, maxBucketSize, stageSketch)
 
   /** Hamming band join over ALIGNED collections of 64-bit sketches —
     * the video/near-dup generalization: each id carries one sketch
@@ -327,32 +288,43 @@ object Dedup {
   def hammingBandCandidatesBy(hashed: DataFrame, idCol: String,
       hashCol: String, byCol: String,
       maxBucketSize: Int = 1000,
-      stageSketch: Boolean = false): DataFrame = {
-    val sh = hashed.select(col(byCol).as("by"), col(idCol).as("id"),
-      col(hashCol).as("sh"))
-    val chunked = sh.select(col("by"), col("id"), col("sh"),
-      posexplode(array((0 until 4).map { i =>
-        shiftrightunsigned(col("sh"), 16 * i).bitwiseAND(0xFFFFL)
-      }: _*)).as(Seq("chunk_idx", "chunk")))
-    // stageSketch as in hammingBandCandidates (the video consumer's
-    // upstream is a per-frame BMP decode — it passes true)
-    val pruned0 = chunked
+      stageSketch: Boolean = false): DataFrame =
+    hammingBand(hashed, idCol, hashCol, Seq(byCol), maxBucketSize,
+      stageSketch)
+
+  /** The one band-join body: chunk, cap each (keys, chunk) bucket at
+    * `maxBucketSize`, self-join within buckets, verify with the true
+    * distance. Output: the `keys` columns, doc_a, doc_b, hamming. */
+  private def hammingBand(hashed: DataFrame, idCol: String,
+      hashCol: String, keys: Seq[String], maxBucketSize: Int,
+      stageSketch: Boolean): DataFrame = {
+    val by = keys.indices.map(i => s"by_$i")
+    val bucket = by ++ Seq("chunk_idx", "chunk")
+    // `stageSketch` (r17): when the upstream sketch is EXPENSIVE per
+    // row (a real image/audio decode), stage the pruned chunk table
+    // once so the self-join's a/b sides don't decode twice — measured
+    // a win exactly there and a LOSS for cheap sketches (SimHash:
+    // the write costs more than re-tokenizing; the perceptual and
+    // video pair gates pass true, the text gates keep the default)
+    val pruned0 = hammingChunked(hashed, idCol, hashCol, keys)
       .withColumn("bucket_n",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy("by", "chunk_idx", "chunk")))
+          .partitionBy(bucket.map(col): _*)))
       .filter(col("bucket_n") <= maxBucketSize)
     val pruned =
       if (stageSketch)
-        graft.io.Scratch.stage(pruned0, "hamming_banded_by")
+        graft.io.Scratch.stage(pruned0,
+          if (keys.isEmpty) "hamming_banded" else "hamming_banded_by")
       else pruned0
-    val a = pruned.select(col("by"), col("chunk_idx"), col("chunk"),
-      col("id").as("doc_a"), col("sh").as("sh_a"))
-    val b = pruned.select(col("by"), col("chunk_idx"), col("chunk"),
-      col("id").as("doc_b"), col("sh").as("sh_b"))
-    a.join(b, Seq("by", "chunk_idx", "chunk"))
+    val a = pruned.select(bucket.map(col) ++ Seq(
+      col("id").as("doc_a"), col("sh").as("sh_a")): _*)
+    val b = pruned.select(bucket.map(col) ++ Seq(
+      col("id").as("doc_b"), col("sh").as("sh_b")): _*)
+    a.join(b, bucket)
       .filter(col("doc_a") < col("doc_b"))
-      .select(col("by").as(byCol), col("doc_a"), col("doc_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
+      .select(keys.zip(by).map { case (k, c) => col(c).as(k) } ++ Seq(
+        col("doc_a"), col("doc_b"),
+        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming")): _*)
       .distinct()
   }
 
@@ -1498,19 +1470,10 @@ object Dedup {
     * pqIndexStaged shape). Safe because both consumers' oracles
     * re-derive EVERYTHING from raw documents: a stale or corrupt
     * staged table hash-mismatches immediately. */
-  private val stagedIslands =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def islandsStaged(s: SparkSession, d: String): DataFrame = {
-    val path = stagedIslands.computeIfAbsent(d, _ => {
-      val dir = graft.io.Scratch.path("substr_islands").toString
-      graft.io.Writers.overwriteStaged(
-        dupIslands(spanSrc(t(s, d, "documents"), "doc_id", "text"),
-          spanLen = 25, hashWindows = false), dir)
-      dir
-    })
-    graft.io.Inputs.parquet(s, path)
-  }
+  private def islandsStaged(s: SparkSession, d: String): DataFrame =
+    graft.io.Scratch.stagedOnce(s, "substr_islands", d)(
+      dupIslands(spanSrc(t(s, d, "documents"), "doc_id", "text"),
+        spanLen = 25, hashWindows = false))
 
   /** Repeated-substring span accounting over the documents corpus —
     * string-keyed so the oracle replays window equality exactly

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -76,7 +75,7 @@ private[functions] trait BpeMergeLoop {
 }
 
 case class BpeEncode(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression with CodegenFallback with BpeMergeLoop {
+    extends UnaryExpression with EvalCodegen with BpeMergeLoop {
 
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
@@ -118,7 +117,7 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)])
   * re-applying the whole stack (O(M) instead of O(M²) in merges). */
 case class BpeEncodeTokens(child: Expression,
     merges: Seq[(String, String)])
-    extends UnaryExpression with CodegenFallback with BpeMergeLoop {
+    extends UnaryExpression with EvalCodegen with BpeMergeLoop {
 
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)

@@ -2,18 +2,18 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Dot product of two numeric arrays as a native codegen'd expression.
+/** Dot product of two numeric arrays as a native expression.
   *
   * The `aggregate(zip_with(a, b, *), 0.0, +)` higher-order formulation
   * is semantically identical but HOFs don't participate in whole-stage
   * codegen — every element allocates lambda-variable slots and walks
-  * the interpreted eval path. This expression compiles to a single
-  * primitive loop over the two ArrayData buffers, which is what the
-  * O(queries × corpus × dim) ANN scoring actually needs.
+  * the interpreted eval path. This expression is a single primitive
+  * loop over the two ArrayData buffers inside the host's codegen span
+  * (`EvalCodegen`), which is what the O(queries × corpus × dim) ANN
+  * scoring actually needs.
   *
   * Floats are widened to double BEFORE multiplying (parity with
   * engines that compute in double — see the ANN oracle notes).
@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * fixed-dimension by construction).
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with EvalCodegen {
 
   override def dataType: DataType = DoubleType
 
@@ -60,39 +60,6 @@ case class DotProduct(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val getA =
-        if (leftIsFloat) s"(double) $a.getFloat($i)"
-        else s"$a.getDouble($i)"
-      val getB =
-        if (rightIsFloat) s"(double) $b.getFloat($i)"
-        else s"$b.getDouble($i)"
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  throw new IllegalArgumentException(
-         |    "dot_product dimension mismatch: " + $n + " vs "
-         |      + $b.numElements());
-         |}
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) {
-         |    ${ev.isNull} = true;
-         |    break;
-         |  }
-         |  $acc += ($getA) * ($getB);
-         |}
-         |if (!${ev.isNull}) {
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
 
   // a null ELEMENT nulls the result even when both arrays are non-null
   override def nullable: Boolean = true

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** GC-content as a native Catalyst expression WITH code generation —
+/** GC-content as a native Catalyst expression WITH code generation
+  * (`EvalCodegen`) —
   * the §2.10 candidate the SURVEY marks for a codegen'd implementation
   * (reference semantics `AnnotateContigs.pl:235-239`: #G+#C over
   * sequence length × 100, case-insensitive; null/empty → null).
@@ -13,10 +13,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * Versus the `regexp_replace`-based formulation (`Readers.gcPct`) this
   * is a single byte-scan per row with no regex machinery and no
   * intermediate string allocation, and it stays inside whole-stage
-  * codegen (`doGenCode` emits a plain loop) — the preference order the
-  * engine follows: built-in functions > native Expression > UDF.
+  * codegen — the preference order the engine follows: built-in
+  * functions > native Expression > UDF.
   */
-case class GcContent(child: Expression) extends UnaryExpression {
+case class GcContent(child: Expression) extends UnaryExpression
+    with EvalCodegen {
 
   override def dataType: DataType = DoubleType
   override def checkInputDataTypes()
@@ -45,27 +46,6 @@ case class GcContent(child: Expression) extends UnaryExpression {
       gc * 100.0 / s.numChars()
     }
   }
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, seq => {
-      val bytes = ctx.freshName("bytes")
-      val i = ctx.freshName("i")
-      val gc = ctx.freshName("gc")
-      s"""
-         |byte[] $bytes = $seq.getBytes();
-         |if ($bytes.length == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $gc = 0;
-         |  for (int $i = 0; $i < $bytes.length; $i++) {
-         |    byte b = $bytes[$i];
-         |    if (b == 'G' || b == 'C' || b == 'g' || b == 'c') $gc++;
-         |  }
-         |  ${ev.value} = $gc * 100.0 / $seq.numChars();
-         |}
-       """.stripMargin
-    })
 
   // empty input produces null even though the child is non-null
   override def nullable: Boolean = true

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Murmur3HashFunction, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -20,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * blow-up) and the aggregate shuffle entirely.
   */
 case class MinHashSig(child: Expression, numHashes: Int, k: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with EvalCodegen {
 
   private val P = 2147483647L // 2^31-1 (Mersenne: enables shift-fold mod)
 

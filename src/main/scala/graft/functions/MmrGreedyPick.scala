@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
@@ -22,8 +21,7 @@ import org.apache.spark.sql.types._
   * WHOLE diversification is one shuffle (the collect_list groupBy),
   * which is also the right 100 TB shape: a million queries still pay
   * one exchange, and the per-row work is k·R integer argmaxes over an
-  * R² sim table. Evaluated once per QUERY row (not per corpus row), so
-  * CodegenFallback costs nothing measurable.
+  * R² sim table. Evaluated once per QUERY row (not per corpus row).
   *
   * ARITHMETIC CONTRACT — bit-identical to the relational greedy it
   * replaces (pinned by SimilaritySpec's equivalence test and the
@@ -42,7 +40,7 @@ import org.apache.spark.sql.types._
   *    its candidate count.
   */
 case class MmrGreedyPick(child: Expression, k: Int, lambda10: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with EvalCodegen {
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("rank", IntegerType, nullable = false),

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -28,7 +27,7 @@ import org.apache.spark.sql.types._
   * `DotProduct` (bit-identical arithmetic). */
 case class NearestCentroidIdx(emb: Expression, norm: Expression,
     cids: Seq[Long], cembs: Seq[Seq[Double]], cnorms: Seq[Double])
-    extends BinaryExpression {
+    extends BinaryExpression with EvalCodegen {
 
   require(cids.nonEmpty && cids.length == cembs.length &&
     cids.length == cnorms.length,
@@ -52,10 +51,9 @@ case class NearestCentroidIdx(emb: Expression, norm: Expression,
   @transient private lazy val cidA: Array[Long] = cids.toArray
   @transient private lazy val cnormA: Array[Double] = cnorms.toArray
 
-  /** The per-row argmax loop — shared verbatim by the interpreted
-    * eval and the generated code (which calls it through a codegen
-    * reference object), so both paths are the same arithmetic. */
-  def compute(a: ArrayData, nrm: Double): Int = {
+  override def nullSafeEval(e: Any, nm: Any): Any = {
+    val a = e.asInstanceOf[ArrayData]
+    val nrm = nm.asInstanceOf[Double]
     val n = a.numElements()
     var best = -1
     var bestSim = 0.0
@@ -77,26 +75,6 @@ case class NearestCentroidIdx(emb: Expression, norm: Expression,
       k += 1
     }
     best
-  }
-
-  override def nullSafeEval(e: Any, nm: Any): Any =
-    compute(e.asInstanceOf[ArrayData], nm.asInstanceOf[Double])
-
-  /** Whole-stage codegen (r18): the CodegenFallback form disqualified
-    * its host operator from WholeStageCodegen — and this expression
-    * runs once per CORPUS row at every assignment site, so the whole
-    * scan→project span fell back to interpreted eval with row
-    * materialization between operators. Generated code calls
-    * `compute` on the expression instance (a codegen reference
-    * object): the centroid matrix stays a JVM array on the instance
-    * (never inlined into Java source), and the host span stays fully
-    * codegen'd. */
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("nearestCentroidIdx", this,
-      classOf[NearestCentroidIdx].getName)
-    nullSafeCodeGen(ctx, ev, (e, nm) =>
-      s"${ev.value} = $ref.compute($e, $nm);")
   }
 
   override def nullable: Boolean = emb.nullable || norm.nullable

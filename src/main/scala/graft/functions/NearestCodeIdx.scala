@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -24,7 +23,7 @@ import org.apache.spark.sql.types._
   * with java.lang.Double.compare (d² is never NaN). */
 case class NearestCodeIdx(sub: Expression, sEmb: Expression,
     subs: Seq[Int], codes: Seq[Seq[Int]], cembs: Seq[Seq[Seq[Double]]])
-    extends BinaryExpression {
+    extends BinaryExpression with EvalCodegen {
 
   require(subs.nonEmpty && subs.length == codes.length &&
     subs.length == cembs.length && codes.forall(_.nonEmpty),
@@ -53,12 +52,9 @@ case class NearestCodeIdx(sub: Expression, sEmb: Expression,
   @transient private lazy val cembA: Array[Array[Array[Double]]] =
     cembs.map(_.map(_.toArray).toArray).toArray
 
-  /** The per-row argmin loop — shared verbatim by the interpreted
-    * eval and the generated code (codegen reference object), so both
-    * paths are the same arithmetic. */
-  def compute(s: Int, e: ArrayData): Int = {
-    val si = subIdx.get(s)
-    val a = e
+  override def nullSafeEval(s: Any, e: Any): Any = {
+    val si = subIdx.get(s.asInstanceOf[Int])
+    val a = e.asInstanceOf[ArrayData]
     val n = a.numElements()
     val cw = cembA(si)
     val cd = codeA(si)
@@ -85,23 +81,6 @@ case class NearestCodeIdx(sub: Expression, sEmb: Expression,
       k += 1
     }
     cd(best)
-  }
-
-  override def nullSafeEval(s: Any, e: Any): Any =
-    compute(s.asInstanceOf[Int], e.asInstanceOf[ArrayData])
-
-  /** Whole-stage codegen (r18, the NearestCentroidIdx rationale):
-    * this expression runs once per corpus subvector row at every
-    * encode site — the CodegenFallback form pushed the whole encode
-    * span out of WholeStageCodegen. The generated code calls
-    * `compute` on the expression instance via a codegen reference
-    * object; the codebook stays a JVM array on the instance. */
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("nearestCodeIdx", this,
-      classOf[NearestCodeIdx].getName)
-    nullSafeCodeGen(ctx, ev, (s, e) =>
-      s"${ev.value} = $ref.compute($s, $e);")
   }
 
   override def nullable: Boolean = sub.nullable || sEmb.nullable

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
@@ -21,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * after CollapseProject. Like TokenNgrams this is per-row and
   * shuffle-free, so it scales with the scan. */
 case class NgramStats(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with EvalCodegen {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_grams", IntegerType, nullable = false),

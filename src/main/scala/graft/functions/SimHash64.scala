@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -13,11 +12,9 @@ import org.apache.spark.sql.types._
   * the same seed as the built-in `xxhash64`): verified bit-for-bit in
   * SimHashSpec. One JVM loop per row — the HOF form pays an
   * interpreted lambda call per (token × bit) pair, ~64× the work.
-  * CodegenFallback costs one virtual call per ROW (not per element),
-  * which is already off the hot path.
   */
 case class SimHash64(child: Expression) extends UnaryExpression
-    with CodegenFallback {
+    with EvalCodegen {
 
   override def dataType: DataType = LongType
 

@@ -4,7 +4,6 @@ import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.theta.{SetOperation, Sketch, Sketches, Union}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
@@ -103,7 +102,7 @@ case class ThetaSketchAgg(
 /** Scalar: rounded distinct estimate of a sketch image (exact — the
   * retained count — while the sketch is in exact mode). */
 case class ThetaEstimate(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with EvalCodegen {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
@@ -131,7 +130,7 @@ object ThetaSetOp {
   * into a new compact sketch image. Runs on already-aggregated rows
   * (one per group/side), never in a data-sized hot path. */
 case class ThetaSetOp(left: Expression, right: Expression, op: String)
-  extends BinaryExpression with CodegenFallback {
+  extends BinaryExpression with EvalCodegen {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (!Set(ThetaSetOp.UnionOp, ThetaSetOp.IntersectOp,

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (posexplode + lead + distinct + count-over) pays three shuffles
   * keyed by document just to stitch neighbors back together. */
 case class TokenNgrams(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with EvalCodegen {
 
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)

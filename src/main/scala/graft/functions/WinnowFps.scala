@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
@@ -34,7 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    k-grams raises (the relational guard's chunk-first contract).
   */
 case class WinnowFps(child: Expression, k: Int, window: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with EvalCodegen {
 
   require(k >= 1 && window >= 1, s"k=$k window=$window must be >= 1")
 

@@ -123,9 +123,6 @@ object Readers {
     parseSeparated(lines, seqkitStatsSchema)
       .filter(col("file") =!= "file")
 
-  def readSeqkitStats(spark: SparkSession, path: String): DataFrame =
-    parseSeqkitStats(spark.read.textFile(path))
-
   // ---- S13: samtools idxstats ----
 
   /** idxstats columns (reference `Rsamtools::idxstatsBam`,
@@ -148,9 +145,6 @@ object Readers {
           "-", "_"))
     if (dropUnmapped) parsed.filter(col("seqnames") =!= "*") else parsed
   }
-
-  def readIdxstats(spark: SparkSession, path: String): DataFrame =
-    parseIdxstats(spark.read.textFile(path))
 
   // ---- S6: whitespace-aligned HMMER tblout ----
 

@@ -1,12 +1,12 @@
 package graft.io
 
 import org.apache.spark.GraftSparkBridge
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** The process's one scratch root, for every intermediate the engine
   * stages: `stage` parquet, the streaming gates' staging, sink and
-  * checkpoint dirs, and the once-per-sf-dir PQ/IVF/island tables. Made
+  * checkpoint dirs, and the once-per-sf-dir tables of `stagedOnce`. Made
   * once (first use) by Spark's `Utils.createTempDir`, so each use is a
   * cheap path under an existing root, two processes never share a
   * staged table, and the whole root is deleted at JVM shutdown.
@@ -41,6 +41,31 @@ object Scratch {
     df.write.mode("overwrite").parquet(p)
     df.sparkSession.read.schema(df.schema).parquet(p)
   }
+
+  /** A fit-once table: built and staged (crash-safe overwrite under
+    * a fresh `tag` path) on the first call per (tag, sf dir) in this
+    * process, read back through `Inputs.parquet` on every call. For
+    * index-build work (PQ/IVF fits, dedup islands) that serving gates
+    * consume instead of redoing; the table lives until the root is
+    * deleted. One builder per key runs at a time; a builder may read
+    * another key's table (the residual-PQ fit reads the IVF one). */
+  def stagedOnce(spark: SparkSession, tag: String, sfDir: String)(
+      build: => DataFrame): DataFrame =
+    Inputs.parquet(spark,
+      once.computeIfAbsent((tag, sfDir), _ => new Once(tag, () => build))
+        .path)
+
+  // a lazy val per key, so one key's build never runs inside the
+  // map's own compute (a nested build would be a recursive update)
+  private final class Once(tag: String, build: () => DataFrame) {
+    lazy val path: String = {
+      val p = Scratch.path(tag).toString
+      Writers.overwriteStaged(build(), p)
+      p
+    }
+  }
+  private val once =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Once]()
 
   /** `df` rebuilt from its RDD: the logical plan becomes one scan of
     * that RDD, so an iterative loop's round-N plan does not nest

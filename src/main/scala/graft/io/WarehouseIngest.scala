@@ -9,9 +9,8 @@ import graft.Gate
   * kofam_scan, checkm2, eukcc, antismash counts/regions (reference
   * `postgres.Rmd:889-977,1264-1360,2279-2468`). Each loader is the
   * reference's read→rename→mutate→relocate recipe re-expressed as a
-  * declarative DataFrame transform; the per-file driver loop of the
-  * reference becomes a single distributed read (Spark's text/csv
-  * sources glob the same `data/omics/...` layouts in one scan).
+  * declarative DataFrame transform over an already-read frame or line
+  * set; the gates feed them in-code fixtures of the tool outputs.
   *
   * All parses use try-casts: a malformed line in one file must yield
   * nulls, not abort a 100 TB ingest.
@@ -67,10 +66,6 @@ object WarehouseIngest {
         col("thrshld").try_cast("double").as("thrshld"),
         col("score"), col("e_value"))
 
-  def readKofam(spark: SparkSession, path: String, sample: String)
-      : DataFrame =
-    parseKofam(spark.read.textFile(path), sample)
-
   // ---- checkm2 (postgres.Rmd:949-963): header TSV, clean_names,
   //      Name → bin, sample relocated first ----
 
@@ -97,20 +92,8 @@ object WarehouseIngest {
     cleaned.select(lit(sample).as("sample") +: typed: _*)
   }
 
-  def readCheckm2(spark: SparkSession, path: String, sample: String)
-      : DataFrame =
-    checkm2Ingest(
-      spark.read.option("sep", "\t").option("header", "true").csv(path),
-      sample)
-
   // ---- eukcc (postgres.Rmd:2421-2431): header TSV; bin extension
   //      stripped, ncbi_tax = lineage tail, ncbi_lng renamed ----
-
-  val eukccSchema: StructType = StructType(Seq(
-    StructField("bin", StringType),
-    StructField("completeness", DoubleType),
-    StructField("contamination", DoubleType),
-    StructField("ncbi_lng", StringType)))
 
   /** Deliberate divergence (bug-class, cited): the reference's
     * `str_remove(bin, ".fa")` / `str_remove(ncbi_lng, ".*-")` use
@@ -125,13 +108,6 @@ object WarehouseIngest {
       col("completeness"), col("contamination"),
       col("ncbi_lng").as("ncbi_lineage"),
       regexp_extract(col("ncbi_lng"), "([^-]*)$", 1).as("ncbi_tax"))
-
-  def readEukcc(spark: SparkSession, path: String, sample: String)
-      : DataFrame =
-    eukccIngest(
-      spark.read.option("sep", "\t").option("header", "true")
-        .schema(eukccSchema).csv(path),
-      sample)
 
   // ---- antismash assembly summaries (postgres.Rmd:2297-2316
   //      counts, 2347-2371 regions) ----
@@ -182,12 +158,6 @@ object WarehouseIngest {
       col("majority_vote_ncbi_classification")
         .as("ncbi_classification"))
 
-  def readGtdbToNcbi(spark: SparkSession, path: String, sample: String)
-      : DataFrame =
-    gtdbToNcbiIngest(
-      spark.read.option("sep", "\t").option("header", "true").csv(path),
-      sample)
-
   // ---- GTDB classify summary (postgres.Rmd:858-875): N/A nulls,
   //      7-rank split of classification, d__ strip, user_genome→bin ----
 
@@ -210,13 +180,6 @@ object WarehouseIngest {
         raw.columns.filterNot(Set("user_genome", "classification"))
           .toSeq.map(col): _*)
   }
-
-  def readGtdb(spark: SparkSession, path: String, sample: String)
-      : DataFrame =
-    gtdbIngest(
-      spark.read.option("sep", "\t").option("header", "true")
-        .option("nullValue", "N/A").csv(path),
-      sample)
 
   // ---- CheckM (postgres.Rmd:907-921): "Bin Id"→bin + sample tag.
   //      The reference keeps the tool's spaced/`#`-prefixed headers
@@ -248,12 +211,6 @@ object WarehouseIngest {
     }
     renamed.select(lit(sample).as("sample") +: typed: _*)
   }
-
-  def readCheckm(spark: SparkSession, path: String, sample: String)
-      : DataFrame =
-    checkmIngest(
-      spark.read.option("sep", "\t").option("header", "true").csv(path),
-      sample)
 
   // ---- dRep (postgres.Rmd:1016-1037): Cdb ⟕ Sdb scores, cluster-rep
   //      flag from file existence (the J9 join idiom, not a per-row
@@ -326,26 +283,12 @@ object WarehouseIngest {
         trim(col("rank")).as("rank"), col("tax_id"),
         regexp_replace(trim(col("name")), "^[a-z]__", "").as("name"))
 
-  def readKrakenReport(spark: SparkSession, path: String,
-      sample: String): DataFrame =
-    parseKrakenReport(spark.read.textFile(path), sample)
-
   // ---- read_mapping_LCA_summary (postgres.Rmd:661-675): 8-col
   //      report, counts dropped, lineage_std split into capitalized
   //      rank columns, k__ stripped from Kingdom ----
 
   val lcaLevels: Seq[String] = Seq("Kingdom", "Phylum", "Class",
     "Order", "Family", "Genus", "Species")
-
-  val lcaReportSchema: StructType = StructType(Seq(
-    StructField("percent_and_below", DoubleType),
-    StructField("count_and_below", LongType),
-    StructField("count_directly", LongType),
-    StructField("rank", StringType),
-    StructField("tax_id", IntegerType),
-    StructField("tax_name", StringType),
-    StructField("lineage_full", StringType),
-    StructField("lineage_std", StringType)))
 
   /** The reference splits on `;[A-z]__` (its exact pattern — note the
     * [A-z] character-class quirk) and keeps lineage_std; short
@@ -362,13 +305,6 @@ object WarehouseIngest {
         col("rank") +: col("tax_id") +: col("tax_name") +:
         col("lineage_full") +: col("lineage_std") +: rankCols: _*)
   }
-
-  def readLcaSummary(spark: SparkSession, path: String, sample: String)
-      : DataFrame =
-    lcaSummaryIngest(
-      Readers.parseSeparated(spark.read.textFile(path),
-        lcaReportSchema),
-      sample)
 
   // ---- mmseqs UniRef db mapping tables (postgres.Rmd:195-221):
   //      three headerless TSVs; the index's reported length includes
@@ -532,16 +468,6 @@ object WarehouseIngest {
         col("rpkm"), col("frags"), col("fpkm"), col("tpm"))
   }
 
-  def readGeneAbundance(spark: SparkSession, path: String,
-      sample: String): DataFrame =
-    geneAbundanceIngest(
-      Readers.parseSeparated(
-        Readers.skipLines(spark.read.textFile(path), 4),
-        rpkmBodySchema)
-        .filter(col("gene_header") =!= "#Name")
-        .withColumn("file", input_file_name()),
-      sample)
-
   // ---- mmseqs tophit report → read_mapping_to_uniref /
   //      contig_uniref_tophits (postgres.Rmd:386-391): 9-col
   //      headerless TSV, UniRef prefix stripped into an id column,
@@ -556,10 +482,6 @@ object WarehouseIngest {
         col("num_seqs_aligned"), col("unique_coverage_of_target"),
         col("target_coverage"), col("average_seq_identity"),
         col("taxonomy"))
-
-  def readTophitReport(spark: SparkSession, path: String,
-      sample: String): DataFrame =
-    tophitIngest(spark.read.textFile(path), sample)
 
   // ---- fixtures (raw tool-output text; the oracles re-derive every
   //      parse from the same constants) ----

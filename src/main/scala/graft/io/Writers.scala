@@ -1,8 +1,8 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Sinks K1-K9 (SURVEY §2.2) — the reference's output surface.
   *
@@ -154,45 +154,30 @@ object Writers {
     * maintenance op: a partitioned warehouse accretes one small file
     * per incremental refresh until scans drown in per-file overhead.
     *
-    * Scale shape: the global running sum uses the two-pass distributed
-    * prefix sum — range-partition + sort on (size desc, name), cumsum
-    * WITHIN each partition, then add per-partition offsets computed
-    * from the (num-partitions)-row totals table — so no single-
-    * partition window ever sees the full file list (a 100 TB lake
-    * lists millions of files). The assigned bin depends only on the
-    * total order, not on where the range boundaries fall. */
+    * Planned on the driver: the catalog is control metadata that
+    * `fileCatalog` has already listed into a local relation, so the
+    * collect starts no job, and the running sum is a `Long` fold over
+    * the sorted list. Names order as Spark orders strings (UTF-8
+    * bytes). `size_bytes` must be non-null. Returns one row per bin
+    * (bin, n_files, total_bytes, first_file) as a local frame. */
   def compactionPlan(catalog: DataFrame, targetBytes: Long): DataFrame = {
     require(targetBytes > 0, s"targetBytes must be > 0: $targetBytes")
+    val spark = catalog.sparkSession
+    import spark.implicits._
     val files = catalog.filter(col("is_parquet"))
-      .select("file_name", "size_bytes")
-      .repartitionByRange(col("size_bytes").desc, col("file_name"))
-      .sortWithinPartitions(col("size_bytes").desc, col("file_name"))
-      .withColumn("pid", spark_partition_id())
-    val within = Window.partitionBy("pid")
-      .orderBy(col("size_bytes").desc, col("file_name"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // one row per INPUT PARTITION (not per file): bounded by the scan's
-    // task count — the single partition is by design; constant key
-    // silences the WindowExec warning (w1Funnel idiom)
-    val offsets = files.groupBy("pid")
-      .agg(sum("size_bytes").as("part_total"))
-      .withColumn("offset",
-        coalesce(sum("part_total").over(
-          Window.partitionBy(pmod(col("pid"), lit(1))).orderBy("pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "offset")
-    val running = files
-      .join(broadcast(offsets), "pid")
-      .withColumn("running",
-        col("offset") + sum("size_bytes").over(within))
-      // bin index from the size BEFORE this file: files sharing a bin
-      // started inside the same target window (exact below 2^53 bytes)
-      .withColumn("bin",
-        floor((col("running") - col("size_bytes"))
-          / lit(targetBytes.toDouble)).cast("long"))
-    running.groupBy("bin")
-      .agg(count(lit(1)).as("n_files"),
-        sum("size_bytes").as("total_bytes"),
-        min("file_name").as("first_file"))
+      .select("file_name", "size_bytes").as[(String, Long)].collect()
+      .map { case (n, size) => (UTF8String.fromString(n), size) }
+      .sortBy { case (n, size) => (-size, n) }
+    var running = 0L
+    // bin index from the size BEFORE this file: files sharing a bin
+    // started inside the same target window
+    val binned = files.map { case (n, size) =>
+      val bin = Math.floorDiv(running, targetBytes)
+      running += size
+      (bin, n, size)
+    }
+    binned.groupBy(_._1).toSeq.sortBy(_._1).map { case (bin, fs) =>
+      (bin, fs.length.toLong, fs.map(_._3).sum, fs.map(_._2).min.toString)
+    }.toDF("bin", "n_files", "total_bytes", "first_file")
   }
 }

@@ -61,20 +61,6 @@ object Abundance {
         col("rel_abund"))
   }
 
-  /** A2 as groupBy+join — the alternative the reference's dbplyr compiles
-    * to when the window form isn't available; kept for parity testing and
-    * because at extreme skew the pre-aggregated join can beat the window
-    * sort. */
-  def relAbundJoinForm(s: SparkSession, d: String): DataFrame = {
-    val counts = t(s, d, "lineitem")
-      .groupBy(col("l_suppkey").as("sample"), col("l_partkey").as("target"))
-      .agg(sum("l_quantity").as("n"))
-    val totals = counts.groupBy("sample").agg(sum("n").as("total"))
-    counts.join(totals, Seq("sample"))
-      .select(col("sample"), col("target"),
-        round(col("n") / col("total"), 6).as("rel_abund"))
-  }
-
   /** The pipeline's tpm2 ARTIFACT, gated end-to-end: write the TPM
     * table through the K9 partitioned writer exactly as
     * `cli/Pipeline.run` does, read the files back, and hand the

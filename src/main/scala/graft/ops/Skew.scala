@@ -47,19 +47,6 @@ object Skew {
     salted.join(fanned, Seq(key, "__salt"), joinType).drop("__salt")
   }
 
-  /** Grouped aggregation with two-phase salting: partial aggregate on
-    * (key, salt), then final on key. Use when ONE group dominates the
-    * data (the degenerate-bucket case); for ordinary data Spark's own
-    * partial aggregation already does this. The aggregate must be
-    * decomposable (sum/count/min/max). */
-  def saltedSum(df: DataFrame, key: String, valueCol: String,
-      salt: Int = 8): DataFrame =
-    df.withColumn("__salt", saltCol(salt))
-      .groupBy(col(key), col("__salt"))
-      .agg(sum(col(valueCol)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum(col("__partial")).as(s"sum_$valueCol"))
-
   // -------------------------------------------------------------------
   // Key-distribution skew DIAGNOSTICS — the report a 100 TB job runs
   // BEFORE choosing a shuffle key (the decision input for `saltedJoin`

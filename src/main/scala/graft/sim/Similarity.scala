@@ -1328,18 +1328,14 @@ object Similarity {
   // The Lloyd fits (coarse quantizer + PQ codebooks) are index-BUILD
   // work; serving gates should consume the built index, not refit per
   // query — exactly the dupClustersStaged shape. Each fit is staged
-  // ONCE per (process, sf dir) via a crash-safe overwrite under the
-  // process's io.Scratch root and every consumer reads the staged parquet back, so the ADC/probe
+  // ONCE per (process, sf dir) through `io.Scratch.stagedOnce` and
+  // every consumer reads the staged parquet back, so the ADC/probe
   // gates pay scan cost, not fit cost. x_pq_index (and the x_ann_*
   // family) still refit in their own executions — the dump each staged
   // consumer's oracle conditions on therefore comes from a SEPARATE
   // fit, and a nondeterministic Lloyd would hash-mismatch (the
   // determinism proof is preserved, just no longer paid 4×).
 
-  private val stagedPq =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val stagedIvf =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   /** Fit counters PqSpec pins the fit-once contract with. */
   private[graft] val pqFitRuns =
     new java.util.concurrent.atomic.AtomicLong(0)
@@ -1347,14 +1343,8 @@ object Similarity {
     new java.util.concurrent.atomic.AtomicLong(0)
 
   /** The x_pq_index rows, staged once per sf dir and read back. */
-  private def pqIndexStaged(s: SparkSession, d: String): DataFrame = {
-    val path = stagedPq.computeIfAbsent(d, _ => {
-      val dir = graft.io.Scratch.path("pq_index").toString
-      graft.io.Writers.overwriteStaged(xPqIndex(s, d), dir)
-      dir
-    })
-    graft.io.Inputs.parquet(s, path)
-  }
+  private def pqIndexStaged(s: SparkSession, d: String): DataFrame =
+    graft.io.Scratch.stagedOnce(s, "pq_index", d)(xPqIndex(s, d))
 
   /** Parse the codebooks out of a PQ index table (the x_pq_index
     * schema: kind/sub/id/payload) into the broadcast LocalRelation
@@ -1423,8 +1413,8 @@ object Similarity {
     * identical to ivfAssignments' gate params (nlist=16, 2 Lloyd
     * iters, queries = vec_id<10), so the rk≤6 slice equals the
     * x_ann_ivf_assign dump the conditioned oracles read. */
-  private def ivfAssignStaged(s: SparkSession, d: String): DataFrame = {
-    val path = stagedIvf.computeIfAbsent(d, _ => {
+  private def ivfAssignStaged(s: SparkSession, d: String): DataFrame =
+    graft.io.Scratch.stagedOnce(s, "ivf_assign", d) {
       val prepared = prepare(t(s, d, "embeddings"))
       val centroids = fitCentroids(prepared, 16, 2)
       val lists = nearestCentroid(prepared, centroids, "n_id", "n_emb",
@@ -1446,13 +1436,8 @@ object Similarity {
       val cents = centroids.select(lit("cent").as("kind"),
         col("cid").as("id"), col("cid"), lit(0).as("rk"),
         serDec6(col("c_emb")).as("payload"))
-      val dir = graft.io.Scratch.path("ivf_assign").toString
-      graft.io.Writers.overwriteStaged(
-        lists.unionByName(probes).unionByName(cents), dir)
-      dir
-    })
-    graft.io.Inputs.parquet(s, path)
-  }
+      lists.unionByName(probes).unionByName(cents)
+    }
 
   /** IVF-PQ over the STAGED index: candidates from the staged coarse
     * assignment at `nprobe`, ADC from the staged codebooks/codes. The
@@ -1507,33 +1492,25 @@ object Similarity {
     refineRerank(ivfPqTopKStaged(s, d, 10, nprobe = 6),
       queriesSide(s, d), t(s, d, "embeddings"), 3)
 
-  private val stagedRpq =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Residual codebooks + codes staged once per (process, sf dir),
     * fitted over residuals of the STAGED coarse assignment — serving
     * consumes the built index; only the x_pq_residual_index gate
     * refits (the determinism proof, the x_pq_index precedent). */
-  private def rpqIndexStaged(s: SparkSession, d: String): DataFrame = {
-    val path = stagedRpq.computeIfAbsent(d, _ => {
+  private def rpqIndexStaged(s: SparkSession, d: String): DataFrame =
+    graft.io.Scratch.stagedOnce(s, "rpq_index", d) {
       val asg = ivfAssignStaged(s, d)
       val cents = loadIvfCentroids(asg)
       val lists = asg.filter(col("kind") === "list")
         .select(col("id").as("n_id"), col("cid"))
       val res = residualCorpus(t(s, d, "embeddings"), lists, cents)
       val cb = pqFitCodebooks(res)
-      val dump = cb.select(lit("cb").as("kind"), col("sub"),
+      cb.select(lit("cb").as("kind"), col("sub"),
           col("code").cast("long").as("id"),
           serDec6(col("c_emb")).as("payload"))
         .unionByName(pqEncode(res, cb)
           .select(lit("code").as("kind"), col("sub"),
             col("n_id").as("id"), col("code").cast("string").as("payload")))
-      val dir = graft.io.Scratch.path("rpq_index").toString
-      graft.io.Writers.overwriteStaged(dump, dir)
-      dir
-    })
-    graft.io.Inputs.parquet(s, path)
-  }
+    }
 
   /** Residual-PQ index dump — the refit execution whose conditioned
     * oracle re-derives every residual (from the x_ann_ivf_assign

@@ -28,13 +28,6 @@ object Lineage {
     concat_ws(";", col("p_brand"), col("p_type"),
       concat(lit("sz"), col("p_size")))
 
-  /** All ancestor prefixes of a `;`-lineage, shallowest first:
-    * "a;b;c" → ["a", "a;b", "a;b;c"]. Prefer `prefixesOfParts` over a
-    * materialized split column in hot paths — this convenience form
-    * re-splits per prefix. */
-  def ancestorPrefixes(lineage: Column): Column =
-    prefixesOfParts(split(lineage, ";"))
-
   /** Prefix list from an already-split token array column. */
   def prefixesOfParts(parts: Column): Column =
     transform(
