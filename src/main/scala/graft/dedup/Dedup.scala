@@ -229,15 +229,14 @@ object Dedup {
 
   /** The 4×16-bit chunk explode shared by the band joins and the
     * cap-drop report (one definition — the report observes EXACTLY
-    * the buckets the join prunes). `keys` are extra blocking columns
-    * carried as `by_0`, `by_1`, … (empty for the text and image
-    * callers). */
+    * the buckets the join prunes). `key` is an extra blocking column,
+    * carried as `by` (none for the text and image callers). */
   private def hammingChunked(hashed: DataFrame, idCol: String,
-      hashCol: String, keys: Seq[String] = Nil): DataFrame = {
-    val by = keys.indices.map(i => s"by_$i")
-    hashed.select(keys.zip(by).map { case (k, b) => col(k).as(b) } ++
+      hashCol: String, key: Option[String] = None): DataFrame = {
+    val by = key.map(_ => col("by")).toSeq
+    hashed.select(key.map(k => col(k).as("by")).toSeq ++
         Seq(col(idCol).as("id"), col(hashCol).as("sh")): _*)
-      .select(by.map(col) ++ Seq(col("id"), col("sh"),
+      .select(by ++ Seq(col("id"), col("sh"),
         posexplode(array((0 until 4).map { i =>
           shiftrightunsigned(col("sh"), 16 * i).bitwiseAND(0xFFFFL)
         }: _*)).as(Seq("chunk_idx", "chunk"))): _*)
@@ -272,7 +271,7 @@ object Dedup {
   def hammingBandCandidates(hashed: DataFrame, idCol: String,
       hashCol: String, maxBucketSize: Int = 1000,
       stageSketch: Boolean = false): DataFrame =
-    hammingBand(hashed, idCol, hashCol, Nil, maxBucketSize, stageSketch)
+    hammingBand(hashed, idCol, hashCol, None, maxBucketSize, stageSketch)
 
   /** Hamming band join over ALIGNED collections of 64-bit sketches —
     * the video/near-dup generalization: each id carries one sketch
@@ -289,32 +288,30 @@ object Dedup {
       hashCol: String, byCol: String,
       maxBucketSize: Int = 1000,
       stageSketch: Boolean = false): DataFrame =
-    hammingBand(hashed, idCol, hashCol, Seq(byCol), maxBucketSize,
+    hammingBand(hashed, idCol, hashCol, Some(byCol), maxBucketSize,
       stageSketch)
 
-  /** The one band-join body: chunk, cap each (keys, chunk) bucket at
+  /** The one band-join body: chunk, cap each (key, chunk) bucket at
     * `maxBucketSize`, self-join within buckets, verify with the true
-    * distance. Output: the `keys` columns, doc_a, doc_b, hamming. */
+    * distance. Output: the `key` column, doc_a, doc_b, hamming. */
   private def hammingBand(hashed: DataFrame, idCol: String,
-      hashCol: String, keys: Seq[String], maxBucketSize: Int,
+      hashCol: String, key: Option[String], maxBucketSize: Int,
       stageSketch: Boolean): DataFrame = {
-    val by = keys.indices.map(i => s"by_$i")
-    val bucket = by ++ Seq("chunk_idx", "chunk")
+    val bucket = key.map(_ => "by").toSeq ++ Seq("chunk_idx", "chunk")
     // `stageSketch` (r17): when the upstream sketch is EXPENSIVE per
     // row (a real image/audio decode), stage the pruned chunk table
     // once so the self-join's a/b sides don't decode twice — measured
     // a win exactly there and a LOSS for cheap sketches (SimHash:
     // the write costs more than re-tokenizing; the perceptual and
     // video pair gates pass true, the text gates keep the default)
-    val pruned0 = hammingChunked(hashed, idCol, hashCol, keys)
+    val pruned0 = hammingChunked(hashed, idCol, hashCol, key)
       .withColumn("bucket_n",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy(bucket.map(col): _*)))
       .filter(col("bucket_n") <= maxBucketSize)
     val pruned =
       if (stageSketch)
-        graft.io.Scratch.stage(pruned0,
-          if (keys.isEmpty) "hamming_banded" else "hamming_banded_by")
+        graft.io.Scratch.stage(pruned0, "hamming_banded")
       else pruned0
     val a = pruned.select(bucket.map(col) ++ Seq(
       col("id").as("doc_a"), col("sh").as("sh_a")): _*)
@@ -322,7 +319,7 @@ object Dedup {
       col("id").as("doc_b"), col("sh").as("sh_b")): _*)
     a.join(b, bucket)
       .filter(col("doc_a") < col("doc_b"))
-      .select(keys.zip(by).map { case (k, c) => col(c).as(k) } ++ Seq(
+      .select(key.map(k => col("by").as(k)).toSeq ++ Seq(
         col("doc_a"), col("doc_b"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming")): _*)
       .distinct()

@@ -43,9 +43,14 @@ case class DotProduct(left: Expression, right: Expression)
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    require(a.numElements() == b.numElements(),
-      s"dot_product dimension mismatch: ${a.numElements()} vs " +
-        s"${b.numElements()}")
+    // not `require`: its by-name message is a closure allocated per row
+    if (a.numElements() != b.numElements())
+      throw new IllegalArgumentException(
+        s"dot_product dimension mismatch: ${a.numElements()} vs " +
+          s"${b.numElements()}")
+    // a lazy val read is a volatile read: take both out of the loop
+    val lf = leftIsFloat
+    val rf = rightIsFloat
     var acc = 0.0
     var i = 0
     val n = a.numElements()
@@ -53,8 +58,8 @@ case class DotProduct(left: Expression, right: Expression)
       // null element → null result, matching the HOF formulation
       // (zip_with's x*y is null, poisoning the aggregate sum)
       if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = if (leftIsFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (rightIsFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      val x = if (lf) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (rf) b.getFloat(i).toDouble else b.getDouble(i)
       acc += x * y
       i += 1
     }

@@ -55,12 +55,17 @@ case class NearestCentroidIdx(emb: Expression, norm: Expression,
     val a = e.asInstanceOf[ArrayData]
     val nrm = nm.asInstanceOf[Double]
     val n = a.numElements()
+    // one (volatile) lazy val read each, not one per centroid
+    val cidA = this.cidA
+    val cembA = this.cembA
+    val cnormA = this.cnormA
     var best = -1
     var bestSim = 0.0
     var k = 0
     while (k < cidA.length) {
       val c = cembA(k)
-      require(c.length == n,
+      // not `require`: its by-name message is a closure per call
+      if (c.length != n) throw new IllegalArgumentException(
         s"nearest_centroid_idx dimension mismatch: $n vs ${c.length}")
       var acc = 0.0
       var i = 0

@@ -63,7 +63,8 @@ case class NearestCodeIdx(sub: Expression, sEmb: Expression,
     var k = 0
     while (k < cd.length) {
       val c = cw(k)
-      require(c.length == n,
+      // not `require`: its by-name message is a closure per call
+      if (c.length != n) throw new IllegalArgumentException(
         s"nearest_code_idx dimension mismatch: $n vs ${c.length}")
       var acc = 0.0
       var i = 0

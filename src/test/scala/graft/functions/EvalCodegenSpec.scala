@@ -11,7 +11,8 @@ import graft.TestSpark
   * whole-stage codegen it returns what interpreted eval returns, row
   * for row, and its host operator sits inside a WholeStageCodegen
   * span. Rows cover a null input, an empty string / array and a null
-  * array element. */
+  * array element; each case runs once over nullable and once over
+  * non-nullable columns, one per branch of the generated code. */
 class EvalCodegenSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -22,30 +23,47 @@ class EvalCodegenSpec extends AnyFunSuite {
   }
 
   // derived from `id` so no optimizer rule folds the projection into
-  // a local relation: Range → Project, one codegen span
-  private def rows: DataFrame = spark.range(4).selectExpr(
-    "CASE id WHEN 0 THEN NULL WHEN 1 THEN '' WHEN 2 THEN 'GATTACA gc' " +
-      "ELSE 'héllo wörld' END AS s",
-    "CASE id WHEN 0 THEN NULL WHEN 1 THEN CAST(array() AS array<string>) " +
-      "WHEN 2 THEN array('a', 'b', NULL, 'a', 'b') " +
-      "ELSE array('x', 'y', 'x', 'y', 'x') END AS toks",
-    "CASE id WHEN 0 THEN NULL WHEN 1 THEN CAST(array() AS array<string>) " +
-      "WHEN 2 THEN array('l', 'o', 'l', 'o') ELSE array('a', 'b') END " +
-      "AS toks2",
-    "CASE id WHEN 0 THEN NULL WHEN 1 THEN CAST(array() AS array<double>) " +
-      "WHEN 2 THEN array(1.5D, CAST(NULL AS DOUBLE)) " +
-      "ELSE array(-2.0D, 0.25D) END AS a",
-    "CASE WHEN id = 0 THEN NULL ELSE array(CAST(id AS DOUBLE), 1.0D - id) " +
-      "END AS v",
-    "CASE WHEN id = 0 THEN NULL ELSE CAST(id AS DOUBLE) + 0.5D END AS n",
-    "CASE WHEN id = 1 THEN NULL ELSE CAST(id % 2 AS INT) END AS sub",
-    "CASE WHEN id = 0 THEN NULL ELSE array(" +
-      "named_struct('n_id', id, 'rel', 5L, " +
-      "'emb', array(CAST(id AS DOUBLE), 1.0D - id), 'norm', 1.0D), " +
-      "named_struct('n_id', id + 10, 'rel', 3L, " +
-      "'emb', array(1.0D, 1.0D), 'norm', 1.4D)) END AS cand",
-    s"CASE WHEN id = 0 THEN NULL ELSE X'${sketch(1L to 6L)}' END AS sk1",
-    s"CASE WHEN id = 3 THEN NULL ELSE X'${sketch(4L to 9L)}' END AS sk2")
+  // a local relation: Range → Project, one codegen span. With `nulls`
+  // every column has a NULL arm (the trait's nullable branch); without,
+  // that arm holds a value, every column is non-nullable, and each
+  // expression that does not declare itself nullable takes the
+  // non-nullable branch (a primitive result unboxed straight into the
+  // generated variable)
+  private def rows(nulls: Boolean): DataFrame = {
+    def or(v: String) = if (nulls) "NULL" else v
+    spark.range(4).selectExpr(
+      s"CASE id WHEN 0 THEN ${or("'AC'")} WHEN 1 THEN '' " +
+        "WHEN 2 THEN 'GATTACA gc' ELSE 'héllo wörld' END AS s",
+      s"CASE id WHEN 0 THEN ${or("array('q', 'r')")} " +
+        "WHEN 1 THEN CAST(array() AS array<string>) " +
+        "WHEN 2 THEN array('a', 'b', NULL, 'a', 'b') " +
+        "ELSE array('x', 'y', 'x', 'y', 'x') END AS toks",
+      s"CASE id WHEN 0 THEN ${or("array('q')")} " +
+        "WHEN 1 THEN CAST(array() AS array<string>) " +
+        "WHEN 2 THEN array('l', 'o', 'l', 'o') ELSE array('a', 'b') END " +
+        "AS toks2",
+      s"CASE id WHEN 0 THEN ${or("array(3.0D)")} " +
+        "WHEN 1 THEN CAST(array() AS array<double>) " +
+        "WHEN 2 THEN array(1.5D, CAST(NULL AS DOUBLE)) " +
+        "ELSE array(-2.0D, 0.25D) END AS a",
+      s"CASE WHEN id = 0 THEN ${or("array(0.5D, 0.5D)")} " +
+        "ELSE array(CAST(id AS DOUBLE), 1.0D - id) END AS v",
+      s"CASE WHEN id = 0 THEN ${or("0.25D")} " +
+        "ELSE CAST(id AS DOUBLE) + 0.5D END AS n",
+      s"CASE WHEN id = 1 THEN ${or("1")} " +
+        "ELSE CAST(id AS INT) & 1 END AS sub",
+      s"CASE WHEN id = 0 THEN ${or("array(named_struct('n_id', 99L, " +
+        "'rel', 1L, 'emb', array(0.0D, 1.0D), 'norm', 1.0D))")} " +
+        "ELSE array(" +
+        "named_struct('n_id', id, 'rel', 5L, " +
+        "'emb', array(CAST(id AS DOUBLE), 1.0D - id), 'norm', 1.0D), " +
+        "named_struct('n_id', id + 10, 'rel', 3L, " +
+        "'emb', array(1.0D, 1.0D), 'norm', 1.4D)) END AS cand",
+      s"CASE WHEN id = 0 THEN ${or(s"X'${sketch(Seq(1L))}'")} " +
+        s"ELSE X'${sketch(1L to 6L)}' END AS sk1",
+      s"CASE WHEN id = 3 THEN ${or(s"X'${sketch(Seq(7L))}'")} " +
+        s"ELSE X'${sketch(4L to 9L)}' END AS sk2")
+  }
 
   private def e(c: String): Expression =
     GraftColumnBridge.expression(col(c))
@@ -97,31 +115,40 @@ class EvalCodegenSpec extends AnyFunSuite {
 
   assert(cases.map(_._1).distinct.size == 14)
 
-  cases.foreach { case (name, expr) =>
-    test(s"$name: whole-stage codegen equals interpreted eval, " +
-        "inside a WholeStageCodegen span") {
-      val out = () => rows.select(GraftColumnBridge.column(expr).as("r"))
+  // the two whose kernel returns null on non-null input
+  private val alwaysNullable = Set("DotProduct", "GcContent")
+
+  for ((name, expr) <- cases; nulls <- Seq(true, false)) {
+    val inputs = if (nulls) "nullable" else "non-nullable"
+    test(s"$name over $inputs inputs: whole-stage codegen equals " +
+        "interpreted eval, inside a WholeStageCodegen span") {
+      val out = () =>
+        rows(nulls).select(GraftColumnBridge.column(expr).as("r"))
       val cls = expr.getClass
       val (generated, hosted) = withConfs(
           "spark.sql.adaptive.enabled" -> "false",
           "spark.sql.codegen.fallback" -> "false") {
         val df = out()
-        val hosts = df.queryExecution.executedPlan.collect {
+        val hosted = df.queryExecution.executedPlan.collect {
           case w: WholeStageCodegenExec => w.child.collect {
-            case p if p.expressions.exists(_.exists(cls.isInstance)) => p
-          }
+            case p => p.expressions.flatMap(_.collect {
+              case x if cls.isInstance(x) => x
+            })
+          }.flatten
         }.flatten
-        (df.collect().map(norm).toSeq, hosts.nonEmpty)
+        (df.collect().map(norm).toSeq, hosted)
       }
       val interpreted = withConfs(
           "spark.sql.codegen.wholeStage" -> "false",
           "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
         out().collect().map(norm).toSeq
       }
-      assert(hosted, s"$name's host operator is not in a codegen span")
+      assert(hosted.nonEmpty, s"$name's host operator is not in a codegen span")
+      // pins which branch of EvalCodegen.doGenCode ran
+      assert(hosted.forall(_.nullable == (nulls || alwaysNullable(name))))
       assert(generated.size == 4)
       assert(generated == interpreted)
-      assert(generated.head == null, "a null input must give null")
+      if (nulls) assert(generated.head == null, "a null input must give null")
     }
   }
 }
